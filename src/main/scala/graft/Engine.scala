@@ -76,11 +76,15 @@ object Engine {
     * its own analysis pass) for every one of a query's table accesses —
     * pure driver work repeated 2-4× per query, hundreds of times per
     * bench run. A DataFrame is immutable, so handing the same analyzed
-    * frame out again is metadata reuse only: file listing, pushdown and
-    * all data reads still happen per action. Keyed on the session (a
-    * frame is bound to the session that analyzed it) — entries die with
-    * the JVM; [[clearTableCache]] resets between in-process tests that
-    * regenerate data in place (ADVICE round 17). */
+    * frame out again reuses its plan, and with it the plan's file index:
+    * the parquet directory is listed ONCE, when the frame is created, and
+    * every later action on a memoized frame reads that pinned listing
+    * (pushdown and data reads still happen per action). Files added to or
+    * removed from the directory afterwards are not seen until the entry is
+    * dropped. Keyed on the session (a frame is bound to the session that
+    * analyzed it) — entries die with the JVM; [[clearTableCache]] resets
+    * between in-process tests that regenerate data in place (ADVICE
+    * round 17). */
   private val frameCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
@@ -130,22 +134,6 @@ object Engine {
   def nullSource(spark: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Widen a frame to the session's parallelism before a COMPUTE-BOUND
-    * scan-local stage (per-doc hashing kernels: ShingleMinhash, SimHash64).
-    *
-    * Spark sizes scan splits by BYTES (`files.maxPartitionBytes` /
-    * `openCostInBytes`), which is right for I/O-bound plans but wrong for a
-    * kernel doing thousands of md5s per row: a small compressed file lands
-    * in ONE split, the kernel runs on one core, and — the part that
-    * compounds — any PERSISTED frame built from it is cached 1-wide, so
-    * every downstream consumer (the jaccard verify joins, components) also
-    * starts single-partition (measured at sf0.1: the documents table is a
-    * single 0.6 MB split; widening cuts the jaccard/clean pipelines ~25%,
-    * and the margin grows with document size since kernel cost is linear
-    * in characters while the widening shuffle is a one-time copy). At
-    * 100 TB input splits vastly outnumber cores, `getNumPartitions >=
-    * target` holds, and this is a no-op — the branch only triggers exactly
-    * where the bytes heuristic under-parallelizes. */
   /** Accepted leaf-relation class names for [[narrowPlan]]. DSv1 scans are
     * `LogicalRelation`; DSv2 scans (delta/iceberg/future sources) surface
     * as `DataSourceV2ScanRelation`; Hive catalog tables as
@@ -180,6 +168,22 @@ object Engine {
     !df.isStreaming && narrowChain(df.queryExecution.optimizedPlan)
   }
 
+  /** Widen a frame to the session's parallelism before a COMPUTE-BOUND
+    * scan-local stage (per-doc hashing kernels: ShingleMinhash, SimHash64).
+    *
+    * Spark sizes scan splits by BYTES (`files.maxPartitionBytes` /
+    * `openCostInBytes`), which is right for I/O-bound plans but wrong for a
+    * kernel doing thousands of md5s per row: a small compressed file lands
+    * in ONE split, the kernel runs on one core, and — the part that
+    * compounds — any PERSISTED frame built from it is cached 1-wide, so
+    * every downstream consumer (the jaccard verify joins, components) also
+    * starts single-partition (measured at sf0.1: the documents table is a
+    * single 0.6 MB split; widening cuts the jaccard/clean pipelines ~25%,
+    * and the margin grows with document size since kernel cost is linear
+    * in characters while the widening shuffle is a one-time copy). At
+    * 100 TB input splits vastly outnumber cores, `getNumPartitions >=
+    * target` holds, and this is a no-op — the branch only triggers exactly
+    * where the bytes heuristic under-parallelizes. */
   def rebalanceForCompute(df: DataFrame): DataFrame = {
     if (!narrowPlan(df)) return df
     val target = df.sparkSession.sparkContext.defaultParallelism

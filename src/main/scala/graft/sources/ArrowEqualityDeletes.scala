@@ -537,7 +537,11 @@ object ArrowEqualityDeletes {
     // STAGE the tombstone: the batch's distinct key tuples as one
     // key-columns-only arrow file inside the staging dir (written
     // through the same interchange writer, then renamed to the staged
-    // tomb name so the staged stats never cover it)
+    // tomb name so the staged stats never cover it). `coalesce(1)` is a
+    // deliberate bound: ONE task writes every distinct key of the batch
+    // into one file, so the tombstone write does not scale out with the
+    // batch. The path is sized for CDC-sized batches (thousands of keys,
+    // not a table's worth).
     val tombTmp = new Path(stagingPath, ".tomb")
     ArrowInterchange.writeStream(keySrc.coalesce(1), tombTmp.toString)
     val tombPart = Option(fs.globStatus(new Path(tombTmp, "part-*.arrows")))

@@ -19,6 +19,7 @@ import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -992,16 +993,35 @@ object ArrowInterchange {
 
 /** Minimal serializable Hadoop `Configuration` carrier so executor-side
   * file IO sees the driver's filesystem config (fs.defaultFS, s3a creds,
-  * …) — `Configuration` itself is Writable but not Serializable. */
+  * …) — `Configuration` itself is Writable but not Serializable.
+  *
+  * Encoded as its entries only: a count, then each key and value as
+  * length-prefixed UTF-8 (`Text.writeString`, which has no 64 KiB cap),
+  * rebuilt with one `set` per entry as `Configuration.readFields` does.
+  * Not `Configuration.write`: it also gzips every property's list of
+  * source names, which executors never read, and the lineage holding this
+  * carrier is serialized on the driver per job (closure cleaning, then
+  * the task binary) and deserialized per task — with a session conf's ~1k
+  * properties that gzip costs several ms per job. */
 private[sources] class SerializableHadoopConf(@transient var value: Configuration)
     extends Serializable {
   private def writeObject(out: ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    value.write(out)
+    val entries = value.iterator().asScala.toArray
+    out.writeInt(entries.length)
+    entries.foreach { e =>
+      Text.writeString(out, e.getKey)
+      Text.writeString(out, e.getValue)
+    }
   }
   private def readObject(in: ObjectInputStream): Unit = {
     in.defaultReadObject()
     value = new Configuration(false)
-    value.readFields(in)
+    val n = in.readInt()
+    var i = 0
+    while (i < n) {
+      value.set(Text.readString(in), Text.readString(in))
+      i += 1
+    }
   }
 }
