@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times each headline query end-to-end (plan + execute,
   * result drained via count) on SPARK_GRAFT_SF_DIR. Emits ONE JSON line. */
@@ -55,16 +54,7 @@ object Bench {
     val selected = only.fold(headline)(s => headline.filter(s))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("Bench", s"local[$cpus]")
     // Warm the JVM/codegen paths once so timings measure the engine, not
     // first-query class loading.
     SparkEntry.queries("q1_agg")(spark, sfDir).count()

@@ -15,7 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Standard session config for this engine. Local testing uses
+  /** The engine's one session profile: every main, probe and the test
+    * harness build their session here. Local testing uses
     * local[N]; on a real cluster the master/memory flags come from
     * spark-submit and everything else here still applies.
     */
@@ -99,6 +100,7 @@ object Engine {
     val path = s"$dir/$name.parquet"
     val hit = frameCache.get((spark, path))
     if (hit != null) return hit
+    // Set here, not in `session`: SparkEntry callers may pass their own session.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val cached = schemaCache.get(path)
     val df =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: dump formatted physical plans for selected queries so plan
   * regressions (lost pushdown, missed broadcast, codegen gaps) are visible.
@@ -12,12 +11,7 @@ object Explain {
         "join_multi", "topk", "replace_dedup", "dedup_minhash_sig", "embed_neardup",
         "dedup_jaccard_pairs", "pack_sequences", "sample_hash", "contamination",
         "vocab_topk", "ann_ivf_topk")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Engine.session("Explain", "local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

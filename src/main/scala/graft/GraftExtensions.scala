@@ -16,8 +16,8 @@ import org.apache.spark.sql.catalyst.expressions.Literal
   * SQL functions — the analog of the reference registering "ch.*" kernels in
   * the arrow FunctionRegistry (tests/ut_aggregator.cpp:20-31).
   *
-  * Use: `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`; then
+  * Use: `Engine.session(...)` installs it (as does
+  * `spark.sql.extensions=graft.GraftExtensions`); then
   * `SELECT vec_dot(a, b)`, `SELECT sorted_intersect_size(x, y)` work in SQL.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

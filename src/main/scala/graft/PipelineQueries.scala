@@ -936,6 +936,7 @@ object PipelineQueries {
     //    shuffle (the window formulation sorts every group's full
     //    contents). Oracle replays the same md5-hash ranking. ────────────
     ("agg_bottom_k", (s, d) => {
+      // SparkEntry callers may pass a session not built by Engine.session.
       graft.ops.Aggregates.registerHouseFunctions(s)
       T(s, d, "documents")
         .groupBy(col("lang")).agg(expr("graft_bottom_k(doc_id)").as("smp"))

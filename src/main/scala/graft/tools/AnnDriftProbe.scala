@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -80,11 +80,7 @@ object AnnDriftProbe {
     val k = 5
     val nQueries = 64
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("AnnDriftProbe", "local[32]")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe: randomized stress over the STORED IVF index's mutating
@@ -71,11 +71,7 @@ object AnnStressProbe {
       .getOrElse(45)
     val quantized = args.contains("quantized")
     val dual = args.contains("dual")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("AnnStressProbe", "local[32]")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.ops.Similarity

@@ -80,13 +80,7 @@ object AnsiSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("AnsiSweep", s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None

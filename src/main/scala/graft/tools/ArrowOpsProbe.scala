@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe: quantifies the round-7 OPERATIONAL Arrow paths on a
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
 object ArrowOpsProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("ArrowOpsProbe", "local[32]")
 
     def time(name: String)(f: => Any): Unit = {
       def once: Double = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe: quantifies the Arrow read paths on the embeddings
@@ -13,12 +12,7 @@ import org.apache.spark.sql.functions._
 object ArrowReadProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("ArrowReadProbe", "local[32]")
     import spark.implicits._
 
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{ArrowEqualityDeletes, ArrowMaintenance}
@@ -42,11 +41,7 @@ object EqStressProbe {
   def main(args: Array[String]): Unit = {
     val secs = args.headOption.map(_.toInt).getOrElse(60)
     val composite = args.contains("composite")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("EqStressProbe", "local[8]")
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = s"/tmp/graft_scale/eq_stress_${System.currentTimeMillis()}"

@@ -27,11 +27,7 @@ import org.apache.spark.sql.functions._
   * (log: tools/evolution_scale_probe.log) */
 object EvolutionScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("EvolutionScaleProbe", "local[32]")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.ArrowCatalog")
     if (args.contains("race")) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe: quantifies hive-layout directory discovery on the
@@ -18,12 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object HiveScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("HiveScaleProbe", "local[32]")
 
     val partitions = args.headOption.map(_.toInt).getOrElse(400)
     val rowsPer = 2000

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StringType
@@ -13,8 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * family. */
 object KernelBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[1]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Engine.session("KernelBench", "local[1]")
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val texts = spark.read.parquet(s"$sfDir/documents.parquet")

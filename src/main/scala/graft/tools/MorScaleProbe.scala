@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{ArrowDeleteVectors, ArrowDml, ArrowMaintenance}
@@ -26,11 +25,7 @@ import graft.sources.{ArrowDeleteVectors, ArrowDml, ArrowMaintenance}
   */
 object MorScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("MorScaleProbe", "local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.ArrowCatalog")
     val rows = args.headOption.map(_.toLong).getOrElse(4000000L)

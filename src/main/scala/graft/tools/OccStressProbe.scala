@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.ArrowMaintenance
@@ -54,11 +53,7 @@ object OccStressProbe {
   def main(args: Array[String]): Unit = {
     val seconds = args.headOption.map(_.toInt).getOrElse(60)
     val storeName = args.drop(1).headOption.getOrElse("posix")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("OccStressProbe", "local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = s"/tmp/graft_scale/occ_stress_${System.nanoTime()}/out"
     storeName match {

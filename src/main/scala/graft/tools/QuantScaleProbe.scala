@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -21,11 +20,7 @@ import graft.ops.Similarity
   * (log: tools/quant_scale_probe.log) */
 object QuantScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("QuantScaleProbe", "local[32]")
     spark.sparkContext.setLogLevel("ERROR")
 
     val rows = args.headOption.map(_.toLong).getOrElse(200000L)

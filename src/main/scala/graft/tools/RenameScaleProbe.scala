@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe (round 12): READS ACROSS RENAME GENERATIONS at a
@@ -16,11 +15,7 @@ import org.apache.spark.sql.functions._
   * 3000-file table that never renamed anything. */
 object RenameScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("RenameScaleProbe", "local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.ArrowCatalog")
     val rows = args.headOption.map(_.toLong).getOrElse(3000000L)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{ArrowMaintenance, ArrowSnapshots}
@@ -15,11 +14,7 @@ import graft.sources.{ArrowMaintenance, ArrowSnapshots}
   * much the bad run touched, never with table size. */
 object RestoreScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("RestoreScaleProbe", "local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     val files = args.headOption.map(_.toInt).getOrElse(2000)
     val dir = s"/tmp/graft_scale/restore_probe_$files/out"

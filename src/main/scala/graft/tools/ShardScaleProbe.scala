@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe: quantifies sharded-manifest planning on the
@@ -16,12 +15,7 @@ import org.apache.spark.sql.functions._
   * total per-file stats it no longer has to. */
 object ShardScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("ShardScaleProbe", "local[32]")
 
     val commits = 96
     val rowsPer = 20000

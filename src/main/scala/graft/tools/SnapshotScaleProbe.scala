@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 import graft.sources.ArrowSnapshots
 
@@ -22,11 +21,7 @@ import graft.sources.ArrowSnapshots
   */
 object SnapshotScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("SnapshotScaleProbe", "local[4]")
     val n = args.headOption.map(_.toInt).getOrElse(5000)
     val dirPath = new Path(s"/tmp/graft_scale/snapshot_probe_$n")
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{ArrowFilesOffset, ArrowIpcMicroBatchStream, ArrowMaintenance}
@@ -22,12 +21,7 @@ import graft.sources.{ArrowFilesOffset, ArrowIpcMicroBatchStream, ArrowMaintenan
 object StreamPollScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(3000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("StreamPollScaleProbe", "local[8]")
     val dir = s"/tmp/graft_scale/stream_poll_$n/out"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -35,7 +35,6 @@ class AggregatesSpec extends AnyFunSuite {
   }
 
   test("UDAF registration: graft_any_long returns a member value") {
-    Aggregates.registerHouseFunctions(spark)
     val df = Seq((1, 10L), (1, 20L), (2, 30L)).toDF("g", "x")
     df.createOrReplaceTempView("anyt")
     val rows = spark.sql("SELECT g, graft_any_long(x) AS a FROM anyt GROUP BY g")
@@ -111,7 +110,6 @@ class AggregatesSpec extends AnyFunSuite {
   }
 
   test("UDAF skips nulls like the reference 'any'") {
-    Aggregates.registerHouseFunctions(spark)
     val df = Seq((1, Option.empty[Long]), (1, Some(7L))).toDF("g", "x")
     df.createOrReplaceTempView("anyn")
     val r = spark.sql("SELECT graft_any_long(x) FROM anyn GROUP BY g").head()
@@ -119,7 +117,6 @@ class AggregatesSpec extends AnyFunSuite {
   }
 
   test("generic any UDAF: double and string instantiations, all-null group -> null") {
-    Aggregates.registerHouseFunctions(spark)
     Seq((1, Option(1.5), Option("a")), (1, Option(2.5), Option("b")),
         (2, Option.empty[Double], Option.empty[String]))
       .toDF("g", "d", "s").createOrReplaceTempView("anyg")
@@ -132,7 +129,6 @@ class AggregatesSpec extends AnyFunSuite {
   }
 
   test("generic any UDAF: every atomic instantiation keeps a member, nulls skipped") {
-    Aggregates.registerHouseFunctions(spark)
     // Two non-null rows + one all-null row per group; parameterized over the
     // full instantiation table (the reference's SingleValueData template is
     // type-generic, AggregateFunctionMinMaxAny.h:18-159). Each column's
@@ -176,7 +172,6 @@ class AggregatesSpec extends AnyFunSuite {
   }
 
   test("bottom-k-by-hash UDAF: deterministic, partition-invariant, bounded") {
-    Aggregates.registerHouseFunctions(spark)
     val df = (0L until 500L).map(i => (i % 5, i)).toDF("g", "v")
     def run(parts: Int) = df.repartition(parts).createOrReplaceTempView("bk") match {
       case _ => spark.sql("SELECT g, graft_bottom_k(v) AS s FROM bk GROUP BY g")

@@ -280,10 +280,11 @@ class ArrowEqualityDeletesSpec extends AnyFunSuite {
     assert(t.filter(col("key") === "k7").select("v").head().getLong(0) === 7L)
   }
 
-  /** Upsert over a temporal key `keyOf(id)`: update keys 5 and 6, insert
-    * key 1000, read through the tombstone mask, fold, and require the
-    * expected content throughout — key values must round-trip the
-    * interchange exactly for the tombstone to match its data rows. */
+  /** Upsert over a temporal or narrow integral key `keyOf(id)`: update
+    * keys 5 and 6, insert key 1000, read through the tombstone mask, fold,
+    * and require the expected content throughout — key values must
+    * round-trip the interchange exactly for the tombstone to match its
+    * data rows. */
   private def temporalKeyRoundTrip(prefix: String, keyOf: String => String): Unit = {
     import spark.implicits._
     val dir = tmp(prefix)
@@ -317,6 +318,24 @@ class ArrowEqualityDeletesSpec extends AnyFunSuite {
   test("timestamp keys: upsert, masked read and fold keep identical content (values round-trip the interchange)") {
     // µs-precise instants on both sides of the epoch
     temporalKeyRoundTrip("graft_eq_ts", id => s"timestamp_micros($id * 1000001L - 20000003L)")
+  }
+
+  test("timestamp_ntz keys: upsert, masked read and fold keep identical content (values round-trip the interchange)") {
+    temporalKeyRoundTrip("graft_eq_ntz",
+      id => s"CAST(timestamp_micros($id * 1000001L - 20000003L) AS TIMESTAMP_NTZ)")
+  }
+
+  test("int keys: upsert, masked read and fold keep identical content (values round-trip the interchange)") {
+    temporalKeyRoundTrip("graft_eq_int", id => s"CAST($id * 2000003L - 50000000L AS INT)")
+  }
+
+  test("short keys: upsert, masked read and fold keep identical content (values round-trip the interchange)") {
+    temporalKeyRoundTrip("graft_eq_short", id => s"CAST($id * 31L - 16000L AS SMALLINT)")
+  }
+
+  test("byte keys: upsert, masked read and fold keep identical content (values round-trip the interchange)") {
+    // ids 0..49 -> -128..-79, the inserted id 1000 -> -24
+    temporalKeyRoundTrip("graft_eq_byte", id => s"CAST($id % 128L - 128L AS TINYINT)")
   }
 
   test("exactly-once CDC: upsertBatch inside applyBatch folds the ledger atomically; a replay commits nothing") {

@@ -71,9 +71,6 @@ class FreqSketchSpec extends AnyFunSuite {
   }
 
   test("SQL registration: freq functions compose in spark.sql") {
-    GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
     skewed.createOrReplaceTempView("freq_in")
     val top = spark.sql("""
       SELECT f.item, f.estimate

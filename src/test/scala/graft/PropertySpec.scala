@@ -81,12 +81,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("extension-injected SQL functions run through the PRODUCTION builders") {
-    // Register the exact builder triples GraftExtensions injects — the
-    // test session was created without extensions, so wire them onto its
-    // registry directly; no parallel re-implementation.
-    GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
+    // The test session is built by Engine.session, which installs
+    // GraftExtensions: these resolve through the production builders.
     assert(spark.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
       .head().getDouble(0) === 11.0)
     assert(spark.sql(

@@ -63,9 +63,6 @@ class QuantileSketchSpec extends AnyFunSuite {
   }
 
   test("SQL registration: kll functions compose in spark.sql") {
-    GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
     spark.range(1, 101).select((col("id") % 4).as("g"), col("id").cast("double").as("v"))
       .createOrReplaceTempView("kll_in")
     val out = spark.sql("""

@@ -190,34 +190,15 @@ class RefHashSpec extends AnyFunSuite {
   }
 
   test("SQL registration via GraftExtensions exposes the hash family") {
-    TestSpark.spark // force shared context creation first
-    // getOrCreate returns the existing default session (ignoring extensions),
-    // so clear it: the builder then makes a NEW session over the SAME
-    // SparkContext, with GraftExtensions applied.
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val r = spark.sql(
-        "SELECT city_hash64('test') AS c, xx_hash32('test') AS x32, " +
-          "xx_hash64_raw('test') AS x64, xxh3_64('test') AS x3, wy_hash64('test') AS wy")
-        .head()
-      assert(r.getLong(0) === RefHash.cityHash64("test".getBytes("UTF-8")))
-      assert(r.getLong(1) === (RefHash.xxh32("test".getBytes("UTF-8"), 0) & 0xFFFFFFFFL))
-      assert(r.getLong(2) === RefHash.xxh64("test".getBytes("UTF-8"), 0L))
-      assert(r.getLong(3) === RefHash.xxh3_64("test".getBytes("UTF-8")))
-      assert(r.getLong(4) === RefHash.wyHash64("test".getBytes("UTF-8"), 0L))
-    } finally {
-      // Shared-JVM hygiene: the default session must revert to TestSpark's.
-      org.apache.spark.sql.SparkSession.setDefaultSession(TestSpark.spark)
-      org.apache.spark.sql.SparkSession.setActiveSession(TestSpark.spark)
-    }
+    val r = TestSpark.spark.sql(
+      "SELECT city_hash64('test') AS c, xx_hash32('test') AS x32, " +
+        "xx_hash64_raw('test') AS x64, xxh3_64('test') AS x3, wy_hash64('test') AS wy")
+      .head()
+    assert(r.getLong(0) === RefHash.cityHash64("test".getBytes("UTF-8")))
+    assert(r.getLong(1) === (RefHash.xxh32("test".getBytes("UTF-8"), 0) & 0xFFFFFFFFL))
+    assert(r.getLong(2) === RefHash.xxh64("test".getBytes("UTF-8"), 0L))
+    assert(r.getLong(3) === RefHash.xxh3_64("test".getBytes("UTF-8")))
+    assert(r.getLong(4) === RefHash.wyHash64("test".getBytes("UTF-8"), 0L))
   }
 
   test("xxh32/xxh64 agree with lz4-java's independent implementation on random inputs") {

@@ -2,20 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM: the engine's
+  * own profile (`Engine.session`), with fewer shuffle partitions so the
+  * small test frames stay fast. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // SinksSpec saves managed tables; a warehouse left in the working
+    // directory by an earlier run makes them fail LOCATION_ALREADY_EXISTS.
+    // A static conf, so it is passed the way spark-submit would pass it.
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString
+    val s = Engine.session("graft-test", "local[4]")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     s
   }
 }

@@ -81,9 +81,6 @@ class ThetaSpec extends AnyFunSuite {
   }
 
   test("SQL registration: theta functions compose in spark.sql") {
-    GraftExtensions.functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
     spark.range(100).select(col("id"), (col("id") % 2).as("g"))
       .createOrReplaceTempView("theta_in")
     val out = spark.sql("""
