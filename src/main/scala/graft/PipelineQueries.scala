@@ -1301,32 +1301,26 @@ object PipelineQueries {
                         CAST((SUM(n_tok) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok) // 2048 AS BIGINT) AS bin
                  FROM t ORDER BY doc_id""")),
 
-    // ── near-dup clusters: connected components over jaccard pairs.
-    //    Default path = alternating large-star/small-star (O(log² n)
-    //    rounds on ANY topology, shrinking edge list — 3× faster than
-    //    label propagation at sf0.1 for the identical contract). ─────────
+    // ── near-dup clusters: connected components over jaccard pairs
+    //    (alternating large-star/small-star). ─────────────────────────────
     ("dedup_components", (s, d) => {
       val pairs = Dedup.jaccardPairsLsh(T(s, d, "documents"), "doc_id", "text",
         width = 6, threshold = 0.6, k = minhashK, bands = minhashBands)
       Dedup.connectedComponents(pairs, "doc_id").orderBy("doc_id")
     }, Some(componentsOracle)),
 
-    // Same contract via the explicit alternating-star entry point (the
-    // default above routes here; kept as a distinct bench line so the
-    // routing itself is regression-visible).
+    // Same query as dedup_components; kept so the 199-query surface and the Bench key do not change.
     ("dedup_components_star", (s, d) => {
       val pairs = Dedup.jaccardPairsLsh(T(s, d, "documents"), "doc_id", "text",
         width = 6, threshold = 0.6, k = minhashK, bands = minhashBands)
-      Dedup.connectedComponentsAlternating(pairs, "doc_id").orderBy("doc_id")
+      Dedup.connectedComponents(pairs, "doc_id").orderBy("doc_id")
     }, Some(componentsOracle)),
 
-    // The opt-in min-label pointer-doubling alternative, oracle-checked
-    // against the same recursive-CTE so the non-default path stays
-    // correctness-covered (it is intentionally NOT a bench headline).
+    // Same query as dedup_components; kept so the 199-query surface does not change.
     ("dedup_components_labelprop", (s, d) => {
       val pairs = Dedup.jaccardPairsLsh(T(s, d, "documents"), "doc_id", "text",
         width = 6, threshold = 0.6, k = minhashK, bands = minhashBands)
-      Dedup.connectedComponentsLabelProp(pairs, "doc_id").orderBy("doc_id")
+      Dedup.connectedComponents(pairs, "doc_id").orderBy("doc_id")
     }, Some(componentsOracle)),
 
     // Cluster-representative selection: components over jaccard pairs,

@@ -616,106 +616,6 @@ object Dedup {
         coalesce(col("text_clean"), lit("")).as("text_clean"))
   }
 
-  /** Connected components over a similarity-pair graph — the clustering
-    * step that turns pairwise near-dup hits into dedup groups (keep one
-    * representative per component). DEFAULT = the alternating
-    * large-star/small-star algorithm ([[connectedComponentsAlternating]]):
-    * its edge list shrinks every round, the fixpoint probe is one job, and
-    * convergence is O(log² n) rounds on ANY topology — measured 3× faster
-    * than the label-propagation alternative on the sf0.1 near-dup graph for
-    * the identical output contract. Min-label pointer doubling remains
-    * available as [[connectedComponentsLabelProp]] for callers that want
-    * per-round label frames.
-    *
-    * @param pairs (id_a, id_b) undirected edges
-    * @param checkpointDir when set, per-round materialization uses RELIABLE
-    *   `checkpoint()` under this directory (survives executor loss — the
-    *   cluster-mode path); default keeps zero-I/O localCheckpoint.
-    * @return (idCol, component) — component = min node id reachable
-    */
-  def connectedComponents(
-      pairs: DataFrame, idCol: String = "doc_id", maxIter: Int = 25,
-      checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsAlternating(pairs, idCol, maxIter, checkpointDir)
-
-  /** Min-label propagation with pointer doubling — the documented
-    * ALTERNATIVE components path (opt-in; [[connectedComponents]] defaults
-    * to alternating stars). Each node takes the minimum label among itself
-    * and its neighbors, then follows label→label-of-label, until fixpoint:
-    * O(log d) rounds on shallow near-dup graphs, but each round re-joins
-    * the FULL label frame against the full edge list (nothing shrinks), so
-    * it loses to the star variant wherever rounds are scheduling-bound.
-    * Kept for callers that want the per-round label frames (e.g.
-    * incremental re-labeling against a prior assignment).
-    *
-    * @param pairs (id_a, id_b) undirected edges
-    * @param checkpointDir when set, per-round materialization uses RELIABLE
-    *   `checkpoint()` under this directory (survives executor loss — the
-    *   cluster-mode path; `localCheckpoint` blocks are executor-local and an
-    *   executor death mid-iteration kills the job). Default keeps the
-    *   zero-I/O localCheckpoint, right for local mode and tests.
-    * @return (idCol, component) — component = min node id reachable
-    */
-  def connectedComponentsLabelProp(
-      pairs: DataFrame, idCol: String = "doc_id", maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // Eager checkpoint per round: materializes the (small) frame once and
-    // truncates the upstream lineage — otherwise every iteration re-plans
-    // (and on cache eviction re-executes) the full pair-generation pipeline.
-    val chk: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val sc = pairs.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
-        df => df.checkpoint(true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .unionAll(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-      .distinct()
-    val checkedEdges = chk(edges)
-    val nodes = checkedEdges.select(col("u")).distinct()
-    var labels = chk(nodes.select(col("u"), col("u").as("label")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // neighbor minimum, then take min(own, neighbors'). Columns renamed
-      // before every join — these frames share lineage (iterative self
-      // joins) and qualified refs would be ambiguous.
-      val lbl = labels.select(col("u").as("lu"), col("label").as("llabel"))
-      val neighborMin = checkedEdges.join(lbl, col("v") === col("lu"))
-        .groupBy(col("u").as("nu")).agg(min(col("llabel")).as("nmin"))
-      val stepped = labels.join(neighborMin, col("u") === col("nu"), "left")
-        .select(col("u"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      // Pointer doubling: follow label → label-of-label (labels are always
-      // node ids, so the lookup is total). Turns O(diameter) rounds into
-      // O(log diameter) — a chain of 1000 converges in ~10 rounds.
-      val byNode = stepped.select(col("u").as("ru"), col("label").as("rlabel"))
-      // ONE lineage truncation per round (the round's only materializing
-      // job); `stepped` is computed twice inside it — two cheap joins beat a
-      // second driver-synchronous checkpoint.
-      val updated = chk(stepped.join(byNode, col("label") === col("ru"), "left")
-        .select(col("u"), coalesce(col("rlabel"), col("label")).as("label")))
-      iter += 1
-      // Convergence is a driver-synchronous barrier — check only every 2nd
-      // round (pointer doubling converges in O(log d) rounds, so at most one
-      // wasted round) and on the last permitted round. Both sides are
-      // checkpointed, so the probe itself is a trivial job.
-      if (iter % 2 == 0 || iter >= maxIter) {
-        val old = labels.select(col("u").as("ou"), col("label").as("old"))
-        converged = updated.join(old, col("u") === col("ou"))
-          .filter(col("label") =!= col("old")).limit(1).count() == 0
-      }
-      labels = updated
-    }
-    if (!converged) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponentsLabelProp: maxIter=$maxIter exhausted without convergence; " +
-          "labels may be non-final (raise maxIter or use large-star/small-star)")
-    }
-    labels.select(col("u").as(idCol), col("label").as("component"))
-  }
-
   /** Benchmark decontamination: flag corpus documents whose character
     * n-gram overlap with a BENCHMARK document set crosses `threshold` —
     * the "remove test-set contamination before pretraining" step (n-gram
@@ -769,14 +669,13 @@ object Dedup {
       .filter(col("contamination") >= threshold)
   }
 
-  /** Connected components via alternating large-star / small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * 2014) — the adversarial-graph scale path next to
-    * [[connectedComponents]]: each round is two grouped aggregations +
-    * joins, state is only the (shrinking) edge list, and convergence is
-    * O(log² n) rounds on ANY graph shape (min-label propagation's pointer
-    * doubling is O(log d) on shallow near-dup graphs but degrades on long
-    * chains / high-degree adversarial topologies).
+  /** Connected components over a similarity-pair graph — the clustering
+    * step that turns pairwise near-dup hits into dedup groups (keep one
+    * representative per component). Alternating large-star / small-star
+    * rounds (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", 2014): each round is two grouped aggregations + joins, state
+    * is only the edge list, which shrinks every round, and convergence is
+    * O(log² n) rounds on ANY graph shape.
     *
     *  - large-star: every node connects its LARGER neighbors to the
     *    minimum of its neighborhood (incl. itself);
@@ -784,9 +683,17 @@ object Dedup {
     *    smaller neighbors and itself to the neighborhood minimum.
     *
     * Both preserve connectivity and strictly shrink star height; at
-    * fixpoint the edge set IS the (node → component-min) star. Same output
-    * contract as [[connectedComponents]]: (idCol, component = min id). */
-  def connectedComponentsAlternating(
+    * fixpoint the edge set IS the (node → component-min) star.
+    *
+    * @param pairs (id_a, id_b) undirected edges
+    * @param checkpointDir when set, per-round materialization uses RELIABLE
+    *   `checkpoint()` under this directory (survives executor loss — the
+    *   cluster-mode path); default keeps zero-I/O localCheckpoint.
+    * @return (idCol, component) — component = min node id reachable
+    * @throws IllegalStateException when `maxIter` rounds end before the
+    *   fixpoint (the edges are not yet stars, so no labels are returned)
+    */
+  def connectedComponents(
       pairs: DataFrame, idCol: String = "doc_id", maxIter: Int = 25,
       checkpointDir: Option[String] = None): DataFrame = {
     val chk: DataFrame => DataFrame = checkpointDir match {
@@ -863,10 +770,9 @@ object Dedup {
       edges = next
       cur = nstats
     }
-    if (!converged) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponentsAlternating: maxIter=$maxIter exhausted without convergence")
-    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents: no fixpoint after maxIter=$maxIter rounds")
     // At fixpoint edges = (node, component-min) stars; singletons and
     // component roots label themselves.
     nodes.join(edges, col("n") === col("u"), "left")

@@ -124,10 +124,10 @@ class DedupSpec extends AnyFunSuite {
     assert(!kernel.contains(5L) && !kernel.contains(6L) && !kernel.contains(7L))
   }
 
-  test("connected components: min-label propagation across chains") {
+  test("connected components: every chain node takes its chain's min id") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponentsLabelProp(pairs, "doc_id")
+    val comp = Dedup.connectedComponents(pairs, "doc_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       6L -> 1L, 10L -> 10L, 11L -> 10L))
@@ -352,27 +352,44 @@ class DedupSpec extends AnyFunSuite {
     assert(direct === loose, "composed path must equal the one-shot path")
   }
 
-  test("alternating large-star/small-star agrees with min-label propagation") {
+  test("connected components agree with a union-find over a random graph") {
     val rnd = new scala.util.Random(31)
     // random graph: 120 nodes, 150 random edges + isolated-pair + self-loop
-    val pairs = ((0 until 150).map { _ =>
+    val edges = (0 until 150).map { _ =>
       (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong)
-    } :+ (500L, 501L) :+ (600L, 600L)).toDF("id_a", "id_b")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val a = toMap(Dedup.connectedComponentsLabelProp(pairs, "doc_id", maxIter = 40))
-    val b = toMap(Dedup.connectedComponentsAlternating(pairs, "doc_id"))
-    assert(a === b)
-    // The default entry point routes to the alternating-star path.
-    assert(toMap(Dedup.connectedComponents(pairs, "doc_id")) === b)
+    } :+ (500L, 501L) :+ (600L, 600L)
+    val pairs = edges.toDF("id_a", "id_b")
+    // Reference: union-find over the same edges, linking every root to the
+    // smaller root so each root is its component's min id.
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = parent.keys.toList.map(n => n -> find(n)).toMap
+    val comp = Dedup.connectedComponents(pairs, "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp === expected)
   }
 
-  test("alternating CC collapses a long chain (adversarial for label propagation)") {
+  test("connected components collapse a 300-edge chain") {
     val chain = (0L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponentsAlternating(chain, "doc_id")
+    val comp = Dedup.connectedComponents(chain, "doc_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size === 301)
     assert(comp.values.toSet === Set(0L), "all chain nodes must reach component 0")
+  }
+
+  test("connected components fail loudly when maxIter ends before the fixpoint") {
+    val chain = (0L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain, "doc_id", maxIter = 1)
+    }
+    assert(e.getMessage.contains("maxIter=1"))
   }
 
   test("embedding near-dup pairs by cosine threshold (exact mode)") {

@@ -1,5 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression gate over the ENTIRE declared query surface: no
@@ -7,8 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * unless it is on the explicit allowlist of intentional scalar/small-side
   * cross joins. A range predicate accidentally written as a raw theta-join,
   * or a lost equi-join key, fails here long before it melts a cluster.
+  * It also pins the plan shapes that the IVF and substring-dedup
+  * optimizations rely on, so they need no checked-in explain dumps.
   */
-class PlanGuardSpec extends AnyFunSuite {
+class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -109,5 +120,66 @@ class PlanGuardSpec extends AnyFunSuite {
     val q15 = SparkEntry.queries("q15_top_supplier")(spark, sfDir)
       .queryExecution.optimizedPlan.toString
     assert(!q15.contains("outer("), s"correlated reference survived:\n$q15")
+  }
+
+  /** The query's physical plan as planned before execution, with only
+    * explicit `broadcast()` hints allowed to broadcast — so a join that
+    * broadcasts here does so because the code asks for it, at any scale. */
+  private def hintOnlyPlan(name: String): SparkPlan = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private def onCid(keys: Seq[Expression]): Boolean =
+    keys.exists(_.references.exists(_.name == "cid"))
+
+  private def cellsScans(p: SparkPlan): Seq[BatchScanExec] =
+    collect(p) { case b: BatchScanExec if b.simpleString(200).contains("/cells") => b }
+
+  private def windows(p: SparkPlan): Int = collect(p) {
+    case _: WindowExec => 1
+    case m: InMemoryTableScanExec => windows(m.relation.cachedPlan)
+  }.sum
+
+  test("inline IVF: the probe⋈cells join on cid is a broadcast hash join, never a sort-merge join") {
+    for (q <- Seq("ann_ivf_topk", "ann_ivf_quantized", "ann_ivf_q8_refined")) {
+      val plan = hintOnlyPlan(q)
+      val cidBhj = collect(plan) { case j: BroadcastHashJoinExec if onCid(j.leftKeys) => j }
+      val cidSmj = collect(plan) { case j: SortMergeJoinExec if onCid(j.leftKeys) => j }
+      assert(cidBhj.nonEmpty, s"$q: no broadcast hash join on cid:\n$plan")
+      assert(cidSmj.isEmpty, s"$q: sort-merge join on cid:\n$plan")
+    }
+  }
+
+  test("stored IVF: the broadcast side of the cid join is the probe frame, never the cells") {
+    for (q <- Seq("ann_ivf_stored", "ann_ivf_stored_q8", "ann_ivf_compacted")) {
+      val plan = hintOnlyPlan(q)
+      val cidBhj = collect(plan) { case j: BroadcastHashJoinExec if onCid(j.leftKeys) => j }
+      assert(cidBhj.nonEmpty, s"$q: no broadcast hash join on cid:\n$plan")
+      cidBhj.foreach { j =>
+        val (build, streamed) =
+          if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+        assert(cellsScans(build).isEmpty, s"$q: cells on the build side:\n$plan")
+        assert(cellsScans(streamed).nonEmpty, s"$q: cells scan does not stream:\n$plan")
+      }
+      val broadcastCells = collect(plan) {
+        case b: BroadcastExchangeExec if cellsScans(b).nonEmpty => b }
+      assert(broadcastCells.isEmpty, s"$q: a broadcast exchange holds the cells scan:\n$plan")
+    }
+  }
+
+  test("substring dedup plans one lead() window per read of the shared grams frame") {
+    // Four reads of the persisted grams frame, one WindowExec in each: the
+    // gram boundary comes from lead(tok, k-1), so no per-doc count window.
+    for (q <- Seq("dedup_substring", "dedup_substring_apply")) {
+      val plan = hintOnlyPlan(q)
+      assert(windows(plan) === 4, s"$q:\n$plan")
+    }
   }
 }

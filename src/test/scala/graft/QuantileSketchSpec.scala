@@ -48,7 +48,39 @@ class QuantileSketchSpec extends AnyFunSuite {
     val p50 = df.agg(kllSketch(col("v")).as("s"))
       .select(kllQuantile(col("s"), lit(0.5))).head().getDouble(0)
     val trueRank = p50 / n // value v has rank v/n in uniform 0..n-1
-    assert(math.abs(trueRank - 0.5) < 4 * 1.65 / 200, s"p50=$p50 rank=$trueRank")
+    val bound = 4 * 1.65 / 200
+    assert(math.abs(trueRank - 0.5) < bound, s"p50=$p50 rank=$trueRank")
+
+    // Adversarial stream orders (the EDBT 2023 quantile-sketch study's
+    // sorted / reversed / zoom-in / shuffled inputs) over the same values,
+    // each fed in order through ONE partition. Every order must hold the
+    // same bound at p1..p99, for one sketch and for a merge of per-shard
+    // sketches over contiguous slices of the stream.
+    val sorted = (0 until n).map(_.toDouble)
+    val zoomIn = (0 until n).map(i => if (i % 2 == 0) i / 2 else n - 1 - i / 2)
+      .map(_.toDouble)
+    val orders = Seq(
+      "sorted" -> sorted,
+      "reversed" -> sorted.reverse,
+      "zoom-in" -> zoomIn,
+      "shuffled" -> new scala.util.Random(17).shuffle(sorted))
+    val qs = Seq(0.01, 0.25, 0.5, 0.75, 0.99)
+    def within(label: String, sketch: org.apache.spark.sql.DataFrame): Unit = {
+      val got = sketch.select(qs.map(q => kllQuantile(col("s"), lit(q))): _*).head()
+      qs.zipWithIndex.foreach { case (q, i) =>
+        val rank = got.getDouble(i) / n
+        assert(math.abs(rank - q) < bound, s"$label q=$q got=${got.getDouble(i)}")
+      }
+    }
+    orders.foreach { case (name, values) =>
+      assert(values.sorted == sorted, s"$name must permute 0..n-1")
+      val stream = spark.sparkContext
+        .parallelize(values.zipWithIndex.map { case (v, i) => (v, i * 8 / n) }, 1)
+        .toDF("v", "shard")
+      within(s"$name build", stream.agg(kllSketch(col("v")).as("s")))
+      within(s"$name merge", stream.groupBy("shard")
+        .agg(kllSketch(col("v")).as("s")).agg(kllMerge(col("s")).as("s")))
+    }
   }
 
   test("NULL contracts: null inputs skipped; empty sketch quantile is NULL") {
