@@ -102,8 +102,7 @@ private[graft] object ArrowFileStats {
   }
 
   /** Normalize a v1 Filter's external value to the column's stats kind.
-    * None = can't interpret → never prune on it. (Also reused by the
-    * external-Row stats collector — the value forms coincide.) */
+    * None = can't interpret → never prune on it. */
   private[sources] def norm(kind: String, v: Any): Option[Any] = (kind, v) match {
     case (_, null) => None
     case ("long", x: Byte) => Some(x.toLong)
@@ -120,7 +119,7 @@ private[graft] object ArrowFileStats {
       Some(Math.addExact(Math.multiplyExact(x.getEpochSecond, 1000000L),
         (x.getNano / 1000).toLong))
     case ("long", x: java.time.LocalDateTime) => // TIMESTAMP_NTZ external form:
-      // naive µs at UTC offset, matching ArrowInterchange.ldtMicros
+      // naive µs at UTC offset, the internal TIMESTAMP_NTZ value
       Some(Math.addExact(
         Math.multiplyExact(x.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L),
         (x.getNano / 1000).toLong))
@@ -665,7 +664,6 @@ private[graft] class ArrowStatsCollector(schema: StructType,
     if (bloomCols.contains(f.name) && k != 0 && k != 2) new ArrowBloom.Builder
     else null
   }
-  private val bloomOk = Array.fill(n)(true)
 
   private def updLong(c: Int, v: Long): Unit = {
     if (summable(c)) lsum(c) += v // wrapping, like Spark's non-ANSI sum
@@ -678,9 +676,6 @@ private[graft] class ArrowStatsCollector(schema: StructType,
     else if (!seen(c)) { dmin(c) = v; dmax(c) = v; seen(c) = true }
     else { if (v < dmin(c)) dmin(c) = v; if (v > dmax(c)) dmax(c) = v }
 
-  /** `owned` = the UTF8String is freshly allocated (external conversion)
-    * and safe to retain; internal-row strings view a reused buffer and
-    * must be cloned on retention. */
   private def updDecimal(c: Int, v: java.math.BigDecimal): Unit = {
     gsum(c) = gsum(c).add(v) // exact
     if (!seen(c)) { gmin(c) = v; gmax(c) = v; seen(c) = true }
@@ -691,8 +686,8 @@ private[graft] class ArrowStatsCollector(schema: StructType,
   }
 
   /** Unsigned lexicographic byte order — the order hex canonicals sort in.
-    * Same 256-byte payload-size refusal as strings. `v` always arrives
-    * owned (getBinary copies; external rows own their arrays). */
+    * Same 256-byte payload-size refusal as strings. `v` arrives owned
+    * (getBinary copies). */
   private def updBinary(c: Int, v: Array[Byte]): Unit = {
     def lt(a: Array[Byte], b: Array[Byte]): Boolean = {
       var i = 0
@@ -712,14 +707,13 @@ private[graft] class ArrowStatsCollector(schema: StructType,
     }
   }
 
-  private def updString(c: Int, v: UTF8String, owned: Boolean): Unit =
+  private def updString(c: Int, v: UTF8String): Unit =
     if (v.numBytes > 256) valid(c) = false
     else if (!seen(c)) {
-      smin(c) = if (owned) v else v.clone()
-      smax(c) = if (owned) v else v.clone(); seen(c) = true
+      smin(c) = v.clone(); smax(c) = v.clone(); seen(c) = true
     } else {
-      if (v.compareTo(smin(c)) < 0) smin(c) = if (owned) v else v.clone()
-      if (v.compareTo(smax(c)) > 0) smax(c) = if (owned) v else v.clone()
+      if (v.compareTo(smin(c)) < 0) smin(c) = v.clone()
+      if (v.compareTo(smax(c)) > 0) smax(c) = v.clone()
     }
 
   def update(row: InternalRow): Unit = {
@@ -747,7 +741,7 @@ private[graft] class ArrowStatsCollector(schema: StructType,
           case 3 =>
             val s = row.getUTF8String(c)
             if (bloomB(c) != null) bloomB(c).add(s.toString)
-            if (valid(c)) updString(c, s, owned = false)
+            if (valid(c)) updString(c, s)
           case 4 =>
             val d = dts(c).asInstanceOf[DecimalType]
             val bd = row.getDecimal(c, d.precision, d.scale).toJavaBigDecimal
@@ -759,63 +753,6 @@ private[graft] class ArrowStatsCollector(schema: StructType,
             if (bloomB(c) != null) bloomB(c).add(ArrowFileStats.toHex(b))
             if (valid(c)) updBinary(c, b)
           case _ => ()
-        }
-      }
-      c += 1
-    }
-  }
-
-  /** External-`Row` twin of [[update]] (the function-style writer's value
-    * form): java.sql / java.time values normalize through the SAME
-    * converter the filter side uses, so both collectors agree bit-for-bit.
-    * An external form the normalizer can't interpret invalidates the
-    * column — never a silently-wrong interval. */
-  def updateExternal(row: org.apache.spark.sql.Row): Unit = {
-    rows += 1
-    var c = 0
-    while (c < n) {
-      if (kinds(c) != 0) {
-        val v = row.get(c)
-        if (v == null) nulls(c) += 1
-        else {
-          // bloom first, through the SAME normalizer the filter side uses;
-          // an uninterpretable value must invalidate the bloom too (it
-          // would otherwise be a missed value → wrong skip)
-          if (bloomB(c) != null && bloomOk(c)) {
-            val kindStr = kinds(c) match {
-              case 1 => "long"; case 3 => "string"; case 4 => "decimal"
-              case _ => "binary"
-            }
-            ArrowFileStats.norm(kindStr, v)
-              .flatMap(x => ArrowBloom.keyOf(kindStr, x)) match {
-              case Some(key) => bloomB(c).add(key)
-              case None => bloomOk(c) = false
-            }
-          }
-          if (valid(c)) kinds(c) match {
-            case 1 => ArrowFileStats.norm("long", v) match {
-              case Some(x) => updLong(c, x.asInstanceOf[Long])
-              case None => valid(c) = false
-            }
-            case 2 => v match {
-              case x: java.lang.Number => updDouble(c, x.doubleValue())
-              case _ => valid(c) = false
-            }
-            case 3 => v match {
-              case x: String => updString(c, UTF8String.fromString(x), owned = true)
-              case _ => valid(c) = false
-            }
-            case 4 => v match {
-              case x: java.math.BigDecimal => updDecimal(c, x)
-              case x: scala.math.BigDecimal => updDecimal(c, x.bigDecimal)
-              case _ => valid(c) = false
-            }
-            case 5 => v match {
-              case x: Array[Byte] => updBinary(c, x)
-              case _ => valid(c) = false
-            }
-            case _ => ()
-          }
         }
       }
       c += 1
@@ -859,7 +796,7 @@ private[graft] class ArrowStatsCollector(schema: StructType,
             case _ => None
           }
         val bloom: Option[BloomStats] =
-          if (bloomB(c) == null || !bloomOk(c)) None else bloomB(c).result()
+          Option(bloomB(c)).flatMap(_.result())
         Some(schema.fields(c).name ->
           ColStats(kind, mm.map(_._1), mm.map(_._2), nulls(c), sum, bloom))
       }

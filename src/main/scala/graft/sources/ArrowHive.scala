@@ -488,158 +488,3 @@ private[sources] class ArrowIpcHiveReaderFactory(
           fv => columnarReader(fv._1._1, fv._1._2, fv._2))
     }
 }
-
-/** Rolling task writer for hive-partitioned layouts: starts a new file in
-  * the value directory whenever the partition-key tuple changes (the plan
-  * is clustered+sorted on the keys via RequiresDistributionAndOrdering,
-  * so each task sees contiguous runs; unsorted input stays correct, just
-  * yields more files). Data files carry ONLY the non-key columns; stats
-  * are collected over those via a projecting row view. */
-private[sources] class ArrowIpcHiveDataWriter(
-    schema: StructType, dir: String, codec: Option[String], queryId: String,
-    partitionId: Int, taskId: Long, conf: SerializableHadoopConf,
-    hiveKeys: Seq[String], epochTag: String = "",
-    bloomCols: Set[String] = Set.empty,
-    maxRowsPerFile: Long = Long.MaxValue)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.arrow.vector.VectorSchemaRoot
-  import org.apache.arrow.vector.ipc.ArrowStreamWriter
-
-  private val BatchRows = 4096
-  private val types = schema.fields.map(_.dataType)
-  private val keyIdx = hiveKeys.map(k => schema.fieldNames.indexOf(k)).toArray
-  private val keyFields = keyIdx.map(schema.fields(_))
-  private val dataIdx = schema.fields.indices.filterNot(keyIdx.contains).toArray
-  private val dataSchema = StructType(dataIdx.map(schema.fields(_)))
-  private val proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(
-    dataSchema, dataIdx.toIndexedSeq)
-
-  private var alloc: org.apache.arrow.memory.RootAllocator = _
-  private var root: VectorSchemaRoot = _
-  private var writer: ArrowStreamWriter = _
-  private var stats: ArrowStatsCollector = _
-  private var tmp: Path = _
-  private var subdir: Path = _
-  private var n = 0
-  private var seq = 0
-  private var fileRows = 0L
-  private var curKey: Array[Any] = _
-  private val finished = scala.collection.mutable.ArrayBuffer
-    .empty[(Path, Path, FileStats)]
-
-  private def keyAt(row: InternalRow, i: Int): Any = {
-    val c = keyIdx(i)
-    if (row.isNullAt(c)) null
-    else types(c) match {
-      case StringType => row.getUTF8String(c)
-      case dt => row.get(c, dt)
-    }
-  }
-
-  private def sameKey(row: InternalRow): Boolean = {
-    var i = 0
-    while (i < keyIdx.length) {
-      if (!java.util.Objects.equals(curKey(i), keyAt(row, i))) return false
-      i += 1
-    }
-    true
-  }
-
-  private def open(): Unit = {
-    alloc = new org.apache.arrow.memory.RootAllocator()
-    root = VectorSchemaRoot.create(ArrowInterchange.toArrowSchema(dataSchema), alloc)
-    subdir = curKey.zipWithIndex.foldLeft(new Path(dir)) { case (p, (v, i)) =>
-      new Path(p, ArrowHiveLayout.dirSegment(keyFields(i), v))
-    }
-    tmp = new Path(subdir,
-      f".part-$partitionId%05d-g$seq%04d$epochTag%s-$queryId.arrows.task-$taskId.tmp")
-    val out = tmp.getFileSystem(conf.value).create(tmp, true)
-    writer = ArrowInterchange.newStreamWriter(root, out, codec)
-    writer.start()
-    root.allocateNew()
-    stats = new ArrowStatsCollector(dataSchema, bloomCols)
-    fileRows = 0L
-  }
-
-  private def flushBatch(): Unit = {
-    root.setRowCount(n)
-    writer.writeBatch()
-    root.allocateNew()
-    n = 0
-  }
-
-  private def roll(): Unit = {
-    if (writer == null) return
-    if (n > 0) flushBatch()
-    writer.end()
-    closeCurrent()
-    finished += ((tmp,
-      new Path(subdir, f"part-$partitionId%05d-g$seq%04d$epochTag%s-$queryId.arrows"),
-      stats.result()))
-    seq += 1
-  }
-
-  override def write(row: InternalRow): Unit = {
-    if (curKey == null || !sameKey(row)) {
-      roll()
-      // retain the key OFF the row's reused buffers (UTF8String views them)
-      curKey = Array.tabulate(keyIdx.length) { i =>
-        keyAt(row, i) match {
-          case s: UTF8String => s.clone()
-          case v => v
-        }
-      }
-      open()
-    } else if (fileRows >= maxRowsPerFile) {
-      // size-bounded rolling WITHIN a value directory: the key did not
-      // change, so the next -g file lands in the same `key=value/` dir
-      // with its own stats/bloom manifest entry — a hot partition's
-      // files stay bounded at write time instead of waiting for a
-      // maintenance pass
-      roll()
-      open()
-    }
-    var d = 0
-    while (d < dataIdx.length) {
-      val c = dataIdx(d)
-      ArrowInterchange.setInternalValue(root.getVector(d), types(c), n, row, c)
-      d += 1
-    }
-    proj.project(row)
-    stats.update(proj)
-    n += 1
-    fileRows += 1
-    if (n >= BatchRows) flushBatch()
-  }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    roll()
-    val files = finished.map { case (t, fin, st) =>
-      val fs = fin.getFileSystem(conf.value)
-      if (!fs.rename(t, fin)) {
-        fs.delete(t, false)
-        throw new java.io.IOException(s"arrow-ipc: rename $t -> $fin failed")
-      }
-      fin.toString -> st
-    }.toSeq
-    ArrowIpcCommitMessage(files)
-  }
-
-  override def abort(): Unit = {
-    closeCurrent()
-    val fs = new Path(dir).getFileSystem(conf.value)
-    if (tmp != null) fs.delete(tmp, false)
-    finished.foreach { case (t, _, _) => fs.delete(t, false) }
-  }
-
-  private def closeCurrent(): Unit = {
-    try {
-      if (writer != null) writer.close()
-      if (root != null) root.close()
-      if (alloc != null) alloc.close()
-    } catch { case _: Throwable => () }
-    writer = null; root = null; alloc = null
-  }
-
-  override def close(): Unit = ()
-}

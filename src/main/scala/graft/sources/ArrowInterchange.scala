@@ -2,9 +2,6 @@ package graft.sources
 
 import java.io.{InputStream, ObjectInputStream, ObjectOutputStream}
 import java.nio.channels.Channels
-import java.nio.charset.StandardCharsets.UTF_8
-import java.sql.Timestamp
-import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
@@ -21,7 +18,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.Text
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
 
 /** Arrow IPC stream interchange — the reference's NATIVE data format: its
@@ -38,12 +38,20 @@ import org.apache.spark.sql.types._
   * data files (partitions can be empty). Files written elsewhere are also
   * readable: absent a sentinel, the schema comes from the first data file.
   *
-  * Scale shape: the writer runs as a `foreachPartition` action (no `.rdd`
-  * plan materialization, no driver collect) through the Hadoop FileSystem
-  * API, so the same code targets `file:`, `hdfs:` or `s3a:`; memory per
-  * task is bounded by `maxRecordsPerBatch`. The reader parallelizes per
-  * file via `binaryFiles` and streams batch-by-batch — a file is never
-  * loaded whole.
+  * One value form: the Catalyst internal row is the only form this layer
+  * encodes or decodes. [[setInternalValue]] writes a value into its
+  * vector and [[getInternalValue]] reads it back, for [[writeStream]] /
+  * [[readStream]] and the DSv2 writers and scan alike, so a value written
+  * by one path reads back identically through the other whatever the
+  * session's external-type settings (`spark.sql.datetime.java8API.enabled`
+  * included).
+  *
+  * Scale shape: the writer runs the per-file [[ArrowFileWriter]] over the
+  * plan's internal rows (`queryExecution.toRdd`, no driver collect)
+  * through the Hadoop FileSystem API, so the same code targets `file:`,
+  * `hdfs:` or `s3a:`; memory per task is bounded by one 4096-row record
+  * batch. The reader parallelizes per file via `binaryFiles` and streams
+  * batch-by-batch — a file is never loaded whole.
   *
   * Type surface (both directions): boolean, int, bigint, float, double,
   * string, binary, timestamp (µs — Spark's native precision, written with
@@ -331,10 +339,9 @@ object ArrowInterchange {
     * decodes transparently (readers here always accept both plus
     * uncompressed). At 100 TB the tradeoff is the usual one: lz4 for
     * hot interchange, zstd for colder/denser storage. */
-  def writeStream(df: DataFrame, dir: String, maxRecordsPerBatch: Int = 4096,
+  def writeStream(df: DataFrame, dir: String,
       codec: Option[String] = None,
       bloomCols: Set[String] = Set.empty): Unit = {
-    require(maxRecordsPerBatch >= 1, "maxRecordsPerBatch must be >= 1")
     codecType(codec) // validate the codec name eagerly, on the driver
     val schema = df.schema
     toArrowSchema(schema) // validate the type surface eagerly, on the driver
@@ -350,30 +357,37 @@ object ArrowInterchange {
     // Duplicate task attempts write identical deterministic content, so
     // last-one-wins dedup by file name is exact, not a race.
     val statsAcc = sc.collectionAccumulator[(String, FileStats)]("arrowFileStats")
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        // Commit protocol: write to an ATTEMPT-SCOPED temp name, then
-        // rename to the final deterministic per-partition name. Two
-        // speculative attempts of one partition never write the same path
-        // concurrently (interleaved-create corruption / HDFS lease clash);
-        // whichever rename lands first wins and the loser discards its
-        // temp file. Rename is atomic on HDFS-like stores; on object
-        // stores it is copy+delete but still attempt-isolated.
-        val tc = TaskContext.get()
-        val finalP = new Path(dir, f"part-${tc.partitionId()}%05d.arrows")
-        val tmpP = new Path(dir,
-          f".part-${tc.partitionId()}%05d.arrows.attempt-${tc.taskAttemptId()}.tmp")
-        val pfs = finalP.getFileSystem(conf.value)
-        val collector = new ArrowStatsCollector(schema, bloomCols)
-        writeOneFile(pfs.create(tmpP, true), schema, rows, maxRecordsPerBatch,
-          codec, Some(collector))
-        if (!pfs.rename(tmpP, finalP)) {
-          val lost = pfs.exists(finalP) // a sibling attempt already committed
-          pfs.delete(tmpP, false)
-          if (!lost) throw new java.io.IOException(
-            s"Arrow interchange: rename $tmpP -> $finalP failed")
+    // one SQL execution per write, as a Dataset action runs: listeners and
+    // the SQL UI see the write's plan, planning phases and jobs
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("writeStream")) {
+      qe.toRdd.foreachPartition { (rows: Iterator[InternalRow]) =>
+        if (rows.hasNext) {
+          // Commit protocol: write to an ATTEMPT-SCOPED temp name, then
+          // rename to the final deterministic per-partition name. Two
+          // speculative attempts of one partition never write the same path
+          // concurrently (interleaved-create corruption / HDFS lease clash);
+          // whichever rename lands first wins and the loser discards its
+          // temp file. Rename is atomic on HDFS-like stores; on object
+          // stores it is copy+delete but still attempt-isolated.
+          val tc = TaskContext.get()
+          val finalP = new Path(dir, f"part-${tc.partitionId()}%05d.arrows")
+          val tmpP = new Path(dir,
+            f".part-${tc.partitionId()}%05d.arrows.attempt-${tc.taskAttemptId()}.tmp")
+          val pfs = finalP.getFileSystem(conf.value)
+          val file = new ArrowFileWriter(schema, pfs.create(tmpP, true), codec,
+            bloomCols)
+          val stats =
+            try { rows.foreach(file.write); file.finish() }
+            catch { case e: Throwable => file.abort(); throw e }
+          if (!pfs.rename(tmpP, finalP)) {
+            val lost = pfs.exists(finalP) // a sibling attempt already committed
+            pfs.delete(tmpP, false)
+            if (!lost) throw new java.io.IOException(
+              s"Arrow interchange: rename $tmpP -> $finalP failed")
+          }
+          statsAcc.add(finalP.getName -> stats)
         }
-        statsAcc.add(finalP.getName -> collector.result())
       }
     }
     // stats manifest BEFORE the completeness marker: a reader that sees
@@ -394,19 +408,10 @@ object ArrowInterchange {
         s"Arrow interchange: unknown codec '$other' (supported: lz4, zstd)")
     }
 
-  /** IPC stream writer over `root`, optionally body-compressed. */
-  private[sources] def newStreamWriter(root: VectorSchemaRoot,
-      out: java.io.OutputStream, codec: Option[String]): ArrowStreamWriter =
-    codecType(codec) match {
-      case Some(ct) => new ArrowStreamWriter(root, null, Channels.newChannel(out),
-        IpcOption.DEFAULT, CommonsCompressionFactory.INSTANCE, ct)
-      case None => new ArrowStreamWriter(root, null, Channels.newChannel(out))
-    }
-
-  /** Zero-row schema-sentinel stream file. */
+  /** Zero-row schema-sentinel stream file: schema header + EOS. */
   private[sources] def writeSentinel(out: java.io.OutputStream,
       schema: StructType): Unit =
-    writeOneFile(out, schema, Iterator.empty, 1, None)
+    new ArrowFileWriter(schema, out, None).finish()
 
   /** The ONLY way a sentinel reaches its live path: serialized to bytes,
     * then flipped in with ArrowOcc.writeAtomic. Reads are deliberately
@@ -421,45 +426,9 @@ object ArrowInterchange {
     ArrowOcc.writeAtomic(fs, new Path(dirPath, "_schema.arrows"), bos.toByteArray)
   }
 
-  private def writeOneFile(out: java.io.OutputStream, schema: StructType,
-      rows: Iterator[Row], maxRecordsPerBatch: Int,
-      codec: Option[String], stats: Option[ArrowStatsCollector] = None): Unit = {
-    val alloc = new RootAllocator()
-    val root = VectorSchemaRoot.create(toArrowSchema(schema), alloc)
-    val writer = newStreamWriter(root, out, codec)
-    try {
-      writer.start()
-      val types = schema.fields.map(_.dataType)
-      while (rows.hasNext) {
-        root.allocateNew()
-        var n = 0
-        while (rows.hasNext && n < maxRecordsPerBatch) {
-          val row = rows.next()
-          var i = 0
-          while (i < types.length) {
-            setValue(root.getVector(i), types(i), n, row, i)
-            i += 1
-          }
-          stats.foreach(_.updateExternal(row))
-          n += 1
-        }
-        root.setRowCount(n)
-        writer.writeBatch()
-      }
-      writer.end()
-    } finally {
-      writer.close() // also closes the channel/stream
-      root.close()
-      alloc.close()
-    }
-  }
-
-  private def setValue(v: FieldVector, dt: DataType, idx: Int, row: Row, col: Int): Unit =
-    setRaw(v, dt, idx, if (row.isNullAt(col)) null else row.get(col))
-
-  /** Write one value straight from Catalyst INTERNAL form (UTF8String
-    * bytes, micros long, days int, Decimal, ArrayData) — the DSv2 write
-    * path, skipping the external boxing the [[setRaw]] path pays.
+  /** Write one value from Catalyst INTERNAL form (UTF8String bytes,
+    * micros long, days int, Decimal, ArrayData) — the encode half of the
+    * interchange's one value form, run by every file writer.
     * `SpecializedGetters` covers both InternalRow and ArrayData, so list
     * elements recurse through the same dispatch. */
   private[sources] def setInternalValue(v: FieldVector, dt: DataType, idx: Int,
@@ -538,104 +507,6 @@ object ArrowInterchange {
         s"Arrow interchange: vector ${other.getClass.getSimpleName} / type $t mismatch")
     }
 
-  /** Write one (possibly null) value; recursive through list elements. */
-  private def setRaw(v: FieldVector, dt: DataType, idx: Int, value: Any): Unit =
-    (v, dt) match {
-      case (x: BitVector, BooleanType) =>
-        if (value == null) x.setNull(idx)
-        else x.setSafe(idx, if (value.asInstanceOf[Boolean]) 1 else 0)
-      case (x: TinyIntVector, ByteType) =>
-        if (value == null) x.setNull(idx) else x.setSafe(idx, value.asInstanceOf[Byte])
-      case (x: SmallIntVector, ShortType) =>
-        if (value == null) x.setNull(idx) else x.setSafe(idx, value.asInstanceOf[Short])
-      case (x: IntVector, IntegerType) =>
-        if (value == null) x.setNull(idx) else x.setSafe(idx, value.asInstanceOf[Int])
-      case (x: BigIntVector, LongType) =>
-        if (value == null) x.setNull(idx) else x.setSafe(idx, value.asInstanceOf[Long])
-      case (x: Float4Vector, FloatType) =>
-        if (value == null) x.setNull(idx) else x.setSafe(idx, value.asInstanceOf[Float])
-      case (x: Float8Vector, DoubleType) =>
-        if (value == null) x.setNull(idx) else x.setSafe(idx, value.asInstanceOf[Double])
-      case (x: VarCharVector, StringType) =>
-        if (value == null) x.setNull(idx)
-        else x.setSafe(idx, value.asInstanceOf[String].getBytes(UTF_8))
-      case (x: VarBinaryVector, BinaryType) =>
-        if (value == null) x.setNull(idx)
-        else x.setSafe(idx, value.asInstanceOf[Array[Byte]])
-      case (x: FixedSizeBinaryVector, BinaryType) =>
-        if (value == null) x.setNull(idx)
-        else {
-          val bytes = value.asInstanceOf[Array[Byte]]
-          require(bytes.length == x.getByteWidth, "Arrow interchange: " +
-            s"fixed-size binary column expects ${x.getByteWidth} bytes, got ${bytes.length}")
-          x.setSafe(idx, bytes)
-        }
-      case (x: DecimalVector, d: DecimalType) =>
-        if (value == null) x.setNull(idx)
-        // setScale never loses digits here: the row's decimal already has
-        // scale <= d.scale by Spark's own type contract
-        else x.setSafe(idx, value.asInstanceOf[java.math.BigDecimal].setScale(d.scale))
-      case (x: TimeStampVector, TimestampType) => // µs instant
-        if (value == null) x.setNull(idx)
-        else x.setSafe(idx, micros(value.asInstanceOf[Timestamp]))
-      case (x: TimeStampVector, TimestampNTZType) => // naive µs (LocalDateTime)
-        if (value == null) x.setNull(idx)
-        else x.setSafe(idx, ldtMicros(value.asInstanceOf[java.time.LocalDateTime]))
-      case (x: DateDayVector, DateType) =>
-        if (value == null) x.setNull(idx)
-        else x.setSafe(idx,
-          value.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
-      case (x: DurationVector, _: DayTimeIntervalType) =>
-        if (value == null) x.setNull(idx)
-        else {
-          val d = value.asInstanceOf[java.time.Duration]
-          x.setSafe(idx, Math.addExact(
-            Math.multiplyExact(d.getSeconds, 1000000L), (d.getNano / 1000).toLong))
-        }
-      case (x: org.apache.arrow.vector.complex.MapVector, MapType(kt, vt, _)) =>
-        if (value == null) x.setNull(idx)
-        else {
-          val m = value.asInstanceOf[scala.collection.Map[Any, Any]]
-          val offset = x.startNewValue(idx)
-          val entries = x.getDataVector
-            .asInstanceOf[org.apache.arrow.vector.complex.StructVector]
-          var i = 0
-          m.foreach { case (k, v2) =>
-            entries.setIndexDefined(offset + i)
-            setRaw(entries.getChildByOrdinal(0).asInstanceOf[FieldVector], kt,
-              offset + i, k)
-            setRaw(entries.getChildByOrdinal(1).asInstanceOf[FieldVector], vt,
-              offset + i, v2)
-            i += 1
-          }
-          x.endValue(idx, m.size)
-        }
-      case (x: ListVector, ArrayType(et, _)) =>
-        if (value == null) x.setNull(idx) // fills offset holes, keeps lastSet
-        else {
-          val elems = value.asInstanceOf[scala.collection.Seq[Any]]
-          val offset = x.startNewValue(idx)
-          var i = 0
-          while (i < elems.length) {
-            setRaw(x.getDataVector, et, offset + i, elems(i)); i += 1
-          }
-          x.endValue(idx, elems.length)
-        }
-      case (x: org.apache.arrow.vector.complex.StructVector, st: StructType) =>
-        if (value == null) x.setNull(idx)
-        else {
-          val r = value.asInstanceOf[Row]
-          x.setIndexDefined(idx)
-          var i = 0
-          while (i < st.length) {
-            setRaw(x.getChildByOrdinal(i).asInstanceOf[FieldVector], st.fields(i).dataType, idx, r.get(i))
-            i += 1
-          }
-        }
-      case (other, t) => throw new IllegalArgumentException(
-        s"Arrow interchange: vector ${other.getClass.getSimpleName} / type $t mismatch")
-    }
-
   // ── read ───────────────────────────────────────────────────────────────
 
   /** Read a directory of Arrow IPC stream files written by [[writeStream]]
@@ -687,18 +558,18 @@ object ArrowInterchange {
       case null => Array.empty[org.apache.hadoop.fs.FileStatus]
       case st   => st
     }).map(_.getPath).filter(p => visible(p.getName))
-    // the DataFrame surfaces the STRIPPED schema; the enriched one (field
-    // ids, rename history) rides only into the per-file resolution
-    if (dataPaths.isEmpty) // all partitions were empty — sentinel carries the schema
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        stripEvolution(schema))
     // Pruned reads tolerate extra (even unsupported-typed) columns in the
     // file; full reads require the exact schema — a stray column would
     // otherwise be silently dropped.
     val exact = columns.isEmpty
-    val rdd = spark.sparkContext.binaryFiles(dataPaths.map(_.toString).mkString(","))
-      .flatMap { case (path, pds) => rowsFromStream(pds.open(), path, schema, exact) }
-    spark.createDataFrame(rdd, stripEvolution(schema))
+    val rdd =
+      if (dataPaths.isEmpty) // all partitions were empty — sentinel carries the schema
+        spark.sparkContext.emptyRDD[InternalRow]
+      else spark.sparkContext.binaryFiles(dataPaths.map(_.toString).mkString(","))
+        .flatMap { case (path, pds) => rowsFromStream(pds.open(), path, schema, exact) }
+    // the DataFrame surfaces the STRIPPED schema; the enriched one (field
+    // ids, rename history) rides only into the per-file resolution
+    GraftSqlShim.internalCreateDataFrame(spark, rdd, stripEvolution(schema))
   }
 
   /** Driver-side schema derivation from the sentinel or first data file —
@@ -745,7 +616,7 @@ object ArrowInterchange {
     * different-named file fails with this file's path, never silently
     * mislabels values), and `exact` additionally rejects extra columns. */
   private def rowsFromStream(in: InputStream, path: String,
-      expected: StructType, exact: Boolean): Iterator[Row] = {
+      expected: StructType, exact: Boolean): Iterator[InternalRow] = {
     val alloc = new RootAllocator()
     // the compression factory also handles uncompressed streams, so every
     // read path accepts plain, lz4 and zstd files alike
@@ -762,7 +633,7 @@ object ArrowInterchange {
       try resolveColumns(root.getSchema, expected, path, exact)
       catch { case e: Throwable => closeAll(); throw e }
     val types = expected.fields.map(_.dataType)
-    new Iterator[Row] {
+    new Iterator[InternalRow] {
       private var i = 0
       private var n = 0
       private var done = false
@@ -772,7 +643,7 @@ object ArrowInterchange {
           else { done = true; closeAll() }
         }
       override def hasNext: Boolean = { advance(); !done }
-      override def next(): Row = {
+      override def next(): InternalRow = {
         advance()
         if (done) throw new NoSuchElementException("exhausted Arrow stream")
         val vals = new Array[Any](types.length)
@@ -780,11 +651,11 @@ object ArrowInterchange {
         while (c < types.length) {
           vals(c) =
             if (cols(c) < 0) null // evolved column absent from this file
-            else getValue(root.getVector(cols(c)), types(c), i)
+            else getInternalValue(root.getVector(cols(c)), types(c), i)
           c += 1
         }
         i += 1
-        Row.fromSeq(vals.toIndexedSeq)
+        new GenericInternalRow(vals)
       }
     }
   }
@@ -873,9 +744,8 @@ object ArrowInterchange {
   }
 
   /** One value in Catalyst INTERNAL form (UTF8String, micros long, days
-    * int, Decimal, GenericArrayData) — the DSv2 scan's decode path, which
-    * skips the external boxing ([[getValue]]'s Timestamp/Date/Seq) that
-    * `createDataFrame` would just convert straight back. */
+    * int, Decimal, GenericArrayData) — the decode half of the interchange's
+    * one value form, shared by the DSv2 scan and [[readStream]]. */
   private[sources] def getInternalValue(v: FieldVector, dt: DataType, idx: Int): Any =
     if (v.isNull(idx)) null
     else (v, dt) match {
@@ -924,71 +794,79 @@ object ArrowInterchange {
       case (other, t) => throw new IllegalArgumentException(
         s"Arrow interchange: vector ${other.getClass.getSimpleName} / type $t mismatch")
     }
+}
 
-  private def getValue(v: FieldVector, dt: DataType, idx: Int): Any =
-    if (v.isNull(idx)) null
-    else (v, dt) match {
-      case (x: BitVector, BooleanType)      => x.get(idx) == 1
-      case (x: TinyIntVector, ByteType)     => x.get(idx)
-      case (x: SmallIntVector, ShortType)   => x.get(idx)
-      case (x: IntVector, IntegerType)      => x.get(idx)
-      case (x: BigIntVector, LongType)      => x.get(idx)
-      case (x: Float4Vector, FloatType)     => x.get(idx)
-      case (x: Float8Vector, DoubleType)    => x.get(idx)
-      // widened reads of pre-evolution files (see [[isWidening]])
-      case (x: IntVector, LongType)         => x.get(idx).toLong
-      case (x: Float4Vector, DoubleType)    => x.get(idx).toDouble
-      case (x: VarCharVector, StringType)   => new String(x.get(idx), UTF_8)
-      case (x: VarBinaryVector, BinaryType) => x.get(idx)
-      case (x: FixedSizeBinaryVector, BinaryType) => x.get(idx)
-      case (x: DecimalVector, _: DecimalType) => x.getObject(idx)
-      case (x: TimeStampVector, TimestampType) => tsFromMicros(x.get(idx))
-      case (x: TimeStampVector, TimestampNTZType) => ldtFromMicros(x.get(idx))
-      case (x: DateDayVector, DateType) =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(x.get(idx).toLong))
-      case (x: DurationVector, _: DayTimeIntervalType) => x.getObject(idx)
-      case (x: org.apache.arrow.vector.complex.MapVector, MapType(kt, vt, _)) =>
-        // BEFORE ListVector (subtype). Insertion-ordered so the external
-        // form round-trips deterministically.
-        val (start, end) = (x.getElementStartIndex(idx), x.getElementEndIndex(idx))
-        val entries = x.getDataVector
-          .asInstanceOf[org.apache.arrow.vector.complex.StructVector]
-        val kv = entries.getChildByOrdinal(0).asInstanceOf[FieldVector]
-        val vv = entries.getChildByOrdinal(1).asInstanceOf[FieldVector]
-        scala.collection.immutable.ListMap(
-          (start until end).map(i => getValue(kv, kt, i) -> getValue(vv, vt, i)): _*)
-      case (x: ListVector, ArrayType(et, _)) =>
-        val (start, end) = (x.getElementStartIndex(idx), x.getElementEndIndex(idx))
-        (start until end).map(i => getValue(x.getDataVector, et, i))
-      case (x: org.apache.arrow.vector.complex.StructVector, st: StructType) =>
-        Row.fromSeq((0 until st.length).map(i =>
-          getValue(x.getChildByOrdinal(i).asInstanceOf[FieldVector], st.fields(i).dataType, idx)))
-      case (other, t) => throw new IllegalArgumentException(
-        s"Arrow interchange: vector ${other.getClass.getSimpleName} / type $t mismatch")
+/** The one writer of an arrow-ipc stream file — data files of every
+  * layout, and the zero-row schema sentinel. It owns the file's
+  * allocator, `VectorSchemaRoot`, IPC stream writer and stats collector.
+  * Rows arrive in Catalyst internal form; each lands in the vectors
+  * through [[ArrowInterchange.setInternalValue]] and folds into the
+  * file's [[ArrowStatsCollector]]. A record batch goes out every
+  * `BatchRows` rows, so memory per open file stays bounded by one batch.
+  * `finish` writes the tail batch and EOS (over zero rows: schema header
+  * plus EOS), closes the stream and returns the file's stats; `abort`
+  * releases everything without finishing the file. */
+private[sources] final class ArrowFileWriter(schema: StructType,
+    out: java.io.OutputStream, codec: Option[String],
+    bloomCols: Set[String] = Set.empty) {
+  private val BatchRows = 4096
+  private val types = schema.fields.map(_.dataType)
+  private val alloc = new RootAllocator()
+  private val root =
+    VectorSchemaRoot.create(ArrowInterchange.toArrowSchema(schema), alloc)
+  private val writer = ArrowInterchange.codecType(codec) match {
+    case Some(ct) => new ArrowStreamWriter(root, null, Channels.newChannel(out),
+      IpcOption.DEFAULT, CommonsCompressionFactory.INSTANCE, ct)
+    case None => new ArrowStreamWriter(root, null, Channels.newChannel(out))
+  }
+  // per-file min/max/null-count fold; rides to the driver's _stats.json
+  // so a scan can skip this file on a pushed filter
+  private val stats = new ArrowStatsCollector(schema, bloomCols)
+  private var n = 0       // rows in the open batch
+  private var total = 0L  // rows in the file
+  private var closed = false
+
+  try { writer.start(); root.allocateNew() }
+  catch { case e: Throwable => abort(); throw e }
+
+  def rows: Long = total
+
+  def write(row: InternalRow): Unit = {
+    var c = 0
+    while (c < types.length) {
+      ArrowInterchange.setInternalValue(root.getVector(c), types(c), n, row, c)
+      c += 1
     }
-
-  // ── µs-exact timestamp conversion (never through a double or ms) ───────
-
-  private def micros(ts: Timestamp): Long = {
-    val i = ts.toInstant
-    Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), (i.getNano / 1000).toLong)
+    stats.update(row)
+    n += 1
+    total += 1
+    if (n >= BatchRows) flush()
   }
 
-  private def tsFromMicros(us: Long): Timestamp =
-    Timestamp.from(Instant.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
-
-  // TIMESTAMP_NTZ's external type is LocalDateTime; its µs count is the
-  // naive wall-clock value, i.e. the instant math at a fixed UTC offset.
-  private def ldtMicros(ldt: java.time.LocalDateTime): Long = {
-    val s = ldt.toEpochSecond(java.time.ZoneOffset.UTC)
-    Math.addExact(Math.multiplyExact(s, 1000000L), (ldt.getNano / 1000).toLong)
+  private def flush(): Unit = {
+    root.setRowCount(n)
+    writer.writeBatch()
+    root.allocateNew()
+    n = 0
   }
 
-  private def ldtFromMicros(us: Long): java.time.LocalDateTime =
-    java.time.LocalDateTime.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000L).toInt,
-      java.time.ZoneOffset.UTC)
+  def finish(): FileStats = {
+    if (n > 0) flush()
+    writer.end()
+    writer.close() // also closes the stream: a failed close fails the file
+    release()
+    stats.result()
+  }
+
+  def abort(): Unit = {
+    try writer.close() catch { case _: Throwable => () }
+    release()
+  }
+
+  private def release(): Unit = if (!closed) {
+    closed = true
+    try { root.close(); alloc.close() } catch { case _: Throwable => () }
+  }
 }
 
 /** Minimal serializable Hadoop `Configuration` carrier so executor-side

@@ -2215,168 +2215,57 @@ private[sources] class ArrowIpcWriterFactory(
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    if (hiveKeys.nonEmpty)
-      new ArrowIpcHiveDataWriter(schema, dir, codec, queryId, partitionId,
-        taskId, conf, hiveKeys, bloomCols = bloomCols,
-        maxRowsPerFile = maxRecordsPerFile.getOrElse(Long.MaxValue))
-    else if (partitionKeys.isEmpty)
-      new ArrowIpcDataWriter(schema, dir, codec, queryId, partitionId, taskId,
-        conf, bloomCols = bloomCols,
-        maxRowsPerFile = maxRecordsPerFile.getOrElse(Long.MaxValue))
-    else
-      new ArrowIpcKeyedDataWriter(schema, dir, codec, queryId, partitionId,
-        taskId, conf, partitionKeys, bloomCols = bloomCols,
-        maxRowsPerFile = maxRecordsPerFile.getOrElse(Long.MaxValue))
+    new ArrowIpcDataWriter(schema, dir, codec, queryId, partitionId, taskId,
+      conf, partitionKeys, hiveKeys, bloomCols = bloomCols,
+      maxRowsPerFile = maxRecordsPerFile.getOrElse(Long.MaxValue))
 }
 
-/** Push-based per-task writer: rows land straight in the Arrow vectors
-  * (internal form, no external boxing) and flush as IPC batches every
-  * `BatchRows` rows — memory per task stays bounded by one batch. Empty
-  * partitions produce no file (the sentinel carries the schema). */
+/** The arrow-ipc task writer: every batch and streaming write, and the
+  * hive rewrites' staging, run through it. Rows go to one open
+  * [[ArrowFileWriter]] at a time; a new file starts when the key tuple
+  * changes or when the open file reaches `maxRowsPerFile` (the knob that
+  * keeps one giant input partition from producing one giant file).
+  *
+  * The key tuple is `hiveKeys` when set, else `partitionKeys`, else empty
+  * (a plain write). With input clustered by key
+  * (`repartition(keys).sortWithinPartitions(keys)` — the hive write asks
+  * for it through RequiresDistributionAndOrdering, `Sinks.writeKeyGrouped`
+  * does it for key-grouped layouts) every file is single-valued on the
+  * keys, so the scan can prove a `KeyGroupedPartitioning` from the stats
+  * manifest; unsorted input stays CORRECT (each file covers one run of
+  * equal keys), it just yields more files. Hive keys also place each
+  * file in its `key=value/` directory and are dropped from the file and
+  * from its stats (a projecting row view feeds both).
+  *
+  * Files are written under task-scoped temp names and renamed at commit;
+  * an empty task writes none (the sentinel carries the schema). A plain
+  * write that never rolls keeps the one-file-per-task name
+  * `part-NNNNN[-eE]-<qid>.arrows`; every other file carries a `-gSSSS`
+  * sequence. */
 private[sources] class ArrowIpcDataWriter(
     schema: StructType, dir: String, codec: Option[String], queryId: String,
     partitionId: Int, taskId: Long, conf: SerializableHadoopConf,
+    partitionKeys: Seq[String] = Nil, hiveKeys: Seq[String] = Nil,
     epochTag: String = "", bloomCols: Set[String] = Set.empty,
     maxRowsPerFile: Long = Long.MaxValue)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.arrow.vector.VectorSchemaRoot
-  import org.apache.arrow.vector.ipc.ArrowStreamWriter
-
-  private val BatchRows = 4096
-  private val rolling = maxRowsPerFile != Long.MaxValue
-  // rolled files carry a -g sequence (like the hive writer); the
-  // un-rolled default keeps the historical one-file-per-task name
-  private def tmpOf(seq: Int) = new Path(dir,
-    if (rolling)
-      f".part-$partitionId%05d-g$seq%04d$epochTag-$queryId.arrows.task-$taskId.tmp"
-    else f".part-$partitionId%05d$epochTag-$queryId.arrows.task-$taskId.tmp")
-  private def finalOf(seq: Int) = new Path(dir,
-    if (rolling)
-      f"part-$partitionId%05d-g$seq%04d$epochTag-$queryId.arrows"
-    else f"part-$partitionId%05d$epochTag-$queryId.arrows")
-
-  private var alloc: RootAllocator = _
-  private var root: VectorSchemaRoot = _
-  private var writer: ArrowStreamWriter = _
-  private var n = 0
-  private var fileRows = 0L
-  private var seq = 0
-  private var opened = false
-  private val finished = scala.collection.mutable.ArrayBuffer
-    .empty[(Path, Path, FileStats)]
-
-  private def open(): Unit = {
-    alloc = new RootAllocator()
-    root = VectorSchemaRoot.create(ArrowInterchange.toArrowSchema(schema), alloc)
-    val out = tmpOf(seq).getFileSystem(conf.value).create(tmpOf(seq), true)
-    writer = ArrowInterchange.newStreamWriter(root, out, codec)
-    writer.start()
-    root.allocateNew()
-    stats = new ArrowStatsCollector(schema, bloomCols)
-    fileRows = 0L
-    opened = true
-  }
-
   private val types = schema.fields.map(_.dataType)
-  // per-file min/max/null-count fold; rides the commit message to the
-  // driver's _stats.json so the scan can skip this file on a pushed filter
-  private var stats: ArrowStatsCollector = _
-
-  override def write(row: InternalRow): Unit = {
-    if (!opened) open()
-    var c = 0
-    while (c < types.length) {
-      ArrowInterchange.setInternalValue(root.getVector(c), types(c), n, row, c)
-      c += 1
+  private val keyIdx = (if (hiveKeys.nonEmpty) hiveKeys else partitionKeys)
+    .map(k => schema.fieldNames.indexOf(k)).toArray
+  private val proj =
+    if (hiveKeys.isEmpty) null
+    else {
+      val dataIdx = schema.fields.indices.filterNot(keyIdx.contains)
+      org.apache.spark.sql.catalyst.ProjectingInternalRow(
+        StructType(dataIdx.map(schema.fields(_))), dataIdx)
     }
-    stats.update(row)
-    n += 1
-    fileRows += 1
-    if (n >= BatchRows) flush()
-    if (fileRows >= maxRowsPerFile) roll()
-  }
+  private val fileSchema = if (proj == null) schema else proj.schema
+  private val numbered = keyIdx.nonEmpty || maxRowsPerFile != Long.MaxValue
 
-  private def flush(): Unit = {
-    root.setRowCount(n)
-    writer.writeBatch()
-    root.allocateNew()
-    n = 0
-  }
-
-  /** Finish the current file and stage it for commit; the next row opens
-    * the task's next -g file. Bounds file size at WRITE time — the knob
-    * that keeps one giant input partition from producing one giant file. */
-  private def roll(): Unit = {
-    if (!opened) return
-    if (n > 0) flush()
-    writer.end()
-    closeAll()
-    finished += ((tmpOf(seq), finalOf(seq), stats.result()))
-    seq += 1
-    opened = false
-  }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    roll() // finish the in-flight file (no-op for an empty tail)
-    if (finished.isEmpty) return ArrowIpcCommitMessage(Nil) // empty partition
-    val files = finished.map { case (tmp, fin, st) =>
-      val fs = fin.getFileSystem(conf.value)
-      if (!fs.rename(tmp, fin)) {
-        fs.delete(tmp, false)
-        throw new java.io.IOException(s"arrow-ipc: rename $tmp -> $fin failed")
-      }
-      fin.toString -> st
-    }.toSeq
-    ArrowIpcCommitMessage(files)
-  }
-
-  override def abort(): Unit = {
-    closeAll()
-    val fs = new Path(dir).getFileSystem(conf.value)
-    if (opened) fs.delete(tmpOf(seq), false)
-    finished.foreach { case (tmp, _, _) => fs.delete(tmp, false) }
-  }
-
-  private def closeAll(): Unit =
-    try {
-      if (writer != null) writer.close()
-      if (root != null) root.close()
-      if (alloc != null) alloc.close()
-    } catch { case _: Throwable => () }
-
-  override def close(): Unit = ()
-}
-
-/** Rolling writer for KEY-GROUPED layouts (`option("partitionKeys", …)`):
-  * starts a new file whenever the key tuple changes, so with input
-  * clustered by key (`repartition(keys).sortWithinPartitions(keys)` — see
-  * `Sinks.writeKeyGrouped`) every file is single-valued on the keys and
-  * the scan can prove a `KeyGroupedPartitioning` from the stats manifest.
-  * Unsorted input stays CORRECT (each file covers one run of equal keys;
-  * it just yields more files), memory stays bounded by one open file's
-  * batch regardless of key cardinality. */
-private[sources] class ArrowIpcKeyedDataWriter(
-    schema: StructType, dir: String, codec: Option[String], queryId: String,
-    partitionId: Int, taskId: Long, conf: SerializableHadoopConf,
-    partitionKeys: Seq[String], epochTag: String = "",
-    bloomCols: Set[String] = Set.empty,
-    maxRowsPerFile: Long = Long.MaxValue)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.arrow.vector.VectorSchemaRoot
-  import org.apache.arrow.vector.ipc.ArrowStreamWriter
-
-  private val BatchRows = 4096
-  private val types = schema.fields.map(_.dataType)
-  private val keyIdx = partitionKeys.map(k => schema.fieldNames.indexOf(k)).toArray
-
-  private var alloc: RootAllocator = _
-  private var root: VectorSchemaRoot = _
-  private var writer: ArrowStreamWriter = _
-  private var stats: ArrowStatsCollector = _
+  private var file: ArrowFileWriter = _
   private var tmp: Path = _
-  private var n = 0
+  private var fin: Path = _
   private var seq = 0
-  private var fileRows = 0L
   private var curKey: Array[Any] = _ // boxed internal forms; strings cloned
   private val finished = scala.collection.mutable.ArrayBuffer
     .empty[(Path, Path, FileStats)] // (tmp, final, stats)
@@ -2385,7 +2274,7 @@ private[sources] class ArrowIpcKeyedDataWriter(
     val c = keyIdx(i)
     if (row.isNullAt(c)) null
     else types(c) match {
-      case org.apache.spark.sql.types.StringType => row.getUTF8String(c)
+      case StringType => row.getUTF8String(c)
       case dt => row.get(c, dt)
     }
   }
@@ -2400,93 +2289,66 @@ private[sources] class ArrowIpcKeyedDataWriter(
   }
 
   private def open(): Unit = {
-    alloc = new RootAllocator()
-    root = VectorSchemaRoot.create(ArrowInterchange.toArrowSchema(schema), alloc)
-    tmp = new Path(dir,
-      f".part-$partitionId%05d-g$seq%04d$epochTag-$queryId.arrows.task-$taskId.tmp")
-    val out = tmp.getFileSystem(conf.value).create(tmp, true)
-    writer = ArrowInterchange.newStreamWriter(root, out, codec)
-    writer.start()
-    root.allocateNew()
-    stats = new ArrowStatsCollector(schema, bloomCols)
-    fileRows = 0L
+    val parent =
+      if (hiveKeys.isEmpty) new Path(dir)
+      else curKey.zipWithIndex.foldLeft(new Path(dir)) { case (p, (v, i)) =>
+        new Path(p, ArrowHiveLayout.dirSegment(schema.fields(keyIdx(i)), v))
+      }
+    val name =
+      if (numbered) f"part-$partitionId%05d-g$seq%04d$epochTag-$queryId.arrows"
+      else f"part-$partitionId%05d$epochTag-$queryId.arrows"
+    fin = new Path(parent, name)
+    tmp = new Path(parent, s".$name.task-$taskId.tmp")
+    file = new ArrowFileWriter(fileSchema,
+      tmp.getFileSystem(conf.value).create(tmp, true), codec, bloomCols)
   }
 
-  private def flushBatch(): Unit = {
-    root.setRowCount(n)
-    writer.writeBatch()
-    root.allocateNew()
-    n = 0
-  }
-
-  private def roll(): Unit = {
-    if (writer == null) return
-    if (n > 0) flushBatch()
-    writer.end()
-    closeCurrent()
-    finished += ((tmp,
-      new Path(dir, f"part-$partitionId%05d-g$seq%04d$epochTag-$queryId.arrows"),
-      stats.result()))
+  private def finishFile(): Unit = if (file != null) {
+    finished += ((tmp, fin, file.finish()))
+    file = null
     seq += 1
   }
 
   override def write(row: InternalRow): Unit = {
-    if (curKey == null || !sameKey(row)) {
-      roll()
-      open()
+    val newKey = curKey == null || !sameKey(row)
+    if (newKey || file.rows >= maxRowsPerFile) {
+      // rolling WITHIN a key run keeps the next -g file single-valued on
+      // the keys (same value directory for hive); each file gets its own
+      // stats/bloom entry
+      finishFile()
       // retain the key OFF the row's reused buffers (UTF8String views them)
-      curKey = Array.tabulate(keyIdx.length) { i =>
+      if (newKey) curKey = Array.tabulate(keyIdx.length) { i =>
         keyAt(row, i) match {
           case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
           case v => v
         }
       }
-    } else if (fileRows >= maxRowsPerFile) {
-      // size-bounded rolling WITHIN a key run: the key did not change, so
-      // the next -g file is still single-valued on the keys (each file
-      // gets its own stats/bloom entry; the scan's one-partition-per-file
-      // grouping merges same-key files back into one task)
-      roll()
       open()
     }
-    var c = 0
-    while (c < types.length) {
-      ArrowInterchange.setInternalValue(root.getVector(c), types(c), n, row, c)
-      c += 1
-    }
-    stats.update(row)
-    n += 1
-    fileRows += 1
-    if (n >= BatchRows) flushBatch()
+    if (proj == null) file.write(row)
+    else { proj.project(row); file.write(proj) }
   }
 
   override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    roll()
-    val files = finished.map { case (t, fin, st) =>
-      val fs = fin.getFileSystem(conf.value)
-      if (!fs.rename(t, fin)) {
+    finishFile()
+    ArrowIpcCommitMessage(finished.map { case (t, f, st) =>
+      val fs = f.getFileSystem(conf.value)
+      if (!fs.rename(t, f)) {
         fs.delete(t, false)
-        throw new java.io.IOException(s"arrow-ipc: rename $t -> $fin failed")
+        throw new java.io.IOException(s"arrow-ipc: rename $t -> $f failed")
       }
-      fin.toString -> st
-    }.toSeq
-    ArrowIpcCommitMessage(files)
+      f.toString -> st
+    }.toSeq)
   }
 
   override def abort(): Unit = {
-    closeCurrent()
     val fs = new Path(dir).getFileSystem(conf.value)
-    if (tmp != null) fs.delete(tmp, false)
+    if (file != null) {
+      file.abort()
+      file = null
+      fs.delete(tmp, false)
+    }
     finished.foreach { case (t, _, _) => fs.delete(t, false) }
-  }
-
-  private def closeCurrent(): Unit = {
-    try {
-      if (writer != null) writer.close()
-      if (root != null) root.close()
-      if (alloc != null) alloc.close()
-    } catch { case _: Throwable => () }
-    writer = null; root = null; alloc = null
   }
 
   override def close(): Unit = ()

@@ -407,7 +407,7 @@ private[sources] class ArrowIpcStreamingWrite(
   }
 }
 
-/** Per-epoch writer factory: reuses the batch task writers verbatim —
+/** Per-epoch writer factory: reuses the batch task writer verbatim —
   * only the file name differs (`-e<epoch>-<commit-uuid>` tail), which is
   * what carries both the stream-visibility marker and the stats-shard
   * membership suffix. */
@@ -420,17 +420,9 @@ private[sources] class ArrowIpcStreamingWriterFactory(
       epochId: Long): DataWriter[InternalRow] = {
     val uuid = java.util.UUID.nameUUIDFromBytes(
       s"$runNonce:$epochId".getBytes("UTF-8")).toString
-    if (hiveKeys.nonEmpty)
-      new ArrowIpcHiveDataWriter(schema, dir, codec, uuid, partitionId,
-        taskId, conf, hiveKeys, epochTag = s"-e$epochId",
-        bloomCols = bloomCols)
-    else if (partitionKeys.isEmpty)
-      new ArrowIpcDataWriter(schema, dir, codec, uuid, partitionId, taskId,
-        conf, epochTag = s"-e$epochId", bloomCols = bloomCols)
-    else
-      new ArrowIpcKeyedDataWriter(schema, dir, codec, uuid, partitionId,
-        taskId, conf, partitionKeys, epochTag = s"-e$epochId",
-        bloomCols = bloomCols)
+    new ArrowIpcDataWriter(schema, dir, codec, uuid, partitionId, taskId,
+      conf, partitionKeys, hiveKeys, epochTag = s"-e$epochId",
+      bloomCols = bloomCols)
   }
 }
 

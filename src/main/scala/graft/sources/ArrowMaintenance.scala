@@ -465,9 +465,9 @@ object ArrowMaintenance {
       if (!it.hasNext) Iterator.empty
       else {
         val tc = org.apache.spark.TaskContext.get()
-        val w = new ArrowIpcHiveDataWriter(schema, stagingStr, codec,
+        val w = new ArrowIpcDataWriter(schema, stagingStr, codec,
           s"$id-a${tc.taskAttemptId()}", pid, tc.taskAttemptId(), conf,
-          hiveKeys, bloomCols = blooms)
+          hiveKeys = hiveKeys, bloomCols = blooms)
         tc.addTaskFailureListener(new org.apache.spark.util.TaskFailureListener {
           override def onTaskFailure(ctx: org.apache.spark.TaskContext,
               error: Throwable): Unit = w.abort()

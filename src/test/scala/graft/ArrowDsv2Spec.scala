@@ -302,7 +302,7 @@ class ArrowDsv2Spec extends AnyFunSuite {
   test("limit pushes into the scan; statistics report directory bytes") {
     val df = spark.range(100000).select(col("id"), concat(lit("v"), col("id")).as("v"))
     val dir = tmp("graft_dsv2_limit")
-    ArrowInterchange.writeStream(df.repartition(4), dir, maxRecordsPerBatch = 512)
+    ArrowInterchange.writeStream(df.repartition(4), dir)
     val limited = spark.read.format("arrow-ipc").load(dir).limit(10)
     assert(limited.collect().length === 10)
     // the pushed limit reaches the scan (visible in its description)

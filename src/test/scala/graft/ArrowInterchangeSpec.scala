@@ -74,13 +74,33 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     assert(got % 1000 === 7) // the sub-ms digits are really there
   }
 
-  test("batch chunking: maxRecordsPerBatch=3 over 10 rows stays exact") {
-    val df = spark.range(10).select(col("id"), concat(lit("v"), col("id")).as("v"))
+  /** Record batches in one IPC stream file. */
+  private def batchesIn(file: java.io.File): Int = {
+    import org.apache.arrow.memory.RootAllocator
+    import org.apache.arrow.vector.ipc.ArrowStreamReader
+    val alloc = new RootAllocator()
+    val reader = new ArrowStreamReader(new java.io.FileInputStream(file), alloc)
+    try {
+      var k = 0
+      while (reader.loadNextBatch()) k += 1
+      k
+    } finally { reader.close(); alloc.close() }
+  }
+
+  test("batch chunking: 12k rows over 2 partitions stay exact across several record batches") {
+    val n = 12000L
+    val df = spark.range(n).select(col("id"), concat(lit("v"), col("id")).as("v"))
     val dir = tmp("graft_arrow_chunk")
-    ArrowInterchange.writeStream(df.repartition(2), dir, maxRecordsPerBatch = 3)
+    ArrowInterchange.writeStream(df.repartition(2), dir)
     val back = ArrowInterchange.readStream(spark, dir)
       .as[(Long, String)].collect().sortBy(_._1)
-    assert(back.toSeq === (0L until 10L).map(i => (i, s"v$i")))
+    assert(back.toSeq === (0L until n).map(i => (i, s"v$i")))
+    // ~6000 rows per file against the writer's 4096-row batches: the
+    // rows really crossed a batch boundary, not one batch per file
+    val files = new java.io.File(dir).listFiles
+      .filter(f => f.getName.startsWith("part-")).toSeq
+    assert(files.size === 2)
+    assert(files.map(batchesIn).max >= 2, files.map(f => f.getName -> batchesIn(f)))
   }
 
   test("empty frame roundtrips via the schema sentinel") {
@@ -468,5 +488,168 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("stats-bearing") ||
       Option(e.getCause).exists(_.getMessage.contains("stats-bearing")))
+  }
+
+  /** Values made comparable: byte arrays by content, rows and maps
+    * recursively. */
+  private def canon(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(canon)
+    case m: scala.collection.Map[_, _] => m.map { case (k, x) => canon(k) -> canon(x) }.toMap
+    case xs: scala.collection.Seq[_] => xs.map(canon)
+    case x => x
+  }
+
+  private def canonRows(df: org.apache.spark.sql.DataFrame): Seq[Any] =
+    df.orderBy("id").collect().toSeq.map(canon)
+
+  test("java8 datetime API: writeStream/readStream, compact and eq-upsert keep timestamp, timestamp_ntz and date columns") {
+    import graft.sources.{ArrowEqualityDeletes, ArrowMaintenance}
+    val key = "spark.sql.datetime.java8API.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      // built AFTER the conf is set: its external rows carry Instant,
+      // LocalDateTime and LocalDate
+      val df = spark.range(8).select(col("id"),
+        when(col("id") =!= 3,
+          expr("timestamp_micros(1709296496123456 + id * 86400000007)")).as("ts"),
+        when(col("id") =!= 4,
+          expr("make_timestamp_ntz(2024, 3, 1, 12, 34, 56.123456) + make_dt_interval(cast(id as int))")).as("ntz"),
+        when(col("id") =!= 5, expr("date_add(date'1969-12-25', cast(id as int))")).as("dt"),
+        concat(lit("v"), col("id")).as("v"))
+      val want = df.orderBy("id").collect().toSeq
+      assert(want.head.get(1).isInstanceOf[java.time.Instant])
+
+      // function-style round trip is exact
+      val dir = tmp("graft_arrow_java8")
+      ArrowInterchange.writeStream(df.repartition(2), dir)
+      val back = ArrowInterchange.readStream(spark, dir)
+      assert(back.schema === df.schema)
+      assert(back.orderBy("id").collect().toSeq === want)
+
+      // a table of four small appends compacts to the same rows
+      val table = tmp("graft_arrow_java8_table")
+      (0 until 4).foreach { i =>
+        df.filter(col("id") >= i * 2 && col("id") < i * 2 + 2).coalesce(1)
+          .write.format("arrow-ipc").mode("append").save(table)
+      }
+      val res = ArrowMaintenance.compact(spark, table)
+      assert(res.exists(r => r.oldFiles === 4 && r.newFiles === 1), res)
+      def read() = spark.read.format("arrow-ipc").load(table).orderBy("id")
+      assert(read().collect().toSeq === want)
+
+      // an equality upsert replaces ids 1 and 2 and inserts id 100
+      val batch = df.filter(col("id").isin(1, 2))
+        .withColumn("v", concat(lit("u"), col("id")))
+        .unionByName(df.filter(col("id") === 0).withColumn("id", lit(100L)))
+      val upsert = ArrowEqualityDeletes.upsertBatch(spark, table, "id", batch)
+      assert(upsert.applied)
+      val expected = (want.filterNot(r => Set(1L, 2L).contains(r.getLong(0))) ++
+        batch.collect().toSeq).sortBy(_.getLong(0))
+      assert(read().collect().toSeq === expected)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("interchange value identity: writeStream and the DSv2 save agree on values and stats") {
+    import graft.sources.ArrowFileStats
+    val fsb = new MetadataBuilder().putLong(ArrowInterchange.FixedSizeKey, 4L).build()
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("t", ByteType),
+      StructField("sm", ShortType),
+      StructField("dec", DecimalType(12, 2)),
+      StructField("fsb", BinaryType, nullable = true, fsb),
+      StructField("st", StructType(Seq(
+        StructField("a", IntegerType), StructField("b", StringType)))),
+      StructField("m", MapType(StringType, LongType)),
+      StructField("arr", ArrayType(DoubleType)),
+      StructField("tags", ArrayType(StringType, containsNull = false)),
+      StructField("dur", DayTimeIntervalType()),
+      StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType),
+      StructField("dt", DateType)))
+    val rows = Seq(
+      Row(1L, 127.toByte, (-32768).toShort, new java.math.BigDecimal("1234567890.12"),
+        Array[Byte](1, 2, 3, 4), Row(7, "héllo"),
+        Map("a" -> 1L, "b" -> 2L, "c" -> 3L, "d" -> 4L, "e" -> 5L),
+        Seq(1.5, -0.0, Double.MaxValue), Seq("x", "y"),
+        java.time.Duration.ofSeconds(-3, 7000), Timestamp.valueOf("2024-03-01 12:34:56.123456"),
+        java.time.LocalDateTime.of(2024, 3, 1, 12, 34, 56, 123456000),
+        Date.valueOf("2024-03-01")),
+      Row(2L, null, null, null, null, null, null, null, Seq.empty[String],
+        null, null, null, null),
+      Row(3L, (-128).toByte, 32767.toShort, new java.math.BigDecimal("-0.01"),
+        Array[Byte](-1, 0, -1, 0), Row(null, null), Map.empty[String, Long],
+        Seq(null, 2.0), Seq("z"), java.time.Duration.ZERO,
+        new Timestamp(-1000L), java.time.LocalDateTime.of(1969, 12, 31, 23, 59, 59),
+        Date.valueOf("1969-12-31")))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    val want = canonRows(df)
+
+    val viaFn = tmp("graft_identity_fn")
+    ArrowInterchange.writeStream(df, viaFn)
+    val viaDs = tmp("graft_identity_ds")
+    df.write.format("arrow-ipc").mode("overwrite").save(viaDs)
+    for (d <- Seq(viaFn, viaDs)) {
+      assert(canonRows(ArrowInterchange.readStream(spark, d)) === want, d)
+      val ds = spark.read.format("arrow-ipc").load(d)
+      assert(ds.schema === schema, d)
+      assert(canonRows(ds) === want, d)
+    }
+
+    // one file each; their manifest entries agree column by column
+    def statsOf(d: String) = {
+      val p = new org.apache.hadoop.fs.Path(d)
+      val all = ArrowFileStats.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      assert(all.size === 1, all.keys)
+      all.values.head
+    }
+    val (a, b) = (statsOf(viaFn), statsOf(viaDs))
+    assert(a.rows === 3L && b.rows === 3L)
+    assert(a.cols.keySet === b.cols.keySet)
+    a.cols.foreach { case (c, st) => assert(b.cols(c) === st, c) }
+
+    // file names per layout: a plain save keeps one un-numbered file per
+    // task; key-grouped, hive and size-rolled saves number theirs
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    def names(d: String): Seq[String] = {
+      val root = new java.io.File(d)
+      def walk(f: java.io.File, rel: String): Seq[String] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(c =>
+          walk(c, if (rel.isEmpty) c.getName else s"$rel/${c.getName}"))
+        else if (f.getName.startsWith("part-")) Seq(rel) else Nil
+      walk(root, "").sorted
+    }
+    val keyed = df.withColumn("k", (col("id") % 2).cast("int"))
+      .orderBy("k", "id").coalesce(1)
+    assert(names(viaFn) === Seq("part-00000.arrows"))
+    assert(names(viaDs).map(_.replaceAll(uuid, "Q")) === Seq("part-00000-Q.arrows"))
+    val grouped = tmp("graft_identity_keyed")
+    keyed.write.format("arrow-ipc").option("partitionKeys", "k")
+      .mode("overwrite").save(grouped)
+    assert(names(grouped).map(_.replaceAll(uuid, "Q")) ===
+      Seq("part-00000-g0000-Q.arrows", "part-00000-g0001-Q.arrows"))
+    val rolled = tmp("graft_identity_rolled")
+    df.write.format("arrow-ipc").option("maxRecordsPerFile", "2")
+      .mode("overwrite").save(rolled)
+    assert(names(rolled).map(_.replaceAll(uuid, "Q")) ===
+      Seq("part-00000-g0000-Q.arrows", "part-00000-g0001-Q.arrows"))
+    val hive = tmp("graft_identity_hive")
+    keyed.write.format("arrow-ipc").option("hivePartitionKeys", "k")
+      .mode("overwrite").save(hive)
+    val hiveNames = names(hive)
+    // (the write's own clustering picks the tasks, hence P and S)
+    assert(hiveNames.map(_.replaceAll(uuid, "Q")
+      .replaceAll("part-\\d{5}-g\\d{4}-", "part-P-gS-")) ===
+      Seq("k=0/part-P-gS-Q.arrows", "k=1/part-P-gS-Q.arrows"), hiveNames)
+    // hive data files drop the key column, and so do their stats
+    val hs = ArrowFileStats.read(new org.apache.hadoop.fs.Path(hive)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), new org.apache.hadoop.fs.Path(hive))
+    assert(hs.size === 2 && hs.values.forall(st => !st.cols.contains("k") && st.cols.contains("id")))
+    assert(canonRows(spark.read.format("arrow-ipc").load(hive).drop("k")) === want)
   }
 }

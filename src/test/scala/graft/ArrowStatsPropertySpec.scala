@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,13 +20,18 @@ import graft.sources.{ArrowFileStats, ArrowStatsCollector}
   * (nulls, NaN, empty strings, >256-char strings, supplementary-plane
   * strings, empty row sets, And/Or nesting). Completeness (canMatch true
   * when a row does match) is NOT asserted — pruning is advisory by
-  * design; only the skip direction can corrupt results. */
+  * design; only the skip direction can corrupt results. Rows are
+  * generated in external form (the form `sat` judges) and fed to the
+  * collector in Catalyst internal form, the form every writer folds. */
 class ArrowStatsPropertySpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
     StructField("l", LongType), StructField("d", DoubleType),
     StructField("s", StringType), StructField("g", DecimalType(6, 2)),
     StructField("b", BinaryType)))
+
+  private val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+  private def internal(row: Row): InternalRow = toInternal(row).asInstanceOf[InternalRow]
 
   private def genRow(r: scala.util.Random): Row = {
     def ln: Any = if (r.nextInt(8) == 0) null else (r.nextInt(21) - 10).toLong
@@ -137,7 +143,7 @@ class ArrowStatsPropertySpec extends AnyFunSuite {
     for (_ <- 0 until 2000) {
       val rows = Seq.fill(r.nextInt(40))(genRow(r))
       val collector = new ArrowStatsCollector(schema)
-      rows.foreach(collector.updateExternal)
+      rows.foreach(x => collector.update(internal(x)))
       val stats = collector.result()
       val filter = genFilter(r, 2)
       if (!ArrowFileStats.canMatch(filter, stats)) {
@@ -164,7 +170,7 @@ class ArrowStatsPropertySpec extends AnyFunSuite {
       val files = rows.grouped(1 + r.nextInt(7)).zipWithIndex.map {
         case (chunk, i) =>
           val c = new ArrowStatsCollector(schema)
-          chunk.foreach(c.updateExternal)
+          chunk.foreach(x => c.update(internal(x)))
           s"part-$i-q.arrows" -> c.result()
       }.toMap
       if (files.nonEmpty) {
@@ -189,7 +195,7 @@ class ArrowStatsPropertySpec extends AnyFunSuite {
       val rows = Seq.fill(r.nextInt(50))(genRow(r))
       val perFile = rows.grouped(1 + r.nextInt(5)).map { chunk =>
         val c = new ArrowStatsCollector(schema)
-        chunk.foreach(c.updateExternal)
+        chunk.foreach(x => c.update(internal(x)))
         c.result()
       }.toSeq
       // long column "l": wrapping add of partials == wrapping direct sum

@@ -59,6 +59,30 @@ class FreqSketchSpec extends AnyFunSuite {
     assert(items.contains("HEAVY"), s"heavy hitter purged: ${items.keys.take(5)}")
     val (lo, hi) = items("HEAVY")
     assert(lo <= 5000L && 5000L <= hi, s"true count outside [$lo, $hi]")
+
+    // Adversarial stream orders (the EDBT 2023 sketch study's sorted /
+    // reversed / zoom-in / shuffled inputs) over the same items, each fed
+    // in order through ONE partition. Sorted puts every HEAVY first,
+    // reversed puts them last, zoom-in splits them between the ends.
+    val sorted = (Seq.fill(5000)("HEAVY") ++ (0 until 20000).map(i => s"light$i")).sorted
+    val m = sorted.length
+    val zoomIn = (0 until m).map(i => if (i % 2 == 0) sorted(i / 2) else sorted(m - 1 - i / 2))
+    val orders = Seq(
+      "sorted" -> sorted,
+      "reversed" -> sorted.reverse,
+      "zoom-in" -> zoomIn,
+      "shuffled" -> new scala.util.Random(17).shuffle(sorted))
+    orders.foreach { case (name, stream) =>
+      assert(stream.sorted == sorted, s"$name must permute the items")
+      val got = spark.sparkContext.parallelize(stream, 1).toDF("item")
+        .agg(freqSketch(col("item"), maxMapSize = 256).as("s"))
+        .select(explode(freqItems(col("s"))).as("f"))
+        .select(col("f.item"), col("f.lower"), col("f.upper"))
+        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(got.contains("HEAVY"), s"$name: heavy hitter purged")
+      val (l, h) = got("HEAVY")
+      assert(l <= 5000L && 5000L <= h, s"$name: true count outside [$l, $h]")
+    }
   }
 
   test("NULL items are skipped") {

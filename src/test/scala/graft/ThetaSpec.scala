@@ -59,6 +59,23 @@ class ThetaSpec extends AnyFunSuite {
       .head().getDouble(0)
     val rse = 1.0 / math.sqrt(1 << 14)
     assert(math.abs(est - n) / n < 5 * rse, s"estimate $est for $n")
+
+    // Adversarial stream orders (the EDBT 2023 sketch study's sorted /
+    // reversed / zoom-in / shuffled inputs) over the same values, each fed
+    // in order through ONE partition: every order holds the same bound.
+    val sorted = (0L until n).toVector
+    val zoomIn = (0L until n).map(i => if (i % 2 == 0) i / 2 else n - 1 - i / 2)
+    val orders = Seq(
+      "sorted" -> sorted,
+      "reversed" -> sorted.reverse,
+      "zoom-in" -> zoomIn,
+      "shuffled" -> new scala.util.Random(17).shuffle(sorted))
+    orders.foreach { case (name, values) =>
+      assert(values.sorted == sorted, s"$name must permute 0..n-1")
+      val got = spark.sparkContext.parallelize(values, 1).toDF("id")
+        .agg(thetaEstimate(thetaSketch(col("id")))).head().getDouble(0)
+      assert(math.abs(got - n) / n < 5 * rse, s"$name: estimate $got for $n")
+    }
   }
 
   test("string sketches hash UTF-8 bytes: same ids as strings intersect exactly") {
