@@ -87,7 +87,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     } finally { reader.close(); alloc.close() }
   }
 
-  test("batch chunking: 12k rows over 2 partitions stay exact across several record batches") {
+  test("batch chunking: 12k rows in 2 partitions span several record batches") {
     val n = 12000L
     val df = spark.range(n).select(col("id"), concat(lit("v"), col("id")).as("v"))
     val dir = tmp("graft_arrow_chunk")
