@@ -521,6 +521,13 @@ class ArrowCatalog extends TableCatalog with ProcedureCatalog
         case v => v
       })
   private def dirArg(r: InternalRow): String = r.getUTF8String(0).toString
+
+  /** The files a scan of `dir` serves right now — its live view, read
+    * without waiting on the gate (a report, not a read). */
+  private def liveFiles(dir: String): Seq[LiveFile] = {
+    val spark = SparkSession.active
+    ArrowLiveView.load(spark, dir, ArrowInterchange.readSchema(spark, dir)).files
+  }
   private def targetBytes(r: InternalRow, i: Int): Long = r.getLong(i)
 
   private lazy val procedures: Map[String, GraftProcedure] = Seq(
@@ -1073,19 +1080,16 @@ class ArrowCatalog extends TableCatalog with ProcedureCatalog
         val p = new Path(dir)
         val fs = p.getFileSystem(
           SparkSession.active.sparkContext.hadoopConfiguration)
-        val visible = ArrowStreamCommits.visibleFilter(fs, p)
-        val sts = ArrowSnapshots.listDataFileStatuses(fs, p)
-          .filter { case (rel, _) => visible(new Path(rel).getName) }
+        // the files a scan serves: the table's live view
+        val files = liveFiles(dir)
         val manifest = ArrowFileStats.read(fs, p)
         // LIVE rows: physical manifest counts minus the deletion-vector
         // cardinalities (carried in the vector names — nothing opened)
         val dvs = ArrowDeleteVectors.live(fs, p)
         val masked = dvs.values.map(_.card).sum
         val rows =
-          if (sts.forall { case (rel, _) =>
-            manifest.contains(new Path(rel).getName) })
-            sts.map { case (rel, _) =>
-              manifest(new Path(rel).getName).rows }.sum - masked
+          if (files.forall(f => manifest.contains(f.name)))
+            files.map(f => manifest(f.name).rows).sum - masked
           else -1L
         val blooms = manifest.values
           .flatMap(_.cols.collect { case (c, s) if s.bloom.isDefined => c })
@@ -1094,7 +1098,7 @@ class ArrowCatalog extends TableCatalog with ProcedureCatalog
         val tombKeys = tombs.flatMap { case (rel, _) =>
           ArrowEqualityDeletes.parseName(new Path(rel).getName).map(_._2)
         }.sum
-        Seq(row(dir, sts.size, sts.map(_._2.getLen).sum, rows,
+        Seq(row(dir, files.size, files.map(_.status.getLen).sum, rows,
           dvs.size, masked,
           ArrowLayout.read(fs, p).mkString(","),
           ArrowHiveLayout.read(fs, p).mkString(","),
@@ -1123,25 +1127,21 @@ class ArrowCatalog extends TableCatalog with ProcedureCatalog
         org.apache.spark.sql.types.StructField("seq", LongType),
         org.apache.spark.sql.types.StructField("masked_rows", LongType))),
       r => {
-        val p = new Path(dirArg(r))
+        val dir = dirArg(r)
+        val p = new Path(dir)
         val fs = p.getFileSystem(
           SparkSession.active.sparkContext.hadoopConfiguration)
-        val visible = ArrowStreamCommits.visibleFilter(fs, p)
         val manifest = ArrowFileStats.read(fs, p)
         val dvs = ArrowDeleteVectors.live(fs, p)
-        ArrowSnapshots.listDataFileStatuses(fs, p)
-          .filter { case (rel, _) => visible(new Path(rel).getName) }
-          .sortBy(_._1)
-          .map { case (rel, st) =>
-            val name = new Path(rel).getName
-            val m = manifest.get(name)
-            // the same -1 sentinel as `rows` for a manifest-unknown
-            // (foreign) file — seq 0 would be indistinguishable from a
-            // genuine first-commit sequence
-            row(rel, m.map(_.rows).getOrElse(-1L), st.getLen,
-              m.map(_.seq).getOrElse(-1L),
-              dvs.get(name).map(_.card).getOrElse(0L))
-          }
+        liveFiles(dir).sortBy(_.rel).map { f =>
+          val m = manifest.get(f.name)
+          // the same -1 sentinel as `rows` for a manifest-unknown
+          // (foreign) file — seq 0 would be indistinguishable from a
+          // genuine first-commit sequence
+          row(f.rel, m.map(_.rows).getOrElse(-1L), f.status.getLen,
+            m.map(_.seq).getOrElse(-1L),
+            dvs.get(f.name).map(_.card).getOrElse(0L))
+        }
       }),
     // read-only: the DESCRIBE HISTORY analog — one row per retained
     // snapshot, newest first (expired prefixes are folded into the base

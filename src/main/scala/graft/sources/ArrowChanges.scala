@@ -85,7 +85,7 @@ object ArrowChanges {
 
     def resolve(rel: String): String =
       ArrowSnapshots.resolveLiveOrTrash(fs, dirPath, rel,
-        s"change-feed window ($from, $to]")
+        s"change-feed window ($from, $to]").getPath.toString
 
     def side(asOf: Long, rels: Set[String], kind: String): DataFrame = {
       val base = spark.read.format("arrow-ipc")

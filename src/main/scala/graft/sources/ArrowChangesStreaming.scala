@@ -123,28 +123,23 @@ private[sources] class ArrowChangesMicroBatchStream(
 
   private var availableNowCap: Option[Long] = None
 
-  /** Gate for polls: directory absent or mid-commit (sentinel present,
-    * completeness marker dropped) → hold the line, nothing is admitted
-    * this trigger. */
-  private def pollable(f: org.apache.hadoop.fs.FileSystem): Boolean =
-    f.exists(dirPath) &&
-      !(f.exists(new Path(dirPath, "_schema.arrows")) &&
-        !f.exists(new Path(dirPath, "_SUCCESS")))
+  /** The tip a poll may read up to: 0 (hold the line, nothing admitted
+    * this trigger) while the directory is absent or its live-view gate
+    * is closed. */
+  private def pollTip(f: org.apache.hadoop.fs.FileSystem): Long =
+    if (!f.exists(dirPath) || ArrowLiveView.gate(f, dirPath).isEmpty) 0L
+    else ArrowSnapshots.currentTip(f, dirPath)
 
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val f = fs
-    availableNowCap = Some(
-      if (!pollable(f)) 0L else ArrowSnapshots.currentTip(f, dirPath))
-  }
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowCap = Some(pollTip(fs))
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[ArrowSnapshotIdOffset].id
     val f = fs
-    if (!pollable(f)) return ArrowSnapshotIdOffset(from)
     // idle-poll fast path: the tip pointer answers "anything new?" in
     // O(1) — a steady-state consumer over a quiet table never lists the
     // log directory at all
-    val tip0 = ArrowSnapshots.currentTip(f, dirPath)
+    val tip0 = pollTip(f)
     val tip = availableNowCap.fold(tip0)(math.min(tip0, _))
     if (tip <= from) return ArrowSnapshotIdOffset(from)
     // something new: ids are dense and entries are named by id, so the
@@ -193,11 +188,8 @@ private[sources] class ArrowChangesMicroBatchStream(
     ArrowSnapshotIdOffset(endId)
   }
 
-  override def reportLatestOffset(): Offset = {
-    val f = fs
-    ArrowSnapshotIdOffset(
-      if (!pollable(f)) 0L else ArrowSnapshots.currentTip(f, dirPath))
-  }
+  override def reportLatestOffset(): Offset =
+    ArrowSnapshotIdOffset(pollTip(fs))
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
@@ -279,7 +271,7 @@ private[sources] class ArrowChangesMicroBatchStream(
 
     def resolveRel(rel: String): String =
       ArrowSnapshots.resolveLiveOrTrash(f, dirPath, rel,
-        s"change-feed window ($from, $to]")
+        s"change-feed window ($from, $to]").getPath.toString
     def resolveDv(ref: ArrowDeleteVectors.DvRef): String = resolveRel(ref.rel)
     def dvOf(rel: String, side: ((Option[ArrowDeleteVectors.DvRef],
         Option[ArrowDeleteVectors.DvRef])) => Option[ArrowDeleteVectors.DvRef])

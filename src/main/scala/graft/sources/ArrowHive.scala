@@ -249,66 +249,6 @@ private[graft] object ArrowHiveLayout {
     case Some(s) if dt == StringType => UTF8String.fromString(s)
     case Some(s) => ArrowFileStats.internalFromCanonical(dt, s)
   }
-
-  /** Walk the `key=value` levels of a hive-partitioned directory, pruning
-    * value directories the static `filters` refute BEFORE descending — a
-    * skipped directory's children are never listed, so planning over a
-    * million-file lake costs O(matching dirs). Returns the listed data
-    * files, each file's canonical partition values (by file NAME — names
-    * are unique across value dirs by the writer contract), and the
-    * (keptDirs, totalDirs) counters for explain output. Value parse
-    * failures under a declared layout are corruption: fail loudly rather
-    * than silently dropping data. */
-  def discover(fs: FileSystem, dirPath: Path, fields: Seq[StructField],
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      visible: String => Boolean)
-      : (Array[org.apache.hadoop.fs.FileStatus],
-         Map[String, Seq[Option[String]]], (Int, Int)) = {
-    var dirsTotal = 0
-    var dirsKept = 0
-    var level: Seq[(Path, List[Option[String]])] = Seq((dirPath, Nil))
-    fields.foreach { f =>
-      val children = level.flatMap { case (p, vals) =>
-        Option(fs.globStatus(new Path(p, escape(f.name) + "=*")))
-          .getOrElse(Array.empty).filter(_.isDirectory)
-          .map(st => (st.getPath, vals))
-      }
-      dirsTotal += children.size
-      level = children.flatMap { case (p, vals) =>
-        val canon = parseSegment(f, p.getName)
-        if (filters.nonEmpty && !filters.forall(fl =>
-            ArrowFileStats.canMatch(fl, dirStats(f, canon))))
-          None
-        else Some((p, canon :: vals))
-      }
-      dirsKept += level.size
-    }
-    val filesWithVals = level.flatMap { case (p, valsRev) =>
-      val vals = valsRev.reverse
-      Option(fs.globStatus(new Path(p, "part-*.arrows")))
-        .getOrElse(Array.empty)
-        .filter(st => visible(st.getPath.getName))
-        .map(st => (st, vals))
-    }
-    (filesWithVals.map(_._1).toArray,
-      filesWithVals.map { case (st, v) => st.getPath.getName -> v }.toMap,
-      (dirsKept, dirsTotal))
-  }
-
-  /** Splice directory-derived partition values into a file's stats entry
-    * as exact single-value columns. */
-  def mergeStats(stats: Map[String, FileStats], fields: Seq[StructField],
-      valsByName: Map[String, Seq[Option[String]]]): Map[String, FileStats] =
-    stats.map { case (name, st) =>
-      valsByName.get(name) match {
-        case Some(vals) =>
-          name -> st.copy(cols = st.cols ++
-            fields.zip(vals).map { case (f, v) =>
-              f.name -> colStats(f, v, st.rows)
-            })
-        case None => name -> st
-      }
-    }
 }
 
 /** One data file of a hive-partitioned dataset plus its directory-derived

@@ -539,25 +539,28 @@ object ArrowInterchange {
               s"(${fileSchema.getFields.asScala.map(_.getName).mkString(", ")})")))
         })
     }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    // A directory carrying OUR schema sentinel must also carry the job
-    // completeness marker — reading a partially-written directory as if it
-    // were the full dataset is the silent failure mode. Foreign-written
+    // The live view's gate, waited out then refused like a batch scan: a
+    // directory carrying OUR schema sentinel without its completeness
+    // marker is read only while appends are in flight (their files
+    // hidden) — reading a partially-written directory as if it were the
+    // full dataset is the silent failure mode. Foreign-written
     // directories (no sentinel) are read as-is.
-    require(!fs.exists(new Path(dirPath, "_schema.arrows")) ||
-      fs.exists(new Path(dirPath, "_SUCCESS")),
-      s"Arrow interchange: $dir has a schema sentinel but no _SUCCESS marker " +
-        "— the writing job did not complete; refusing to read partial data")
-    val glob = new Path(dir, "part-*.arrows")
-    // streaming-sink visibility: same rule as the DSv2 scan — a
-    // stream-named file without a committed ledger entry does not exist
-    val visible = ArrowStreamCommits.visibleFilter(fs, dirPath)
-    val dataPaths = (glob.getFileSystem(conf).globStatus(glob) match {
-      case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-      case st   => st
-    }).map(_.getPath).filter(p => visible(p.getName))
+    val view = ArrowLiveView.forRead(spark, dir, fromArrowSchema(fileSchema))
+    // this reader decodes whole flat files and nothing else: a hive
+    // layout (values on the path), deletion vectors or equality
+    // tombstones would silently yield wrong rows — refuse them instead
+    val dirPath = new Path(dir)
+    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def refuse(cause: String): Nothing = throw new IllegalArgumentException(
+      s"Arrow interchange: $dir $cause, which readStream does not apply — " +
+        "read it with spark.read.format(\"arrow-ipc\") instead")
+    if (view.hiveFields.nonEmpty)
+      refuse("is hive-partitioned (partition values live on the path)")
+    if (ArrowDeleteVectors.any(fs, dirPath))
+      refuse("carries live merge-on-read deletion vectors")
+    if (ArrowEqualityDeletes.any(fs, dirPath))
+      refuse("carries live equality-delete tombstones")
+    val dataPaths = view.files.map(_.path)
     // Pruned reads tolerate extra (even unsupported-typed) columns in the
     // file; full reads require the exact schema — a stray column would
     // otherwise be silently dropped.
@@ -565,7 +568,7 @@ object ArrowInterchange {
     val rdd =
       if (dataPaths.isEmpty) // all partitions were empty — sentinel carries the schema
         spark.sparkContext.emptyRDD[InternalRow]
-      else spark.sparkContext.binaryFiles(dataPaths.map(_.toString).mkString(","))
+      else spark.sparkContext.binaryFiles(dataPaths.mkString(","))
         .flatMap { case (path, pds) => rowsFromStream(pds.open(), path, schema, exact) }
     // the DataFrame surfaces the STRIPPED schema; the enriched one (field
     // ids, rename history) rides only into the per-file resolution

@@ -276,6 +276,8 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
   private var posSlot: Int = -1
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var agg: Option[(StructType, Array[Array[Any]])] = None
+  /** The live view [[pushAggregation]] listed, if any. */
+  private var listed: Option[ArrowLiveView] = None
 
   /** COUNT(*)/COUNT(col)/MIN/MAX answered from `_stats.json` ALONE — no
     * data file is opened (the reader factory emits precomputed rows). The
@@ -336,44 +338,25 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
     // same refusal for live equality tombstones (masked rows are only
     // knowable by probing keys — no metadata answer exists until a fold)
     if (ArrowEqualityDeletes.any(fs, dirPath)) return false
-    // partition evolution in progress: the single-generation discovery
-    // below would miss the other generation's files — scan honestly
-    if (ArrowHiveLayout.readGenerations(fs, dirPath).size > 1) return false
-    if (fs.exists(new Path(dirPath, "_schema.arrows")) &&
-        !fs.exists(new Path(dirPath, "_SUCCESS"))) return false
-    // hive-partitioned directories: files live under value subdirs and
-    // OMIT the partition columns — but the directory values ARE exact
-    // single-value stats, so after splicing them into each file's entry
-    // the same manifest arithmetic answers aggregates over partition keys
-    // too (GROUP BY a hive key = one partial row per file, no file opened)
-    val pushHive: Seq[StructField] =
-      scala.util.Try(ArrowHiveLayout.read(fs, dirPath)).getOrElse(Nil).map { k =>
-        full.fields.find(_.name == k).getOrElse(return false)
-      }
-    val visible = ArrowStreamCommits.visibleFilter(fs, dirPath)
-    val (files, pushHiveVals) =
-      if (pushHive.isEmpty)
-        (Option(fs.globStatus(new Path(dir, "part-*.arrows")))
-          .getOrElse(Array.empty).map(_.getPath.getName).filter(visible),
-          Map.empty[String, Seq[Option[String]]])
-      else {
-        val (sts, vals, _) =
-          ArrowHiveLayout.discover(fs, dirPath, pushHive, Array.empty, visible)
-        (sts.map(_.getPath.getName), vals)
-      }
+    // a closed gate declines (the scan then waits it out); an open view
+    // is handed to the scan this builder builds, so a declined push
+    // costs no second listing. Every generation of an evolving table is
+    // in the view: hive files splice their directory values into their
+    // stats entries (exact single-value stats), so the same manifest
+    // arithmetic answers aggregates over partition keys too (GROUP BY a
+    // hive key = one partial row per file, no file opened)
+    val view = ArrowLiveView.load(spark, dir, full)
+    if (!view.open) return false
+    listed = Some(view)
+    val files = view.files.map(_.name).toArray
 
     /** Per-file stats for every data file — the GROUP-BY-push substrate
       * (one emitted row per file needs per-file values). O(shards) parses.
-      * Hive layouts splice the directory values in as single-value cols. */
+      * Hive files splice their directory values in as single-value cols. */
     def fullStats(): Option[Array[graft.sources.FileStats]] = {
       val stats = ArrowFileStats.read(fs, dirPath)
       if (!files.forall(stats.contains)) None
-      else {
-        val merged =
-          if (pushHive.isEmpty) stats
-          else ArrowHiveLayout.mergeStats(stats, pushHive, pushHiveVals)
-        Some(files.map(merged))
-      }
+      else Some(files.map(view.withPartitionStats(stats)))
     }
 
     /** GLOBAL aggregates answer from the base manifest + the commit
@@ -672,10 +655,13 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
   override def build(): Scan = {
+    // the pushdown listing carried no filters: it is the scan's view only
+    // while none were pushed
     val scan = new ArrowIpcScan(required, dir, limit, pushed, agg,
       maxFilesPerTrigger, partitionKeys, full, fileSlot, asOf,
       changeFeed, startingSnapshot, startingTimestamp, maxSnapshotsPerTrigger,
-      posSlot, ignoreDeletes, ignoreRestores, eqEmitDeleted)
+      posSlot, ignoreDeletes, ignoreRestores, eqEmitDeleted,
+      listed.filter(_ => pushed.isEmpty))
     if (onBuild != null) onBuild(scan)
     scan
   }
@@ -696,7 +682,8 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     posSlot: Int = -1,
     ignoreDeletes: Boolean = false,
     ignoreRestores: Boolean = false,
-    eqEmitDeleted: Boolean = false)
+    eqEmitDeleted: Boolean = false,
+    listed: Option[ArrowLiveView] = None)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
@@ -730,9 +717,9 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
         s" KeyGrouped=[${fields.map(_.name).mkString(", ")}]" +
           s" groups=${parts.map(_.key).distinct.length} files=${parts.length}"
       } +
-      (if (hiveFields.nonEmpty)
-        s" hive=[${hiveFields.map(_.name).mkString(", ")}]" +
-          s" dirs=${hiveDirCounts._1}/${hiveDirCounts._2}"
+      (if (view.hiveFields.nonEmpty)
+        s" hive=[${view.hiveFields.map(_.name).mkString(", ")}]" +
+          s" dirs=${view.dirCounts._1}/${view.dirCounts._2}"
       else "") +
       (if (fileSlot >= 0) " file-col" else "") +
       (if (posSlot >= 0) " pos-col" else "") +
@@ -740,212 +727,33 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
       (if (eqTombs.nonEmpty) s" eqTombs=${eqTombs.length}" else "") +
       asOf.fold("")(v => s" asOf=$v")
 
-  /** Hive partition-key fields for the READ side, resolved against the
-    * dataset schema (the FULL one — a projection may prune a partition
-    * column the directory structure still nests by). Empty = flat.
-    *
-    * PARTITION EVOLUTION (round 13): the layout file records every
-    * generation; evolvePartitioning bounds STANDING hive generations
-    * (value dirs present) to one, so the read side resolves: the
-    * standing hive generation if any, else the current declaration —
-    * and [[layoutMixedFlat]] says whether a flat generation also
-    * participates (root files union in). A tampered table with TWO
-    * standing hive generations refuses loudly. */
-  /** Generation resolution. `hiveFields` = the ACTIVE hive generation
-    * (the current layout when it stands, else the newest standing one,
-    * else the current declaration — what new writes nest by);
-    * `oldHiveGens` = every OTHER standing hive generation (round 14:
-    * N-generation reads — each discovered, pruned, and spliced by its
-    * OWN key list; the previous bound of one standing hive generation
-    * is gone). `layoutMixedFlat` = a flat generation also exists. */
-  private lazy val (hiveFields: Seq[StructField], layoutMixedFlat: Boolean,
-      oldHiveGens: Seq[Seq[StructField]]) = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-    val schemaForKeys = Option(full).getOrElse(required)
-    def resolve(keys: Seq[String]): Seq[StructField] = keys.map { k =>
-      schemaForKeys.fields.find(_.name == k).getOrElse(throw new IllegalStateException(
-        s"arrow-ipc: ${ArrowHiveLayout.FileName} of $dir names partition key " +
-          s"'$k' which is not in the dataset schema"))
-    }
-    val gens = ArrowHiveLayout.readGenerations(fs, dirPath)
-    if (gens.size == 1) (resolve(gens.head), gens.head.isEmpty, Nil)
-    else {
-      val standing = ArrowHiveLayout.standingHiveGens(fs, dirPath)
-      val active = standing.find(_ == gens.last)
-        .orElse(standing.lastOption)
-        .orElse(Some(gens.last).filter(_.nonEmpty)).getOrElse(Nil)
-      val olds = standing.filterNot(_ == active)
-      (resolve(active), gens.exists(_.isEmpty), olds.map(resolve))
-    }
-  }
+  /** The table's live view for this batch read ([[ArrowLiveView]] states
+    * the gate, visibility and generation rules): the one the builder
+    * listed for aggregate pushdown, else loaded here — waiting a closed
+    * gate out, then refusing. Hive value directories the STATIC filters
+    * refute are never listed; a time-travel read takes the pinned
+    * snapshot's file set. Keys resolve against the FULL dataset schema (a
+    * projection may prune a partition column the directories still nest
+    * by). */
+  private lazy val view: ArrowLiveView = listed.getOrElse(
+    ArrowLiveView.forRead(SparkSession.active, dir,
+      Option(full).getOrElse(required), filters, asOf))
 
-  /** One listing + completeness gate + manifest read, shared by planning,
-    * statistics, explain, and runtime re-pruning. Stats-based skipping:
-    * files whose `_stats.json` interval PROVES no row matches the pushed
-    * (or runtime) filters are dropped before any task launches — the
-    * Arrow analog of the reference's row-group pruning
-    * (ParquetBlockInputStream.cpp:33-38), with parquet-style advisory
-    * semantics (a kept file is still filtered exactly by Spark post-scan).
-    * Missing stats (foreign or function-style-written directories) keep
-    * every file. */
-  /** `oldGenVals`: file name → (index into [[oldHiveGens]], canonical
-    * partition values) for files standing under an OLD hive generation's
-    * value directories — each generation discovered and pruned by its
-    * own keys, spliced by its own fields (round 14: N-generation reads). */
-  private lazy val (allFiles, manifest, refutedShards, hiveVals,
-      hiveDirCounts, oldGenVals) = {
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    // completeness gate, OCC-aware: our sentinel without the job marker
-    // refuses — UNLESS the latch is down only because batch appends are
-    // IN FLIGHT (live `_pending-*` markers, no swap intent), in which
-    // case the read serves the COMMITTED snapshot: the in-flight writes'
-    // task-committed files (names embed their pending queryIds) are
-    // excluded below exactly like uncommitted stream epochs, and
-    // everything else — manifest, ledger, snapshot log — still describes
-    // precisely the committed state. A swap IN PROGRESS (intent present,
-    // latch down) holds that state for single-digit milliseconds — a
-    // reader that lands inside the window WAITS it out (bounded,
-    // `spark.graft.arrow.readGateWaitMs`) instead of surfacing a spurious
-    // refusal to a continuous ingest+maintenance loop; only a state still
-    // torn past the wait (a crashed writer whose markers went stale)
-    // refuses loudly.
-    val pendingHidden: Set[String] = {
-      def gate(): Option[Set[String]] =
-        if (!fs.exists(new Path(dirPath, "_schema.arrows")) ||
-            fs.exists(new Path(dirPath, "_SUCCESS"))) Some(Set.empty)
-        else {
-          val swapping = fs.exists(new Path(dirPath, ArrowMaintenance.IntentFile)) ||
-            fs.exists(new Path(dirPath, ArrowMaintenance.DeleteIntentFile)) ||
-            fs.exists(new Path(dirPath, ArrowDeleteVectors.MorIntentFile)) ||
-            fs.exists(new Path(dirPath, ArrowMaintenance.RestoreIntentFile))
-          val pend = ArrowOcc.livePendingQueryIds(fs, dirPath)
-          if (!swapping && pend.nonEmpty) Some(pend) else None
-        }
-      val waitMs = scala.util.Try(spark.conf
-        .get("spark.graft.arrow.readGateWaitMs", "3000").toLong).getOrElse(3000L)
-      val deadline = System.nanoTime() + waitMs * 1000000L
-      var out = gate()
-      while (out.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(25)
-        out = gate()
-      }
-      out.getOrElse(throw new IllegalArgumentException(
-        s"Arrow interchange: $dir has a schema sentinel but no _SUCCESS " +
-          s"marker after ${waitMs} ms — the writing job did not complete; " +
-          "refusing to read partial data"))
-    }
-    // streaming-sink visibility: a stream-named file with no committed
-    // ledger entry is an uncommitted epoch (crash leftover or in-flight)
-    // and does not exist for readers; neither does an in-flight batch
-    // append's file
-    val streamVisible = {
-      val ledgerVisible = ArrowStreamCommits.visibleFilter(fs, dirPath)
-      (n: String) => ledgerVisible(n) &&
-        !pendingHidden.contains(ArrowOcc.nameQueryId(n))
-    }
-    // hive-partitioned discovery: walk one `key=value` directory level per
-    // partition key, pruning value directories the STATIC filters refute
-    // BEFORE descending — a skipped directory's children are never listed,
-    // so planning over a million-file lake costs O(matching dirs).
-    // TIME TRAVEL (`asOf`): skip discovery entirely — the snapshot log
-    // names the file set; each path resolves live-first, trash-second,
-    // and an expired snapshot refuses loudly rather than serving a
-    // partial table. Stats-based pruning below stays SOUND for the files
-    // the manifest still covers (data files are immutable), and simply
-    // keeps the rest.
-    val (all, valsByName, dirCounts, oldVals) =
-      if (asOf.isDefined) {
-        val snaps = scala.util.Try(ArrowSnapshots.read(fs, dirPath))
-          .getOrElse(Nil)
-        val resolved = ArrowSnapshots.resolve(snaps, asOf.get).getOrElse(
-          throw new IllegalArgumentException(
-            s"arrow-ipc: $dir has no snapshot ${asOf.get}" + (
-              if (snaps.isEmpty) " (no snapshot log)"
-              else s" — the log records ${snaps.head.id}..${snaps.last.id}")))
-        // deletion vectors ride the same log entries as data files; a
-        // pinned snapshot applies exactly the vectors in force AT it
-        val (set, _) = ArrowDeleteVectors.splitResolved(resolved)
-        val sts = set.toSeq.sorted.map { rel =>
-          val live = new Path(dirPath, rel)
-          val p =
-            if (fs.exists(live)) live
-            else {
-              val t = ArrowSnapshots.trashPath(dirPath, rel)
-              require(fs.exists(t),
-                s"arrow-ipc: snapshot ${asOf.get} of $dir is expired — " +
-                  s"'$rel' is gone from both the live set and the trash")
-              t
-            }
-          fs.getFileStatus(p)
-        }.toArray
-        // nested rels assign to the generation whose key names match the
-        // path segments (parse is name-validating, so a wrong generation
-        // fails cleanly and the next is tried); a flat-generation rel
-        // (bare name) has no path-borne values — its columns come from
-        // the data. A nested rel matching NO generation is corruption.
-        val nested = set.toSeq.filter(_.contains('/'))
-        var vals = Map.empty[String, Seq[Option[String]]]
-        var ovals = Map.empty[String, (Int, Seq[Option[String]])]
-        if (hiveFields.nonEmpty) nested.foreach { rel =>
-          val name = new Path(rel).getName
-          scala.util.Try(ArrowHiveLayout.parseRelPath(hiveFields, rel))
-            .toOption match {
-            case Some(v) => vals += name -> v
-            case None =>
-              val hit = oldHiveGens.zipWithIndex.view.flatMap { case (g, i) =>
-                scala.util.Try(ArrowHiveLayout.parseRelPath(g, rel))
-                  .toOption.map(v => name -> (i, v))
-              }.headOption
-              hit match {
-                case Some(h) => ovals += h
-                case None => throw new IllegalStateException(
-                  s"arrow-ipc: snapshot file '$rel' of $dir matches no " +
-                    "declared partition generation")
-              }
-          }
-        }
-        (sts, vals, (0, 0), ovals)
-      } else if (hiveFields.isEmpty) {
-        val raw = Option(fs.globStatus(new Path(dir, "part-*.arrows")))
-          .getOrElse(Array.empty)
-        val vis = raw.filter(st => streamVisible(st.getPath.getName))
-        (vis, Map.empty[String, Seq[Option[String]]], (0, 0),
-          Map.empty[String, (Int, Seq[Option[String]])])
-      } else {
-        val (hsts, hvals, hdirs) = ArrowHiveLayout.discover(fs, dirPath,
-          hiveFields, filters, streamVisible)
-        // partition evolution: a declared FLAT generation's files live
-        // at the root and union in — pruned by their own (real) manifest
-        // stats below, exactly like a flat table's; OLD hive generations
-        // (round 14) each run their own discovery walk, pruned by static
-        // filters on THEIR keys. Each generation by its own mechanism,
-        // no rewrite.
-        var allSts = hsts
-        var kept = hdirs._1; var total = hdirs._2
-        var ovals = Map.empty[String, (Int, Seq[Option[String]])]
-        oldHiveGens.zipWithIndex.foreach { case (g, i) =>
-          val (osts, ov, odirs) = ArrowHiveLayout.discover(fs, dirPath,
-            g, filters, streamVisible)
-          allSts = allSts ++ osts
-          kept += odirs._1; total += odirs._2
-          ovals ++= ov.map { case (n, v) => n -> (i, v) }
-        }
-        if (layoutMixedFlat) {
-          val flat = Option(fs.globStatus(new Path(dir, "part-*.arrows")))
-            .getOrElse(Array.empty)
-            .filter(st => streamVisible(st.getPath.getName))
-          allSts = allSts ++ flat
-        }
-        (allSts, hvals, (kept, total), ovals)
-      }
-    if (all.isEmpty)
-      (all, Map.empty[String, FileStats], Set.empty[String], valsByName,
-        dirCounts, oldVals)
+  /** Manifest read + shard refutation, shared by planning, statistics,
+    * explain, and runtime re-pruning. Stats-based skipping: files whose
+    * `_stats.json` interval PROVES no row matches the pushed (or runtime)
+    * filters are dropped before any task launches — the Arrow analog of
+    * the reference's row-group pruning (ParquetBlockInputStream.cpp:33-38),
+    * with parquet-style advisory semantics (a kept file is still filtered
+    * exactly by Spark post-scan). Missing stats (foreign or
+    * function-style-written directories) keep every file. Stats-based
+    * pruning stays SOUND for time travel: data files are immutable, so
+    * the entries the manifest still holds describe them exactly. */
+  private lazy val (manifest, refutedShards) =
+    if (view.files.isEmpty) (Map.empty[String, FileStats], Set.empty[String])
     else {
+      val dirPath = new Path(dir)
+      val fs = dirPath.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
       // shard-level skipping: a commit whose ENVELOPE refutes the pushed
       // filters prunes every one of its files without its per-file stats
       // ever being loaded — planning cost stays O(index + matching
@@ -976,26 +784,15 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
         (liveIndexed ++ unindexed).flatMap(q =>
           scala.util.Try(ArrowFileStats.readShard(fs, dirPath, q))
             .getOrElse(Map.empty[String, FileStats]))
-      // hive layout: splice the directory-derived partition values into
-      // each file's stats as exact single-value columns — pushed and
-      // RUNTIME (DPP) filters on partition keys then prune through the
-      // same canMatch machinery as data-column stats (a manifest-less
-      // foreign file simply stays unpruned, never wrongly skipped)
-      val merged0 =
-        if (hiveFields.isEmpty) stats
-        else ArrowHiveLayout.mergeStats(stats, hiveFields, valsByName)
-      // old generations splice THEIR OWN path-borne keys the same way
-      val merged = oldHiveGens.zipWithIndex.foldLeft(merged0) {
-        case (acc, (g, i)) =>
-          val genVals = oldVals.collect { case (n, (gi, v)) if gi == i => n -> v }
-          if (genVals.isEmpty) acc
-          else ArrowHiveLayout.mergeStats(acc, g, genVals)
-      }
-      (all, merged, refuted.toSet, valsByName, dirCounts, oldVals)
+      // hive files splice their directory-derived partition values in as
+      // exact single-value columns — pushed and RUNTIME (DPP) filters on
+      // partition keys then prune through the same canMatch machinery as
+      // data-column stats (a manifest-less foreign file simply stays
+      // unpruned, never wrongly skipped)
+      (view.withPartitionStats(stats), refuted.toSet)
     }
-  }
 
-  private def totalFiles = allFiles.length
+  private def totalFiles = view.files.length
 
   /** Live deletion vectors keyed by data-file name, resolved ONCE per
     * scan: one listing of the (small) `.dv/` dir for live reads; for a
@@ -1017,7 +814,7 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
         val resolved = ArrowSnapshots.resolve(snaps, v).getOrElse(Set.empty)
         ArrowDeleteVectors.fromResolvedSet(resolved).map { case (name, ref) =>
           name -> ArrowSnapshots.resolveLiveOrTrash(fs, dirPath, ref.rel,
-            s"snapshot $v deletion vector")
+            s"snapshot $v deletion vector").getPath.toString
         }
     }
   }
@@ -1249,26 +1046,24 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
   private def shardIdOf(name: String): String = ArrowOcc.nameQueryId(name)
 
   private def keptWith(active: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.hadoop.fs.FileStatus] = {
+      : Seq[LiveFile] = {
     val base =
-      if (active.isEmpty) allFiles
-      else allFiles.filter { st =>
-        val name = st.getPath.getName
+      if (active.isEmpty) view.files
+      else view.files.filter { f =>
         // whole-commit skip first (static filters refuted the envelope; the
         // shard's per-file stats were never loaded), then per-file interval
-        !refutedShards.contains(shardIdOf(name)) &&
-        manifest.get(name)
-          .forall(s => active.forall(f => ArrowFileStats.canMatch(f, s)))
+        !refutedShards.contains(shardIdOf(f.name)) &&
+        manifest.get(f.name)
+          .forall(s => active.forall(ArrowFileStats.canMatch(_, s)))
       }
     // file-identity filters (static pushed + runtime): exact by
     // construction — the values ARE this scan's own emitted paths
     val afterStatic = staticFileKeep.fold(base)(keep =>
-      base.filter(st => keep(st.getPath.toString)))
-    fileKeep.fold(afterStatic)(keep =>
-      afterStatic.filter(st => keep(st.getPath.toString)))
+      base.filter(f => keep(f.path)))
+    fileKeep.fold(afterStatic)(keep => afterStatic.filter(f => keep(f.path)))
   }
 
-  private def kept: Array[org.apache.hadoop.fs.FileStatus] = keptWith(filters ++ runtime)
+  private def kept: Seq[LiveFile] = keptWith(filters ++ runtime)
 
   /** Key grouping for STORAGE-PARTITIONED JOINS. `Some` iff: the v2
     * bucketing conf is on, keys are declared (read option `partitionKeys`
@@ -1304,8 +1099,7 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     // inside a keyed chain would feed the hive splicing reader values
     // it does not have — degrade to a plain shuffled read until
     // unification
-    else if (hiveFields.nonEmpty && (layoutMixedFlat || oldHiveGens.nonEmpty))
-      None
+    else if (view.mixed) None
     else {
       val dirPath = new Path(dir)
       val fs = dirPath.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
@@ -1316,7 +1110,7 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
       // datasets (or a hive and a flat key-grouped one; the canonical key
       // encoding is shared) join on the partition key with ZERO shuffle
       val keys = partitionKeys.getOrElse {
-        if (hiveFields.nonEmpty) hiveFields.map(_.name)
+        if (view.hiveFields.nonEmpty) view.hiveFields.map(_.name)
         else ArrowLayout.read(fs, dirPath)
       }
       val fields = keys.flatMap(k => required.fields.find(_.name == k))
@@ -1324,13 +1118,11 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
           fields.exists(f => ArrowFileStats.kindOf(f.dataType) == 0)) None
       else {
         val files = keptWith(filters)
-        val proofs = files.map { st =>
-          val name = st.getPath.getName
-          manifest.get(name).flatMap { fstats =>
+        val proofs = files.map { f =>
+          manifest.get(f.name).flatMap { fstats =>
             val vals = keys.map(k => ArrowFileStats.singleValue(fstats, k))
             if (vals.exists(_.isEmpty)) None
-            else Some((st.getPath.toString, vals.map(_.get),
-              hiveVals.getOrElse(name, Nil)))
+            else Some((f.path, vals.map(_.get), f.values))
           }
         }
         if (files.isEmpty || proofs.exists(_.isEmpty)) None
@@ -1342,12 +1134,12 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
           // spark.sql.sources.v2.bucketing.partiallyClusteredDistribution
           // keep a skewed key's files split instead of funneling them
           // through one task
-          val parts = proofs.map(_.get)
+          val parts = proofs.map(_.get).toArray
             .sortBy { case (path, key, _) =>
               (key.map(_.getOrElse("")).mkString("\u0001"), path) }
             .map { case (path, key, hv) =>
               ArrowKeyedPartition(Seq(path), key, dts,
-                if (hiveFields.isEmpty) Nil else Seq(hv),
+                if (view.hiveFields.isEmpty) Nil else Seq(hv),
                 Seq(dvFor(new Path(path).getName))) }
           Some((fields, parts))
         }
@@ -1399,18 +1191,18 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
         val files = kept
         // exact row count when the manifest covers every kept file — a
         // real number beats Spark's size-based row guess for AQE/joins
-        val sts = files.map(st => manifest.get(st.getPath.getName))
+        val sts = files.map(f => manifest.get(f.name))
         // manifest rows are PHYSICAL counts; live rows subtract each
         // file's deletion-vector cardinality (carried in the dv name —
         // nothing is opened here)
         val masked =
           if (dvPaths.isEmpty) 0L
-          else files.iterator.map { st =>
-            dvFor(st.getPath.getName)
+          else files.iterator.map { f =>
+            dvFor(f.name)
               .flatMap(p => ArrowDeleteVectors.parseName(new Path(p).getName))
               .fold(0L)(_._3)
           }.sum
-        (files.map(_.getLen).sum,
+        (files.map(_.status.getLen).sum,
           // live equality tombstones: the masked count is unknowable
           // without probing keys — report no row count rather than an
           // overcount that misleads AQE/join sizing
@@ -1447,51 +1239,31 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
             dvs = keep.map(g.dvOrNone)): InputPartition
         }
       case None =>
-        if (hiveFields.isEmpty) {
-          // eqEmit=deleted (the fold's position-finding read): only files
-          // some tombstone outranks can hold masked rows — everything
-          // else is dropped at planning, so a mostly-folded table
-          // re-reads only its fresh debt
-          val files =
-            if (eqEmitDeleted)
-              kept.filter(st => eqFor(st.getPath.getName).isDefined)
-            else kept
-          files.map(st => ArrowFilePartition(st.getPath.toString,
-            dvFor(st.getPath.getName),
-            eq = eqFor(st.getPath.getName)): InputPartition)
-        }
-        else kept.map { st =>
-          val name = st.getPath.getName
-          hiveVals.get(name) match {
-            case Some(vals) =>
-              ArrowHiveFilePartition(st.getPath.toString, vals,
-                dvFor(name)): InputPartition
-            case None => oldGenVals.get(name) match {
-              case Some((gi, vals)) =>
-                // an OLD-generation file: spliced by ITS OWN keys
-                ArrowHiveFilePartition(st.getPath.toString, vals,
-                  dvFor(name),
-                  fields = oldHiveGens(gi).map(_.name)): InputPartition
-              case None =>
-                // a flat-generation file on an evolved table: every
-                // column (including the new partition keys) is in its
-                // data — the plain reader serves it
-                ArrowFilePartition(st.getPath.toString,
-                  dvFor(name)): InputPartition
-            }
-          }
-        }
+        // eqEmit=deleted (the fold's position-finding read): only files
+        // some tombstone outranks can hold masked rows — everything else
+        // is dropped at planning, so a mostly-folded table re-reads only
+        // its fresh debt
+        val files =
+          if (eqEmitDeleted) kept.filter(f => eqFor(f.name).isDefined)
+          else kept
+        files.map { f =>
+          if (f.fields.isEmpty)
+            // a flat file — on an evolved table too: every column
+            // (including the new partition keys) is in its data
+            ArrowFilePartition(f.path, dvFor(f.name),
+              eq = eqFor(f.name)): InputPartition
+          else ArrowHiveFilePartition(f.path, f.values, dvFor(f.name),
+            // an OLD-generation file is spliced by ITS OWN keys
+            fields =
+              if (f.fields == view.hiveFields) Nil else f.fields.map(_.name))
+        }.toArray
     }
 
   /** The files this scan's final plan reads, as paths RELATIVE to the
     * dataset root — the copy-on-write commit's replacement set. Reflects
     * both the pushed (static) pruning and any runtime group filter, i.e.
     * exactly the files whose rows the executed ReplaceData plan carried. */
-  private[sources] def replacedFiles: Seq[String] = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-    kept.toSeq.map(st => ArrowSnapshots.relativize(fs, dirPath, st.getPath))
-  }
+  private[sources] def replacedFiles: Seq[String] = kept.map(_.rel)
 
   /** The deletion-vector rels THIS scan masked for `olds` — the COW
     * commit records plan-time state, so a vector that advances between
@@ -1513,16 +1285,20 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     require(posSlot < 0,
       s"arrow-ipc: the _pos metadata column is batch-only — a streaming " +
         "read cannot project it")
-    require(oldHiveGens.isEmpty,
-      s"arrow-ipc: $dir holds files under ${oldHiveGens.size + 1} hive " +
+    // this view supplies the layout; the stream polls views of its own,
+    // holding its offset (never waiting or refusing) on a closed gate
+    val layout = ArrowLiveView.load(SparkSession.active, dir,
+      Option(full).getOrElse(required))
+    require(layout.oldHiveGens.isEmpty,
+      s"arrow-ipc: $dir holds files under ${layout.oldHiveGens.size + 1} hive " +
         "partition generations — streaming reads serve one; rewrite " +
         "(CALL cluster) to unify first (batch reads union all generations)")
     if (changeFeed)
-      new ArrowChangesMicroBatchStream(required, dir, hiveFields,
+      new ArrowChangesMicroBatchStream(required, dir, layout.hiveFields,
         startingSnapshot, startingTimestamp, maxSnapshotsPerTrigger)
     else
       new ArrowIpcMicroBatchStream(required, dir, filters, maxFilesPerTrigger,
-        hiveFields, ignoreDeletes, ignoreRestores)
+        layout.hiveFields, ignoreDeletes, ignoreRestores)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1542,12 +1318,12 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
         else if (fileSlot >= 0 && fileSlot < posSlot) posSlot - 1
         else posSlot
       val base =
-        if (hiveFields.isEmpty)
+        if (view.hiveFields.isEmpty)
           new ArrowIpcReaderFactory(req, conf, limit, innerPos)
             : PartitionReaderFactory
         else
-          new ArrowIpcHiveReaderFactory(req, hiveFields, conf, limit,
-            innerPos, extraGens = oldHiveGens)
+          new ArrowIpcHiveReaderFactory(req, view.hiveFields, conf, limit,
+            innerPos, extraGens = view.oldHiveGens)
             : PartitionReaderFactory
       if (fileSlot < 0) base
       else {

@@ -125,31 +125,22 @@ private[graft] class ArrowIpcMicroBatchStream(
   private val conf = new SerializableHadoopConf(
     spark.sparkContext.hadoopConfiguration)
 
-  /** Live committed data files of a hive-partitioned directory: full path
-    * and canonical partition values, keyed by bare NAME (names are unique
-    * across value directories by the writer contract — which is what lets
-    * the offset stay a set of names regardless of layout, and a
-    * checkpoint survive a flat→hive reshaping of the reader code). */
-  private def discoverHive(fs: org.apache.hadoop.fs.FileSystem, dirPath: Path,
-      visible: String => Boolean)
-      : (Map[String, Path], Map[String, Seq[Option[String]]]) = {
-    val (sts, valsByName, _) =
-      ArrowHiveLayout.discover(fs, dirPath, hiveFields, Array.empty, visible)
-    (sts.map(st => st.getPath.getName -> st.getPath).toMap, valsByName)
-  }
+  /** The live view of the directory (see [[ArrowLiveView]]); keys
+    * resolve against the sentinel's schema, read only for hive layouts. */
+  private def liveView(): ArrowLiveView =
+    ArrowLiveView.load(spark, dir, ArrowInterchange.readSchema(spark, dir))
 
-  /** None = the poll gate is CLOSED (directory absent, or mid-append with
-    * the latch down): hold the line at the previous offset; the caller
-    * must neither admit nor compact. Some(files) = the real committed
-    * listing (possibly empty — a legitimately emptied directory). */
+  /** None = the poll gate is CLOSED (directory absent, or the live-view
+    * gate closed): hold the line at the previous offset; the caller must
+    * neither admit nor compact. Some(files) = the visible file NAMES
+    * (possibly none — a legitimately emptied directory). Names are unique
+    * across value directories by the writer contract, which is what lets
+    * the offset stay a set of names regardless of layout. */
   private def listCommitted(): Option[Seq[String]] = {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf.value)
-    if (!fs.exists(dirPath)) return None
-    // mid-append (sentinel present, marker dropped): hold the line at the
-    // previous offset instead of reading a torn directory
-    if (fs.exists(new Path(dirPath, "_schema.arrows")) &&
-        !fs.exists(new Path(dirPath, "_SUCCESS"))) return None
+    if (!fs.exists(dirPath) || ArrowLiveView.gate(fs, dirPath).isEmpty)
+      return None
     // IDLE FAST PATH (round 11): every commit to the directory — append,
     // epoch, compaction, delete, COW — advances the snapshot log, so an
     // unchanged (tip id, sentinel mtime) stamp means the previous listing
@@ -191,15 +182,11 @@ private[graft] class ArrowIpcMicroBatchStream(
           "serving the masked rows. Either fold them first (CALL " +
           "graft.system.purge_eq) or opt in with " +
           "option(\"ignoreDeletes\", true).")
-    // a sink stream's uncommitted epoch files are invisible — the source
-    // emits a file only once its epoch's ledger entry landed
-    val visible = ArrowStreamCommits.visibleFilter(fs, dirPath)
-    val listed =
-      if (hiveFields.nonEmpty)
-        discoverHive(fs, dirPath, visible)._1.keys.toSeq.sorted
-      else Option(fs.globStatus(new Path(dir, "part-*.arrows")))
-        .getOrElse(Array.empty).map(_.getPath.getName).filter(visible)
-        .toSeq.sorted
+    // a sink stream's uncommitted epoch files and in-flight appends are
+    // invisible — the source emits a file only once it is committed
+    val view = liveView()
+    if (!view.open) return None
+    val listed = view.files.map(_.name).sorted
     tipCache = stamp.map(s => (s, listed))
     Some(listed)
   }
@@ -349,20 +336,19 @@ private[graft] class ArrowIpcMicroBatchStream(
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf.value)
     // a hive-partitioned directory nests its files under value dirs: map
-    // the batch's NAMES back to full paths + partition values. A name the
-    // listing no longer finds means file-level maintenance ran against the
-    // no-concurrent-writer contract mid-stream — fail loudly, don't read a
-    // hole.
-    val (pathsByName, valsByName) =
-      if (hiveFields.isEmpty || fresh.isEmpty) (Map.empty[String, Path],
-        Map.empty[String, Seq[Option[String]]])
-      else discoverHive(fs, dirPath, _ => true)
+    // the batch's NAMES back to the view's files (path, generation,
+    // partition values). A name the view no longer finds means file-level
+    // maintenance ran against the no-concurrent-writer contract mid-stream
+    // — fail loudly, don't read a hole.
+    val view =
+      if (hiveFields.isEmpty || fresh.isEmpty) None
+      else Some(liveView())
+    val byName = view.fold(Map.empty[String, LiveFile])(
+      _.files.map(f => f.name -> f).toMap)
     val stats0 =
       if (filters.isEmpty || fresh.isEmpty) Map.empty[String, FileStats]
       else ArrowFileStats.readForFiles(fs, dirPath, fresh)
-    val stats =
-      if (hiveFields.isEmpty || stats0.isEmpty) stats0
-      else ArrowHiveLayout.mergeStats(stats0, hiveFields, valsByName)
+    val stats = view.fold(stats0)(_.withPartitionStats(stats0))
     fresh.filter { name =>
       stats.get(name)
         .forall(s => filters.forall(f => ArrowFileStats.canMatch(f, s)))
@@ -370,10 +356,17 @@ private[graft] class ArrowIpcMicroBatchStream(
       if (hiveFields.isEmpty)
         ArrowFilePartition(new Path(dir, name).toString): InputPartition
       else {
-        val p = pathsByName.getOrElse(name, throw new IllegalStateException(
+        val f = byName.getOrElse(name, throw new IllegalStateException(
           s"arrow-ipc stream: committed file '$name' vanished from $dir — " +
             "file-level maintenance ran concurrently with this stream"))
-        ArrowHiveFilePartition(p.toString, valsByName(name)): InputPartition
+        if (f.fields.isEmpty) ArrowFilePartition(f.path): InputPartition
+        else {
+          require(f.fields == hiveFields,
+            s"arrow-ipc stream: '${f.rel}' of $dir nests under a partition " +
+              "generation this stream did not start with — streaming reads " +
+              "serve one; rewrite (CALL cluster) to unify first")
+          ArrowHiveFilePartition(f.path, f.values): InputPartition
+        }
       }
     }.toArray
   }

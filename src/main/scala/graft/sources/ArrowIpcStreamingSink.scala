@@ -109,14 +109,6 @@ private[graft] object ArrowStreamCommits {
     if (!fs.exists(new Path(dir, LedgerFile)))
       write(fs, dir, Ledger(Map.empty, Set.empty))
 
-  /** The visibility predicate for one directory listing: resolves the
-    * ledger ONCE, then O(1) per file name. */
-  def visibleFilter(fs: FileSystem, dir: Path): String => Boolean = {
-    lazy val ledger = read(fs, dir) // lazy: only loaded on a stream name
-    name => !isStreamName(name) ||
-      ledger.forall(_.committed.contains(commitIdOf(name)))
-  }
-
   /** Delete PROVABLY-DEAD invisible stream files + stray task temps: an
     * uncommitted stream file younger than [[ArrowOcc.staleMs]] may be a
     * concurrent run's IN-FLIGHT epoch (its commit re-validates existence
@@ -268,9 +260,8 @@ private[sources] class ArrowIpcStreamingWrite(
         val snaps = ArrowSnapshots.read(fs, dirPath)
         val state = snaps.lastOption
           .flatMap(l => ArrowSnapshots.resolve(snaps, l.id)).getOrElse(Set.empty)
-        val visible = ArrowStreamCommits.visibleFilter(fs, dirPath)
-        val missing = ArrowSnapshots.listDataFiles(fs, dirPath)
-          .filter(rel => visible(new Path(rel).getName) && !state(rel))
+        val missing = ArrowLiveView.load(spark, dir, schema).files
+          .map(_.rel).filterNot(state)
         if (missing.nonEmpty)
           ArrowSnapshots.append(fs, dirPath, missing, Nil, op = "stream")
       }

@@ -102,19 +102,17 @@ object ArrowMaintenance {
     // were never staged would be fine; recording it as a lineage PARENT of
     // files that don't carry its rows would poison streaming absorption) —
     // sweep the provably-dead ones, and keep the rest out of `olds` via
-    // [[replaceableFilter]] (an in-flight epoch's files are fresh AND
-    // uncommitted — both fences exclude them)
+    // the live view (an in-flight epoch's files are fresh AND
+    // uncommitted — invisible either way)
     ArrowStreamCommits.cleanOrphans(fs, dirPath)
+    val view = liveView(spark, dir)
     // hive-partitioned directories nest files under value subdirs and
     // need the partition columns routed back out — their own staging path
     val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
     if (hiveKeys.nonEmpty)
-      return compactHive(spark, dirPath, fs, hiveKeys, targetBytes, codec)
+      return compactHive(spark, dirPath, fs, view, hiveKeys, targetBytes, codec)
 
-    val replaceable = replaceableFilter(fs, dirPath)
-    val olds = Option(fs.globStatus(new Path(dir, "part-*.arrows")))
-      .getOrElse(Array.empty)
-      .filter(st => replaceable(st.getPath.getName))
+    val olds = view.files.filter(_.fields.isEmpty)
     if (olds.length <= 1) return None
 
     // STAGE: a complete new dataset in a hidden subdir. The read is
@@ -124,22 +122,17 @@ object ArrowMaintenance {
     // replaced (it is not in `olds`).
     val id = java.util.UUID.randomUUID.toString.take(8)
     val staging = s".compact-$id"
-    // clamp: ceil(bytes/target) can exceed Int for tiny targets over huge
-    // dirs — coalesce only ever reduces, so the clamp is harmless
-    val n = math.min(Int.MaxValue.toLong,
-      math.max(1L, (olds.map(_.getLen).sum + targetBytes - 1) / targetBytes))
-    val oldPaths = olds.map(st =>
-      fs.makeQualified(st.getPath).toString).toSeq
+    val n = taskCount(olds, targetBytes)
+    val oldPaths = olds.map(f => fs.makeQualified(f.status.getPath).toString)
     // capture the deletion vectors in force BEFORE the staging read plans:
     // the read masks exactly these, the commit validates none advanced,
     // the replay retires them (the rewrite folded them into the data)
-    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath,
-      olds.map(_.getPath.getName).toSeq)
+    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds.map(_.name))
     val df = spark.read.format("arrow-ipc").load(dir)
       .filter(org.apache.spark.sql.functions.col(ArrowRowLevel.FileColumn)
         .isin(oldPaths: _*))
       .drop(ArrowRowLevel.FileColumn)
-      .coalesce(n.toInt)
+      .coalesce(n)
     ArrowInterchange.writeStream(df,
       new Path(dirPath, staging).toString, codec = codec,
       bloomCols = standingBlooms(fs, dirPath, df.schema.fieldNames, Nil))
@@ -153,8 +146,7 @@ object ArrowMaintenance {
 
     // SWAP: serialized, validated, crash-safe
     commitSwap(fs, dirPath,
-      Intent(olds.map(_.getPath.getName).toSeq.sorted, staging, moves,
-        dvs = dvRels))
+      Intent(olds.map(_.name).sorted, staging, moves, dvs = dvRels))
     Some(CompactionResult(olds.length, staged.length))
   }
 
@@ -186,23 +178,19 @@ object ArrowMaintenance {
     ArrowOcc.sweepStaleStaging(fs, dirPath, ".compact-*")
     val dvs = ArrowDeleteVectors.live(fs, dirPath)
     if (dvs.isEmpty) return None
-    val replaceable = replaceableFilter(fs, dirPath)
-    val olds = walkFiles(fs, dirPath).filter { case (rel, _) =>
-      val n = new Path(rel).getName
-      replaceable(n) && dvs.contains(n) && onlyFiles.forall(_.contains(n))
-    }
-    if (olds.isEmpty) return None
+    val files = liveView(spark, dir).files.filter(f =>
+      dvs.contains(f.name) && onlyFiles.forall(_.contains(f.name)))
+    if (files.isEmpty) return None
     val id = java.util.UUID.randomUUID.toString.take(8)
     val staging = s".compact-$id"
-    val n = math.min(Int.MaxValue.toLong, math.max(1L,
-      (olds.map(_._2).sum + targetBytes - 1) / targetBytes)).toInt
-    val oldPaths = olds.map(o =>
-      fs.makeQualified(new Path(dirPath, o._1)).toString)
+    val n = taskCount(files, targetBytes)
+    val olds = files.map(_.rel)
+    val oldPaths = olds.map(o => fs.makeQualified(new Path(dirPath, o)).toString)
     val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
     // dv capture BEFORE the staging read plans (the scan masks exactly
     // these; commit validates; replay retires) — for hive the shared
     // tail captures its own
-    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds.map(_._1))
+    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds)
     val df = spark.read.format("arrow-ipc").load(dir)
       .filter(org.apache.spark.sql.functions.col(ArrowRowLevel.FileColumn)
         .isin(oldPaths: _*))
@@ -210,7 +198,7 @@ object ArrowMaintenance {
       .coalesce(n)
     if (hiveKeys.nonEmpty)
       Some(stageHiveAndSwap(spark, fs, dirPath, hiveKeys, df, codec,
-        olds.map(_._1), id, staging))
+        olds, id, staging))
     else {
       ArrowInterchange.writeStream(df,
         new Path(dirPath, staging).toString, codec = codec,
@@ -221,25 +209,25 @@ object ArrowMaintenance {
       val moves = staged.map(s =>
         s -> s.replace(".arrows", s"-compact-$id.arrows")).toMap
       commitSwap(fs, dirPath,
-        Intent(olds.map(_._1).sorted, staging, moves, dvs = dvRels))
+        Intent(olds.sorted, staging, moves, dvs = dvRels))
       Some(CompactionResult(olds.length, staged.length))
     }
   }
 
-  /** Which live-listed files a maintenance rewrite may replace: committed
-    * stream files only (the ledger filter hides uncommitted epochs) and
-    * no file of an IN-FLIGHT batch append (its `_pending-<queryId>`
-    * marker is live and the file name embeds that queryId). Both fences
-    * resolve once per call — O(1) per file name after that. */
-  private def replaceableFilter(fs: FileSystem, dirPath: Path)
-      : String => Boolean = {
-    val visible = ArrowStreamCommits.visibleFilter(fs, dirPath)
-    val pending = ArrowOcc.livePendingQueryIds(fs, dirPath)
-    // exact queryId-component equality, not a suffix test — the shared
-    // [[ArrowOcc.nameQueryId]] convention keeps this in lockstep with the
-    // writers' naming scheme
-    name => visible(name) && !pending.contains(ArrowOcc.nameQueryId(name))
-  }
+  /** The live view a maintenance rewrite works from: the files it may
+    * replace are the view's visible ones — committed stream epochs only,
+    * no file of an in-flight batch append (see [[ArrowLiveView]]). No
+    * gate wait: [[recover]] has already run, and a swap racing this one
+    * loses at commit-time validation. */
+  private def liveView(spark: SparkSession, dir: String): ArrowLiveView =
+    ArrowLiveView.load(spark, dir, ArrowInterchange.readSchema(spark, dir))
+
+  /** Output task count for rewriting `olds` into ~`targetBytes` files.
+    * Clamped: ceil(bytes/target) can exceed Int for tiny targets over huge
+    * dirs — coalesce only ever reduces, so the clamp is harmless. */
+  private def taskCount(olds: Seq[LiveFile], targetBytes: Long): Int =
+    math.min(Int.MaxValue.toLong, math.max(1L,
+      (olds.map(_.status.getLen).sum + targetBytes - 1) / targetBytes)).toInt
 
   /** A maintenance op can lose its race at TWO points: at commit-time
     * validation (the clean [[ArrowOcc.CommitConflictException]]), or
@@ -373,12 +361,6 @@ object ArrowMaintenance {
       .flatMap(_.cols.collect { case (c, s) if s.bloom.isDefined => c })
       .toSet.intersect(schemaFields.toSet) -- exclude
 
-  /** Live data files with sizes, as (relative path, length) — delegates
-    * to the one shared nested walk. */
-  private def walkFiles(fs: FileSystem, dirPath: Path): Seq[(String, Long)] =
-    ArrowSnapshots.listDataFileStatuses(fs, dirPath)
-      .map { case (rel, st) => (rel, st.getLen) }
-
   /** Hive-layout compaction: the per-value-directory small-files answer
     * for the streaming-ingest shape (each epoch lands one file per active
     * value directory — a day of micro-batches is thousands of tiny files
@@ -397,31 +379,26 @@ object ArrowMaintenance {
     * commit message reaches the intent, so a retried task can never
     * collide with (or leak into) the committed state. */
   private def compactHive(spark: SparkSession, dirPath: Path, fs: FileSystem,
-      hiveKeys: Seq[String], targetBytes: Long,
+      view: ArrowLiveView, hiveKeys: Seq[String], targetBytes: Long,
       codec: Option[String]): Option[CompactionResult] = {
-    val replaceable = replaceableFilter(fs, dirPath)
     // partition evolution: flat-generation files at the ROOT of an
     // evolved table are another generation's — compaction stays
     // per-generation (migrating them into value dirs is a rewrite
     // decision, CALL cluster's job), so only nested files participate
-    val all = walkFiles(fs, dirPath)
-      .filter(o => o._1.contains('/') &&
-        replaceable(new Path(o._1).getName))
+    val all = view.files.filter(_.fields.nonEmpty)
     // INCREMENTAL by construction: files never combine ACROSS value
     // directories, so only directories holding ≥ 2 files have any work —
     // every other directory's files are left completely untouched (not
     // rewritten, not trashed, no snapshot entry). At 100 TB this is the
     // difference between "cost ∝ small-file debt" and "cost ∝ table".
-    val dirOf = (rel: String) => new Path(rel).getParent.toString
-    val affectedDirs = all.groupBy(o => dirOf(o._1))
-      .filter(_._2.size > 1).keySet
+    val dirOf = (f: LiveFile) => new Path(f.rel).getParent.toString
+    val affectedDirs = all.groupBy(dirOf).filter(_._2.size > 1).keySet
     if (affectedDirs.isEmpty) return None
-    val olds = all.filter(o => affectedDirs(dirOf(o._1)))
+    val olds = all.filter(f => affectedDirs(dirOf(f)))
 
     val id = java.util.UUID.randomUUID.toString.take(8)
     val staging = s".compact-$id"
-    val n = math.min(Int.MaxValue.toLong, math.max(1L,
-      (olds.map(_._2).sum + targetBytes - 1) / targetBytes)).toInt
+    val n = taskCount(olds, targetBytes)
 
     // STAGE: one internal-row job over the hive read (partition columns
     // spliced), restricted to the affected files by the scan's STATIC
@@ -433,15 +410,15 @@ object ArrowMaintenance {
     // makeQualified (not getFileStatus): the scan's `_file` constants are
     // qualified path strings, and qualifying is pure string work — no
     // per-file RPC in the function whose premise is "thousands of files"
-    val affectedPaths = olds.map(o =>
-      fs.makeQualified(new Path(dirPath, o._1)).toString)
+    val affectedPaths = olds.map(f =>
+      fs.makeQualified(new Path(dirPath, f.rel)).toString)
     val df = spark.read.format("arrow-ipc").load(dirPath.toString)
       .filter(org.apache.spark.sql.functions.col(ArrowRowLevel.FileColumn)
         .isin(affectedPaths: _*))
       .drop(ArrowRowLevel.FileColumn)
       .coalesce(n)
     Some(stageHiveAndSwap(spark, fs, dirPath, hiveKeys, df, codec,
-      olds.map(_._1), id, staging))
+      olds.map(_.rel), id, staging))
   }
 
   /** Shared staging + swap tail for whole-or-partial hive rewrites
@@ -538,8 +515,8 @@ object ArrowMaintenance {
     // nothing to rewrite (directory absent, empty, or not yet committed —
     // e.g. a maintenance loop that started before the first ingest batch
     // landed): a no-op, not an error
-    if (!fs.exists(dirPath) ||
-        ArrowSnapshots.listDataFiles(fs, dirPath).isEmpty) return None
+    val view = liveView(spark, dir)
+    if (view.files.isEmpty) return None
 
     val schema = ArrowInterchange.readSchema(spark, dir)
     val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
@@ -553,23 +530,23 @@ object ArrowMaintenance {
     // out-of-scope file keeps its name, bytes and manifest entry. At
     // 100 TB this turns "a global sort is a global decision" into an
     // operation scoped to the partitions that actually need it.
-    val olds = scopedOlds(spark, fs, dirPath, where)
-    if (olds.isEmpty) return None
+    val files = scopedOlds(fs, dirPath, view, where)
+    if (files.isEmpty) return None
     val id = java.util.UUID.randomUUID.toString.take(8)
     val staging = s".compact-$id"
-    val n = math.min(Int.MaxValue.toLong, math.max(1L,
-      (olds.map(_._2).sum + targetBytes - 1) / targetBytes)).toInt
+    val n = taskCount(files, targetBytes)
+    val olds = files.map(_.rel)
     import org.apache.spark.sql.functions.col
     // The staging read is restricted to exactly `olds` by static `_file`
     // pushdown — a file committed by a CONCURRENT writer after the scope
     // listing is neither staged (no duplicate rows) nor replaced, and a
     // scoped run reads only the in-scope files to begin with.
     val oldPaths = olds.map(o =>
-      fs.makeQualified(new Path(dirPath, o._1)).toString)
+      fs.makeQualified(new Path(dirPath, o)).toString)
     // dv capture BEFORE the staging read plans (masked at staging,
     // validated at commit, retired at replay); the hive branch captures
     // inside stageHiveAndSwap, so this serves the flat branch only
-    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds.map(_._1))
+    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds)
     val restricted = spark.read.format("arrow-ipc").load(dir)
       .filter(col(ArrowRowLevel.FileColumn).isin(oldPaths: _*))
       .drop(ArrowRowLevel.FileColumn)
@@ -591,7 +568,7 @@ object ArrowMaintenance {
         .sortWithinPartitions((hiveKeys ++ sortCols).map(col): _*)
         .drop(synthetic: _*)
       Some(stageHiveAndSwap(spark, fs, dirPath, hiveKeys, df, codec,
-        olds.map(_._1), id, staging))
+        olds, id, staging))
     } else {
       // global range clustering: file k covers the k-th sort-key range, so
       // per-file intervals are ~disjoint and stats pruning turns selective
@@ -607,7 +584,7 @@ object ArrowMaintenance {
       val moves = staged.map(s =>
         s -> s.replace(".arrows", s"-compact-$id.arrows")).toMap
       commitSwap(fs, dirPath,
-        Intent(olds.map(_._1).sorted, staging, moves, dvs = dvRels))
+        Intent(olds.sorted, staging, moves, dvs = dvRels))
       Some(CompactionResult(olds.length, staged.length))
     }
     // a WHOLE-TABLE cluster on a mid-evolution table physically unified
@@ -620,28 +597,19 @@ object ArrowMaintenance {
     out
   }
 
-  /** The files a (possibly scoped) rewrite replaces: live, committed,
-    * not in-flight, and — when `where` is given — not provably free of
+  /** The files a (possibly scoped) rewrite replaces: the view's visible
+    * files and — when `where` is given — only those not provably free of
     * matching rows. Classification is the same exact-or-conservative
     * stats test the metadata DELETE uses, with hive partition values
-    * spliced in; "no stats" scopes IN (the file may match). Returns
-    * (relative path, length) pairs. */
-  private def scopedOlds(spark: SparkSession, fs: FileSystem, dirPath: Path,
-      where: Array[org.apache.spark.sql.sources.Filter])
-      : Seq[(String, Long)] = {
-    val replaceable = replaceableFilter(fs, dirPath)
-    val all = ArrowSnapshots.listDataFileStatuses(fs, dirPath)
-      .filter { case (rel, _) => replaceable(new Path(rel).getName) }
-      .map { case (rel, st) => (rel, st.getLen) }
-    if (where.isEmpty) all
+    * spliced in; "no stats" scopes IN (the file may match). */
+  private def scopedOlds(fs: FileSystem, dirPath: Path, view: ArrowLiveView,
+      where: Array[org.apache.spark.sql.sources.Filter]): Seq[LiveFile] =
+    if (where.isEmpty) view.files
     else {
-      val (_, stats) = liveWithStats(spark, dirPath)
-      all.filter { case (rel, _) =>
-        stats.get(new Path(rel).getName)
-          .forall(st => where.forall(ArrowFileStats.canMatch(_, st)))
-      }
+      val stats = view.withPartitionStats(ArrowFileStats.read(fs, dirPath))
+      view.files.filter(f => stats.get(f.name)
+        .forall(st => where.forall(ArrowFileStats.canMatch(_, st))))
     }
-  }
 
   /** Z-ORDERED clustered rewrite: [[cluster]] with a Morton interleave of
     * TWO numeric dimensions instead of a lexicographic sort — each file
@@ -678,9 +646,7 @@ object ArrowMaintenance {
     require(cols.length >= 2, "clusterZOrdered: at least two dimensions")
     // same empty-directory no-op as cluster (the schema read below would
     // otherwise throw before cluster's own emptiness check can)
-    val zfs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!zfs.exists(new Path(dir)) ||
-        ArrowSnapshots.listDataFiles(zfs, new Path(dir)).isEmpty) return None
+    if (liveView(spark, dir).files.isEmpty) return None
     val schema = ArrowInterchange.readSchema(spark, dir)
     // each dimension rides its NUMERIC ORDINAL: numerics as themselves,
     // dates as epoch days, timestamps as epoch µs (NTZ through the
@@ -863,33 +829,13 @@ object ArrowMaintenance {
     val gens0 = ArrowHiveLayout.readGenerations(fs, dirPath)
     if (gens0.size == 1) return None
     val schema = ArrowInterchange.readSchema(spark, dir)
-    def resolve(keys: Seq[String]): Seq[org.apache.spark.sql.types.StructField] = keys.map { k =>
-      schema.fields.find(_.name == k).getOrElse(
-        throw new IllegalStateException(
-          s"arrow-ipc unify: ${ArrowHiveLayout.FileName} of $dir names " +
-            s"partition key '$k' which is not in the dataset schema"))
-    }
     val current = gens0.last
-    val currentFields = resolve(current)
     val oldGens = gens0.init.distinct.filterNot(_ == current)
-    val oldFields = oldGens.map(g => g -> resolve(g)).toMap
-    def parses(fields: Seq[org.apache.spark.sql.types.StructField], rel: String): Boolean =
-      scala.util.Try(ArrowHiveLayout.parseRelPath(fields, rel)).isSuccess
-    // reader-exact attribution: current first, then old generations in
-    // history order; a nested file matching nothing is corruption
-    def genOf(rel: String): Seq[String] =
-      if (!rel.contains('/')) Nil
-      else if (current.nonEmpty && parses(currentFields, rel)) current
-      else oldGens.find(g => g.nonEmpty && parses(oldFields(g), rel))
-        .getOrElse(throw new IllegalStateException(
-          s"arrow-ipc unify: file '$rel' of $dir matches no declared " +
-            "partition generation"))
-    val replaceable = replaceableFilter(fs, dirPath)
-    val listed = ArrowSnapshots.listDataFileStatuses(fs, dirPath)
-    val byGen = listed
-      .filter { case (rel, _) => replaceable(new Path(rel).getName) }
-      .map { case (rel, st) => (genOf(rel), rel, st.getLen) }
-      .groupBy(_._1)
+    // reader-exact attribution: the live view discovers each generation
+    // by its own directory levels, so a file's generation is the key list
+    // it was discovered under (Nil = flat)
+    def genOf(f: LiveFile): Seq[String] = f.fields.map(_.name)
+    val byGen = ArrowLiveView.load(spark, dir, schema).files.groupBy(genOf)
     // GENERATION-TARGETED COLLAPSE FENCE (round 16, replacing round 15's
     // one-instant global fence and its liveness caveat): a write that
     // STARTED under an old layout can still be in flight — a batch
@@ -938,8 +884,8 @@ object ArrowMaintenance {
         return false
       val targets = ArrowOcc.livePendingTargets(fs, dirPath)
       if (targets.exists(t => t.isEmpty || t.contains(gen))) return false
-      !ArrowSnapshots.listDataFileStatuses(fs, dirPath)
-        .exists { case (rel, _) => genOf(rel) == gen }
+      val view = ArrowLiveView.load(spark, dir, schema)
+      !(view.files ++ view.invisible).exists(genOf(_) == gen)
     }
     // declared-but-empty old generations (never written, or drained by a
     // call that crashed before its history collapse): metadata-only
@@ -953,7 +899,7 @@ object ArrowMaintenance {
         ArrowHiveLayout.readGenerations(fs, dirPath).size))
       case Some(g) => g
     }
-    val oldsAll = byGen(target).map(x => (x._2, x._3)).sortBy(_._1)
+    val oldsAll = byGen(target).sortBy(_.rel)
     // byte-bounded slice: take name-ordered files up to maxBytes (always
     // at least one — progress), leave the rest for the next call
     val sliced = maxBytes match {
@@ -961,7 +907,7 @@ object ArrowMaintenance {
       case Some(mb) =>
         require(mb >= 1, "unify_generation: max_bytes must be >= 1")
         var acc = 0L
-        val prefix = oldsAll.takeWhile { f => acc += f._2; acc <= mb }
+        val prefix = oldsAll.takeWhile { f => acc += f.status.getLen; acc <= mb }
         if (prefix.isEmpty) oldsAll.take(1) else prefix
     }
     // FILE-COUNT cap (round 15 review): the staging read restricts by a
@@ -969,18 +915,18 @@ object ArrowMaintenance {
     // plan a million-literal filter (the shared [[MaxIsinPaths]] bound
     // the eq fold's grouping also uses). A capped call is a partial
     // drain; the loop converges like any maxBytes slice.
-    val olds = sliced.take(MaxIsinPaths)
-    val partial = olds.size < oldsAll.size
+    val files = sliced.take(MaxIsinPaths)
+    val partial = files.size < oldsAll.size
     val id = java.util.UUID.randomUUID.toString.take(8)
     val staging = s".compact-$id"
-    val n = math.min(Int.MaxValue.toLong, math.max(1L,
-      (olds.map(_._2).sum + targetBytes - 1) / targetBytes)).toInt
+    val n = taskCount(files, targetBytes)
+    val olds = files.map(_.rel)
     import org.apache.spark.sql.functions.col
     // the staging read is restricted to exactly the drained generation's
     // files by static `_file` pushdown — the other generations are never
     // read, which is the whole point of the incremental path
     val oldPaths = olds.map(o =>
-      fs.makeQualified(new Path(dirPath, o._1)).toString)
+      fs.makeQualified(new Path(dirPath, o)).toString)
     val restricted = spark.read.format("arrow-ipc").load(dir)
       .filter(col(ArrowRowLevel.FileColumn).isin(oldPaths: _*))
       .drop(ArrowRowLevel.FileColumn)
@@ -989,9 +935,9 @@ object ArrowMaintenance {
         val df = restricted.repartitionByRange(n, current.map(col): _*)
           .sortWithinPartitions(current.map(col): _*)
         stageHiveAndSwap(spark, fs, dirPath, current, df, codec,
-          olds.map(_._1), id, staging)
+          olds, id, staging)
       } else {
-        val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds.map(_._1))
+        val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds)
         ArrowInterchange.writeStream(restricted.repartition(n),
           new Path(dirPath, staging).toString, codec = codec,
           bloomCols = standingBlooms(fs, dirPath, schema.fieldNames.toSeq, Nil))
@@ -1001,7 +947,7 @@ object ArrowMaintenance {
         val moves = staged.map(s =>
           s -> s.replace(".arrows", s"-compact-$id.arrows")).toMap
         commitSwap(fs, dirPath,
-          Intent(olds.map(_._1).sorted, staging, moves, dvs = dvRels))
+          Intent(olds.sorted, staging, moves, dvs = dvRels))
         CompactionResult(olds.length, staged.length)
       }
     // a PARTIAL (byte-bounded or count-capped) drain leaves the
@@ -1234,15 +1180,12 @@ object ArrowMaintenance {
     val compacted =
       if (compactMin <= 0 || ArrowEqualityDeletes.any(fs, dirPath)) None
       else {
-        // count only COMMITTED files (round 15): an in-flight stream
-        // epoch's uncommitted files are invisible to readers and to
-        // compaction's replaceable set, so letting them trip the trigger
-        // would launch a compaction pass that finds nothing to merge —
-        // the same visibility rule list_files applies to its listing
-        val visible = ArrowStreamCommits.visibleFilter(fs, dirPath)
-        val small = ArrowSnapshots.listDataFileStatuses(fs, dirPath)
-          .count { case (rel, st) =>
-            visible(new Path(rel).getName) && st.getLen < compactTarget / 2 }
+        // count only the live view's files (round 15): an in-flight
+        // write's files are invisible to readers and to compaction, so
+        // letting them trip the trigger would launch a compaction pass
+        // that finds nothing to merge
+        val small = liveView(spark, dir).files
+          .count(_.status.getLen < compactTarget / 2)
         if (small < compactMin) None
         else
           try compact(spark, dir, targetBytes = compactTarget)
@@ -1460,62 +1403,37 @@ object ArrowMaintenance {
     }
   }
 
-  /** All live data files (flat or hive layout) with the stats VIEW the
-    * classifier needs, keyed by file NAME (the manifest's own key —
-    * unique across value directories because every name embeds partition
-    * id, roll sequence and commit queryId). Hive layouts splice the
-    * directory-derived partition values in as exact single-value columns,
-    * exactly like the scan does; a hive file missing from the manifest
-    * still classifies on its PARTITION columns alone. */
-  private def liveWithStats(spark: SparkSession, dirPath: Path)
-      : (Array[Path], Map[String, FileStats]) = {
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // committed files only: uncommitted stream epochs AND in-flight batch
-    // appends are invisible to maintenance decisions — they serialize
-    // AFTER whatever this classification commits
-    val visible = replaceableFilter(fs, dirPath)
-    val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
-    val stats = ArrowFileStats.read(fs, dirPath)
-    if (hiveKeys.isEmpty) {
-      val files = Option(fs.globStatus(new Path(dirPath, "part-*.arrows")))
-        .getOrElse(Array.empty).map(_.getPath)
-        .filter(p => visible(p.getName))
-      (files, stats)
-    } else {
-      val schema = ArrowInterchange.readSchema(spark, dirPath.toString)
-      val fields = hiveKeys.map(k => schema.fields.find(_.name == k).getOrElse(
-        throw new IllegalStateException(
-          s"arrow-ipc: hive key '$k' missing from schema of $dirPath")))
-      val (sts, valsByName, _) =
-        ArrowHiveLayout.discover(fs, dirPath, fields, Array.empty, visible)
-      // manifest-less hive files get a partition-column-only stats view
-      // (rows=1: enough for the nulls==0 / all-null branches, claims no
-      // data-column knowledge — any data-column predicate then refuses)
-      val base = valsByName.keys.map(n =>
-        n -> stats.getOrElse(n, FileStats(1L, Map.empty))).toMap
-      (sts.map(_.getPath), ArrowHiveLayout.mergeStats(base, fields, valsByName))
-    }
-  }
-
-  /** Some((doomed paths, live total)) when EVERY live file classifies
-    * cleanly; None = at least one file straddles or is unprovable. */
+  /** Some((doomed paths, live total)) when EVERY file of the live view
+    * (every generation of an evolving table) classifies cleanly; None =
+    * at least one file straddles or is unprovable. Stats are keyed by
+    * file NAME (the manifest's own key — unique across value directories
+    * because every name embeds partition id, roll sequence and commit
+    * queryId), hive files with their directory values spliced in; a hive
+    * file missing from the manifest still classifies on its PARTITION
+    * columns alone (rows=1: enough for the nulls==0 / all-null branches,
+    * claims no data-column knowledge — a data-column predicate refuses). */
   private def classify(spark: SparkSession, dir: String,
       filters: Array[org.apache.spark.sql.sources.Filter])
-      : Option[(Array[Path], Int)] = {
+      : Option[(Seq[Path], Int)] = {
     val dirPath = new Path(dir)
-    val (files, stats) = liveWithStats(spark, dirPath)
-    val doomed = scala.collection.mutable.ArrayBuffer.empty[Path]
-    files.foreach { p =>
-      stats.get(p.getName) match {
+    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val view = liveView(spark, dir)
+    val manifest = ArrowFileStats.read(fs, dirPath)
+    val stats = view.withPartitionStats(manifest ++ view.files.collect {
+      case f if f.fields.nonEmpty && !manifest.contains(f.name) =>
+        f.name -> FileStats(1L, Map.empty)
+    })
+    val doomed = view.files.map { f =>
+      stats.get(f.name) match {
         case Some(st) if filters.forall(ArrowFileStats.mustMatchAll(_, st)) =>
-          doomed += p
+          Some(f.status.getPath)
         case Some(st) if !filters.forall(ArrowFileStats.canMatch(_, st)) =>
-          () // provably untouched
-        case None if filters.isEmpty => doomed += p // unconditional
+          None // provably untouched
+        case None if filters.isEmpty => Some(f.status.getPath) // unconditional
         case _ => return None // straddles, or no stats: refuse
       }
     }
-    Some((doomed.toArray, files.length))
+    Some((doomed.flatten, view.files.length))
   }
 
   /** The idempotent tail of a delete: drop files, then rebuild every

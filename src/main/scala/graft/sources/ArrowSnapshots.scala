@@ -304,16 +304,17 @@ private[graft] object ArrowSnapshots {
   def resolveAt(snaps: Seq[Snapshot], tsMillis: Long): Option[Long] =
     snaps.filter(_.tsMillis <= tsMillis).map(_.id).maxOption
 
-  /** All data files under `root` as RELATIVE paths (bare names at the
-    * top level, `key=value/...` under hive layouts) — skips metadata
-    * (`_*`) and hidden (`.*`) entries at every level. Shared by the COW
-    * staging lister, the streaming sink's nested orphan sweep, and the
-    * snapshot-log heal. */
+  /** Every data file physically under `root` as RELATIVE paths (bare
+    * names at the top level, `key=value/...` under hive layouts) — skips
+    * metadata (`_*`) and hidden (`.*`) entries at every level. A RAW
+    * walk: no completeness gate, no visibility rule, no generation
+    * attribution. It serves staging directories (COW, merge-on-read, WAP
+    * branches), the streaming ledger's prune, and tests that compare
+    * against the disk; a table's LIVE file set is [[ArrowLiveView]]'s. */
   def listDataFiles(fs: FileSystem, root: Path): Seq[String] =
     listDataFileStatuses(fs, root).map(_._1)
 
-  /** As [[listDataFiles]] but carrying each file's FileStatus — the ONE
-    * nested walk, so listing semantics cannot diverge between callers. */
+  /** As [[listDataFiles]] but carrying each file's FileStatus. */
   def listDataFileStatuses(fs: FileSystem, root: Path)
       : Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
     def walk(at: Path, prefix: String)
@@ -352,10 +353,11 @@ private[graft] object ArrowSnapshots {
 
   /** Resolve a snapshot-relative path the way every historical reader
     * must: live set first, trash second, loud refusal when expired.
-    * Returns the QUALIFIED path string (what the scan's `_file` constants
-    * carry). `what` names the caller's window for the error message. */
+    * Returns the resolved file's status (its path is the QUALIFIED string
+    * the scan's `_file` constants carry). `what` names the caller's
+    * window for the error message. */
   def resolveLiveOrTrash(fs: FileSystem, dirPath: Path, rel: String,
-      what: String): String = {
+      what: String): org.apache.hadoop.fs.FileStatus = {
     val live = new Path(dirPath, rel)
     val p =
       if (fs.exists(live)) live
@@ -366,7 +368,7 @@ private[graft] object ArrowSnapshots {
             "live set and the trash")
         t
       }
-    fs.getFileStatus(p).getPath.toString
+    fs.getFileStatus(p)
   }
 
   /** Path of `p` relative to the dataset root (bare name for flat

@@ -220,6 +220,44 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("_SUCCESS"))
   }
 
+  /** readStream's refusal: an IllegalArgumentException naming `cause`
+    * and pointing at the DSv2 read, which serves the table exactly. */
+  private def assertReadStreamRefuses(dir: String, cause: String,
+      scanRows: Long): Unit = {
+    val e = intercept[IllegalArgumentException] {
+      ArrowInterchange.readStream(spark, dir).count()
+    }
+    assert(e.getMessage.contains(cause), e.getMessage)
+    assert(e.getMessage.contains("spark.read.format(\"arrow-ipc\")"), e.getMessage)
+    assert(spark.read.format("arrow-ipc").load(dir).count() === scanRows)
+  }
+
+  test("readStream refuses a hive-partitioned table instead of returning no rows") {
+    val dir = tmp("graft_arrow_rs_hive")
+    spark.range(400).select(col("id"), (col("id") % 4).as("p"))
+      .write.format("arrow-ipc").option("hivePartitionKeys", "p")
+      .mode("overwrite").save(dir)
+    assertReadStreamRefuses(dir, "hive-partitioned", 400L)
+  }
+
+  test("readStream refuses live deletion vectors instead of serving deleted rows") {
+    val dir = tmp("graft_arrow_rs_dv")
+    spark.range(400).toDF("id").coalesce(2)
+      .write.format("arrow-ipc").mode("overwrite").save(dir)
+    graft.sources.ArrowDeleteVectors.deleteMor(spark, dir, "id < 10")
+    assertReadStreamRefuses(dir, "deletion vectors", 390L)
+  }
+
+  test("readStream refuses live equality tombstones instead of serving masked rows") {
+    val dir = tmp("graft_arrow_rs_eq")
+    spark.range(400).select(col("id"), lit("a").as("v")).coalesce(2)
+      .write.format("arrow-ipc").mode("overwrite").save(dir)
+    // replaces ids 0..9 in place: 400 live rows, 10 of them masked copies
+    graft.sources.ArrowEqualityDeletes.upsertBatch(spark, dir, "id",
+      spark.range(10).select(col("id"), lit("b").as("v")))
+    assertReadStreamRefuses(dir, "equality-delete tombstones", 400L)
+  }
+
   test("unsupported column type fails loudly at write time") {
     // maps became supported in round 9 — CalendarInterval remains outside
     // the surface (no Arrow µs-exact analog for its month component)

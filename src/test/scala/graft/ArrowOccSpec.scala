@@ -189,6 +189,49 @@ class ArrowOccSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.arrow.pendingStaleMs")
   }
 
+  test("CALL detail / list_files report the files a scan serves while an append is in flight") {
+    val dir = tmp("graft_occ_inflight_detail")
+    spark.range(0, 100).toDF("id").coalesce(2)
+      .write.format("arrow-ipc").mode("append").save(dir)
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.ArrowCatalog")
+    spark.conf.set("spark.graft.arrow.pendingStaleMs", "600000")
+    try {
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      // partition 0 task-commits its file after ~1 s; partition 1 keeps
+      // the append in flight for ~9 s
+      val appender = new Thread(() => try {
+        spark.range(1000, 1100).as[Long].repartition(2)
+          .mapPartitions { it =>
+            Thread.sleep(
+              if (org.apache.spark.TaskContext.getPartitionId() == 0) 1000
+              else 9000)
+            it
+          }
+          .toDF("id")
+          .write.format("arrow-ipc").mode("append").save(dir)
+      } catch { case e: Throwable => errs.add(e) })
+      appender.start()
+      val fs = fsOf(dir)
+      val dirPath = new Path(dir)
+      def onDisk = graft.sources.ArrowSnapshots.listDataFiles(fs, dirPath).size
+      val deadline = System.currentTimeMillis() + 30000
+      while (onDisk < 3 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(onDisk === 3, "the fast partition's file never landed")
+      assert(ArrowOcc.appendsPending(fs, dirPath), "append no longer in flight")
+      val d = spark.sql(s"CALL graft.system.detail('$dir')").head()
+      assert(d.getAs[Int]("files") === 2)
+      assert(d.getAs[Long]("rows") === 100L)
+      assert(spark.sql(s"CALL graft.system.list_files('$dir')").count() === 2L)
+      assert(spark.read.format("arrow-ipc").load(dir).count() === 100L)
+      assert(ArrowOcc.appendsPending(fs, dirPath),
+        "the append finished before the in-flight checks ran")
+      appender.join(120000)
+      assert(errs.isEmpty, s"slow append failed: ${errs.peek()}")
+      assert(spark.read.format("arrow-ipc").load(dir).count() === 200L)
+      assert(spark.sql(s"CALL graft.system.list_files('$dir')").count() === 4L)
+    } finally spark.conf.unset("spark.graft.arrow.pendingStaleMs")
+  }
+
   // ── maintenance racing maintenance / appends ────────────────────────
 
   test("concurrent appends and compactions on one directory: zero lost, zero duplicated rows") {

@@ -77,6 +77,26 @@ class ArrowPartitionEvolutionSpec extends AnyFunSuite {
       === (0L until 1200L).sum)
   }
 
+  test("metadata DELETE mid-evolution (flat -> hive) drops the matching files of BOTH generations") {
+    val dir = tmp("graft_pevo_fh_delete")
+    // the flat -> hive table above: 1000 flat rows clustered on p (each
+    // flat file single-valued on p), then 200 nested rows
+    rows(0, 1000).repartitionByRange(4, col("p"))
+      .write.format("arrow-ipc").mode("overwrite").save(dir)
+    ArrowMaintenance.evolvePartitioning(spark, dir, Seq("p"))
+    rows(1000, 1200).write.format("arrow-ipc").mode("append").save(dir)
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.ArrowCatalog")
+    val t = spark.read.format("arrow-ipc").load(dir)
+    assert(t.filter(col("p") === 2).count() === 300L)
+
+    spark.sql(s"DELETE FROM graft.`$dir` WHERE p = 2")
+    assert(t.filter(col("p") === 2).count() === 0L,
+      "the flat generation's p = 2 rows survived the delete")
+    assert(t.count() === 900L)
+    assert(t.select(sum(col("id"))).head().getLong(0) ===
+      (0L until 1200L).filter(_ % 4 != 2).sum)
+  }
+
   test("hive -> flat: new appends land at the root; mixed read exact") {
     val dir = tmp("graft_pevo_hf")
     rows(0, 800).write.format("arrow-ipc")
