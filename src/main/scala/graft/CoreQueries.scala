@@ -649,7 +649,7 @@ object CoreQueries {
       // Scratch contract: see json_roundtrip.
       val path = graft.sources.Scratch.dir(s, "graft_rt_arrow")
       graft.sources.ArrowInterchange.writeStream(ev, path)
-      graft.sources.ArrowInterchange.readStream(s, path)
+      s.read.format("arrow-ipc").load(path)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
           col("event_type"), col("value"), col("props"))
         .orderBy("event_id")
@@ -668,7 +668,7 @@ object CoreQueries {
       // Scratch contract: see json_roundtrip.
       val path = graft.sources.Scratch.dir(s, "graft_rt_arrowemb")
       graft.sources.ArrowInterchange.writeStream(em, path, codec = Some("lz4"))
-      graft.sources.ArrowInterchange.readStream(s, path)
+      s.read.format("arrow-ipc").load(path)
         .select(col("vec_id"), col("label"),
           size(col("embedding")).as("dim"),
           expr("aggregate(transform(embedding, " +

@@ -350,7 +350,7 @@ object ArrowEqualityDeletes {
     val slots: Array[Int] = part.keySchema match {
       case Some(ks) =>
         scala.util.Try(ArrowInterchange.resolveColumns(
-          root.getSchema, ks, "<eq-key>", exact = false).toArray)
+          root.getSchema, ks, "<eq-key>").toArray)
           .getOrElse(Array.fill(part.keyCols.size)(-1))
       case None =>
         val idx = root.getSchema.getFields
@@ -509,7 +509,8 @@ object ArrowEqualityDeletes {
     // exactly for every supported key type); delete-only stages nothing,
     // so it reads the batch itself — two passes, same as before
     def keySrc = if (deleteOnly) batch.select(keyCols.map(col): _*)
-      else ArrowInterchange.readStream(spark, stagingPath.toString, keyCols)
+      else spark.read.format("arrow-ipc").load(stagingPath.toString)
+        .select(keyCols.map(col): _*)
 
     // one small aggregate validates the batch contract (empty / null
     // keys / duplicate keys) before anything is committed

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{InputStream, ObjectInputStream, ObjectOutputStream}
+import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.nio.channels.Channels
 
 import scala.jdk.CollectionConverters._
@@ -18,9 +18,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.Text
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
 
@@ -40,18 +39,21 @@ import org.apache.spark.sql.types._
   *
   * One value form: the Catalyst internal row is the only form this layer
   * encodes or decodes. [[setInternalValue]] writes a value into its
-  * vector and [[getInternalValue]] reads it back, for [[writeStream]] /
-  * [[readStream]] and the DSv2 writers and scan alike, so a value written
-  * by one path reads back identically through the other whatever the
+  * vector for [[writeStream]] and the DSv2 writers alike, and
+  * [[getInternalValue]] reads it back for the DSv2 scan's row reader, so
+  * a value written by either path reads back identically whatever the
   * session's external-type settings (`spark.sql.datetime.java8API.enabled`
   * included).
+  *
+  * One decoder: the DSv2 scan (`spark.read.format("arrow-ipc")`,
+  * [[ArrowIpcSource]]) is the only reader of data files. [[readStream]]
+  * is a column-pruned entry onto that scan.
   *
   * Scale shape: the writer runs the per-file [[ArrowFileWriter]] over the
   * plan's internal rows (`queryExecution.toRdd`, no driver collect)
   * through the Hadoop FileSystem API, so the same code targets `file:`,
   * `hdfs:` or `s3a:`; memory per task is bounded by one 4096-row record
-  * batch. The reader parallelizes per file via `binaryFiles` and streams
-  * batch-by-batch — a file is never loaded whole.
+  * batch.
   *
   * Type surface (both directions): boolean, int, bigint, float, double,
   * string, binary, timestamp (µs — Spark's native precision, written with
@@ -62,17 +64,6 @@ import org.apache.spark.sql.types._
   * metadata, round-trip stable), and arrays of those scalars (the
   * embeddings shape — Arrow List vectors). An unsupported column type
   * fails loudly at write/read time, never silently.
-  *
-  * Column pruning: `readStream(spark, dir, columns)` decodes ONLY the
-  * requested vectors — the analog of the reference's `column_indices`
-  * pushdown (DataStreams/ParquetBlockInputStream.cpp:33-38) — so a
-  * 3-column projection over a wide embedding table never boxes the other
-  * columns' values, and files may even carry unsupported-typed columns as
-  * long as the projection avoids them. Columns resolve by NAME against
-  * each file's own header (never by position), and every file's schema is
-  * validated against the expected one with the offending path in the
-  * error — a foreign directory of heterogeneous files can not silently
-  * read wrong columns under wrong names.
   */
 object ArrowInterchange {
 
@@ -509,70 +500,28 @@ object ArrowInterchange {
 
   // ── read ───────────────────────────────────────────────────────────────
 
-  /** Read a directory of Arrow IPC stream files written by [[writeStream]]
-    * (or any Arrow writer using the supported type surface). Schema comes
-    * from the `_schema.arrows` sentinel when present, else the first data
-    * file; every data file's header is validated against it (name + type,
-    * resolved by NAME, with the offending file path in the error). */
-  def readStream(spark: SparkSession, dir: String): DataFrame =
-    readStream(spark, dir, None)
-
-  /** Column-pruned read — the `column_indices` pushdown of the reference's
-    * scan (DataStreams/ParquetBlockInputStream.cpp:33-38): only the
-    * requested columns are decoded into rows; unselected vectors (however
-    * wide — embedding lists, media payloads) are never boxed, and columns
-    * OUTSIDE the projection may even carry Arrow types this interchange
-    * doesn't support. Output columns follow the requested order. */
-  def readStream(spark: SparkSession, dir: String, columns: Seq[String]): DataFrame =
-    readStream(spark, dir, Some(columns))
-
-  private def readStream(spark: SparkSession, dir: String,
-      columns: Option[Seq[String]]): DataFrame = {
-    val fileSchema = readArrowSchema(spark, dir)
-    val schema = columns match {
-      case None => fromArrowSchema(fileSchema)
-      case Some(names) =>
-        val byName = fileSchema.getFields.asScala.map(f => f.getName -> f).toMap
-        StructType(names.map { n =>
-          fromArrowField(byName.getOrElse(n, throw new IllegalArgumentException(
-            s"Arrow interchange: requested column '$n' not in $dir schema " +
-              s"(${fileSchema.getFields.asScala.map(_.getName).mkString(", ")})")))
-        })
-    }
-    // The live view's gate, waited out then refused like a batch scan: a
-    // directory carrying OUR schema sentinel without its completeness
-    // marker is read only while appends are in flight (their files
-    // hidden) — reading a partially-written directory as if it were the
-    // full dataset is the silent failure mode. Foreign-written
-    // directories (no sentinel) are read as-is.
-    val view = ArrowLiveView.forRead(spark, dir, fromArrowSchema(fileSchema))
-    // this reader decodes whole flat files and nothing else: a hive
-    // layout (values on the path), deletion vectors or equality
-    // tombstones would silently yield wrong rows — refuse them instead
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def refuse(cause: String): Nothing = throw new IllegalArgumentException(
-      s"Arrow interchange: $dir $cause, which readStream does not apply — " +
-        "read it with spark.read.format(\"arrow-ipc\") instead")
-    if (view.hiveFields.nonEmpty)
-      refuse("is hive-partitioned (partition values live on the path)")
-    if (ArrowDeleteVectors.any(fs, dirPath))
-      refuse("carries live merge-on-read deletion vectors")
-    if (ArrowEqualityDeletes.any(fs, dirPath))
-      refuse("carries live equality-delete tombstones")
-    val dataPaths = view.files.map(_.path)
-    // Pruned reads tolerate extra (even unsupported-typed) columns in the
-    // file; full reads require the exact schema — a stray column would
-    // otherwise be silently dropped.
-    val exact = columns.isEmpty
-    val rdd =
-      if (dataPaths.isEmpty) // all partitions were empty — sentinel carries the schema
-        spark.sparkContext.emptyRDD[InternalRow]
-      else spark.sparkContext.binaryFiles(dataPaths.mkString(","))
-        .flatMap { case (path, pds) => rowsFromStream(pds.open(), path, schema, exact) }
-    // the DataFrame surfaces the STRIPPED schema; the enriched one (field
-    // ids, rename history) rides only into the per-file resolution
-    GraftSqlShim.internalCreateDataFrame(spark, rdd, stripEvolution(schema))
+  /** Column-pruned read through the DSv2 scan, in the requested column
+    * order — the `column_indices` pushdown of the reference's scan
+    * (DataStreams/ParquetBlockInputStream.cpp:33-38). Its one job beyond
+    * `spark.read.format("arrow-ipc").load(dir)`: the scan's schema is
+    * built from the header by NAME and handed over as a user schema, so
+    * columns OUTSIDE the projection may carry Arrow types this interchange
+    * doesn't support (schema inference refuses them). Every supported
+    * column stays in that schema, because hive and equality keys resolve
+    * against it even when the projection leaves them out. */
+  def readStream(spark: SparkSession, dir: String, columns: Seq[String]): DataFrame = {
+    val fields = readArrowSchema(spark, dir).getFields.asScala.toSeq
+    val byName = fields.map(f => f.getName -> f).toMap
+    // a requested column must exist and carry a supported type
+    columns.foreach(n => fromArrowField(byName.getOrElse(n,
+      throw new IllegalArgumentException(
+        s"Arrow interchange: requested column '$n' not in $dir schema " +
+          s"(${fields.map(_.getName).mkString(", ")})"))))
+    val readable = StructType(fields.flatMap(f =>
+      scala.util.Try(fromArrowField(f)).toOption))
+    val df = spark.read.format("arrow-ipc").schema(stripEvolution(readable))
+      .load(dir)
+    df.select(columns.map(n => df.col(s"`${n.replace("`", "``")}`")): _*)
   }
 
   /** Driver-side schema derivation from the sentinel or first data file —
@@ -611,63 +560,6 @@ object ArrowInterchange {
     finally { reader.close(); alloc.close() }
   }
 
-  /** Lazy batch-at-a-time row iterator over one IPC stream; closes its
-    * allocator at exhaustion AND at task completion (early-terminating
-    * consumers like `limit` never exhaust the iterator). The file's header
-    * is validated against `expected` before any row is produced — columns
-    * resolve by NAME (a reordered file reads correctly; a same-typed
-    * different-named file fails with this file's path, never silently
-    * mislabels values), and `exact` additionally rejects extra columns. */
-  private def rowsFromStream(in: InputStream, path: String,
-      expected: StructType, exact: Boolean): Iterator[InternalRow] = {
-    val alloc = new RootAllocator()
-    // the compression factory also handles uncompressed streams, so every
-    // read path accepts plain, lz4 and zstd files alike
-    val reader = new ArrowStreamReader(in, alloc, CommonsCompressionFactory.INSTANCE)
-    val root = reader.getVectorSchemaRoot
-    var closed = false
-    def closeAll(): Unit = if (!closed) {
-      closed = true
-      try { reader.close(); alloc.close() } catch { case _: Throwable => () }
-    }
-    Option(TaskContext.get()).foreach(
-      _.addTaskCompletionListener[Unit](_ => closeAll()))
-    val cols: Array[Int] =
-      try resolveColumns(root.getSchema, expected, path, exact)
-      catch { case e: Throwable => closeAll(); throw e }
-    val types = expected.fields.map(_.dataType)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var n = 0
-      private var done = false
-      private def advance(): Unit =
-        while (!done && i >= n) {
-          if (reader.loadNextBatch()) { n = root.getRowCount; i = 0 }
-          else { done = true; closeAll() }
-        }
-      override def hasNext: Boolean = { advance(); !done }
-      override def next(): InternalRow = {
-        advance()
-        if (done) throw new NoSuchElementException("exhausted Arrow stream")
-        val vals = new Array[Any](types.length)
-        var c = 0
-        while (c < types.length) {
-          vals(c) =
-            if (cols(c) < 0) null // evolved column absent from this file
-            else getInternalValue(root.getVector(cols(c)), types(c), i)
-          c += 1
-        }
-        i += 1
-        new GenericInternalRow(vals)
-      }
-    }
-  }
-
-  /** Validate one file's header against the expected schema and return,
-    * for each expected column, its vector index in THIS file — by NAME
-    * (a reordered file resolves correctly; a missing/mistyped column
-    * fails with the file's path), `exact` additionally rejecting extra
-    * columns. Shared by the function-style reader and the DSv2 scan. */
   /** TYPE-WIDENING evolution (file type → table type) this source reads
     * through without rewriting data: int32→int64, float→double, and
     * decimal(p,s)→decimal(p+k,s). Exactly the pairs whose STATS
@@ -686,8 +578,14 @@ object ArrowInterchange {
       case _ => false
     }
 
+  /** Validate one file's header against the expected schema and return,
+    * for each expected column, its vector index in THIS file — by field
+    * id, then NAME, then rename history (a reordered file resolves
+    * correctly; a missing non-nullable or mistyped column fails with the
+    * file's path). File columns outside the expected schema are ignored
+    * by name, as after a DROP COLUMN. Used by both DSv2 readers. */
   private[graft] def resolveColumns(fileSchema: ArrowSchema,
-      expected: StructType, path: String, exact: Boolean): Array[Int] = {
+      expected: StructType, path: String): Array[Int] = {
     val fileFields = fileSchema.getFields.asScala
     val fileIds: IndexedSeq[Option[Long]] =
       fileFields.map(f => evolutionMeta(f)._1).toIndexedSeq
@@ -695,8 +593,7 @@ object ArrowInterchange {
       fileFields.zipWithIndex.map { case (f, i) => f.getName -> i }.toMap
     val indexById =
       fileIds.zipWithIndex.collect { case (Some(id), i) => id -> i }.toMap
-    val claimed = new Array[Boolean](fileFields.size)
-    val out = expected.fields.map { ef =>
+    expected.fields.map { ef =>
       val efId = fieldId(ef)
       // FIELD-ID INDIRECTION: the id is the identity, names are labels —
       // id match first, then the current name, then any PRIOR name from
@@ -713,7 +610,6 @@ object ArrowInterchange {
           scala.Function.unlift(p => indexByName.get(p).filter(idOk))))
       hit match {
         case Some(i) =>
-          claimed(i) = true
           val actual = fromArrowField(fileFields(i))
           if (actual.dataType != ef.dataType &&
               !isWidening(actual.dataType, ef.dataType))
@@ -733,22 +629,12 @@ object ArrowInterchange {
               s"(found: ${fileFields.map(_.getName).mkString(", ")})")
       }
     }
-    // exact mode (function-style FULL reads): every file column must have
-    // been claimed by some expected field — by id, name, or rename
-    // history — else the file carries columns outside the dataset schema
-    if (exact && !claimed.forall(identity))
-      throw new IllegalArgumentException(
-        s"Arrow interchange: $path has columns " +
-          s"(${fileFields.zipWithIndex.collect {
-            case (f, i) if !claimed(i) => f.getName }.mkString(", ")}) " +
-          s"outside the dataset schema (${expected.fieldNames.mkString(", ")}) " +
-          "— 'data files must share it'")
-    out
   }
 
   /** One value in Catalyst INTERNAL form (UTF8String, micros long, days
     * int, Decimal, GenericArrayData) — the decode half of the interchange's
-    * one value form, shared by the DSv2 scan and [[readStream]]. */
+    * one value form, read by the DSv2 scan's row reader
+    * ([[ArrowIpcPartitionReader]]). */
   private[sources] def getInternalValue(v: FieldVector, dt: DataType, idx: Int): Any =
     if (v.isNull(idx)) null
     else (v, dt) match {

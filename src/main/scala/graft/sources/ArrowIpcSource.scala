@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType,
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 face of [[ArrowInterchange]] — `spark.read
-  * .format("arrow-ipc").load(dir)`. The point over the function-style
-  * reader: column pruning comes FROM THE PLAN. A `select`/projection
+  * .format("arrow-ipc").load(dir)`, the one reader of arrow-ipc data
+  * files. Column pruning comes FROM THE PLAN. A `select`/projection
   * anywhere downstream reaches this scan as `SupportsPushDownRequiredColumns
   * .pruneColumns`, so the reader decodes exactly the projected vectors with
   * no API cooperation from the caller — the DSv2 analog of the reference
@@ -32,8 +32,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * decode straight to Catalyst internal values (no `Row` boxing →
   * `createDataFrame` round-trip). Every file header is validated by NAME
   * against the dataset schema with the offending path in the error; the
-  * `_schema.arrows` sentinel + `_SUCCESS` completeness gate carry over
-  * unchanged from [[ArrowInterchange.readStream]].
+  * `_schema.arrows` sentinel + `_SUCCESS` completeness gate is the
+  * table's live view ([[ArrowLiveView]]).
   */
 class ArrowIpcSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "arrow-ipc"
@@ -1498,7 +1498,7 @@ private[sources] class ArrowIpcColumnarReader(
   }
   private val root = reader.getVectorSchemaRoot
   private val cols: Array[Int] =
-    try ArrowInterchange.resolveColumns(root.getSchema, required, file, exact = false)
+    try ArrowInterchange.resolveColumns(root.getSchema, required, file)
     catch { case e: Throwable => close(); throw e }
 
   private var current: ColumnarBatch = _
@@ -2153,7 +2153,7 @@ private[sources] class ArrowIpcPartitionReader(
   }
   private val root = reader.getVectorSchemaRoot
   private val cols: Array[Int] =
-    try ArrowInterchange.resolveColumns(root.getSchema, required, file, exact = false)
+    try ArrowInterchange.resolveColumns(root.getSchema, required, file)
     catch { case e: Throwable => closeQuietly(); throw e }
   private val types = required.fields.map(_.dataType)
 

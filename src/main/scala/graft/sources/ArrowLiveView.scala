@@ -19,7 +19,7 @@ private[sources] final case class LiveFile(rel: String, status: FileStatus,
 /** The live state of an arrow-ipc directory: which data files the table
   * holds right now. Built by [[ArrowLiveView.load]] and taken by every
   * reader and rewriter — the batch scan, aggregate pushdown, both
-  * streaming sources, `readStream`, compaction, purge, cluster, unify,
+  * streaming sources, compaction, purge, cluster, unify,
   * the metadata DELETE, the CALL procedures and the stream sink's log
   * heal — so the three rules below hold in exactly one place:
   *

@@ -4,11 +4,10 @@ import org.apache.spark.sql.functions._
 
 /** Dev-only probe: quantifies the Arrow read paths on the embeddings
   * shape (wide float lists — the payload DSv2 columnar reads exist for).
-  * Three readers over the same ×16-replicated directory: the function-
-  * style row reader, the DSv2 row path (internal rows, no external
-  * boxing), and the DSv2 columnar path (Arrow vectors wrapped as
-  * ColumnarBatch, zero decode). Also the pruning effect: sum one scalar
-  * out of a wide file. */
+  * The DSv2 columnar path (Arrow vectors wrapped as ColumnarBatch, zero
+  * decode) over a ×16-replicated directory, the pruning effect (sum one
+  * scalar out of a wide file), stats-based file pruning, and the
+  * fixed-size binary columnar path. */
 object ArrowReadProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -36,18 +35,11 @@ object ArrowReadProbe {
     val full = (df: org.apache.spark.sql.DataFrame) =>
       df.select(expr("aggregate(embedding, 0D, (a, x) -> a + x)").as("s"))
         .agg(sum("s")).head
-    time("function-style rows, full width") {
-      full(graft.sources.ArrowInterchange.readStream(spark, dir))
-    }
     time("DSv2 columnar, full width") {
       full(spark.read.format("arrow-ipc").load(dir))
     }
     time("DSv2 columnar, pruned to 1 col") {
       spark.read.format("arrow-ipc").load(dir).agg(sum("vec_id")).head
-    }
-    time("function-style, pruned to 1 col") {
-      graft.sources.ArrowInterchange.readStream(spark, dir, Seq("vec_id"))
-        .agg(sum("vec_id")).head
     }
 
     // stats-based file pruning: the same corpus range-partitioned into 32

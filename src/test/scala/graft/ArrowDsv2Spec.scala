@@ -8,10 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ArrowInterchange
 
-/** DSv2 face of the Arrow interchange: `format("arrow-ipc")` reads the
-  * same directories as the function-style reader, with column pruning
-  * driven by the PLAN (SupportsPushDownRequiredColumns), not by a
-  * cooperative API argument. */
+/** DSv2 face of the Arrow interchange: `format("arrow-ipc")` is the one
+  * reader of arrow-ipc directories, with column pruning driven by the
+  * PLAN (SupportsPushDownRequiredColumns), not by a cooperative API
+  * argument. Its row and columnar readers are cross-checked here. */
 class ArrowDsv2Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -19,7 +19,7 @@ class ArrowDsv2Spec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString + "/out"
 
-  test("full DSv2 read matches the function-style reader across the type surface") {
+  test("full DSv2 read: row reader matches columnar reader across the type surface") {
     val df = spark.range(20).select(col("id"),
       concat(lit("s"), col("id")).as("s"),
       (col("id") % 3 === 0).as("b"),
@@ -27,11 +27,13 @@ class ArrowDsv2Spec extends AnyFunSuite {
       array(col("id").cast("float"), lit(0.5f)).as("vec"))
     val dir = tmp("graft_dsv2_full")
     ArrowInterchange.writeStream(df.repartition(3), dir, codec = Some("zstd"))
-    val viaFn = ArrowInterchange.readStream(spark, dir)
+    val viaRows = ArrowRowPath.read(spark, dir)
     val viaDs = spark.read.format("arrow-ipc").load(dir)
-    assert(viaDs.schema === viaFn.schema)
+    assert(ArrowRowPath.columnar(viaDs), "a plain read must take the columnar reader")
+    assert(!ArrowRowPath.columnar(viaRows), "a `_pos` read must take the row reader")
+    assert(StructType(viaRows.schema.fields.init) === viaDs.schema)
     assert(viaDs.orderBy("id").collect().map(_.toString).toSeq ===
-      viaFn.orderBy("id").collect().map(_.toString).toSeq)
+      ArrowRowPath.rows(viaRows.orderBy("id")).map(_.toString))
   }
 
   test("a downstream select prunes the scan (plan-driven, no API argument)") {
@@ -283,8 +285,8 @@ class ArrowDsv2Spec extends AnyFunSuite {
     val want = df.orderBy("id").collect().map(_.toString).toSeq
     val dir = tmp("graft_dsv2_dur")
     ArrowInterchange.writeStream(df, dir)
-    val viaFn = ArrowInterchange.readStream(spark, dir)
-    assert(viaFn.orderBy("id").collect().map(_.toString).toSeq === want)
+    val viaRows = ArrowRowPath.read(spark, dir).orderBy("id")
+    assert(ArrowRowPath.rows(viaRows).map(_.toString) === want)
     val viaDs = spark.read.format("arrow-ipc").load(dir)
     assert(viaDs.orderBy("id").collect().map(_.toString).toSeq === want)
     // Spark ships a DurationAccessor → the zero-copy columnar path holds
@@ -337,7 +339,7 @@ class ArrowDsv2Spec extends AnyFunSuite {
     val dir = tmp("graft_dsv2_write")
     df.write.format("arrow-ipc").mode("overwrite").save(dir)
     // interop: the function-style reader consumes DSv2-written directories
-    val viaFn = ArrowInterchange.readStream(spark, dir)
+    val viaFn = ArrowInterchange.readStream(spark, dir, schema.fieldNames.toSeq)
     val viaDs = spark.read.format("arrow-ipc").load(dir)
     assert(viaFn.schema === schema && viaDs.schema === schema)
     for (back <- Seq(viaFn, viaDs)) {

@@ -41,9 +41,10 @@ class ArrowEvolutionSpec extends AnyFunSuite {
     // aggregation over the evolved column sees nulls as absent
     assert(mixed.agg(sum("score")).head.getDouble(0) ===
       (100L until 150L).map(_ * 2.0).sum)
-    // the row path (forced via the function-style reader) agrees
-    val viaFn = graft.sources.ArrowInterchange.readStream(spark, dir)
-    assert(viaFn.filter(col("score").isNull).count() === 100)
+    // the row path (forced by projecting `_pos`) agrees
+    val viaRows = ArrowRowPath.read(spark, dir)
+    assert(!ArrowRowPath.columnar(viaRows))
+    assert(ArrowRowPath.rows(viaRows).count(_.isNullAt(1)) === 100)
 
     // filters on the evolved column stay sound over stats-less old files
     assert(mixed.filter(col("score") > 250).count() ===
@@ -274,7 +275,7 @@ class ArrowEvolutionSpec extends AnyFunSuite {
     def resolve(file: org.apache.arrow.vector.types.pojo.Schema,
         expect: StructField*) =
       ArrowInterchange.resolveColumns(file, StructType(expect.toSeq),
-        "test.arrows", exact = false).toSeq
+        "test.arrows").toSeq
 
     // id match beats everything, even across a rename (labels differ)
     assert(resolve(arrow(field("old_v", Some(3L)), field("id", Some(1L))),
@@ -291,12 +292,8 @@ class ArrowEvolutionSpec extends AnyFunSuite {
     // the most recent prior wins when a history has several
     assert(resolve(arrow(field("b", None)),
       field("c", Some(2L), Seq("b", "a"))) === Seq(0))
-    // exact mode accounts file columns through the rename history too
-    val e = intercept[IllegalArgumentException] {
-      ArrowInterchange.resolveColumns(
-        arrow(field("stray", None), field("id", None)),
-        StructType(Seq(field("id", Some(1L)))), "test.arrows", exact = true)
-    }
-    assert(e.getMessage.contains("stray"))
+    // a file column outside the expected schema is ignored by name
+    assert(resolve(arrow(field("stray", None), field("id", None)),
+      field("id", Some(1L))) === Seq(1))
   }
 }

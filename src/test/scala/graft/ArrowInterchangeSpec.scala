@@ -46,7 +46,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(fullRows, 2), fullSchema)
     val dir = tmp("graft_arrow_full")
     ArrowInterchange.writeStream(df, dir)
-    val back = ArrowInterchange.readStream(spark, dir)
+    val back = spark.read.format("arrow-ipc").load(dir)
     // Arrow fields carry nullability, so even non-null flags round-trip
     assert(back.schema === fullSchema)
     val (a, b) = (df.orderBy("id").collect(), back.orderBy("id").collect())
@@ -68,7 +68,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
       StructType(Seq(StructField("id", LongType), StructField("ts", TimestampType))))
     val dir = tmp("graft_arrow_us")
     ArrowInterchange.writeStream(df, dir)
-    val got = ArrowInterchange.readStream(spark, dir)
+    val got = spark.read.format("arrow-ipc").load(dir)
       .select(unix_micros(col("ts"))).as[Long].head()
     assert(got === df.select(unix_micros(col("ts"))).as[Long].head())
     assert(got % 1000 === 7) // the sub-ms digits are really there
@@ -92,7 +92,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     val df = spark.range(n).select(col("id"), concat(lit("v"), col("id")).as("v"))
     val dir = tmp("graft_arrow_chunk")
     ArrowInterchange.writeStream(df.repartition(2), dir)
-    val back = ArrowInterchange.readStream(spark, dir)
+    val back = spark.read.format("arrow-ipc").load(dir)
       .as[(Long, String)].collect().sortBy(_._1)
     assert(back.toSeq === (0L until n).map(i => (i, s"v$i")))
     // ~6000 rows per file against the writer's 4096-row batches: the
@@ -107,7 +107,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     val df = spark.range(0).select(col("id"), lit("x").as("s")).filter(lit(false))
     val dir = tmp("graft_arrow_empty")
     ArrowInterchange.writeStream(df, dir)
-    val back = ArrowInterchange.readStream(spark, dir)
+    val back = spark.read.format("arrow-ipc").load(dir)
     assert(back.count() === 0)
     assert(back.schema.fieldNames.toSeq === Seq("id", "s"))
   }
@@ -119,7 +119,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     // simulate a foreign-written directory: delete our sentinel
     val p = new org.apache.hadoop.fs.Path(dir, "_schema.arrows")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
-    val back = ArrowInterchange.readStream(spark, dir)
+    val back = spark.read.format("arrow-ipc").load(dir)
     assert(back.schema.fieldNames.toSeq === Seq("id", "twice"))
     assert(back.as[(Long, Long)].collect().sortBy(_._1).toSeq ===
       (0L until 5L).map(i => (i, i * 2)))
@@ -138,7 +138,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     val dir = tmp("graft_arrow_list")
     ArrowInterchange.writeStream(df, dir)
-    val back = ArrowInterchange.readStream(spark, dir)
+    val back = spark.read.format("arrow-ipc").load(dir)
     assert(back.schema === schema)
     val got = back.orderBy("id").collect()
       .map(r => (r.getLong(0),
@@ -164,7 +164,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     val dir = tmp("graft_arrow_int8")
     ArrowInterchange.writeStream(df, dir)
-    val back = ArrowInterchange.readStream(spark, dir)
+    val back = spark.read.format("arrow-ipc").load(dir)
     assert(back.schema === schema)
     val got = back.orderBy("id").collect()
       .map(r => (r.getLong(0),
@@ -196,7 +196,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     for (codec <- Seq("lz4", "zstd")) {
       val dir = tmp(s"graft_arrow_$codec")
       ArrowInterchange.writeStream(df.coalesce(1), dir, codec = Some(codec))
-      val back = ArrowInterchange.readStream(spark, dir)
+      val back = spark.read.format("arrow-ipc").load(dir)
         .as[(Long, String)].collect().sortBy(_._1).toSeq
       assert(back === expected, s"codec=$codec")
       assert(dirSize(dir) < dirSize(plain), s"$codec produced no size win")
@@ -215,47 +215,47 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     // simulate a job that died mid-write: schema sentinel present, no marker
     fs.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false)
     val e = intercept[IllegalArgumentException] {
-      ArrowInterchange.readStream(spark, dir)
+      spark.read.format("arrow-ipc").load(dir).collect()
     }
     assert(e.getMessage.contains("_SUCCESS"))
   }
 
-  /** readStream's refusal: an IllegalArgumentException naming `cause`
-    * and pointing at the DSv2 read, which serves the table exactly. */
-  private def assertReadStreamRefuses(dir: String, cause: String,
-      scanRows: Long): Unit = {
-    val e = intercept[IllegalArgumentException] {
-      ArrowInterchange.readStream(spark, dir).count()
-    }
-    assert(e.getMessage.contains(cause), e.getMessage)
-    assert(e.getMessage.contains("spark.read.format(\"arrow-ipc\")"), e.getMessage)
-    assert(spark.read.format("arrow-ipc").load(dir).count() === scanRows)
-  }
-
-  test("readStream refuses a hive-partitioned table instead of returning no rows") {
+  test("readStream reads a hive table with partition values spliced in") {
     val dir = tmp("graft_arrow_rs_hive")
     spark.range(400).select(col("id"), (col("id") % 4).as("p"))
       .write.format("arrow-ipc").option("hivePartitionKeys", "p")
       .mode("overwrite").save(dir)
-    assertReadStreamRefuses(dir, "hive-partitioned", 400L)
+    val back = ArrowInterchange.readStream(spark, dir, Seq("id", "p"))
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(back === (0L until 400L).map(i => (i, i % 4)))
+    // a projection that leaves the partition key out reads every row too
+    assert(ArrowInterchange.readStream(spark, dir, Seq("id"))
+      .as[Long].collect().sorted.toSeq === (0L until 400L))
   }
 
-  test("readStream refuses live deletion vectors instead of serving deleted rows") {
+  test("readStream masks rows deleted by live deletion vectors") {
     val dir = tmp("graft_arrow_rs_dv")
     spark.range(400).toDF("id").coalesce(2)
       .write.format("arrow-ipc").mode("overwrite").save(dir)
     graft.sources.ArrowDeleteVectors.deleteMor(spark, dir, "id < 10")
-    assertReadStreamRefuses(dir, "deletion vectors", 390L)
+    val ids = ArrowInterchange.readStream(spark, dir, Seq("id"))
+      .as[Long].collect().sorted.toSeq
+    assert(ids === (10L until 400L))
   }
 
-  test("readStream refuses live equality tombstones instead of serving masked rows") {
+  test("readStream serves upserted rows over live equality tombstones") {
     val dir = tmp("graft_arrow_rs_eq")
     spark.range(400).select(col("id"), lit("a").as("v")).coalesce(2)
       .write.format("arrow-ipc").mode("overwrite").save(dir)
     // replaces ids 0..9 in place: 400 live rows, 10 of them masked copies
     graft.sources.ArrowEqualityDeletes.upsertBatch(spark, dir, "id",
       spark.range(10).select(col("id"), lit("b").as("v")))
-    assertReadStreamRefuses(dir, "equality-delete tombstones", 400L)
+    val back = ArrowInterchange.readStream(spark, dir, Seq("id", "v"))
+      .as[(Long, String)].collect().sorted.toSeq
+    assert(back === (0L until 400L).map(i => (i, if (i < 10) "b" else "a")))
+    // a projection that leaves the equality key out is masked too
+    assert(ArrowInterchange.readStream(spark, dir, Seq("v"))
+      .filter(col("v") === "b").count() === 10L)
   }
 
   test("unsupported column type fails loudly at write time") {
@@ -313,7 +313,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     root.setRowCount(4)
     w.writeBatch(); w.end(); w.close(); root.close(); alloc.close()
     val full = intercept[IllegalArgumentException] {
-      ArrowInterchange.readStream(spark, dir).count()
+      spark.read.format("arrow-ipc").load(dir).count()
     }
     assert(full.getMessage.contains("unsupported Arrow type"))
     val pruned = ArrowInterchange.readStream(spark, dir, Seq("id"))
@@ -333,15 +333,13 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     org.apache.hadoop.fs.FileUtil.copy(
       fs, new org.apache.hadoop.fs.Path(dirB, "part-00000.arrows"),
       fs, new org.apache.hadoop.fs.Path(dirA, "part-00001.arrows"), false, conf)
+    // a read that decodes the columns (a bare count decodes none)
     val e = intercept[org.apache.spark.SparkException] {
-      ArrowInterchange.readStream(spark, dirA).count()
+      spark.read.format("arrow-ipc").load(dirA).collect()
     }
     val msg = e.getCause.getMessage
-    // either refusal shape is sound: the foreign file fails on its first
-    // unresolvable expected column, or on its own unclaimed column
-    assert(msg.contains("part-00001.arrows") &&
-      (msg.contains("outside the dataset schema") ||
-        msg.contains("has no column")))
+    // the foreign file fails on its first unresolvable expected column
+    assert(msg.contains("part-00001.arrows") && msg.contains("has no column"))
   }
 
   test("columns resolve by name: a reordered data file reads correctly") {
@@ -358,7 +356,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
       fs, new org.apache.hadoop.fs.Path(dirA, "part-00000.arrows"), false, conf)
     // sentinel says (id, v); the data file is (v, id) — values must land
     // under the right names, not the file's positions
-    val back = ArrowInterchange.readStream(spark, dirA)
+    val back = spark.read.format("arrow-ipc").load(dirA)
     assert(back.schema.fieldNames.toSeq === Seq("id", "v"))
     assert(back.as[(Long, String)].collect().sortBy(_._1).toSeq ===
       (0L until 3L).map(i => (i, s"v$i")))
@@ -376,7 +374,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     val dir = tmp("graft_arrow_dec")
     ArrowInterchange.writeStream(df, dir)
-    val back = ArrowInterchange.readStream(spark, dir)
+    val back = spark.read.format("arrow-ipc").load(dir)
     assert(back.schema("price").dataType === DecimalType(12, 2))
     val got = back.orderBy("id").collect()
       .map(r => (r.getLong(0), Option(r.getDecimal(1)).map(_.toPlainString).orNull)).toSeq
@@ -394,7 +392,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     val dir = tmp("graft_arrow_fsb")
     ArrowInterchange.writeStream(df, dir)
-    val back = ArrowInterchange.readStream(spark, dir)
+    val back = spark.read.format("arrow-ipc").load(dir)
     assert(back.schema("h").metadata.getLong(ArrowInterchange.FixedSizeKey) === 4L)
     val got = back.orderBy("id").collect()
       .map(r => (r.getLong(0), Option(r.getAs[Array[Byte]](1)).map(_.toSeq).orNull)).toSeq
@@ -426,10 +424,10 @@ class ArrowInterchangeSpec extends AnyFunSuite {
       Row(4L, Row(Array.empty[Byte], "", Seq.empty[Float], Row(null, 7))))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
 
-    // function-style writer → function-style reader
+    // function-style writer → DSv2 scan
     val d1 = tmp("graft_struct_fn")
     ArrowInterchange.writeStream(df, d1)
-    val b1 = ArrowInterchange.readStream(spark, d1).orderBy("id").collect()
+    val b1 = spark.read.format("arrow-ipc").load(d1).orderBy("id").collect()
     assert(b1.map(r => (r.getLong(0), r.get(1))).toSeq ===
       rows.map(r => (r.getLong(0), r.get(1))))
 
@@ -469,10 +467,10 @@ class ArrowInterchangeSpec extends AnyFunSuite {
       Row(4L, Map("only" -> 0L), Map.empty[String, Row]))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
 
-    // function-style writer → function-style reader
+    // function-style writer → DSv2 scan
     val d1 = tmp("graft_map_fn")
     ArrowInterchange.writeStream(df, d1)
-    val b1 = ArrowInterchange.readStream(spark, d1).orderBy("id").collect()
+    val b1 = spark.read.format("arrow-ipc").load(d1).orderBy("id").collect()
     assert(b1.map(r => (r.getLong(0), r.get(1), r.get(2))).toSeq ===
       rows.map(r => (r.getLong(0), r.get(1), r.get(2))))
 
@@ -562,7 +560,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
       // function-style round trip is exact
       val dir = tmp("graft_arrow_java8")
       ArrowInterchange.writeStream(df.repartition(2), dir)
-      val back = ArrowInterchange.readStream(spark, dir)
+      val back = ArrowInterchange.readStream(spark, dir, df.columns.toSeq)
       assert(back.schema === df.schema)
       assert(back.orderBy("id").collect().toSeq === want)
 
@@ -633,7 +631,9 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     val viaDs = tmp("graft_identity_ds")
     df.write.format("arrow-ipc").mode("overwrite").save(viaDs)
     for (d <- Seq(viaFn, viaDs)) {
-      assert(canonRows(ArrowInterchange.readStream(spark, d)) === want, d)
+      // the scan's row reader and its columnar reader agree
+      assert(ArrowRowPath.rows(ArrowRowPath.read(spark, d).orderBy("id"))
+        .map(canon) === want, d)
       val ds = spark.read.format("arrow-ipc").load(d)
       assert(ds.schema === schema, d)
       assert(canonRows(ds) === want, d)

@@ -131,10 +131,10 @@ class ArrowStreamSinkSpec extends AnyFunSuite {
     w1.commit()
     assert(listData(dir).size === 2, "the orphan file exists on disk")
 
-    // invisible to the batch scan, the function-style reader, and a
+    // invisible to a batch count, to the scan's row reader, and to a
     // fresh streaming source
     assert(spark.read.format("arrow-ipc").load(dir).count() === 20)
-    assert(ArrowInterchange.readStream(spark, dir).count() === 20)
+    assert(graft.ArrowRowPath.read(spark, dir).collect().length === 20)
     val q = spark.readStream.format("arrow-ipc").load(dir)
       .writeStream.format("memory").queryName("graft_sink_orphan_src").start()
     try q.processAllAvailable() finally q.stop()
