@@ -268,11 +268,13 @@ private[sources] case class ArrowHiveFilePartition(
   * spliced back as constants from the directory name — never stored,
   * never decoded. Columnar path uses [[org.apache.spark.sql.execution
   * .vectorized.ConstantColumnVector]], the same mechanism Spark's file
-  * sources use for partition values. */
+  * sources use for partition values. `table` as in
+  * [[ArrowIpcReaderFactory]], less each generation's keys. */
 private[sources] class ArrowIpcHiveReaderFactory(
     required: StructType, hiveFields: Seq[StructField],
     conf: SerializableHadoopConf, limit: Int = -1,
-    posSlot: Int = -1, extraGens: Seq[Seq[StructField]] = Nil)
+    posSlot: Int = -1, extraGens: Seq[Seq[StructField]] = Nil,
+    table: StructType = null)
     extends PartitionReaderFactory {
 
   /** One partition GENERATION's splice plan: required-position →
@@ -284,7 +286,8 @@ private[sources] class ArrowIpcHiveReaderFactory(
     * ([[ArrowHiveFilePartition.fields]]) splices THOSE from its path
     * and reads the current keys from its data like any other column. */
   private case class GenPlan(fields: Seq[StructField],
-      slots: Array[Either[Int, Int]], dataRequired: StructType) {
+      slots: Array[Either[Int, Int]], dataRequired: StructType,
+      dataTable: StructType) {
     def internals(values: Seq[Option[String]]): Array[Any] =
       fields.zipWithIndex.map { case (f, i) =>
         ArrowHiveLayout.internalValue(f.dataType, values(i))
@@ -298,8 +301,9 @@ private[sources] class ArrowIpcHiveReaderFactory(
       val h = names.indexOf(f.name)
       if (h >= 0) Right(h) else { d += 1; Left(d) }
     }
-    GenPlan(fields, slots,
-      StructType(required.fields.filter(f => !names.contains(f.name))))
+    def data(s: StructType) =
+      if (s == null) null else StructType(s.fields.filter(f => !names.contains(f.name)))
+    GenPlan(fields, slots, data(required), data(table))
   }
 
   private val defaultPlan = planFor(hiveFields)
@@ -325,7 +329,7 @@ private[sources] class ArrowIpcHiveReaderFactory(
       plan: GenPlan = defaultPlan): PartitionReader[InternalRow] = {
     import plan.{slots, dataRequired}
     val inner = new ArrowIpcPartitionReader(file, dataRequired, conf, limit,
-      skip = maskOf(dv), keepOnly = maskOf(keep))
+      skip = maskOf(dv), keepOnly = maskOf(keep), table = plan.dataTable)
     val consts = plan.internals(values)
     val types = required.fields.map(_.dataType)
     val out = slots.length + (if (posSlot >= 0) 1 else 0)
@@ -359,7 +363,7 @@ private[sources] class ArrowIpcHiveReaderFactory(
     import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
     import plan.{slots, dataRequired}
     val inner = new ArrowIpcColumnarReader(file, dataRequired, conf, limit,
-      skip = maskOf(dv), keepOnly = maskOf(keep))
+      skip = maskOf(dv), keepOnly = maskOf(keep), table = plan.dataTable)
     val consts = plan.internals(values)
     new PartitionReader[ColumnarBatch] {
       override def next(): Boolean = inner.next()
@@ -393,7 +397,7 @@ private[sources] class ArrowIpcHiveReaderFactory(
     * carries every column (including the new partition keys) in its
     * data — the plain readers serve it inside this hive scan. */
   private lazy val plainFactory =
-    new ArrowIpcReaderFactory(required, conf, limit, posSlot)
+    new ArrowIpcReaderFactory(required, conf, limit, posSlot, table)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {

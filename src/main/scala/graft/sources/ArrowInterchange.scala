@@ -503,26 +503,29 @@ object ArrowInterchange {
   /** Column-pruned read through the DSv2 scan, in the requested column
     * order — the `column_indices` pushdown of the reference's scan
     * (DataStreams/ParquetBlockInputStream.cpp:33-38). Its one job beyond
-    * `spark.read.format("arrow-ipc").load(dir)`: the scan's schema is
-    * built from the header by NAME and handed over as a user schema, so
-    * columns OUTSIDE the projection may carry Arrow types this interchange
-    * doesn't support (schema inference refuses them). Every supported
-    * column stays in that schema, because hive and equality keys resolve
-    * against it even when the projection leaves them out. */
+    * `spark.read.format("arrow-ipc").load(dir)`: the requested columns
+    * are typed from the header by NAME and handed over as a user schema,
+    * so columns OUTSIDE the projection may carry Arrow types this
+    * interchange doesn't support (schema inference refuses them). */
   def readStream(spark: SparkSession, dir: String, columns: Seq[String]): DataFrame = {
     val fields = readArrowSchema(spark, dir).getFields.asScala.toSeq
     val byName = fields.map(f => f.getName -> f).toMap
-    // a requested column must exist and carry a supported type
-    columns.foreach(n => fromArrowField(byName.getOrElse(n,
-      throw new IllegalArgumentException(
+    val pruned = StructType(columns.distinct.map(n => fromArrowField(
+      byName.getOrElse(n, throw new IllegalArgumentException(
         s"Arrow interchange: requested column '$n' not in $dir schema " +
-          s"(${fields.map(_.getName).mkString(", ")})"))))
-    val readable = StructType(fields.flatMap(f =>
-      scala.util.Try(fromArrowField(f)).toOption))
-    val df = spark.read.format("arrow-ipc").schema(stripEvolution(readable))
+          s"(${fields.map(_.getName).mkString(", ")})")))))
+    val df = spark.read.format("arrow-ipc").schema(stripEvolution(pruned))
       .load(dir)
     df.select(columns.map(n => df.col(s"`${n.replace("`", "``")}`")): _*)
   }
+
+  /** The sentinel's column `name`, typed — where a hive or equality key
+    * resolves when a user schema leaves it out. */
+  private[sources] def sentinelField(fs: org.apache.hadoop.fs.FileSystem,
+      dirPath: Path, name: String): Option[StructField] =
+    scala.util.Try(readArrowSchemaFrom(fs, new Path(dirPath, "_schema.arrows")))
+      .toOption.flatMap(_.getFields.asScala.find(_.getName == name))
+      .map(f => stripEvolution(StructType(Seq(fromArrowField(f)))).head)
 
   /** Driver-side schema derivation from the sentinel or first data file —
     * the USER-FACING schema: evolution metadata stripped. */
@@ -629,6 +632,17 @@ object ArrowInterchange {
               s"(found: ${fileFields.map(_.getName).mkString(", ")})")
       }
     }
+  }
+
+  /** [[resolveColumns]] for a DSv2 reader's projection. An empty one (a
+    * bare count) decodes no column, yet the file must still resolve every
+    * column of `table` when given — so a foreign file fails with its path
+    * whether the query counts or collects. */
+  private[sources] def resolveHeader(fileSchema: ArrowSchema,
+      required: StructType, table: StructType, path: String): Array[Int] = {
+    if (required.isEmpty && table != null)
+      resolveColumns(fileSchema, table, path)
+    resolveColumns(fileSchema, required, path)
   }
 
   /** One value in Catalyst INTERNAL form (UTF8String, micros long, days

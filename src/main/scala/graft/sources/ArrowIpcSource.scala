@@ -734,7 +734,7 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     * refute are never listed; a time-travel read takes the pinned
     * snapshot's file set. Keys resolve against the FULL dataset schema (a
     * projection may prune a partition column the directories still nest
-    * by). */
+    * by), then the sentinel (a user schema may leave a key out). */
   private lazy val view: ArrowLiveView = listed.getOrElse(
     ArrowLiveView.forRead(SparkSession.active, dir,
       Option(full).getOrElse(required), filters, asOf))
@@ -862,14 +862,18 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
 
   /** The key column(s) as a schema with resolution metadata (field ids
     * / rename history) — pre-rename files resolve each key under its
-    * old physical name, exactly like the projection does. */
+    * old physical name, exactly like the projection does. A key a user
+    * schema leaves out is typed from the sentinel. */
   private lazy val eqKeySchema: Option[StructType] =
     if (eqKeyCols.isEmpty) None
     else {
       val hconf = SparkSession.active.sparkContext.hadoopConfiguration
+      val dirPath = new Path(dir)
       val schemaForKey = Option(full).getOrElse(required)
       val fields = eqKeyCols.map(k =>
-        schemaForKey.fields.find(_.name == k).getOrElse(
+        schemaForKey.fields.find(_.name == k).orElse(
+          ArrowInterchange.sentinelField(
+            dirPath.getFileSystem(hconf), dirPath, k)).getOrElse(
           throw new IllegalStateException(
             s"arrow-ipc: equality key '$k' of $dir is not in the schema")))
       Some(ArrowInterchange.attachResolutionMeta(
@@ -1306,9 +1310,14 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
       val hconf = SparkSession.active.sparkContext.hadoopConfiguration
       val conf = new SerializableHadoopConf(hconf)
       // the sentinel's evolution metadata (field ids, rename history)
-      // rides the required schema to the executors — renamed columns
-      // resolve across mixed-generation files
-      val req = ArrowInterchange.attachResolutionMeta(required, dir, hconf)
+      // rides the table and required schemas to the executors — renamed
+      // columns resolve across mixed-generation files. The table schema
+      // travels for an empty projection (a bare count), whose files still
+      // resolve every table column.
+      val table = ArrowInterchange.attachResolutionMeta(
+        Option(full).getOrElse(required), dir, hconf)
+      val req = StructType(required.fields.map(f =>
+        table.fields.find(_.name == f.name).getOrElse(f)))
       // `fileSlot`/`posSlot` index the FINAL schema (both metadata
       // columns present). The inner factories splice `_pos` first, so
       // their slot must not count a `_file` column inserted BEFORE it;
@@ -1319,11 +1328,11 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
         else posSlot
       val base =
         if (view.hiveFields.isEmpty)
-          new ArrowIpcReaderFactory(req, conf, limit, innerPos)
+          new ArrowIpcReaderFactory(req, conf, limit, innerPos, table)
             : PartitionReaderFactory
         else
           new ArrowIpcHiveReaderFactory(req, view.hiveFields, conf, limit,
-            innerPos, extraGens = view.oldHiveGens)
+            innerPos, extraGens = view.oldHiveGens, table = table)
             : PartitionReaderFactory
       if (fileSlot < 0) base
       else {
@@ -1372,9 +1381,11 @@ private[sources] class ArrowAggReaderFactory(schema: StructType, rows: Array[Arr
     }
 }
 
+/** `table`: the dataset's file columns, which a file must resolve when
+  * `required` is empty (null = no such check). */
 private[sources] class ArrowIpcReaderFactory(
     required: StructType, conf: SerializableHadoopConf, limit: Int = -1,
-    posSlot: Int = -1)
+    posSlot: Int = -1, table: StructType = null)
     extends PartitionReaderFactory {
 
   /** The deletion-vector mask of a partition's file, loaded task-side
@@ -1390,7 +1401,8 @@ private[sources] class ArrowIpcReaderFactory(
       keep: Option[String] = None,
       eq: Option[ArrowEqualityDeletes.EqPart] = None): ArrowIpcPartitionReader =
     new ArrowIpcPartitionReader(file, required, conf, limit,
-      skip = maskOf(dv), keepOnly = maskOf(keep), eq = eq.orNull)
+      skip = maskOf(dv), keepOnly = maskOf(keep), eq = eq.orNull,
+      table = table)
 
   /** Splice the row's physical position at `posSlot` (the `_pos`
     * metadata column) — per-row, so it rides the core reader's own
@@ -1462,13 +1474,14 @@ private[sources] class ArrowIpcReaderFactory(
     partition match {
       case p: ArrowFilePartition =>
         new ArrowIpcColumnarReader(p.file, required, conf, limit,
-          skip = maskOf(p.dv), keepOnly = maskOf(p.keep), eq = p.eq.orNull)
+          skip = maskOf(p.dv), keepOnly = maskOf(p.keep), eq = p.eq.orNull,
+          table = table)
       case k: ArrowKeyedPartition =>
         new ChainedPartitionReader[(String, Option[String]),
             org.apache.spark.sql.vectorized.ColumnarBatch](
           k.files.zip(k.dvOrNone),
           fd => new ArrowIpcColumnarReader(fd._1, required, conf, limit,
-            skip = maskOf(fd._2)))
+            skip = maskOf(fd._2), table = table))
     }
 }
 
@@ -1483,7 +1496,8 @@ private[sources] class ArrowIpcColumnarReader(
     limit: Int = -1,
     skip: java.util.BitSet = null,
     keepOnly: java.util.BitSet = null,
-    eq: ArrowEqualityDeletes.EqPart = null)
+    eq: ArrowEqualityDeletes.EqPart = null,
+    table: StructType = null)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, ColumnVector}
 
@@ -1498,7 +1512,7 @@ private[sources] class ArrowIpcColumnarReader(
   }
   private val root = reader.getVectorSchemaRoot
   private val cols: Array[Int] =
-    try ArrowInterchange.resolveColumns(root.getSchema, required, file)
+    try ArrowInterchange.resolveHeader(root.getSchema, required, table, file)
     catch { case e: Throwable => close(); throw e }
 
   private var current: ColumnarBatch = _
@@ -2133,13 +2147,15 @@ private[sources] class ArrowIpcDataWriter(
 /** Streams one IPC file batch-by-batch, decoding only the required
   * columns into reused-nothing `GenericInternalRow`s. Pruned reads
   * tolerate extra (even unsupported-typed) columns in the file — the
-  * validation covers exactly the projected set. */
+  * validation covers exactly the projected set, or `table` when the
+  * projection is empty ([[ArrowInterchange.resolveHeader]]). */
 private[sources] class ArrowIpcPartitionReader(
     file: String, required: StructType, conf: SerializableHadoopConf,
     limit: Int = -1,
     skip: java.util.BitSet = null,
     keepOnly: java.util.BitSet = null,
-    eq: ArrowEqualityDeletes.EqPart = null)
+    eq: ArrowEqualityDeletes.EqPart = null,
+    table: StructType = null)
     extends PartitionReader[InternalRow] {
 
   private val alloc = new RootAllocator()
@@ -2153,7 +2169,7 @@ private[sources] class ArrowIpcPartitionReader(
   }
   private val root = reader.getVectorSchemaRoot
   private val cols: Array[Int] =
-    try ArrowInterchange.resolveColumns(root.getSchema, required, file)
+    try ArrowInterchange.resolveHeader(root.getSchema, required, table, file)
     catch { case e: Throwable => closeQuietly(); throw e }
   private val types = required.fields.map(_.dataType)
 

@@ -153,13 +153,16 @@ private[sources] object ArrowLiveView {
 
   /** (active hive generation, other standing hive generations, flat
     * generation declared) — see the GENERATIONS rule. A partition key
-    * missing from `schema` is corruption and throws. */
+    * missing from `schema` (a user schema) is typed from the sentinel;
+    * one missing from both is corruption and throws. */
   private def layout(fs: FileSystem, dirPath: Path, dir: String,
       schema: => StructType)
       : (Seq[StructField], Seq[Seq[StructField]], Boolean) = {
     lazy val full = schema
     def resolve(keys: Seq[String]): Seq[StructField] = keys.map { k =>
-      full.fields.find(_.name == k).getOrElse(throw new IllegalStateException(
+      full.fields.find(_.name == k)
+        .orElse(ArrowInterchange.sentinelField(fs, dirPath, k))
+        .getOrElse(throw new IllegalStateException(
         s"arrow-ipc: ${ArrowHiveLayout.FileName} of $dir names partition key " +
           s"'$k' which is not in the dataset schema"))
     }

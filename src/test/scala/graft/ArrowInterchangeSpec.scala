@@ -333,13 +333,17 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     org.apache.hadoop.fs.FileUtil.copy(
       fs, new org.apache.hadoop.fs.Path(dirB, "part-00000.arrows"),
       fs, new org.apache.hadoop.fs.Path(dirA, "part-00001.arrows"), false, conf)
-    // a read that decodes the columns (a bare count decodes none)
-    val e = intercept[org.apache.spark.SparkException] {
-      spark.read.format("arrow-ipc").load(dirA).collect()
+    // the foreign file fails on its first unresolvable expected column,
+    // whether the read counts (decoding no column) or collects
+    val reads: Seq[() => Any] = Seq(
+      () => spark.read.format("arrow-ipc").load(dirA).count(),
+      () => spark.read.format("arrow-ipc").load(dirA).collect(),
+      () => ArrowInterchange.readStream(spark, dirA, Seq("id", "a")).count())
+    reads.foreach { read =>
+      val e = intercept[org.apache.spark.SparkException](read())
+      val msg = e.getCause.getMessage
+      assert(msg.contains("part-00001.arrows") && msg.contains("has no column"))
     }
-    val msg = e.getCause.getMessage
-    // the foreign file fails on its first unresolvable expected column
-    assert(msg.contains("part-00001.arrows") && msg.contains("has no column"))
   }
 
   test("columns resolve by name: a reordered data file reads correctly") {
