@@ -78,9 +78,11 @@ class ArrowIpcSource extends TableProvider with DataSourceRegister {
 /** `asOf`: a TIME-TRAVEL pin ([[ArrowCatalog.loadTable]] `VERSION AS OF`
   * / `TIMESTAMP AS OF`) — scans read the pinned snapshot's file set and
   * every mutation refuses. The read option `asOfSnapshot` pins a single
-  * DataFrame read the same way. */
+  * DataFrame read the same way. `view`: a live view the caller already
+  * loaded (a maintenance rewrite's files) — scans read exactly its files
+  * and list nothing. */
 private[sources] class ArrowIpcTable(tableSchema: StructType, dir: String,
-    asOf: Option[Long] = None)
+    asOf: Option[Long] = None, view: Option[ArrowLiveView] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -213,7 +215,8 @@ private[sources] class ArrowIpcTable(tableSchema: StructType, dir: String,
         Option(options.get("maxSnapshotsPerTrigger")).map(_.toInt),
       ignoreDeletes = options.getBoolean("ignoreDeletes", false),
       ignoreRestores = options.getBoolean("ignoreRestores", false),
-      eqEmitDeleted = "deleted".equalsIgnoreCase(options.get("eqEmit")))
+      eqEmitDeleted = "deleted".equalsIgnoreCase(options.get("eqEmit")),
+      handed = view)
   }
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -265,7 +268,8 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
     maxSnapshotsPerTrigger: Option[Int] = None,
     ignoreDeletes: Boolean = false,
     ignoreRestores: Boolean = false,
-    eqEmitDeleted: Boolean = false)
+    eqEmitDeleted: Boolean = false,
+    handed: Option[ArrowLiveView] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
@@ -276,8 +280,8 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
   private var posSlot: Int = -1
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var agg: Option[(StructType, Array[Array[Any]])] = None
-  /** The live view [[pushAggregation]] listed, if any. */
-  private var listed: Option[ArrowLiveView] = None
+  /** The live view [[pushAggregation]] listed or was handed, if any. */
+  private var listed: Option[ArrowLiveView] = handed
 
   /** COUNT(*)/COUNT(col)/MIN/MAX answered from `_stats.json` ALONE — no
     * data file is opened (the reader factory emits precomputed rows). The
@@ -345,7 +349,7 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
     // stats entries (exact single-value stats), so the same manifest
     // arithmetic answers aggregates over partition keys too (GROUP BY a
     // hive key = one partial row per file, no file opened)
-    val view = ArrowLiveView.load(spark, dir, full)
+    val view = handed.getOrElse(ArrowLiveView.load(spark, dir, full))
     if (!view.open) return false
     listed = Some(view)
     val files = view.files.map(_.name).toArray
@@ -593,7 +597,9 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
     } // answer
 
     try {
-      if (aggregation.groupByExpressions.isEmpty)
+      // a handed view may hold part of a commit, whose envelope also
+      // covers files outside it: only per-file stats answer for it
+      if (aggregation.groupByExpressions.isEmpty && handed.isEmpty)
         // a corrupt index degrades to the per-file path, like a missing one
         scala.util.Try(envelopeStats()).toOption.flatten match {
           case Some(pf) =>
@@ -656,12 +662,13 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
   override def build(): Scan = {
     // the pushdown listing carried no filters: it is the scan's view only
-    // while none were pushed
+    // while none were pushed; a handed view always is (filters still
+    // prune its files by stats)
     val scan = new ArrowIpcScan(required, dir, limit, pushed, agg,
       maxFilesPerTrigger, partitionKeys, full, fileSlot, asOf,
       changeFeed, startingSnapshot, startingTimestamp, maxSnapshotsPerTrigger,
       posSlot, ignoreDeletes, ignoreRestores, eqEmitDeleted,
-      listed.filter(_ => pushed.isEmpty))
+      handed.orElse(listed.filter(_ => pushed.isEmpty)))
     if (onBuild != null) onBuild(scan)
     scan
   }
@@ -728,13 +735,14 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
       asOf.fold("")(v => s" asOf=$v")
 
   /** The table's live view for this batch read ([[ArrowLiveView]] states
-    * the gate, visibility and generation rules): the one the builder
-    * listed for aggregate pushdown, else loaded here — waiting a closed
-    * gate out, then refusing. Hive value directories the STATIC filters
-    * refute are never listed; a time-travel read takes the pinned
-    * snapshot's file set. Keys resolve against the FULL dataset schema (a
-    * projection may prune a partition column the directories still nest
-    * by), then the sentinel (a user schema may leave a key out). */
+    * the gate, visibility and generation rules): the one the table was
+    * handed or the builder listed for aggregate pushdown, else loaded
+    * here — waiting a closed gate out, then refusing. Hive value
+    * directories the STATIC filters refute are never listed; a
+    * time-travel read takes the pinned snapshot's file set. Keys resolve
+    * against the FULL dataset schema (a projection may prune a partition
+    * column the directories still nest by), then the sentinel (a user
+    * schema may leave a key out). */
   private lazy val view: ArrowLiveView = listed.getOrElse(
     ArrowLiveView.forRead(SparkSession.active, dir,
       Option(full).getOrElse(required), filters, asOf))
@@ -2010,8 +2018,8 @@ private[sources] class ArrowIpcWriterFactory(
       maxRowsPerFile = maxRecordsPerFile.getOrElse(Long.MaxValue))
 }
 
-/** The arrow-ipc task writer: every batch and streaming write, and the
-  * hive rewrites' staging, run through it. Rows go to one open
+/** The arrow-ipc task writer: every batch and streaming write, and every
+  * maintenance rewrite's staging, run through it. Rows go to one open
   * [[ArrowFileWriter]] at a time; a new file starts when the key tuple
   * changes or when the open file reaches `maxRowsPerFile` (the knob that
   * keeps one giant input partition from producing one giant file).

@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Maintenance for arrow-ipc directories: COMPACTION — the small-files
   * answer for streaming appends. A micro-batch writer (or many small
@@ -11,11 +12,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Protocol (each step idempotent, replayable from the intent record):
   *
-  *  1. STAGE — read the live directory (DSv2 path), coalesce to
-  *     ceil(bytes/target) partitions, write a complete new dataset into a
-  *     hidden `.compact-<id>` subdirectory (own sentinel, stats manifest,
-  *     `_SUCCESS`). A crash here leaves the live directory untouched;
-  *     stale staging dirs from dead runs are deleted on the next call.
+  *  1. STAGE — read exactly the files being replaced (the DSv2 scan over
+  *     the rewrite's own live view), coalesce them to ceil(bytes/target)
+  *     partitions (or range-partition and sort them), and write the new
+  *     files and their stats manifest into a hidden `.compact-<id>`
+  *     subdirectory — no sentinel, no `_SUCCESS`: the intent names what
+  *     moves. A crash here leaves the live directory untouched; stale
+  *     staging dirs from dead runs are deleted on the next call.
   *  2. SWAP under the `_SUCCESS` latch:
   *     a. record the intent (`_compaction.json`: old files, staging dir,
   *        staging→final name mapping);
@@ -26,7 +29,8 @@ import org.apache.spark.sql.SparkSession
   *        colliding with live names);
   *     d. write the merged stats manifest (live manifest minus the old
   *        files, plus the staged stats under final names);
-  *     e. delete the old files;
+  *     e. retire the old files to `.trash/` (time travel reads them
+  *        there until expiry);
   *     f. restore `_SUCCESS`, delete the intent record and staging dir.
   *
   * A crash anywhere inside the swap leaves the marker absent — the
@@ -68,17 +72,27 @@ object ArrowMaintenance {
   case class CompactionResult(oldFiles: Int, newFiles: Int)
 
   /** The largest per-file `isin` literal list a single staged read may
-    * plan — shared by the eq fold's driver-group builder,
-    * unifyGeneration's per-call drain cap, and the IVF compact's
-    * catch-up bound ([[graft.ops.Similarity.ivfCompact]]), so a
-    * planner-limit tune moves all three in lockstep. */
+    * plan — shared by the eq fold's driver-group builder and the IVF
+    * compact's catch-up bound ([[graft.ops.Similarity.ivfCompact]]), so
+    * a planner-limit tune moves both in lockstep. */
   private[graft] val MaxIsinPaths = 1000
 
   /** Compact `dir`'s IPC files into ~`targetBytes` files (coalesce — no
     * shuffle; row order within each original file is preserved). Returns
-    * the file counts, or None when the directory has ≤ 1 file (nothing to
-    * do). `codec`: recompress while compacting (`"zstd"` is the natural
-    * choice for data cold enough to compact); None keeps it uncompressed. */
+    * the file counts, or None when there is nothing to merge. `codec`:
+    * recompress while compacting (`"zstd"` is the natural choice for data
+    * cold enough to compact); None keeps it uncompressed.
+    *
+    * A hive layout compacts per value directory — the small-files answer
+    * for streaming ingest, where each epoch lands one file per active
+    * value directory. INCREMENTAL by construction: files never combine
+    * across value directories, so only directories holding ≥ 2 files are
+    * rewritten and every other file stays untouched (not rewritten, not
+    * trashed, no snapshot entry) — cost ∝ small-file debt, not table
+    * size. The coalesced read lists files grouped by value directory and
+    * the rolling hive writer routes rows back into per-value staged files
+    * (it rolls on key change, so interleaving costs extra files, never
+    * wrong routing). */
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L << 20,
       codec: Option[String] = None): Option[CompactionResult] =
@@ -106,48 +120,21 @@ object ArrowMaintenance {
     // uncommitted — invisible either way)
     ArrowStreamCommits.cleanOrphans(fs, dirPath)
     val view = liveView(spark, dir)
-    // hive-partitioned directories nest files under value subdirs and
-    // need the partition columns routed back out — their own staging path
     val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
-    if (hiveKeys.nonEmpty)
-      return compactHive(spark, dirPath, fs, view, hiveKeys, targetBytes, codec)
-
-    val olds = view.files.filter(_.fields.isEmpty)
+    // compaction stays per-generation: under a hive layout the root files
+    // of an evolved table are the flat generation's (migrating them into
+    // value dirs is a rewrite decision, CALL cluster's job)
+    val olds =
+      if (hiveKeys.isEmpty) view.files.filter(_.fields.isEmpty)
+      else {
+        val dirOf = (f: LiveFile) => new Path(f.rel).getParent.toString
+        val nested = view.files.filter(_.fields.nonEmpty)
+        val affected = nested.groupBy(dirOf).filter(_._2.size > 1).keySet
+        nested.filter(f => affected(dirOf(f)))
+      }
     if (olds.length <= 1) return None
-
-    // STAGE: a complete new dataset in a hidden subdir. The read is
-    // restricted to exactly `olds` by static `_file` pushdown: a file
-    // committed by a CONCURRENT writer after the listing must neither be
-    // staged (its rows would duplicate when it survives the swap) nor
-    // replaced (it is not in `olds`).
-    val id = java.util.UUID.randomUUID.toString.take(8)
-    val staging = s".compact-$id"
-    val n = taskCount(olds, targetBytes)
-    val oldPaths = olds.map(f => fs.makeQualified(f.status.getPath).toString)
-    // capture the deletion vectors in force BEFORE the staging read plans:
-    // the read masks exactly these, the commit validates none advanced,
-    // the replay retires them (the rewrite folded them into the data)
-    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds.map(_.name))
-    val df = spark.read.format("arrow-ipc").load(dir)
-      .filter(org.apache.spark.sql.functions.col(ArrowRowLevel.FileColumn)
-        .isin(oldPaths: _*))
-      .drop(ArrowRowLevel.FileColumn)
-      .coalesce(n)
-    ArrowInterchange.writeStream(df,
-      new Path(dirPath, staging).toString, codec = codec,
-      bloomCols = standingBlooms(fs, dirPath, df.schema.fieldNames, Nil))
-
-    val stagingPath = new Path(dirPath, staging)
-    val staged = Option(fs.globStatus(new Path(stagingPath, "part-*.arrows")))
-      .getOrElse(Array.empty).map(_.getPath.getName).sorted
-    // compaction-scoped final names: cannot collide with the live files
-    // this run replaces, nor with a previous compaction's output
-    val moves = staged.map(s => s -> s.replace(".arrows", s"-compact-$id.arrows")).toMap
-
-    // SWAP: serialized, validated, crash-safe
-    commitSwap(fs, dirPath,
-      Intent(olds.map(_.name).sorted, staging, moves, dvs = dvRels))
-    Some(CompactionResult(olds.length, staged.length))
+    Some(stageAndSwap(spark, dirPath, fs, view.copy(files = olds), hiveKeys,
+      targetBytes, codec)(_.coalesce(_)))
   }
 
   /** PURGE — fold deletion vectors WITHOUT a whole-table rewrite (the
@@ -178,40 +165,12 @@ object ArrowMaintenance {
     ArrowOcc.sweepStaleStaging(fs, dirPath, ".compact-*")
     val dvs = ArrowDeleteVectors.live(fs, dirPath)
     if (dvs.isEmpty) return None
-    val files = liveView(spark, dir).files.filter(f =>
+    val view = liveView(spark, dir)
+    val files = view.files.filter(f =>
       dvs.contains(f.name) && onlyFiles.forall(_.contains(f.name)))
     if (files.isEmpty) return None
-    val id = java.util.UUID.randomUUID.toString.take(8)
-    val staging = s".compact-$id"
-    val n = taskCount(files, targetBytes)
-    val olds = files.map(_.rel)
-    val oldPaths = olds.map(o => fs.makeQualified(new Path(dirPath, o)).toString)
-    val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
-    // dv capture BEFORE the staging read plans (the scan masks exactly
-    // these; commit validates; replay retires) — for hive the shared
-    // tail captures its own
-    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds)
-    val df = spark.read.format("arrow-ipc").load(dir)
-      .filter(org.apache.spark.sql.functions.col(ArrowRowLevel.FileColumn)
-        .isin(oldPaths: _*))
-      .drop(ArrowRowLevel.FileColumn)
-      .coalesce(n)
-    if (hiveKeys.nonEmpty)
-      Some(stageHiveAndSwap(spark, fs, dirPath, hiveKeys, df, codec,
-        olds, id, staging))
-    else {
-      ArrowInterchange.writeStream(df,
-        new Path(dirPath, staging).toString, codec = codec,
-        bloomCols = standingBlooms(fs, dirPath, df.schema.fieldNames, Nil))
-      val stagingPath = new Path(dirPath, staging)
-      val staged = Option(fs.globStatus(new Path(stagingPath, "part-*.arrows")))
-        .getOrElse(Array.empty).map(_.getPath.getName).sorted
-      val moves = staged.map(s =>
-        s -> s.replace(".arrows", s"-compact-$id.arrows")).toMap
-      commitSwap(fs, dirPath,
-        Intent(olds.sorted, staging, moves, dvs = dvRels))
-      Some(CompactionResult(olds.length, staged.length))
-    }
+    Some(stageAndSwap(spark, dirPath, fs, view.copy(files = files),
+      ArrowHiveLayout.read(fs, dirPath), targetBytes, codec)(_.coalesce(_)))
   }
 
   /** The live view a maintenance rewrite works from: the files it may
@@ -286,10 +245,6 @@ object ArrowMaintenance {
     * be interleaved. No-op outside specs. */
   private[graft] var beforeSwapHook: () => Unit = () => ()
 
-  /** The serialized swap: under the directory's commit lock, validate
-    * every replaced file is still live, then intent → latch → replay. A
-    * conflict deletes this run's staging and rethrows for the caller's
-    * retry. */
   /** Write + replay a prepared intent — the commit tail for callers
     * that assemble their intent UNDER an already-held commit lock
     * (the equality-upsert's sequence assignment must be inside it;
@@ -302,6 +257,10 @@ object ArrowMaintenance {
     replay(fs, dirPath)
   }
 
+  /** The serialized swap: under the directory's commit lock, validate
+    * every replaced file is still live, then intent → latch → replay. A
+    * conflict deletes this run's staging and rethrows for the caller's
+    * retry. */
   private def commitSwap(fs: FileSystem, dirPath: Path,
       intent: Intent): Unit =
     try {
@@ -361,98 +320,59 @@ object ArrowMaintenance {
       .flatMap(_.cols.collect { case (c, s) if s.bloom.isDefined => c })
       .toSet.intersect(schemaFields.toSet) -- exclude
 
-  /** Hive-layout compaction: the per-value-directory small-files answer
-    * for the streaming-ingest shape (each epoch lands one file per active
-    * value directory — a day of micro-batches is thousands of tiny files
-    * per partition). One no-shuffle job stages ONLY the affected files
-    * (value directories holding ≥ 2 files; everything else is untouched)
-    * into `.compact-<id>/` PRESERVING the `key=value/` nesting: the
-    * coalesced hive read — restricted by static `_file` pushdown — lists
-    * files grouped by value directory, and the rolling hive writer routes
-    * rows back into per-value staged files (it rolls on key change, so
-    * interleaving costs extra files, never wrong routing). Standing bloom columns re-derive exactly as a COW rewrite
-    * would. The swap then rides the same crash-safe intent/replay as the
-    * flat path — relative `key=value/…` move targets, trash retention,
-    * emptied-value-dir cleanup and bare-name lineage are already its
-    * contract. Task retries are attempt-isolated: every attempt writes
-    * under its own attempt-scoped names and only the winning attempt's
-    * commit message reaches the intent, so a retried task can never
-    * collide with (or leak into) the committed state. */
-  private def compactHive(spark: SparkSession, dirPath: Path, fs: FileSystem,
+  /** The one staging + swap path of every maintenance rewrite (compact,
+    * purge, cluster, unify). The staging frame reads exactly `view`'s
+    * files — the DSv2 scan over the handed view, so nothing is listed
+    * again, and a file committed by a CONCURRENT writer after the listing
+    * is neither staged (its rows would duplicate when it survives the
+    * swap) nor replaced. `shape` gets the frame and the ~`targetBytes`
+    * task count (a coalesce, or a range-partition and sort); one SQL
+    * execution runs [[ArrowIpcDataWriter]] over its internal rows into
+    * `.compact-<id>/` — flat files at its root, `hiveKeys` files under
+    * their `key=value/` nesting — with the standing bloom columns. The
+    * staged stats become the staging manifest, every staged file moves to
+    * `…-compact-<id>.arrows` at its own relative place, and the crash-safe
+    * intent/replay swaps them in for `view`'s files. Task retries are
+    * attempt-isolated: every attempt writes under its own attempt-scoped
+    * names and only the winning attempt's commit message reaches the
+    * intent. */
+  private def stageAndSwap(spark: SparkSession, dirPath: Path, fs: FileSystem,
       view: ArrowLiveView, hiveKeys: Seq[String], targetBytes: Long,
-      codec: Option[String]): Option[CompactionResult] = {
-    // partition evolution: flat-generation files at the ROOT of an
-    // evolved table are another generation's — compaction stays
-    // per-generation (migrating them into value dirs is a rewrite
-    // decision, CALL cluster's job), so only nested files participate
-    val all = view.files.filter(_.fields.nonEmpty)
-    // INCREMENTAL by construction: files never combine ACROSS value
-    // directories, so only directories holding ≥ 2 files have any work —
-    // every other directory's files are left completely untouched (not
-    // rewritten, not trashed, no snapshot entry). At 100 TB this is the
-    // difference between "cost ∝ small-file debt" and "cost ∝ table".
-    val dirOf = (f: LiveFile) => new Path(f.rel).getParent.toString
-    val affectedDirs = all.groupBy(dirOf).filter(_._2.size > 1).keySet
-    if (affectedDirs.isEmpty) return None
-    val olds = all.filter(f => affectedDirs(dirOf(f)))
-
+      codec: Option[String])(
+      shape: (DataFrame, Int) => DataFrame): CompactionResult = {
+    val olds = view.files.map(_.rel)
     val id = java.util.UUID.randomUUID.toString.take(8)
     val staging = s".compact-$id"
-    val n = taskCount(olds, targetBytes)
-
-    // STAGE: one internal-row job over the hive read (partition columns
-    // spliced), restricted to the affected files by the scan's STATIC
-    // `_file` pushdown — planning drops every untouched file before any
-    // task launches, so the job reads exactly the small-file debt. Each
-    // task runs the rolling hive writer against the staging dir.
-    // Attempt-scoped queryIds make retries collision-free; only the
-    // collected (winning) commit messages enter the intent.
-    // makeQualified (not getFileStatus): the scan's `_file` constants are
-    // qualified path strings, and qualifying is pure string work — no
-    // per-file RPC in the function whose premise is "thousands of files"
-    val affectedPaths = olds.map(f =>
-      fs.makeQualified(new Path(dirPath, f.rel)).toString)
-    val df = spark.read.format("arrow-ipc").load(dirPath.toString)
-      .filter(org.apache.spark.sql.functions.col(ArrowRowLevel.FileColumn)
-        .isin(affectedPaths: _*))
-      .drop(ArrowRowLevel.FileColumn)
-      .coalesce(n)
-    Some(stageHiveAndSwap(spark, fs, dirPath, hiveKeys, df, codec,
-      olds.map(_.rel), id, staging))
-  }
-
-  /** Shared staging + swap tail for whole-or-partial hive rewrites
-    * (compaction, clustering): run the rolling hive writer over `df`'s
-    * internal rows into `.{staging}/`, then swap the staged files in for
-    * `olds` under the crash-safe intent/replay. */
-  private def stageHiveAndSwap(spark: SparkSession, fs: FileSystem,
-      dirPath: Path, hiveKeys: Seq[String],
-      df: org.apache.spark.sql.DataFrame, codec: Option[String],
-      olds: Seq[String], id: String, staging: String): CompactionResult = {
     val stagingPath = new Path(dirPath, staging)
-    val schema = df.schema
-    // dv capture BEFORE the staging job runs — same contract as the flat
-    // path: masked at staging, validated at commit, retired at replay
+    // capture the deletion vectors in force BEFORE the staging read plans:
+    // the read masks exactly these, the commit validates none advanced,
+    // the replay retires them (the rewrite folded them into the data)
     val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds)
+    val df = shape(stagingFrame(spark, dirPath.toString, view),
+      taskCount(view.files, targetBytes))
+    val schema = df.schema
     ArrowInterchange.codecType(codec) // validate eagerly, on the driver
     val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val blooms = standingBlooms(fs, dirPath, schema.fieldNames, hiveKeys)
+    val blooms = standingBlooms(fs, dirPath, schema.fieldNames.toSeq, hiveKeys)
     val stagingStr = stagingPath.toString
-    val msgs = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val tc = org.apache.spark.TaskContext.get()
-        val w = new ArrowIpcDataWriter(schema, stagingStr, codec,
-          s"$id-a${tc.taskAttemptId()}", pid, tc.taskAttemptId(), conf,
-          hiveKeys = hiveKeys, bloomCols = blooms)
-        tc.addTaskFailureListener(new org.apache.spark.util.TaskFailureListener {
-          override def onTaskFailure(ctx: org.apache.spark.TaskContext,
-              error: Throwable): Unit = w.abort()
-        })
-        it.foreach(w.write)
-        Iterator(w.commit().asInstanceOf[ArrowIpcCommitMessage])
-      }
-    }.collect()
+    val qe = df.queryExecution
+    val msgs = SQLExecution.withNewExecutionId(qe, Some("stageAndSwap")) {
+      qe.toRdd.mapPartitionsWithIndex { (pid, it) =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          val tc = org.apache.spark.TaskContext.get()
+          val w = new ArrowIpcDataWriter(schema, stagingStr, codec,
+            s"$id-a${tc.taskAttemptId()}", pid, tc.taskAttemptId(), conf,
+            hiveKeys = hiveKeys, bloomCols = blooms)
+          tc.addTaskFailureListener(new org.apache.spark.util.TaskFailureListener {
+            override def onTaskFailure(ctx: org.apache.spark.TaskContext,
+                error: Throwable): Unit = w.abort()
+          })
+          it.foreach(w.write)
+          Iterator(w.commit().asInstanceOf[ArrowIpcCommitMessage])
+        }
+      }.collect()
+    }
 
     val staged = msgs.toSeq.flatMap(_.files).map { case (abs, st) =>
       ArrowSnapshots.relativize(fs, stagingPath, new Path(abs)) -> st }
@@ -461,15 +381,21 @@ object ArrowMaintenance {
     ArrowFileStats.write(fs, stagingPath,
       staged.map { case (rel, st) => new Path(rel).getName -> st }.toMap)
     val moves = staged.map { case (rel, _) =>
-      val p = new Path(rel)
-      rel -> new Path(p.getParent,
-        p.getName.stripSuffix(".arrows") + s"-compact-$id.arrows").toString
-    }.toMap
+      rel -> (rel.stripSuffix(".arrows") + s"-compact-$id.arrows") }.toMap
 
     commitSwap(fs, dirPath, Intent(olds.sorted, staging, moves,
       dvs = dvRels))
     CompactionResult(olds.length, staged.length)
   }
+
+  /** A rewrite's staging frame: the table read through the DSv2 scan over
+    * `view` — exactly its files, listed by nobody again — under the
+    * schema `load(dir)` infers, resolution metadata included, so files
+    * written before a rename or drop resolve as in any read. */
+  private[sources] def stagingFrame(spark: SparkSession, dir: String,
+      view: ArrowLiveView): DataFrame =
+    GraftSqlShim.tableFrame(spark, new ArrowIpcTable(
+      ArrowInterchange.readSchema(spark, dir), dir, view = Some(view)))
 
   /** CLUSTERED REWRITE — the OPTIMIZE-sort analog: rewrite the dataset
     * ordered on `sortCols` so every file covers a narrow, nearly disjoint
@@ -518,7 +444,6 @@ object ArrowMaintenance {
     val view = liveView(spark, dir)
     if (view.files.isEmpty) return None
 
-    val schema = ArrowInterchange.readSchema(spark, dir)
     val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
     sortCols.foreach(c => require(!hiveKeys.contains(c),
       s"cluster: '$c' is a hive partition key — every value directory is " +
@@ -532,69 +457,36 @@ object ArrowMaintenance {
     // operation scoped to the partitions that actually need it.
     val files = scopedOlds(fs, dirPath, view, where)
     if (files.isEmpty) return None
-    val id = java.util.UUID.randomUUID.toString.take(8)
-    val staging = s".compact-$id"
-    val n = taskCount(files, targetBytes)
-    val olds = files.map(_.rel)
     import org.apache.spark.sql.functions.col
-    // The staging read is restricted to exactly `olds` by static `_file`
-    // pushdown — a file committed by a CONCURRENT writer after the scope
-    // listing is neither staged (no duplicate rows) nor replaced, and a
-    // scoped run reads only the in-scope files to begin with.
-    val oldPaths = olds.map(o =>
-      fs.makeQualified(new Path(dirPath, o)).toString)
-    // dv capture BEFORE the staging read plans (masked at staging,
-    // validated at commit, retired at replay); the hive branch captures
-    // inside stageHiveAndSwap, so this serves the flat branch only
-    val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds)
-    val restricted = spark.read.format("arrow-ipc").load(dir)
-      .filter(col(ArrowRowLevel.FileColumn).isin(oldPaths: _*))
-      .drop(ArrowRowLevel.FileColumn)
-    // `withSortColumns` derives SYNTHETIC sort dimensions (the z-value of
-    // [[clusterZOrdered]]); anything it adds orders the rewrite and is
-    // dropped before staging — data files carry the table schema only
-    val base = withSortColumns(restricted)
-    sortCols.foreach(c => require(base.columns.contains(c),
-      s"cluster: sort column '$c' is neither in the schema " +
-        s"(${schema.fieldNames.mkString(", ")}) nor derived by withSortColumns"))
-    val synthetic = base.columns.filterNot(schema.fieldNames.contains).toSeq
-    val out = if (hiveKeys.nonEmpty) {
-      // range-partition on (keys, sortCols): each task covers a contiguous
-      // key-then-sort range, so a large value directory SPLITS into
-      // several ~target-sized files with disjoint sort intervals while
-      // small directories share tasks; rows sorted keys-first so the
-      // rolling writer emits sorted per-directory runs
-      val df = base.repartitionByRange(n, (hiveKeys ++ sortCols).map(col): _*)
-        .sortWithinPartitions((hiveKeys ++ sortCols).map(col): _*)
+    val out = stageAndSwap(spark, dirPath, fs, view.copy(files = files),
+      hiveKeys, targetBytes, codec) { (restricted, n) =>
+      // `withSortColumns` derives SYNTHETIC sort dimensions (the z-value
+      // of [[clusterZOrdered]]); anything it adds orders the rewrite and
+      // is dropped before staging — data files carry the table schema only
+      val base = withSortColumns(restricted)
+      sortCols.foreach(c => require(base.columns.contains(c),
+        s"cluster: sort column '$c' is neither in the schema " +
+          s"(${restricted.columns.mkString(", ")}) nor derived by withSortColumns"))
+      val synthetic = base.columns.filterNot(restricted.columns.contains).toSeq
+      // range-partition on (keys, sortCols): file k covers the k-th
+      // sort-key range, so per-file intervals are ~disjoint and stats
+      // pruning turns selective. Under hive keys each task covers a
+      // contiguous key-then-sort range — a large value directory SPLITS
+      // into several ~target-sized files with disjoint sort intervals
+      // while small directories share tasks — and rows sort keys-first
+      // so the rolling writer emits sorted per-directory runs
+      val keys = (hiveKeys ++ sortCols).map(col)
+      base.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
         .drop(synthetic: _*)
-      Some(stageHiveAndSwap(spark, fs, dirPath, hiveKeys, df, codec,
-        olds, id, staging))
-    } else {
-      // global range clustering: file k covers the k-th sort-key range, so
-      // per-file intervals are ~disjoint and stats pruning turns selective
-      ArrowInterchange.writeStream(
-        base.repartitionByRange(n, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-          .drop(synthetic: _*),
-        new Path(dirPath, staging).toString, codec = codec,
-        bloomCols = standingBlooms(fs, dirPath, schema.fieldNames, Nil))
-      val stagingPath = new Path(dirPath, staging)
-      val staged = Option(fs.globStatus(new Path(stagingPath, "part-*.arrows")))
-        .getOrElse(Array.empty).map(_.getPath.getName).sorted
-      val moves = staged.map(s =>
-        s -> s.replace(".arrows", s"-compact-$id.arrows")).toMap
-      commitSwap(fs, dirPath,
-        Intent(olds.sorted, staging, moves, dvs = dvRels))
-      Some(CompactionResult(olds.length, staged.length))
     }
     // a WHOLE-TABLE cluster on a mid-evolution table physically unified
     // the layout (every file now nests by the current keys, or sits flat
     // for a flat target) — collapse the generation history so SPJ
     // grouping and aggregate pushdown come back
-    if (where.isEmpty && out.isDefined &&
+    if (where.isEmpty &&
         ArrowHiveLayout.readGenerations(fs, dirPath).size > 1)
       ArrowHiveLayout.reset(fs, dirPath, hiveKeys)
-    out
+    Some(out)
   }
 
   /** The files a (possibly scoped) rewrite replaces: the view's visible
@@ -801,8 +693,9 @@ object ArrowMaintenance {
     * metadata-only. CRASH CONVERGENCE: a crash between the swap and the
     * history collapse leaves a standing EMPTY generation — the next call
     * attributes zero files to it and collapses it for free. Same NO
-    * CONCURRENT WRITER contract as every rewrite here. */
-  /** `maxBytes` (round 15): bound ONE call's rewrite to ~that many bytes
+    * CONCURRENT WRITER contract as every rewrite here.
+    *
+    * `maxBytes` (round 15): bound ONE call's rewrite to ~that many bytes
     * of the drained generation — the value-slice granularity for a
     * generation too big for one maintenance window. A partial drain
     * rewrites a file-subset (files are independent within a generation),
@@ -835,7 +728,8 @@ object ArrowMaintenance {
     // by its own directory levels, so a file's generation is the key list
     // it was discovered under (Nil = flat)
     def genOf(f: LiveFile): Seq[String] = f.fields.map(_.name)
-    val byGen = ArrowLiveView.load(spark, dir, schema).files.groupBy(genOf)
+    val view = ArrowLiveView.load(spark, dir, schema)
+    val byGen = view.files.groupBy(genOf)
     // GENERATION-TARGETED COLLAPSE FENCE (round 16, replacing round 15's
     // one-instant global fence and its liveness caveat): a write that
     // STARTED under an old layout can still be in flight — a batch
@@ -910,47 +804,18 @@ object ArrowMaintenance {
         val prefix = oldsAll.takeWhile { f => acc += f.status.getLen; acc <= mb }
         if (prefix.isEmpty) oldsAll.take(1) else prefix
     }
-    // FILE-COUNT cap (round 15 review): the staging read restricts by a
-    // per-file `isin` literal list — a million-file generation must not
-    // plan a million-literal filter (the shared [[MaxIsinPaths]] bound
-    // the eq fold's grouping also uses). A capped call is a partial
-    // drain; the loop converges like any maxBytes slice.
-    val files = sliced.take(MaxIsinPaths)
-    val partial = files.size < oldsAll.size
-    val id = java.util.UUID.randomUUID.toString.take(8)
-    val staging = s".compact-$id"
-    val n = taskCount(files, targetBytes)
-    val olds = files.map(_.rel)
+    val partial = sliced.size < oldsAll.size
     import org.apache.spark.sql.functions.col
-    // the staging read is restricted to exactly the drained generation's
-    // files by static `_file` pushdown — the other generations are never
-    // read, which is the whole point of the incremental path
-    val oldPaths = olds.map(o =>
-      fs.makeQualified(new Path(dirPath, o)).toString)
-    val restricted = spark.read.format("arrow-ipc").load(dir)
-      .filter(col(ArrowRowLevel.FileColumn).isin(oldPaths: _*))
-      .drop(ArrowRowLevel.FileColumn)
-    val res =
-      if (current.nonEmpty) {
-        val df = restricted.repartitionByRange(n, current.map(col): _*)
-          .sortWithinPartitions(current.map(col): _*)
-        stageHiveAndSwap(spark, fs, dirPath, current, df, codec,
-          olds, id, staging)
-      } else {
-        val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds)
-        ArrowInterchange.writeStream(restricted.repartition(n),
-          new Path(dirPath, staging).toString, codec = codec,
-          bloomCols = standingBlooms(fs, dirPath, schema.fieldNames.toSeq, Nil))
-        val stagingPath = new Path(dirPath, staging)
-        val staged = Option(fs.globStatus(new Path(stagingPath, "part-*.arrows")))
-          .getOrElse(Array.empty).map(_.getPath.getName).sorted
-        val moves = staged.map(s =>
-          s -> s.replace(".arrows", s"-compact-$id.arrows")).toMap
-        commitSwap(fs, dirPath,
-          Intent(olds.sorted, staging, moves, dvs = dvRels))
-        CompactionResult(olds.length, staged.length)
-      }
-    // a PARTIAL (byte-bounded or count-capped) drain leaves the
+    // the staging read is exactly the drained generation's files — the
+    // other generations are never read, which is the whole point of the
+    // incremental path
+    val res = stageAndSwap(spark, dirPath, fs, view.copy(files = sliced),
+      current, targetBytes, codec) { (restricted, n) =>
+      if (current.isEmpty) restricted.repartition(n)
+      else restricted.repartitionByRange(n, current.map(col): _*)
+        .sortWithinPartitions(current.map(col): _*)
+    }
+    // a PARTIAL (byte-bounded) drain leaves the
     // generation standing with its undrained files — no collapse, no
     // sweep; the final slice's call does both. The collapse re-checks
     // the generation-targeted fence UNDER the lock: a write still
@@ -976,19 +841,35 @@ object ArrowMaintenance {
     * of another generation sharing the first key keep their homes; a
     * concurrent mint loses nothing (the delete just fails). */
   private def sweepEmptyValueDirs(fs: FileSystem, dirPath: Path,
-      firstKey: String): Unit = {
-    def clean(at: Path): Unit = {
-      Option(scala.util.Try(fs.listStatus(at)).getOrElse(null))
-        .getOrElse(Array.empty)
-        .filter(_.isDirectory).foreach(st => clean(st.getPath))
-      if (scala.util.Try(fs.listStatus(at)).toOption.forall(_.isEmpty))
-        scala.util.Try(fs.delete(at, false))
-    }
+      firstKey: String): Unit =
     Option(fs.globStatus(new Path(dirPath,
         ArrowHiveLayout.escape(firstKey) + "=*")))
       .getOrElse(Array.empty).filter(_.isDirectory)
-      .foreach(st => clean(st.getPath))
+      .foreach(st => dropEmptyTree(fs, st.getPath))
+
+  /** Depth-first, best-effort removal of every directory under (and
+    * including) `at` that holds nothing: a directory with any file keeps
+    * it and its ancestors, and a concurrent writer minting a directory
+    * loses nothing (the delete just fails). */
+  private def dropEmptyTree(fs: FileSystem, at: Path): Unit = {
+    Option(scala.util.Try(fs.listStatus(at)).getOrElse(null))
+      .getOrElse(Array.empty)
+      .filter(_.isDirectory).foreach(st => dropEmptyTree(fs, st.getPath))
+    if (scala.util.Try(fs.listStatus(at)).toOption.forall(_.isEmpty))
+      scala.util.Try(fs.delete(at, false))
   }
+
+  /** Drop the parent directories of `files` (dataset-relative or
+    * absolute) that a replay left empty — hive value directories
+    * discovery would prune anyway; this keeps listings clean. The root
+    * itself always stays. */
+  private def dropEmptiedParents(fs: FileSystem, dirPath: Path,
+      files: Seq[String]): Unit =
+    files.map(f => new Path(dirPath, f).getParent).distinct.foreach { d =>
+      if (d != dirPath && fs.exists(d) &&
+          Option(fs.listStatus(d)).forall(_.isEmpty))
+        fs.delete(d, false)
+    }
 
   /** Outcome of [[expireSnapshots]]. */
   case class ExpireResult(dropped: Int, trashDeleted: Int)
@@ -1300,14 +1181,7 @@ object ArrowMaintenance {
     // gone) — best-effort: a concurrent moveToTrash may be minting a
     // directory this instant, and losing the cosmetic cleanup beats
     // failing its rename
-    def clean(at: Path): Unit = {
-      Option(scala.util.Try(fs.listStatus(at)).getOrElse(null))
-        .getOrElse(Array.empty)
-        .filter(_.isDirectory).foreach(st => clean(st.getPath))
-      if (scala.util.Try(fs.listStatus(at)).toOption.forall(_.isEmpty))
-        scala.util.Try(fs.delete(at, false))
-    }
-    if (fs.exists(trashRoot)) clean(trashRoot)
+    if (fs.exists(trashRoot)) dropEmptyTree(fs, trashRoot)
     ExpireResult(dropped, doomed.size)
   }
 
@@ -1460,14 +1334,8 @@ object ArrowMaintenance {
     ArrowSnapshots.append(fs, dirPath, Nil, rels ++ dvRels, op = "delete")
     // manifests key on bare file names (unique across value directories)
     scrubStats(fs, dirPath, doomed.map(s => new Path(s).getName).toSet)
-    // empty hive value directories left behind are dropped (discovery
-    // would prune them anyway; this keeps listings clean)
     if (ArrowHiveLayout.read(fs, dirPath).nonEmpty)
-      doomed.map(s => new Path(s).getParent).distinct.foreach { d =>
-        if (d != dirPath && fs.exists(d) &&
-            Option(fs.listStatus(d)).forall(_.isEmpty))
-          fs.delete(d, false)
-      }
+      dropEmptiedParents(fs, dirPath, doomed)
     // latch restore defers to any batch append still in flight — ITS
     // commit restores once no pending marker remains
     ArrowOcc.restoreLatch(fs, dirPath)
@@ -1477,15 +1345,9 @@ object ArrowMaintenance {
   private def writeDeleteIntent(fs: FileSystem, dir: Path,
       doomed: Seq[String]): Unit = {
     val body = doomed.map(s => "\"" + esc(s) + "\"").mkString("[", ",", "]")
-    // temp + rename: a torn intent must not wedge recover()
-    val tmp = new Path(dir, s"$DeleteIntentFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fin = new Path(dir, DeleteIntentFile)
-    fs.delete(fin, false)
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"delete: rename $tmp -> $fin failed")
+    // atomic like every intent: a torn intent must not wedge recover()
+    ArrowOcc.writeAtomic(fs, new Path(dir, DeleteIntentFile),
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   private def readDeleteIntent(fs: FileSystem, dir: Path): Seq[String] = {
@@ -1788,11 +1650,7 @@ object ArrowMaintenance {
     intent.dvs.foreach(d => ArrowSnapshots.moveToTrash(fs, dirPath, d))
     ArrowSnapshots.append(fs, dirPath,
       intent.moves.values.toSeq, intent.olds ++ intent.dvs, op = intent.kind)
-    intent.olds.map(o => new Path(dirPath, o).getParent).distinct.foreach { d =>
-      if (d != dirPath && fs.exists(d) &&
-          Option(fs.listStatus(d)).forall(_.isEmpty))
-        fs.delete(d, false)
-    }
+    dropEmptiedParents(fs, dirPath, intent.olds)
     // layout claim: compaction coalesces across keys, destroying any
     // key-grouped claim; a COW rewrite clustered its output on the
     // standing keys, so the claim it recorded in the intent is restored
@@ -1858,17 +1716,11 @@ object ArrowMaintenance {
         .append("\",\"txnVer\":").append(ver)
     }
     sb.append("}")
-    // temp + rename: a crash mid-write must leave NO intent file (the
-    // stale staging dir is swept by the next compact) rather than a
-    // corrupt one that wedges every later recover()
-    val tmp = new Path(dir, s"$IntentFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fin = new Path(dir, IntentFile)
-    fs.delete(fin, false)
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"compaction: rename $tmp -> $fin failed")
+    // atomic: a crash mid-write must leave NO intent file (the stale
+    // staging dir is swept by the next compact) rather than a corrupt one
+    // that wedges every later recover()
+    ArrowOcc.writeAtomic(fs, new Path(dir, IntentFile),
+      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   private[graft] def readIntent(fs: FileSystem, dir: Path): Intent = {

@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ArrowMaintenance, ArrowOcc, ConditionalPutCommitStore, SimulatedObjectStore}
+import graft.sources.{ArrowMaintenance, ArrowOcc, ConditionalPutCommitStore,
+  ObjectStoreApi, SimulatedObjectStore}
 
 /** The OCC protocol over a CONDITIONAL-WRITE object store (round 11):
   * every commit primitive — claim, release, stale-break, sidecar flip —
@@ -19,11 +20,12 @@ class ArrowCommitStoreSpec extends AnyFunSuite {
   private def fsOf(dir: String) = new Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Register the conditional-put store for `dir` and run `body`. */
-  private def withConditionalStore[T](dir: String)(body: => T): T = {
+  /** Register the conditional-put store over `api` for `dir` and run
+    * `body`. */
+  private def withConditionalStore[T](dir: String,
+      api: ObjectStoreApi = new SimulatedObjectStore)(body: => T): T = {
     val key = fsOf(dir).makeQualified(new Path(dir)).toString
-    ArrowOcc.storeOverrides.put(key,
-      new ConditionalPutCommitStore(new SimulatedObjectStore))
+    ArrowOcc.storeOverrides.put(key, new ConditionalPutCommitStore(api))
     try body finally ArrowOcc.storeOverrides.remove(key)
   }
 
@@ -112,6 +114,43 @@ class ArrowCommitStoreSpec extends AnyFunSuite {
       stop = true
       readers.foreach(_.join(30000))
       assert(seen.isEmpty, s"reader observed torn content: ${seen.peek()}")
+    }
+  }
+
+  /** A simulated store that records every plain-PUT key. */
+  private final class RecordingStore extends ObjectStoreApi {
+    private val inner = new SimulatedObjectStore
+    val puts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    override def get(k: String): Option[Obj] =
+      inner.get(k).map(o => Obj(o.bytes, o.tag, o.mtimeMs))
+    override def put(k: String, bytes: Array[Byte]): Unit = {
+      puts.add(k)
+      inner.put(k, bytes)
+    }
+    override def putIfAbsent(k: String, bytes: Array[Byte]): Boolean =
+      inner.putIfAbsent(k, bytes)
+    override def deleteIfMatch(k: String, tag: String): Boolean =
+      inner.deleteIfMatch(k, tag)
+  }
+
+  test("compaction and metadata DELETE intents land through the commit store") {
+    val dir = tmp("graft_cps_intents")
+    val store = new RecordingStore
+    withConditionalStore(dir, store) {
+      (0 until 3).foreach { i =>
+        spark.range(i * 100, (i + 1) * 100).select(col("id"))
+          .coalesce(1).write.format("arrow-ipc").mode("append").save(dir)
+      }
+      assert(ArrowMaintenance.compact(spark, dir).isDefined)
+      spark.range(1000, 1100).select(col("id"))
+        .coalesce(1).write.format("arrow-ipc").mode("append").save(dir)
+      val res = ArrowMaintenance.deleteWhere(spark, dir,
+        Array(org.apache.spark.sql.sources.GreaterThanOrEqual("id", 1000L)))
+      assert(res.deleted === 1)
+      val put = store.puts.toArray.map(k => new Path(k.toString).getName).toSet
+      assert(put.contains("_compaction.json"), s"puts: $put")
+      assert(put.contains("_delete.json"), s"puts: $put")
+      assert(spark.read.format("arrow-ipc").load(dir).count() === 300)
     }
   }
 

@@ -517,4 +517,66 @@ class ArrowMaintenanceSpec extends AnyFunSuite {
     assert(spark.read.format("arrow-ipc").load(dir).count() === 150)
     assert(fs.exists(new org.apache.hadoop.fs.Path(dirPath, "_SUCCESS")))
   }
+
+  /** (SQL executions reported, jobs run outside any execution) while
+    * `body` runs on this thread. */
+  private def executionsOf(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def settle(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, Long.box(30000L))
+    }
+    val execs = new java.util.concurrent.atomic.AtomicInteger
+    val bare = new java.util.concurrent.atomic.AtomicInteger
+    val group = s"staging-${java.util.UUID.randomUUID}"
+    val onExec = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        execs.incrementAndGet()
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = execs.incrementAndGet()
+    }
+    val onJob = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group &&
+            e.properties.getProperty("spark.sql.execution.id") == null)
+          bare.incrementAndGet()
+    }
+    settle()
+    spark.listenerManager.register(onExec)
+    sc.addSparkListener(onJob)
+    sc.setJobGroup(group, "staging executions")
+    try body
+    finally {
+      sc.clearJobGroup()
+      settle()
+      spark.listenerManager.unregister(onExec)
+      sc.removeSparkListener(onJob)
+    }
+    (execs.get, bare.get)
+  }
+
+  test("flat and hive compactions stage under exactly one SQL execution") {
+    val flat = tmp("graft_compact_exec_flat")
+    val hive = tmp("graft_compact_exec_hive")
+    (0 until 3).foreach { i =>
+      val rows = spark.range(i * 60, (i + 1) * 60)
+        .select((col("id") % 2).cast("string").as("k"), col("id"))
+        .coalesce(1)
+      val mode = if (i == 0) "overwrite" else "append"
+      rows.write.format("arrow-ipc").mode(mode).save(flat)
+      rows.write.format("arrow-ipc").mode(mode)
+        .option("hivePartitionKeys", "k").save(hive)
+    }
+    Seq(flat, hive).foreach { dir =>
+      val (execs, bare) = executionsOf {
+        assert(ArrowMaintenance.compact(spark, dir).isDefined)
+      }
+      assert((execs, bare) === ((1, 0)), s"executions, bare jobs on $dir")
+      assert(spark.read.format("arrow-ipc").load(dir).count() === 180)
+    }
+  }
 }

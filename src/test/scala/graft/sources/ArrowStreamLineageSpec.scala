@@ -11,7 +11,9 @@ import graft.TestSpark
 /** The micro-batch stream's compaction-lineage contract, exercised at the
   * MicroBatchStream level (the package-private seam the end-to-end
   * ArrowStreamSpec cannot reach): full coverage absorbs, partial coverage
-  * fails the poll loudly instead of duplicating or dropping rows. */
+  * fails the poll loudly instead of duplicating or dropping rows. Also
+  * the other package-private seam of a compaction: the staging frame a
+  * rewrite reads over its own live view. */
 class ArrowStreamLineageSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -58,5 +60,38 @@ class ArrowStreamLineageSpec extends AnyFunSuite {
       .asInstanceOf[ArrowFilesOffset]
     assert(cold.files.size === 1)
     assert(stream.planInputPartitions(ArrowFilesOffset(Nil), cold).length === 1)
+  }
+
+  test("a staging frame reads exactly its handed view; aggregates answer from it") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_staging_frame").toString + "/t"
+    // two sharded commits of two files each: a commit's envelope covers
+    // a file outside a view holding one file of each
+    val shardKey = "spark.graft.arrow.statsShardFiles"
+    spark.conf.set(shardKey, "2")
+    try (0 until 2).foreach { i =>
+      spark.range(i * 200L, (i + 1) * 200L, 1, 2).select(col("id"))
+        .write.format("arrow-ipc").mode("append").save(dir)
+    } finally spark.conf.unset(shardKey)
+    val view = ArrowLiveView.load(spark, dir,
+      ArrowInterchange.readSchema(spark, dir))
+    assert(view.files.size === 4)
+    val perFile = spark.read.format("arrow-ipc").load(dir)
+      .groupBy(col("_file")).agg(count(lit(1)), min("id"), max("id"))
+      .collect().map(r => new Path(r.getString(0)).getName ->
+        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val two = view.files.groupBy(f => ArrowOcc.nameQueryId(f.name))
+      .values.map(_.minBy(_.name)).toSeq
+    assert(two.size === 2)
+    val want = two.map(f => perFile(f.name))
+    val frame = ArrowMaintenance.stagingFrame(spark, dir,
+      view.copy(files = two))
+    assert(frame.count() === want.map(_._1).sum)
+    val bounds = frame.agg(min("id"), max("id"))
+    assert(bounds.queryExecution.executedPlan.toString
+      .contains("PushedAggregation"))
+    assert(bounds.head() === org.apache.spark.sql.Row(
+      want.map(_._2).min, want.map(_._3).max))
+    assert(frame.collect().length === want.map(_._1).sum)
   }
 }
