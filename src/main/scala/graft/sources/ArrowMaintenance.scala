@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 
 /** Maintenance for arrow-ipc directories: COMPACTION — the small-files
   * answer for streaming appends. A micro-batch writer (or many small
@@ -119,7 +120,8 @@ object ArrowMaintenance {
     // the live view (an in-flight epoch's files are fresh AND
     // uncommitted — invisible either way)
     ArrowStreamCommits.cleanOrphans(fs, dirPath)
-    val view = liveView(spark, dir)
+    lazy val schema = ArrowInterchange.readSchema(spark, dir)
+    val view = ArrowLiveView.load(spark, dir, schema)
     val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
     // compaction stays per-generation: under a hive layout the root files
     // of an evolved table are the flat generation's (migrating them into
@@ -133,8 +135,8 @@ object ArrowMaintenance {
         nested.filter(f => affected(dirOf(f)))
       }
     if (olds.length <= 1) return None
-    Some(stageAndSwap(spark, dirPath, fs, view.copy(files = olds), hiveKeys,
-      targetBytes, codec)(_.coalesce(_)))
+    Some(stageAndSwap(spark, dirPath, fs, view.copy(files = olds), schema,
+      hiveKeys, targetBytes, codec)(_.coalesce(_)))
   }
 
   /** PURGE — fold deletion vectors WITHOUT a whole-table rewrite (the
@@ -165,18 +167,20 @@ object ArrowMaintenance {
     ArrowOcc.sweepStaleStaging(fs, dirPath, ".compact-*")
     val dvs = ArrowDeleteVectors.live(fs, dirPath)
     if (dvs.isEmpty) return None
-    val view = liveView(spark, dir)
+    lazy val schema = ArrowInterchange.readSchema(spark, dir)
+    val view = ArrowLiveView.load(spark, dir, schema)
     val files = view.files.filter(f =>
       dvs.contains(f.name) && onlyFiles.forall(_.contains(f.name)))
     if (files.isEmpty) return None
-    Some(stageAndSwap(spark, dirPath, fs, view.copy(files = files),
+    Some(stageAndSwap(spark, dirPath, fs, view.copy(files = files), schema,
       ArrowHiveLayout.read(fs, dirPath), targetBytes, codec)(_.coalesce(_)))
   }
 
-  /** The live view a maintenance rewrite works from: the files it may
+  /** The live view a maintenance pass works from: the files it may
     * replace are the view's visible ones — committed stream epochs only,
     * no file of an in-flight batch append (see [[ArrowLiveView]]). No
-    * gate wait: [[recover]] has already run, and a swap racing this one
+    * gate wait: [[recover]] has already run, a pass that stages waits
+    * out a closed gate in [[stageAndSwap]], and a swap racing this one
     * loses at commit-time validation. */
   private def liveView(spark: SparkSession, dir: String): ArrowLiveView =
     ArrowLiveView.load(spark, dir, ArrowInterchange.readSchema(spark, dir))
@@ -321,11 +325,19 @@ object ArrowMaintenance {
       .toSet.intersect(schemaFields.toSet) -- exclude
 
   /** The one staging + swap path of every maintenance rewrite (compact,
-    * purge, cluster, unify). The staging frame reads exactly `view`'s
-    * files — the DSv2 scan over the handed view, so nothing is listed
-    * again, and a file committed by a CONCURRENT writer after the listing
-    * is neither staged (its rows would duplicate when it survives the
-    * swap) nor replaced. `shape` gets the frame and the ~`targetBytes`
+    * purge, cluster, unify). `listed` is the pass's live view narrowed to
+    * the files it replaces, `tableSchema` the schema it was resolved
+    * under. The staging read keeps a batch read's completeness gate: a
+    * view listed under a closed gate is re-listed once the gate opens
+    * (a concurrent swap's latch-down window), and a gate still closed
+    * past `spark.graft.arrow.readGateWaitMs` — a crashed append's files
+    * under a dropped latch, its marker stale — refuses (a refusal
+    * [[lostRace]] retries), so partial data is never swapped in as
+    * committed. The staging frame reads exactly `view`'s files — the
+    * DSv2 scan over the handed view, so nothing is listed again, and a
+    * file committed by a CONCURRENT writer after the listing is neither
+    * staged (its rows would duplicate when it survives the swap) nor
+    * replaced. `shape` gets the frame and the ~`targetBytes`
     * task count (a coalesce, or a range-partition and sort); one SQL
     * execution runs [[ArrowIpcDataWriter]] over its internal rows into
     * `.compact-<id>/` — flat files at its root, `hiveKeys` files under
@@ -337,9 +349,17 @@ object ArrowMaintenance {
     * names and only the winning attempt's commit message reaches the
     * intent. */
   private def stageAndSwap(spark: SparkSession, dirPath: Path, fs: FileSystem,
-      view: ArrowLiveView, hiveKeys: Seq[String], targetBytes: Long,
-      codec: Option[String])(
+      listed: ArrowLiveView, tableSchema: StructType, hiveKeys: Seq[String],
+      targetBytes: Long, codec: Option[String])(
       shape: (DataFrame, Int) => DataFrame): CompactionResult = {
+    val view = if (listed.open) listed else {
+      val fresh = ArrowLiveView.forRead(spark, dirPath.toString, tableSchema)
+      val wanted = listed.files.map(_.rel).toSet
+      val kept = fresh.files.filter(f => wanted(f.rel))
+      if (kept.size < wanted.size) throw new ArrowOcc.CommitConflictException(
+        s"arrow-ipc: $dirPath changed while its gate was closed; re-listing")
+      fresh.copy(files = kept)
+    }
     val olds = view.files.map(_.rel)
     val id = java.util.UUID.randomUUID.toString.take(8)
     val staging = s".compact-$id"
@@ -348,7 +368,7 @@ object ArrowMaintenance {
     // the read masks exactly these, the commit validates none advanced,
     // the replay retires them (the rewrite folded them into the data)
     val dvRels = ArrowDeleteVectors.relsFor(fs, dirPath, olds)
-    val df = shape(stagingFrame(spark, dirPath.toString, view),
+    val df = shape(stagingFrame(spark, dirPath.toString, tableSchema, view),
       taskCount(view.files, targetBytes))
     val schema = df.schema
     ArrowInterchange.codecType(codec) // validate eagerly, on the driver
@@ -389,13 +409,14 @@ object ArrowMaintenance {
   }
 
   /** A rewrite's staging frame: the table read through the DSv2 scan over
-    * `view` — exactly its files, listed by nobody again — under the
-    * schema `load(dir)` infers, resolution metadata included, so files
-    * written before a rename or drop resolve as in any read. */
+    * `view` — exactly its files, listed by nobody again — under `schema`,
+    * the one `load(dir)` infers ([[ArrowInterchange.readSchema]]) and
+    * `view` was resolved under, so files written before a rename or drop
+    * resolve as in any read. */
   private[sources] def stagingFrame(spark: SparkSession, dir: String,
-      view: ArrowLiveView): DataFrame =
-    GraftSqlShim.tableFrame(spark, new ArrowIpcTable(
-      ArrowInterchange.readSchema(spark, dir), dir, view = Some(view)))
+      schema: StructType, view: ArrowLiveView): DataFrame =
+    GraftSqlShim.tableFrame(spark, new ArrowIpcTable(schema, dir,
+      view = Some(view)))
 
   /** CLUSTERED REWRITE — the OPTIMIZE-sort analog: rewrite the dataset
     * ordered on `sortCols` so every file covers a narrow, nearly disjoint
@@ -441,7 +462,8 @@ object ArrowMaintenance {
     // nothing to rewrite (directory absent, empty, or not yet committed —
     // e.g. a maintenance loop that started before the first ingest batch
     // landed): a no-op, not an error
-    val view = liveView(spark, dir)
+    lazy val schema = ArrowInterchange.readSchema(spark, dir)
+    val view = ArrowLiveView.load(spark, dir, schema)
     if (view.files.isEmpty) return None
 
     val hiveKeys = ArrowHiveLayout.read(fs, dirPath)
@@ -459,7 +481,7 @@ object ArrowMaintenance {
     if (files.isEmpty) return None
     import org.apache.spark.sql.functions.col
     val out = stageAndSwap(spark, dirPath, fs, view.copy(files = files),
-      hiveKeys, targetBytes, codec) { (restricted, n) =>
+      schema, hiveKeys, targetBytes, codec) { (restricted, n) =>
       // `withSortColumns` derives SYNTHETIC sort dimensions (the z-value
       // of [[clusterZOrdered]]); anything it adds orders the rewrite and
       // is dropped before staging — data files carry the table schema only
@@ -810,7 +832,7 @@ object ArrowMaintenance {
     // other generations are never read, which is the whole point of the
     // incremental path
     val res = stageAndSwap(spark, dirPath, fs, view.copy(files = sliced),
-      current, targetBytes, codec) { (restricted, n) =>
+      schema, current, targetBytes, codec) { (restricted, n) =>
       if (current.isEmpty) restricted.repartition(n)
       else restricted.repartitionByRange(n, current.map(col): _*)
         .sortWithinPartitions(current.map(col): _*)

@@ -579,4 +579,45 @@ class ArrowMaintenanceSpec extends AnyFunSuite {
       assert(spark.read.format("arrow-ipc").load(dir).count() === 180)
     }
   }
+
+  test("a directory torn by a crashed append is refused, never swapped in") {
+    val dir = tmp("graft_compact_torn")
+    (0 until 3).foreach { i =>
+      spark.range(i * 50, (i + 1) * 50).toDF("id").coalesce(1)
+        .write.format("arrow-ipc").mode("append").save(dir)
+    }
+    val fs = fsOf(dir)
+    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    // what a crashed batch append leaves: its files in place, the latch
+    // down, no intent, and its pending marker gone stale (so it hides
+    // nothing and the gate stays closed)
+    fs.delete(new org.apache.hadoop.fs.Path(dirPath, "_SUCCESS"), false)
+    graft.sources.ArrowOcc.markPending(fs, dirPath, "q-crashed")
+    fs.setTimes(new org.apache.hadoop.fs.Path(dirPath, "_pending-q-crashed"),
+      0L, -1L)
+    val before = partFiles(dir)
+    spark.conf.set("spark.graft.arrow.readGateWaitMs", "100")
+    try {
+      Seq[() => Any](
+        () => ArrowMaintenance.compact(spark, dir, targetBytes = 1L << 20),
+        () => ArrowMaintenance.cluster(spark, dir, Seq("id"))
+      ).foreach { op =>
+        val e = intercept[Exception](op())
+        assert(e.getMessage.contains("refusing to read partial data"))
+        assert(!fs.exists(new org.apache.hadoop.fs.Path(dirPath, "_SUCCESS")))
+        assert(partFiles(dir) === before)
+      }
+    } finally spark.conf.unset("spark.graft.arrow.readGateWaitMs")
+    // a gate that opens within the wait is waited out: the staging
+    // re-lists and the compaction goes through
+    val restorer = new Thread(() => {
+      Thread.sleep(500)
+      graft.sources.ArrowOcc.restoreLatch(fs, dirPath)
+    })
+    restorer.start()
+    val res = ArrowMaintenance.compact(spark, dir, targetBytes = 1L << 20)
+    restorer.join()
+    assert(res.exists(_.oldFiles == 3))
+    assert(spark.read.format("arrow-ipc").load(dir).count() === 150)
+  }
 }

@@ -73,8 +73,8 @@ class ArrowStreamLineageSpec extends AnyFunSuite {
       spark.range(i * 200L, (i + 1) * 200L, 1, 2).select(col("id"))
         .write.format("arrow-ipc").mode("append").save(dir)
     } finally spark.conf.unset(shardKey)
-    val view = ArrowLiveView.load(spark, dir,
-      ArrowInterchange.readSchema(spark, dir))
+    val schema = ArrowInterchange.readSchema(spark, dir)
+    val view = ArrowLiveView.load(spark, dir, schema)
     assert(view.files.size === 4)
     val perFile = spark.read.format("arrow-ipc").load(dir)
       .groupBy(col("_file")).agg(count(lit(1)), min("id"), max("id"))
@@ -84,7 +84,7 @@ class ArrowStreamLineageSpec extends AnyFunSuite {
       .values.map(_.minBy(_.name)).toSeq
     assert(two.size === 2)
     val want = two.map(f => perFile(f.name))
-    val frame = ArrowMaintenance.stagingFrame(spark, dir,
+    val frame = ArrowMaintenance.stagingFrame(spark, dir, schema,
       view.copy(files = two))
     assert(frame.count() === want.map(_._1).sum)
     val bounds = frame.agg(min("id"), max("id"))
