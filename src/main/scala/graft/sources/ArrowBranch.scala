@@ -14,13 +14,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * OCC, pruning) works on it unchanged because it is just a directory
   * table. [[write]] creates-or-appends through the ordinary DSv2 path;
   * [[read]] serves main ∪ branch (the overlay view an auditor
-  * validates); [[publish]] hands the branch directory to the generic
-  * intent/replay AS THE STAGING DIR — data files move into the table
-  * root, their stats fold into the root manifest, one snapshot entry
-  * (op = "publish") lands, and the branch metadata dies with the
-  * staging cleanup, all under the commit lock with the same crash
-  * convergence as every other swap (a crash mid-publish leaves
-  * intent + staging; recover() finishes it). [[drop]] abandons.
+  * validates); [[publish]] hands the branch directory to the one
+  * commit record every swap writes ([[ArrowMaintenance.Intent]], kind
+  * "publish") AS THE STAGING DIR — data files move into the table root,
+  * their stats fold into the root manifest, one snapshot entry lands,
+  * and the branch metadata dies with the staging cleanup, all under the
+  * commit lock with the same crash convergence as every other swap (a
+  * crash mid-publish leaves intent + staging; recover() finishes it).
+  * [[drop]] abandons.
   *
   * Contract: branches are APPEND overlays — the WAP shape (stage an
   * ingest batch, audit, publish). Row-level DML against a branch is

@@ -24,7 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - crash before the intent → nothing landed; the restarted batch
   *    re-runs from scratch (the MERGE reads the unchanged snapshot);
-  *  - crash after the intent → recover()/the next commit replays
+  *  - crash after the intent → recover() (the restarted statement runs
+  *    it first; a commit never overwrites a pending record) replays
   *    merge + ledger together; the restarted batch's re-run then skips
   *    on the ledger check.
   *

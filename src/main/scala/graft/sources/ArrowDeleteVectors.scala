@@ -31,12 +31,12 @@ import org.apache.spark.sql.SparkSession
   *    the vector set in force at that snapshot (time travel and the
   *    change feed ride the ordinary log entries: adds = new gens,
   *    removes = old gens);
-  *  - commits are crash-safe via the same intent/replay discipline as
-  *    compaction: vectors are staged, then under the commit lock the
-  *    intent lands, the `_SUCCESS` latch drops (lock-free readers never
-  *    see a torn multi-file delete), staged vectors rename into place,
-  *    the snapshot entry lands, and the latch restores; [[replayMor]]
-  *    converges any crash-and-replay sequence.
+  *  - commits are crash-safe through the one commit record every swap
+  *    writes ([[ArrowMaintenance.Intent]]): vectors are staged, then
+  *    under the commit lock the record lands, the `_SUCCESS` latch drops
+  *    (lock-free readers never see a torn multi-file delete), staged
+  *    vectors flip into place, the snapshot entry lands, and the latch
+  *    restores; the one replay converges any crash-and-replay sequence.
   *
   * Scale shape: a delete's cost is one scan of the statically-kept
   * candidate files (stats/bloom pruning applies — the scan, not this
@@ -67,7 +67,7 @@ import org.apache.spark.sql.SparkSession
   * file's current vector ([[stageVectors]]'s re-delete check — the
   * 9-writer stress probe caught exactly this as a silent duplicate
   * before the check existed), and one that lands AFTER surfaces as the
-  * pinned `oldDv` having advanced (commit-time `moved` validation). A
+  * pinned `flip.old` having advanced (commit-time `moved` validation). A
   * racing COW rewrite of a masked file is caught by olds-live
   * validation. Either way the statement throws
   * [[ArrowOcc.CommitConflictException]] having committed nothing, and
@@ -81,7 +81,6 @@ import org.apache.spark.sql.SparkSession
 private[graft] object ArrowDeleteVectors {
 
   val DvDir = ".dv"
-  private[graft] val MorIntentFile = "_mor.json"
   private[graft] val CdcLedgerFile = "_cdc_applied.json"
 
   // ── CDC idempotency ledger (round 12) ────────────────────────────────
@@ -144,9 +143,8 @@ private[graft] object ArrowDeleteVectors {
   private[sources] def currentCdcTxn(): Option[(String, Long)] = cdcTxn()
 
   /** Fold `(app, ver)` into the ledger — monotone max per app, atomic
-    * flip. Runs under the commit lock (from [[replayMor]] and the COW
-    * swap's replay), so the read-modify-write cannot interleave with
-    * another committer. */
+    * flip. Runs under the commit lock (from the one commit replay), so
+    * the read-modify-write cannot interleave with another committer. */
   private[sources] def foldCdcLedger(fs: FileSystem, dirPath: Path,
       app: String, ver: Long): Unit = {
     val current: Map[String, Long] = {
@@ -168,7 +166,7 @@ private[graft] object ArrowDeleteVectors {
     }
     val next = current + (app -> math.max(ver, current.getOrElse(app, Long.MinValue)))
     val body = next.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + esc(k) + "\":" + v
+      "\"" + ArrowFileStats.esc(k) + "\":" + v
     }.mkString("{", ",", "}")
     ArrowOcc.writeAtomic(fs, new Path(dirPath, CdcLedgerFile),
       body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -556,7 +554,7 @@ private[graft] object ArrowDeleteVectors {
     * [[ArrowOcc.CommitConflictException]] every lost race throws and
     * [[ArrowDml]]'s bounded retry re-plans it wholesale (Delta Lake's
     * ConcurrentDeleteReadException is the semantic precedent). The pin
-    * (`oldDv` → commitStaged's `moved` check) covers vectors advancing
+    * (`flip.old` → commitStaged's `moved` check) covers vectors advancing
     * AFTER this staging read; this check covers advances BETWEEN the
     * scan and the staging read — together the scan-to-commit span.
     *
@@ -584,7 +582,7 @@ private[graft] object ArrowDeleteVectors {
           if (failOnRedelete) sortedClash(prior, fresh).foreach { p =>
             // clean what this call staged so far, then lose loudly
             out.foreach(m => scala.util.Try(
-              fs.delete(new Path(dirPath, m.stagedRel), false)))
+              fs.delete(new Path(dirPath, m.flip.staged), false)))
             throw new ArrowOcc.CommitConflictException(
               s"arrow-ipc occ: MOR delta on $dirPath lost its race — row " +
                 s"position $p of $name was deleted (or updated) by a " +
@@ -597,8 +595,8 @@ private[graft] object ArrowDeleteVectors {
       val finalRel = dvRel(name, gen, merged.length.toLong)
       val stagedRel = s"$DvDir/.mor-$stageId-${new Path(finalRel).getName}"
       ArrowOcc.writeAtomic(fs, new Path(dirPath, stagedRel), encode(merged))
-      out += MorMove(stagedRel, finalRel, old.map(_.rel),
-        relOf(fs, dirPath, path), merged.length.toLong)
+      out += MorMove(ArrowMaintenance.DvFlip(stagedRel, finalRel, old.map(_.rel)),
+        relOf(fs, dirPath, path))
     }
     out.toArray
   }
@@ -645,7 +643,7 @@ private[graft] object ArrowDeleteVectors {
     if (!ArrowEqualityDeletes.foldInProgress.get() &&
         ArrowEqualityDeletes.any(fs, dirPath)) {
       staged.foreach(m =>
-        scala.util.Try(fs.delete(new Path(dirPath, m.stagedRel), false)))
+        scala.util.Try(fs.delete(new Path(dirPath, m.flip.staged), false)))
       data.foreach { case (s, _) =>
         scala.util.Try(fs.delete(new Path(dirPath, s), true)) }
       throw new UnsupportedOperationException(
@@ -656,7 +654,7 @@ private[graft] object ArrowDeleteVectors {
     val txn = cdcTxn()
     def cleanStaged(): Unit = {
       staged.foreach(m =>
-        scala.util.Try(fs.delete(new Path(dirPath, m.stagedRel), false)))
+        scala.util.Try(fs.delete(new Path(dirPath, m.flip.staged), false)))
       data.foreach { case (s, _) =>
         scala.util.Try(fs.delete(new Path(dirPath, s), true)) }
     }
@@ -670,15 +668,19 @@ private[graft] object ArrowDeleteVectors {
               "MOR delta")
             val current = live(fs, dirPath)
             val moved = staged.filter(m =>
-              current.get(new Path(m.dataRel).getName).map(_.rel) != m.oldDv)
+              current.get(new Path(m.dataRel).getName).map(_.rel) != m.flip.old)
             if (moved.nonEmpty)
               throw new ArrowOcc.CommitConflictException(
                 s"arrow-ipc occ: MOR delta on $dirPath lost its race — the " +
                   s"deletion vector of ${moved.head.dataRel} advanced " +
                   "concurrently; re-run the statement")
-            writeMorIntent(fs, dirPath, staged, data, txn)
-            fs.delete(new Path(dirPath, "_SUCCESS"), false)
-            replayMor(fs, dirPath)
+            // ONE record lands the vectors and the inserts together
+            ArrowMaintenance.commitIntent(fs, dirPath, ArrowMaintenance.Intent(
+              staging = data.fold("")(_._1),
+              moves = data.fold(Map.empty[String, String])(_._2.map(r => r -> r).toMap),
+              kind = if (data.isDefined) "mor-update" else "mor-delete",
+              txn = txn,
+              flips = staged.map(_.flip)))
             true
           }
         }
@@ -694,157 +696,8 @@ private[graft] object ArrowDeleteVectors {
   private def relOf(fs: FileSystem, dirPath: Path, abs: String): String =
     ArrowSnapshots.relativize(fs, dirPath, new Path(abs))
 
-  /** One file's vector flip: staged rel → final rel, the prior live
-    * vector it supersedes (retired to trash), and the data file it
-    * masks (validation + snapshot bookkeeping). */
-  private[sources] case class MorMove(stagedRel: String, finalRel: String,
-      oldDv: Option[String], dataRel: String, card: Long)
-
-  private def esc(s: String): String = ArrowFileStats.esc(s)
-
-  private def writeMorIntent(fs: FileSystem, dir: Path,
-      moves: Seq[MorMove], data: Option[(String, Seq[String])],
-      txn: Option[(String, Long)] = None): Unit = {
-    val dvPart = moves.sortBy(_.finalRel).map { m =>
-      "{\"staged\":\"" + esc(m.stagedRel) + "\",\"final\":\"" +
-        esc(m.finalRel) + "\"" +
-        m.oldDv.fold("")(o => ",\"old\":\"" + esc(o) + "\"") + "}"
-    }.mkString("[", ",", "]")
-    val body = "{\"dv\":" + dvPart + data.fold("") { case (s, rels) =>
-      ",\"staging\":\"" + esc(s) + "\",\"data\":[" +
-        rels.sorted.map(r => "\"" + esc(r) + "\"").mkString(",") + "]"
-    } + txn.fold("") { case (app, ver) =>
-      ",\"txnApp\":\"" + esc(app) + "\",\"txnVer\":" + ver
-    } + "}"
-    // atomic like every correctness-bearing sidecar: a crash mid-write
-    // must leave NO intent, never a corrupt one that wedges recover()
-    ArrowOcc.writeAtomic(fs, new Path(dir, MorIntentFile),
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private def readMorIntent(fs: FileSystem, dir: Path)
-      : (Seq[MorMove], Option[(String, Seq[String])], Option[(String, Long)]) = {
-    import org.json4s._
-    def moveOf(x: JValue): MorMove = {
-      def str(k: String): Option[String] = x \ k match {
-        case JString(s) => Some(s); case _ => None
-      }
-      MorMove(str("staged").get, str("final").get, str("old"), "", 0L)
-    }
-    org.json4s.jackson.JsonMethods.parse(
-      ArrowFileStats.readFully(fs, new Path(dir, MorIntentFile))) match {
-      case JArray(xs) => (xs.map(moveOf), None, None) // pre-delta intent shape
-      case o: JObject =>
-        val dv = (o \ "dv") match {
-          case JArray(xs) => xs.map(moveOf)
-          case _ => Nil
-        }
-        val data = (o \ "staging") match {
-          case JString(s) =>
-            val rels = (o \ "data") match {
-              case JArray(xs) => xs.collect { case JString(r) => r }
-              case _ => Nil
-            }
-            Some((s, rels))
-          case _ => None
-        }
-        val txn = (o \ "txnApp", o \ "txnVer") match {
-          case (JString(app), JInt(v)) => Some((app, v.toLong))
-          case (JString(app), JLong(v)) => Some((app, v))
-          case _ => None
-        }
-        (dv, data, txn)
-      case other => throw new IllegalStateException(s"bad $MorIntentFile: $other")
-    }
-  }
-
-  /** The idempotent tail of a MOR delete/delta — every step checks
-    * before acting, so any crash-and-replay sequence converges: staged
-    * vectors in, staged INSERT files in (UPDATE/MERGE) with their stats
-    * folded as a shard, superseded gens to trash, ONE snapshot delta,
-    * intent gone, latch restored. Called under the commit lock (directly
-    * at commit, or from [[ArrowMaintenance.recover]] after a crash). */
-  private[sources] def replayMor(fs: FileSystem, dirPath: Path): Unit = {
-    val (moves, data, txn) = readMorIntent(fs, dirPath)
-    fs.delete(new Path(dirPath, "_SUCCESS"), false)
-    moves.foreach { m =>
-      val src = new Path(dirPath, m.stagedRel)
-      val dst = new Path(dirPath, m.finalRel)
-      if (fs.exists(src)) {
-        fs.delete(dst, false) // half-replayed flip: staged copy wins
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"MOR delete: rename $src -> $dst failed")
-      } else if (!fs.exists(dst))
-        // a missing staged vector is only legitimate when a prior replay
-        // already flipped it to its final name — BOTH gone means the
-        // statement's delete would silently vanish while its paired
-        // inserts land (duplicate rows). Refuse; the intent stays for a
-        // human, nothing later in this replay runs.
-        throw new IllegalStateException(
-          s"arrow-ipc: MOR replay of $dirPath lost staged vector " +
-            s"'${m.stagedRel}' — gone without reaching '${m.finalRel}'; " +
-            "refusing to admit the statement's inserts without its deletes")
-    }
-    // the delta's inserted files: move in (names embed a fresh queryId —
-    // no collision with any live name; identity rels, nested for hive),
-    // then fold the staging's stats manifest in as a SHARD keyed by the
-    // staging id — O(1) commit work, exactly the batch append's own
-    // discipline. Both steps are fixed points under replay (a moved file
-    // is gone from staging; the shard write is an idempotent overwrite,
-    // and a deleted staging skips the fold — it already happened).
-    val dataRels: Seq[String] = data.fold(Seq.empty[String]) {
-      case (stagingName, rels) =>
-        val stagingPath = new Path(dirPath, stagingName)
-        rels.foreach { rel =>
-          val src = new Path(stagingPath, rel)
-          val dst = new Path(dirPath, rel)
-          if (fs.exists(src)) {
-            if (dst.getParent != dirPath) fs.mkdirs(dst.getParent)
-            fs.delete(dst, false)
-            if (!fs.rename(src, dst))
-              throw new java.io.IOException(
-                s"MOR delta: rename $src -> $dst failed")
-          } else if (!fs.exists(dst))
-            // mirror of the vector check above: a staged insert gone
-            // without reaching its final name would land the statement's
-            // deletes WITHOUT their paired inserts (lost update)
-            throw new IllegalStateException(
-              s"arrow-ipc: MOR replay of $dirPath lost staged insert " +
-                s"'$rel' from $stagingName — refusing to admit the " +
-                "statement's deletes without its inserts")
-        }
-        if (fs.exists(stagingPath)) {
-          val staged = ArrowFileStats.read(fs, stagingPath)
-          if (staged.nonEmpty)
-            ArrowFileStats.writeShard(fs, dirPath,
-              stagingName.stripPrefix("."), staged)
-        }
-        rels
-    }
-    moves.flatMap(_.oldDv).foreach(o =>
-      ArrowSnapshots.moveToTrash(fs, dirPath, o))
-    // one delta for the whole statement: new gens + inserted files in,
-    // old gens out — time travel and the change feed see the statement
-    // as a unit. Idempotent under replay: fence on the adds' presence in
-    // the CURRENT resolved tip (if every add is already recorded, the
-    // delta landed before the crash); ArrowSnapshots.append's own
-    // tail-equality check backs this up.
-    val adds = moves.map(_.finalRel) ++ dataRels
-    val snaps = ArrowSnapshots.read(fs, dirPath)
-    val tipState: Set[String] = snaps.lastOption
-      .flatMap(last => ArrowSnapshots.resolve(snaps, last.id))
-      .getOrElse(Set.empty)
-    if (!adds.forall(tipState.contains))
-      ArrowSnapshots.append(fs, dirPath, adds, moves.flatMap(_.oldDv),
-        op = if (data.isDefined) "mor-update" else "mor-delete")
-    // the CDC idempotency record lands in the SAME replay as the merge's
-    // vectors/inserts — a crash anywhere between intent and here replays
-    // both together, so a foreachBatch restart can never double-apply.
-    // Fixed point: the fold is a monotone max per app.
-    txn.foreach { case (app, ver) => foldCdcLedger(fs, dirPath, app, ver) }
-    ArrowOcc.restoreLatch(fs, dirPath)
-    data.foreach { case (stagingName, _) =>
-      fs.delete(new Path(dirPath, stagingName), true) }
-    fs.delete(new Path(dirPath, MorIntentFile), false)
-  }
+  /** One file's vector flip, and the data file it masks (validation and
+    * snapshot bookkeeping). */
+  private[sources] case class MorMove(flip: ArrowMaintenance.DvFlip,
+      dataRel: String)
 }

@@ -84,25 +84,26 @@ object ArrowEqualityDeletes {
     liveTombs(fs, dirPath).nonEmpty
 
   /** Live tombstones as (rel path, sequence), ascending by sequence. */
-  def liveTombs(fs: FileSystem, dirPath: Path): Seq[(String, Long)] = {
+  def liveTombs(fs: FileSystem, dirPath: Path): Seq[(String, Long)] =
+    tombNames(fs, dirPath).map { case (rel, (seq, _)) => (rel, seq) }
+      .sortBy(_._2)
+
+  /** Total keys across live tombstones — the executor-resident lookup
+    * cost, summed from the names alone (nothing opened). Drives the
+    * key-count auto-fold trigger (`vacuumFoldEqKeysAbove`). */
+  def liveKeyCount(fs: FileSystem, dirPath: Path): Long =
+    tombNames(fs, dirPath).map(_._2._2).sum
+
+  /** The one tombstone listing: each live tombstone's rel path with its
+    * parsed name. */
+  private def tombNames(fs: FileSystem, dirPath: Path)
+      : Seq[(String, (Long, Long))] = {
     val eq = new Path(dirPath, EqDir)
     if (!scala.util.Try(fs.exists(eq)).getOrElse(false)) return Nil
     Option(fs.globStatus(new Path(eq, "eq-*.eq.arrows")))
       .getOrElse(Array.empty).toSeq
       .flatMap(st => parseName(st.getPath.getName)
-        .map(p => (s"$EqDir/${st.getPath.getName}", p._1)))
-      .sortBy(_._2)
-  }
-
-  /** Total keys across live tombstones — the executor-resident lookup
-    * cost, summed from the names alone (nothing opened). Drives the
-    * key-count auto-fold trigger (`vacuumFoldEqKeysAbove`). */
-  def liveKeyCount(fs: FileSystem, dirPath: Path): Long = {
-    val eq = new Path(dirPath, EqDir)
-    if (!scala.util.Try(fs.exists(eq)).getOrElse(false)) return 0L
-    Option(fs.globStatus(new Path(eq, "eq-*.eq.arrows")))
-      .getOrElse(Array.empty)
-      .flatMap(st => parseName(st.getPath.getName)).map(_._2).sum
+        .map(p => s"$EqDir/${st.getPath.getName}" -> p))
   }
 
   /** The declared equality key columns, in declaration order; empty =

@@ -87,9 +87,7 @@ private[sources] object ArrowLiveView {
   def gate(fs: FileSystem, dirPath: Path): Option[Set[String]] =
     if (!fs.exists(new Path(dirPath, "_schema.arrows")) ||
         fs.exists(new Path(dirPath, "_SUCCESS"))) Some(Set.empty)
-    else if (Seq(ArrowMaintenance.IntentFile, ArrowMaintenance.DeleteIntentFile,
-        ArrowDeleteVectors.MorIntentFile, ArrowMaintenance.RestoreIntentFile)
-        .exists(f => fs.exists(new Path(dirPath, f)))) None
+    else if (fs.exists(new Path(dirPath, ArrowMaintenance.IntentFile))) None
     else Some(ArrowOcc.livePendingQueryIds(fs, dirPath)).filter(_.nonEmpty)
 
   /** Build the view of `dir`. `schema` resolves the hive keys (evaluated

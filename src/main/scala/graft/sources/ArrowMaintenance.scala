@@ -21,8 +21,9 @@ import org.apache.spark.sql.types.StructType
   *     moves. A crash here leaves the live directory untouched; stale
   *     staging dirs from dead runs are deleted on the next call.
   *  2. SWAP under the `_SUCCESS` latch:
-  *     a. record the intent (`_compaction.json`: old files, staging dir,
-  *        staging→final name mapping);
+  *     a. record the intent (`_compaction.json`, the one commit record
+  *        every swap-style commit writes — see [[Intent]]: here the old
+  *        files, the staging dir and its staging→final name mapping);
   *     b. DROP the live `_SUCCESS` — every reader's completeness gate now
   *        refuses the directory and the streaming source holds its offset,
   *        so no reader can observe the mixed old+new state;
@@ -53,9 +54,7 @@ import org.apache.spark.sql.types.StructType
   * complete old state or refuse during the swap.
   */
 object ArrowMaintenance {
-  private[sources] val IntentFile = "_compaction.json"
-  private[sources] val DeleteIntentFile = "_delete.json"
-  private[graft] val RestoreIntentFile = "_restore.json"
+  private[graft] val IntentFile = "_compaction.json"
   private[graft] val RestoreGenFile = "_restore_gen"
 
   /** Monotone restore generation: the snapshot id of the latest restore
@@ -249,13 +248,19 @@ object ArrowMaintenance {
     * be interleaved. No-op outside specs. */
   private[graft] var beforeSwapHook: () => Unit = () => ()
 
-  /** Write + replay a prepared intent — the commit tail for callers
-    * that assemble their intent UNDER an already-held commit lock
-    * (the equality-upsert's sequence assignment must be inside it;
-    * [[ArrowOcc.withCommitLock]] is re-entrant). No olds validation:
-    * the caller's intent replaces nothing. */
+  /** The one commit tail of every swap-style commit: under the
+    * directory's commit lock (re-entrant — callers that assemble or
+    * validate their intent under it already hold it), record the intent,
+    * drop the latch, replay. No validation here: each caller proves its
+    * own preconditions first. A record still on disk is a dead commit's
+    * (its holder died, or its replay refused) and is never overwritten —
+    * this commit loses, and [[recover]] finishes that one first. */
   private[sources] def commitIntent(fs: FileSystem, dirPath: Path,
       intent: Intent): Unit = ArrowOcc.withCommitLock(fs, dirPath) {
+    if (fs.exists(new Path(dirPath, IntentFile)))
+      throw new ArrowOcc.CommitConflictException(
+        s"arrow-ipc occ: $dirPath holds an unfinished commit record; " +
+          s"recover it before the ${intent.kind} commit")
     writeIntent(fs, dirPath, intent)
     fs.delete(new Path(dirPath, "_SUCCESS"), false)
     replay(fs, dirPath)
@@ -304,9 +309,7 @@ object ArrowMaintenance {
       // survivors resurrect freshly-deleted rows — the swap loses
       ArrowDeleteVectors.validateStable(fs, dirPath, intent.olds,
         intent.dvs, s"${intent.kind} swap")
-      writeIntent(fs, dirPath, intent)
-      fs.delete(new Path(dirPath, "_SUCCESS"), false)
-      replay(fs, dirPath)
+      commitIntent(fs, dirPath, intent)
       }
     } catch {
       case e: ArrowOcc.CommitConflictException =>
@@ -1218,31 +1221,22 @@ object ArrowMaintenance {
       dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration), dirPath)
   }
 
-  /** Finish a swap a dead process left behind (compaction OR delete).
-    * True = an intent was found and replayed (the directory is whole
-    * again); false = nothing to do. */
+  /** Finish a commit a dead process left behind — whatever its kind
+    * (compaction, COW, equality upsert or fold, publish, metadata delete,
+    * restore, merge-on-read delta): every swap-style commit writes the
+    * one record [[Intent]], and [[replay]] runs it. True = a record was
+    * found and replayed (the directory is whole again); false = nothing
+    * to do. */
   def recover(spark: SparkSession, dir: String): Boolean = {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val intent = new Path(dirPath, IntentFile)
     // cheap unlocked probe first — recover() runs at the head of every
     // maintenance op and scan-side callers, and the common case is "no
     // intent"; when one exists, re-check and replay under the lock (the
     // dead holder's lock breaks after the staleness window)
-    if (!fs.exists(new Path(dirPath, IntentFile)) &&
-        !fs.exists(new Path(dirPath, DeleteIntentFile)) &&
-        !fs.exists(new Path(dirPath, ArrowDeleteVectors.MorIntentFile)) &&
-        !fs.exists(new Path(dirPath, RestoreIntentFile)))
-      return false
-    ArrowOcc.withCommitLock(fs, dirPath) {
-      val compacting = fs.exists(new Path(dirPath, IntentFile))
-      val deleting = fs.exists(new Path(dirPath, DeleteIntentFile))
-      val morring = fs.exists(new Path(dirPath, ArrowDeleteVectors.MorIntentFile))
-      val restoring = fs.exists(new Path(dirPath, RestoreIntentFile))
-      if (compacting) replay(fs, dirPath)
-      if (deleting) replayDelete(fs, dirPath)
-      if (morring) ArrowDeleteVectors.replayMor(fs, dirPath)
-      if (restoring) replayRestore(fs, dirPath)
-      compacting || deleting || morring || restoring
+    fs.exists(intent) && ArrowOcc.withCommitLock(fs, dirPath) {
+      fs.exists(intent) && { replay(fs, dirPath); true }
     }
   }
 
@@ -1291,9 +1285,11 @@ object ArrowMaintenance {
             "rewrite the data instead"))
       if (doomed.isEmpty) DeleteResult(0, total)
       else {
-        writeDeleteIntent(fs, dirPath, doomed.map(_.toString).toSeq.sorted)
-        fs.delete(new Path(dirPath, "_SUCCESS"), false)
-        replayDelete(fs, dirPath)
+        val rels = doomed.map(p => ArrowSnapshots.relativize(fs, dirPath, p)).sorted
+        // a dropped file's deletion vector retires with it — read under
+        // the lock, where the live vectors are exactly the snapshot tip's
+        commitIntent(fs, dirPath, Intent(olds = rels, kind = "delete",
+          dvs = ArrowDeleteVectors.relsFor(fs, dirPath, rels)))
         DeleteResult(doomed.length, total - doomed.length)
       }
     }
@@ -1332,59 +1328,10 @@ object ArrowMaintenance {
     Some((doomed.flatten, view.files.length))
   }
 
-  /** The idempotent tail of a delete: drop files, then rebuild every
-    * stats structure to cover exactly the files that still exist, then
-    * restore the latch. Each step is a fixed point under replay. */
-  private def replayDelete(fs: FileSystem, dirPath: Path): Unit = {
-    val doomed = readDeleteIntent(fs, dirPath)
-    fs.delete(new Path(dirPath, "_SUCCESS"), false)
-    // retire to `.trash/` for time travel (idempotent under replay) and
-    // record the snapshot delta; intent paths are absolute → relativize
-    val rels = doomed.map(s => ArrowSnapshots.relativize(fs, dirPath, new Path(s)))
-    // a dropped file's deletion vector retires with it — derived from the
-    // snapshot TIP (not the live listing: a crash between trashing and
-    // the log append must still find the vector on the second replay)
-    val dvRels = {
-      val snaps = ArrowSnapshots.read(fs, dirPath)
-      val tip = snaps.lastOption
-        .flatMap(l => ArrowSnapshots.resolve(snaps, l.id)).getOrElse(Set.empty)
-      val doomedNames = rels.map(r => new Path(r).getName).toSet
-      ArrowDeleteVectors.fromResolvedSet(tip).collect {
-        case (data, ref) if doomedNames(data) => ref.rel }.toSeq.sorted
-    }
-    (rels ++ dvRels).foreach(r => ArrowSnapshots.moveToTrash(fs, dirPath, r))
-    ArrowSnapshots.append(fs, dirPath, Nil, rels ++ dvRels, op = "delete")
-    // manifests key on bare file names (unique across value directories)
-    scrubStats(fs, dirPath, doomed.map(s => new Path(s).getName).toSet)
-    if (ArrowHiveLayout.read(fs, dirPath).nonEmpty)
-      dropEmptiedParents(fs, dirPath, doomed)
-    // latch restore defers to any batch append still in flight — ITS
-    // commit restores once no pending marker remains
-    ArrowOcc.restoreLatch(fs, dirPath)
-    fs.delete(new Path(dirPath, DeleteIntentFile), false)
-  }
-
-  private def writeDeleteIntent(fs: FileSystem, dir: Path,
-      doomed: Seq[String]): Unit = {
-    val body = doomed.map(s => "\"" + esc(s) + "\"").mkString("[", ",", "]")
-    // atomic like every intent: a torn intent must not wedge recover()
-    ArrowOcc.writeAtomic(fs, new Path(dir, DeleteIntentFile),
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private def readDeleteIntent(fs: FileSystem, dir: Path): Seq[String] = {
-    import org.json4s._
-    org.json4s.jackson.JsonMethods.parse(
-      ArrowFileStats.readFully(fs, new Path(dir, DeleteIntentFile))) match {
-      case JArray(xs) => xs.collect { case JString(s) => s }
-      case other => throw new IllegalStateException(s"bad $DeleteIntentFile: $other")
-    }
-  }
-
   /** Remove `names`' entries from the base stats manifest and every
     * shard — envelope rows recompute with the shard rewrite, emptied
-    * shards (and their index rows) drop whole. Shared by the metadata
-    * delete and restore replays; each step is a fixed point. */
+    * shards (and their index rows) drop whole. The stats step of a
+    * record that retires files without staging any; a fixed point. */
   private def scrubStats(fs: FileSystem, dirPath: Path,
       names: Set[String]): Unit = {
     val base = ArrowFileStats.readBase(fs, dirPath)
@@ -1485,11 +1432,10 @@ object ArrowMaintenance {
         // the same code path that would do it (newSnapshot = current tip)
         if (dryRun) RestoreResult(toSnapshot, adds.size, removes.size, tipId)
         else {
-          writeRestoreIntent(fs, dirPath, toSnapshot, adds, removes)
-          fs.delete(new Path(dirPath, "_SUCCESS"), false)
-          replayRestore(fs, dirPath)
+          commitIntent(fs, dirPath,
+            Intent(olds = removes, restores = adds, kind = "restore"))
           RestoreResult(toSnapshot, adds.size, removes.size,
-            ArrowSnapshots.read(fs, dirPath).last.id)
+            ArrowSnapshots.currentTip(fs, dirPath))
         }
       }
     }
@@ -1513,139 +1459,62 @@ object ArrowMaintenance {
     restore(spark, dir, id, dryRun)
   }
 
-  /** The idempotent tail of a restore: untrash the target's files,
-    * retire the rest, re-admit restored stream epochs to the ledger,
-    * ONE snapshot delta, stats scrub, latch, intent gone — every step a
-    * fixed point under replay (called at commit or from [[recover]]). */
-  private def replayRestore(fs: FileSystem, dirPath: Path): Unit = {
-    val (_, adds, removes) = readRestoreIntent(fs, dirPath)
-    fs.delete(new Path(dirPath, "_SUCCESS"), false)
-    adds.foreach { rel =>
-      val live = new Path(dirPath, rel)
-      if (!fs.exists(live)) { // already-live = half-replayed flip
-        val t = ArrowSnapshots.trashPath(dirPath, rel)
-        if (!fs.exists(t))
-          throw new IllegalStateException(
-            s"arrow-ipc: restore replay of $dirPath lost '$rel' — gone " +
-              "from both the live set and the trash")
-        if (live.getParent != dirPath) fs.mkdirs(live.getParent)
-        if (!fs.rename(t, live))
-          throw new java.io.IOException(
-            s"restore: untrash $t -> $live failed")
-      }
-    }
-    removes.foreach(rel => ArrowSnapshots.moveToTrash(fs, dirPath, rel))
-    // restored streaming-epoch files become visible again only through
-    // the ledger — union their commit ids back in (idempotent overwrite)
-    val streamIds = adds.map(r => new Path(r).getName)
-      .filter(ArrowStreamCommits.isStreamName)
-      .map(ArrowStreamCommits.commitIdOf).toSet
-    if (streamIds.nonEmpty) {
-      val led = ArrowStreamCommits.read(fs, dirPath)
-        .getOrElse(ArrowStreamCommits.Ledger(Map.empty, Set.empty))
-      if (!streamIds.subsetOf(led.committed))
-        ArrowStreamCommits.write(fs, dirPath,
-          led.copy(committed = led.committed ++ streamIds))
-    }
-    // ONE delta for the whole restore — fenced on the tip already
-    // reflecting it (the entry may have landed just before a crash)
-    val snaps = ArrowSnapshots.read(fs, dirPath)
-    val tipState = snaps.lastOption
-      .flatMap(l => ArrowSnapshots.resolve(snaps, l.id)).getOrElse(Set.empty)
-    if (!(adds.forall(tipState.contains) &&
-        !removes.exists(tipState.contains)))
-      ArrowSnapshots.append(fs, dirPath, adds, removes, op = "restore")
-    scrubStats(fs, dirPath, removes.map(r => new Path(r).getName).toSet)
-    // advance the restore generation to the tip AFTER the fenced append —
-    // monotone and replay-safe (a re-replay reads a tip ≥ the restore
-    // entry's id; overshooting only marks MORE polls as restore-affected,
-    // never fewer). Streams gate on this: file names CAME BACK.
-    ArrowOcc.writeAtomic(fs, new Path(dirPath, RestoreGenFile),
-      ArrowSnapshots.currentTip(fs, dirPath).toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ArrowOcc.restoreLatch(fs, dirPath)
-    fs.delete(new Path(dirPath, RestoreIntentFile), false)
-  }
-
-  private def writeRestoreIntent(fs: FileSystem, dir: Path, to: Long,
-      adds: Seq[String], removes: Seq[String]): Unit = {
-    def arr(xs: Seq[String]) =
-      xs.map(s => "\"" + esc(s) + "\"").mkString("[", ",", "]")
-    val body = s"""{"to":$to,"adds":${arr(adds)},"removes":${arr(removes)}}"""
-    // atomic like every intent: a torn intent must not wedge recover()
-    ArrowOcc.writeAtomic(fs, new Path(dir, RestoreIntentFile),
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private def readRestoreIntent(fs: FileSystem, dir: Path)
-      : (Long, Seq[String], Seq[String]) = {
-    import org.json4s._
-    val root = org.json4s.jackson.JsonMethods.parse(
-      ArrowFileStats.readFully(fs, new Path(dir, RestoreIntentFile)))
-    def strs(k: String): Seq[String] = (root \ k) match {
-      case JArray(xs) => xs.collect { case JString(s) => s }
-      case _ => Nil
-    }
-    val to = (root \ "to") match {
-      case JInt(n) => n.toLong
-      case JLong(n) => n
-      case other => throw new IllegalStateException(
-        s"bad $RestoreIntentFile: to=$other")
-    }
-    (to, strs("adds"), strs("removes"))
-  }
-
-  /** The idempotent tail of the swap: every step checks before acting, so
-    * any crash-and-replay sequence converges to the compacted state. */
+  /** The one replay: runs the commit record ([[Intent]]) to completion,
+    * whatever its kind. Each step acts only when its fields are non-empty
+    * and checks before acting, so any crash-and-replay sequence converges
+    * to the committed state. Called under the commit lock, at commit
+    * ([[commitIntent]]) or from [[recover]]. */
   private def replay(fs: FileSystem, dirPath: Path): Unit = {
     val intent = readIntent(fs, dirPath)
-    val stagingPath = new Path(dirPath, intent.staging)
+    val staging = intent.stagingPath(dirPath)
     // the latch FIRST, even when replaying: a crash between intent-write
     // and marker-drop leaves the marker up, and moving files under a live
     // marker would expose readers to the mixed old+new state
     fs.delete(new Path(dirPath, "_SUCCESS"), false)
-    // (c) move staged files in — already-moved ones are gone from staging.
-    // Move targets may be NESTED (a cow rewrite of a hive-partitioned
-    // dataset lands `key=value/part-…` paths; an UPDATE can mint a value
-    // directory that never existed), so parents are created on demand.
+    // (c) flip staged vectors to their final names, move staged files in
+    // (targets may be NESTED: a cow rewrite of a hive-partitioned dataset
+    // lands `key=value/part-…` paths, and an UPDATE can mint a value
+    // directory that never existed), bring restored files back from the
+    // trash
+    intent.flips.foreach(f => moveIn(fs, dirPath, intent.kind,
+      new Path(dirPath, f.staged), new Path(dirPath, f.fin)))
     intent.moves.toSeq.sortBy(_._1).foreach { case (s, fin) =>
-      val src = new Path(stagingPath, s)
-      val dst = new Path(dirPath, fin)
-      if (fs.exists(src)) {
-        if (dst.getParent != dirPath) fs.mkdirs(dst.getParent)
-        fs.delete(dst, false) // a half-replayed move: staged copy wins
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"compaction: rename $src -> $dst failed")
-      } else if (!fs.exists(dst))
-        // a staged survivor gone without reaching its final name: letting
-        // the replay continue would trash the olds below and LOSE their
-        // rows. Refuse; the intent stays for a human — the one state
-        // recover() must never converge past is silent data loss.
-        throw new IllegalStateException(
-          s"arrow-ipc: ${intent.kind} replay of $dirPath lost staged " +
-            s"file '$s' — gone without reaching '$fin'; refusing to " +
-            "retire the replaced files without their survivors")
+      moveIn(fs, dirPath, intent.kind,
+        new Path(new Path(dirPath, intent.staging), s), new Path(dirPath, fin))
     }
-    // (d) merged manifest: fixed point under replay — minus(olds) no-ops
-    // once gone, staged stats are constant. Manifests key on BARE file
-    // names (unique across value directories), so relative paths in the
-    // intent are stripped to names on both sides.
+    intent.restores.foreach(rel => moveIn(fs, dirPath, intent.kind,
+      ArrowSnapshots.trashPath(dirPath, rel), new Path(dirPath, rel)))
+    // (d) stats. Manifests key on BARE file names (unique across value
+    // directories), so relative paths are stripped to names on both sides.
     val oldNames = intent.olds.map(o => new Path(o).getName)
-    val movesByName = intent.moves.map { case (k, v) =>
-      new Path(k).getName -> new Path(v).getName }
-    val stagedStats = ArrowFileStats.read(fs, stagingPath)
-      .map { case (k, v) => movesByName.getOrElse(k, k) -> v }
-    // SNAPSHOT the shard set first, fold exactly that snapshot into the
-    // base, then delete exactly that snapshot: a large commit landing
-    // between these lines keeps both its shard and its index row — its
-    // stats are never folded-without-deleting or deleted-without-folding
-    val shardSnapshot = ArrowFileStats.shardIds(fs, dirPath)
-    val onDiskStats = ArrowFileStats.readBase(fs, dirPath) ++
-      shardSnapshot.flatMap(ArrowFileStats.readShard(fs, dirPath, _))
-    val merged = (onDiskStats -- oldNames) ++ stagedStats
-    ArrowFileStats.write(fs, dirPath, merged)
-    // idempotent under replay (deleting nothing is a no-op)
-    ArrowFileStats.deleteShards(fs, dirPath, shardSnapshot)
+    staging match {
+      case Some(sp) =>
+        val movesByName = intent.moves.map { case (k, v) =>
+          new Path(k).getName -> new Path(v).getName }
+        val staged = ArrowFileStats.read(fs, sp)
+          .map { case (k, v) => movesByName.getOrElse(k, k) -> v }
+        if (intent.rowDelta) {
+          // a statement's inserts land as a SHARD keyed by the staging id:
+          // O(1) commit work, the batch append's own discipline (an
+          // idempotent overwrite; a deleted staging already landed it)
+          if (staged.nonEmpty)
+            ArrowFileStats.writeShard(fs, dirPath, intent.staging.stripPrefix("."), staged)
+        } else {
+          // merged manifest: a fixed point under replay — minus(olds)
+          // no-ops once gone, staged stats are constant. SNAPSHOT the shard
+          // set first, fold exactly that snapshot into the base, then
+          // delete exactly that snapshot: a large commit landing between
+          // these lines keeps both its shard and its index row — its stats
+          // are never folded-without-deleting or deleted-without-folding
+          val shardSnapshot = ArrowFileStats.shardIds(fs, dirPath)
+          val onDiskStats = ArrowFileStats.readBase(fs, dirPath) ++
+            shardSnapshot.flatMap(ArrowFileStats.readShard(fs, dirPath, _))
+          ArrowFileStats.write(fs, dirPath, (onDiskStats -- oldNames) ++ staged)
+          ArrowFileStats.deleteShards(fs, dirPath, shardSnapshot)
+        }
+      case None =>
+        if (oldNames.nonEmpty) scrubStats(fs, dirPath, oldNames.toSet)
+    }
     // (d') lineage: record new-file → replaced-files so a streaming
     // consumer whose offset already covers the olds can absorb the
     // compacted file WITHOUT re-emitting its rows (idempotent merge —
@@ -1660,130 +1529,222 @@ object ArrowMaintenance {
     if (intent.kind == "compact")
       writeLineage(fs, dirPath,
         readLineage(fs, dirPath) ++ intent.moves.values.map(v =>
-          new Path(v).getName -> intent.olds.map(o => new Path(o).getName)))
-    // (e) retire the old files to `.trash/` (time travel finds them there
-    // until expiry; the move is idempotent under replay) and record the
-    // snapshot delta; empty hive value directories left behind are
-    // dropped like a metadata delete would
-    intent.olds.foreach(o => ArrowSnapshots.moveToTrash(fs, dirPath, o))
-    // the replaced files' deletion vectors are FOLDED by the rewrite (the
-    // staging read masked them), so they retire with their files — the
-    // new files carry no vector and read zero-copy columnar again
-    intent.dvs.foreach(d => ArrowSnapshots.moveToTrash(fs, dirPath, d))
-    ArrowSnapshots.append(fs, dirPath,
-      intent.moves.values.toSeq, intent.olds ++ intent.dvs, op = intent.kind)
+          new Path(v).getName -> oldNames))
+    // (e) retire the old files, the vectors retired with them (a rewrite
+    // FOLDED them — its staging read masked them; a delete drops them with
+    // their files) and the superseded vectors to `.trash/` (time travel
+    // finds them there until expiry; the move is idempotent under replay),
+    // record ONE snapshot delta for the whole commit, and drop the hive
+    // value directories left empty
+    val retired = intent.olds ++ intent.dvs ++ intent.flips.flatMap(_.old)
+    retired.foreach(r => ArrowSnapshots.moveToTrash(fs, dirPath, r))
+    val adds = intent.flips.map(_.fin) ++ intent.moves.values ++ intent.restores
+    if (!(intent.fenced && tipReflects(fs, dirPath, adds, retired)))
+      ArrowSnapshots.append(fs, dirPath, adds, retired, op = intent.kind)
     dropEmptiedParents(fs, dirPath, intent.olds)
-    // layout claim: compaction coalesces across keys, destroying any
-    // key-grouped claim; a COW rewrite clustered its output on the
-    // standing keys, so the claim it recorded in the intent is restored
-    if (intent.kind == "compact" || intent.layoutKeys.isEmpty)
-      ArrowLayout.delete(fs, dirPath)
-    else ArrowLayout.write(fs, dirPath, intent.layoutKeys)
-    // (e') prune the streaming ledger's committed set down to ids that
-    // still name a live file (compacted outputs are not stream-named, so
-    // their visibility no longer rides the ledger); the per-query epoch
-    // fence is KEPT — it guards epoch replays, not visibility. Idempotent
-    // (a second replay prunes nothing further).
-    ArrowStreamCommits.read(fs, dirPath).foreach { led =>
-      val liveIds = ArrowSnapshots.listDataFiles(fs, dirPath)
-        .map(rel => new Path(rel).getName)
-        .filter(ArrowStreamCommits.isStreamName)
-        .map(ArrowStreamCommits.commitIdOf).toSet
-      val keep = led.committed.intersect(liveIds)
-      if (keep != led.committed)
-        ArrowStreamCommits.write(fs, dirPath, led.copy(committed = keep))
+    // the layout claim after staged files land (a row delta leaves it
+    // alone): compaction coalesces across keys, destroying any key-grouped
+    // claim; a COW rewrite clustered its output on the standing keys, so
+    // the claim it recorded is restored; a commit recording no keys drops it
+    if (staging.isDefined && !intent.rowDelta) {
+      if (intent.kind == "compact" || intent.layoutKeys.isEmpty)
+        ArrowLayout.delete(fs, dirPath)
+      else ArrowLayout.write(fs, dirPath, intent.layoutKeys)
     }
-    // (e'') CDC idempotency: a COW-routed tagged statement records its
-    // batch version in the SAME replay as its data — a crash anywhere
-    // between intent and here replays both together, so a foreachBatch
-    // restart can never double-apply. Fixed point (monotone max per app);
-    // mirrors ArrowDeleteVectors.replayMor's fold exactly.
+    // (e') the streaming ledger. Restored stream-epoch files become
+    // visible again only through it — union their commit ids back in. A
+    // rewrite prunes the committed set down to ids that still name a live
+    // file (rewritten outputs are not stream-named, so their visibility no
+    // longer rides the ledger); the per-query epoch fence is KEPT — it
+    // guards epoch replays, not visibility. Both are fixed points.
+    val restoredIds = intent.restores.map(r => new Path(r).getName)
+      .filter(ArrowStreamCommits.isStreamName)
+      .map(ArrowStreamCommits.commitIdOf).toSet
+    if (restoredIds.nonEmpty) {
+      val led = ArrowStreamCommits.read(fs, dirPath)
+        .getOrElse(ArrowStreamCommits.Ledger(Map.empty, Set.empty))
+      if (!restoredIds.subsetOf(led.committed))
+        ArrowStreamCommits.write(fs, dirPath,
+          led.copy(committed = led.committed ++ restoredIds))
+    }
+    if (intent.olds.nonEmpty && staging.isDefined)
+      ArrowStreamCommits.read(fs, dirPath).foreach { led =>
+        val liveIds = ArrowSnapshots.listDataFiles(fs, dirPath)
+          .map(rel => new Path(rel).getName)
+          .filter(ArrowStreamCommits.isStreamName)
+          .map(ArrowStreamCommits.commitIdOf).toSet
+        val keep = led.committed.intersect(liveIds)
+        if (keep != led.committed)
+          ArrowStreamCommits.write(fs, dirPath, led.copy(committed = keep))
+      }
+    // a restore advances the restore generation to the tip AFTER the log
+    // append — monotone and replay-safe (a re-replay reads a tip ≥ the
+    // restore entry's id; overshooting only marks MORE polls as
+    // restore-affected, never fewer). Streams gate on this: file names
+    // CAME BACK.
+    if (intent.kind == "restore")
+      ArrowOcc.writeAtomic(fs, new Path(dirPath, RestoreGenFile),
+        ArrowSnapshots.currentTip(fs, dirPath).toString
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // (e'') CDC idempotency: a tagged statement records its batch version
+    // in the SAME replay as its data — a crash anywhere between intent and
+    // here replays both together, so a foreachBatch restart can never
+    // double-apply. Fixed point (monotone max per app).
     intent.txn.foreach { case (app, ver) =>
       ArrowDeleteVectors.foldCdcLedger(fs, dirPath, app, ver) }
     // (f) restore the latch (unless a live batch append owns it — its
-    // commit restores), clear the intent + staging
+    // commit restores), clear the staging, then the intent
     ArrowOcc.restoreLatch(fs, dirPath)
+    staging.foreach(fs.delete(_, true))
     fs.delete(new Path(dirPath, IntentFile), false)
-    fs.delete(stagingPath, true)
   }
 
-  // ── intent record ────────────────────────────────────────────────────────
+  /** Move `src` in to `dst`, as a fixed point: an already-moved file
+    * (source gone, destination present) no-ops and a half-replayed one
+    * lets the source win (same bytes by the unique-name contract). A
+    * source gone WITHOUT reaching its destination refuses, and the intent
+    * stays for a human: the one state a replay must never converge past
+    * is silent data loss — retired files without their survivors, a
+    * statement's inserts without its deletes, or the reverse. */
+  private def moveIn(fs: FileSystem, dirPath: Path, kind: String,
+      src: Path, dst: Path): Unit =
+    if (fs.exists(src)) {
+      val parent = dst.getParent
+      if (parent != dirPath && parent != src.getParent) fs.mkdirs(parent)
+      fs.delete(dst, false)
+      if (!fs.rename(src, dst))
+        throw new java.io.IOException(s"$kind replay: rename $src -> $dst failed")
+    } else if (!fs.exists(dst))
+      throw new IllegalStateException(
+        s"arrow-ipc: $kind replay of $dirPath lost '$src' — gone without " +
+          s"reaching '$dst'; refusing to converge past data loss")
 
-  /** `kind`: "compact" (lineage recorded, layout claim destroyed) or
-    * "cow" (a copy-on-write row-level rewrite — rows CHANGED, so no
-    * lineage claim is ever recorded, and the standing key-grouped layout
-    * claim is restored via `layoutKeys` because the rewrite clustered its
-    * output on those keys). `olds`/move targets are paths RELATIVE to the
-    * dataset dir (bare names for flat layouts, `key=value/...` for hive). */
+  /** Does the snapshot tip already hold this delta (every add in, every
+    * remove out)? The log-append fence of [[Intent.fenced]] kinds. */
+  private def tipReflects(fs: FileSystem, dirPath: Path,
+      adds: Seq[String], removes: Seq[String]): Boolean = {
+    val snaps = ArrowSnapshots.read(fs, dirPath)
+    val tip = snaps.lastOption
+      .flatMap(l => ArrowSnapshots.resolve(snaps, l.id)).getOrElse(Set.empty)
+    adds.forall(tip.contains) && !removes.exists(tip.contains)
+  }
+
+  // ── the commit record ────────────────────────────────────────────────────
+
+  /** One staged deletion-vector flip: `staged` → `fin` (both under
+    * `.dv/`), superseding the file's `old` vector. */
+  private[graft] case class DvFlip(staged: String, fin: String,
+      old: Option[String] = None)
+
+  /** The ONE commit record: every swap-style commit writes it to
+    * `_compaction.json` through [[commitIntent]], and [[replay]] runs it.
+    * Paths are RELATIVE to the dataset dir (bare names for flat layouts,
+    * `key=value/...` for hive); every field may be empty.
+    *  - `olds`: files retired to `.trash/`;
+    *  - `staging`, `moves`: the staging dir, and each staged file's name
+    *    relative to it → its final name;
+    *  - `restores`: files brought back from `.trash/`;
+    *  - `flips`: staged deletion vectors, each with the vector it
+    *    supersedes;
+    *  - `dvs`: the vectors retired with `olds`;
+    *  - `kind`, the snapshot op: "compact" records lineage and destroys
+    *    the layout claim; "cow" (a copy-on-write row-level rewrite — rows
+    *    CHANGED, so no lineage) restores `layoutKeys`, the keys it
+    *    clustered its output on; "restore" advances the restore
+    *    generation; "mor-delete" / "mor-update" are row deltas
+    *    ([[rowDelta]]); "eq-upsert", "eq-fold", "publish" and "delete"
+    *    ride the fields alone;
+    *  - `txn`: the CDC (app, version) folded in the same replay.
+    * A record written before the fields past `txn` existed decodes with
+    * them empty (and one without a kind as a compaction). */
   private[graft] case class Intent(
-      olds: Seq[String], staging: String, moves: Map[String, String],
+      olds: Seq[String] = Nil, staging: String = "",
+      moves: Map[String, String] = Map.empty,
       kind: String = "compact", layoutKeys: Seq[String] = Nil,
-      dvs: Seq[String] = Nil, txn: Option[(String, Long)] = None)
+      dvs: Seq[String] = Nil, txn: Option[(String, Long)] = None,
+      restores: Seq[String] = Nil, flips: Seq[DvFlip] = Nil) {
+    def stagingPath(dir: Path): Option[Path] =
+      if (staging.isEmpty) None else Some(new Path(dir, staging))
+
+    /** A merge-on-read statement: its staged stats land as a shard, not a
+      * manifest fold, and it leaves the layout claim alone. */
+    def rowDelta: Boolean = kind.startsWith("mor-")
+
+    /** Skip the log append when the tip already reflects the delta. A
+      * restore re-adds names the log already knew, and a row delta's
+      * vectors must never reach the change feed twice; every other kind
+      * relies on [[ArrowSnapshots.append]]'s own tail check. */
+    def fenced: Boolean = rowDelta || kind == "restore"
+  }
 
   private def esc(s: String): String = ArrowFileStats.esc(s)
 
   private[graft] def writeIntent(fs: FileSystem, dir: Path, intent: Intent): Unit = {
-    val sb = new StringBuilder("{\"olds\":[")
-    sb.append(intent.olds.map(o => "\"" + esc(o) + "\"").mkString(","))
-    sb.append("],\"staging\":\"").append(esc(intent.staging)).append("\",\"moves\":{")
-    sb.append(intent.moves.toSeq.sorted.map { case (k, v) =>
-      "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString(","))
-    sb.append("},\"kind\":\"").append(esc(intent.kind)).append("\",\"layoutKeys\":[")
-    sb.append(intent.layoutKeys.map(k => "\"" + esc(k) + "\"").mkString(","))
-    sb.append("],\"dvs\":[")
-    sb.append(intent.dvs.map(d => "\"" + esc(d) + "\"").mkString(","))
-    sb.append("]")
+    def str(x: String) = "\"" + esc(x) + "\""
+    def arr(xs: Seq[String]) = xs.map(str).mkString("[", ",", "]")
+    val sb = new StringBuilder("{\"olds\":").append(arr(intent.olds))
+    sb.append(",\"staging\":").append(str(intent.staging))
+    sb.append(",\"moves\":").append(intent.moves.toSeq.sorted
+      .map { case (k, v) => str(k) + ":" + str(v) }.mkString("{", ",", "}"))
+    sb.append(",\"kind\":").append(str(intent.kind))
+    sb.append(",\"layoutKeys\":").append(arr(intent.layoutKeys))
+    sb.append(",\"dvs\":").append(arr(intent.dvs))
     intent.txn.foreach { case (app, ver) =>
-      sb.append(",\"txnApp\":\"").append(esc(app))
-        .append("\",\"txnVer\":").append(ver)
+      sb.append(",\"txnApp\":").append(str(app)).append(",\"txnVer\":").append(ver)
     }
+    if (intent.restores.nonEmpty)
+      sb.append(",\"restores\":").append(arr(intent.restores))
+    if (intent.flips.nonEmpty)
+      sb.append(",\"flips\":").append(intent.flips.map { f =>
+        "{\"staged\":" + str(f.staged) + ",\"final\":" + str(f.fin) +
+          f.old.fold("")(o => ",\"old\":" + str(o)) + "}"
+      }.mkString("[", ",", "]"))
     sb.append("}")
-    // atomic: a crash mid-write must leave NO intent file (the stale
-    // staging dir is swept by the next compact) rather than a corrupt one
-    // that wedges every later recover()
+    // atomic: a crash mid-write must leave NO intent file (a stale
+    // staging dir is swept later) rather than a corrupt one that wedges
+    // every later recover()
     ArrowOcc.writeAtomic(fs, new Path(dir, IntentFile),
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   private[graft] def readIntent(fs: FileSystem, dir: Path): Intent = {
     import org.json4s._
-    val json = ArrowFileStats.readFully(fs, new Path(dir, IntentFile))
-    org.json4s.jackson.JsonMethods.parse(json) match {
-      case o: JObject =>
-        val olds = (o \ "olds") match {
-          case JArray(xs) => xs.collect { case JString(s) => s }
-          case _ => Nil
-        }
-        val staging = (o \ "staging") match {
-          case JString(s) => s
-          case _ => throw new IllegalStateException(s"bad $IntentFile: no staging")
-        }
-        val moves = (o \ "moves") match {
-          case JObject(ms) => ms.collect { case (k, JString(v)) => k -> v }.toMap
-          case _ => Map.empty[String, String]
-        }
-        // both optional: intents written before the cow kind existed parse
-        // as plain compactions
-        val kind = (o \ "kind") match {
-          case JString(s) => s
-          case _ => "compact"
-        }
-        val layoutKeys = (o \ "layoutKeys") match {
-          case JArray(xs) => xs.collect { case JString(s) => s }
-          case _ => Nil
-        }
-        val dvs = (o \ "dvs") match {
-          case JArray(xs) => xs.collect { case JString(s) => s }
-          case _ => Nil
-        }
-        val txn = ((o \ "txnApp"), (o \ "txnVer")) match {
-          case (JString(app), JInt(v)) => Some((app, v.toLong))
-          case (JString(app), JLong(v)) => Some((app, v))
-          case _ => None
-        }
-        Intent(olds, staging, moves, kind, layoutKeys, dvs, txn)
+    val o = org.json4s.jackson.JsonMethods.parse(
+        ArrowFileStats.readFully(fs, new Path(dir, IntentFile))) match {
+      case o: JObject => o
       case other => throw new IllegalStateException(s"bad $IntentFile: $other")
     }
+    def str(v: JValue, k: String): Option[String] = v \ k match {
+      case JString(s) => Some(s)
+      case _ => None
+    }
+    def strs(k: String): Seq[String] = o \ k match {
+      case JArray(xs) => xs.collect { case JString(s) => s }
+      case _ => Nil
+    }
+    def need(v: JValue, k: String): String = str(v, k).getOrElse(
+      throw new IllegalStateException(s"bad $IntentFile: no $k in $v"))
+    Intent(
+      olds = strs("olds"),
+      staging = str(o, "staging").getOrElse(""),
+      moves = o \ "moves" match {
+        case JObject(ms) => ms.collect { case (k, JString(v)) => k -> v }.toMap
+        case _ => Map.empty
+      },
+      kind = str(o, "kind").getOrElse("compact"),
+      layoutKeys = strs("layoutKeys"),
+      dvs = strs("dvs"),
+      txn = (o \ "txnApp", o \ "txnVer") match {
+        case (JString(app), JInt(v)) => Some((app, v.toLong))
+        case (JString(app), JLong(v)) => Some((app, v))
+        case _ => None
+      },
+      restores = strs("restores"),
+      flips = o \ "flips" match {
+        case JArray(xs) => xs.map(x => DvFlip(need(x, "staged"),
+          need(x, "final"), str(x, "old")))
+        case _ => Nil
+      })
   }
 
   // ── compaction lineage (`_lineage.json`) ─────────────────────────────────

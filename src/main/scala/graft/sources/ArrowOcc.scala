@@ -222,23 +222,18 @@ private[graft] object ArrowOcc {
     * same commit lock the collapse takes, so a marker's create (also
     * under the lock on the append path) can never tear. */
   def livePendingTargets(fs: FileSystem, dirPath: Path)
-      : Seq[Option[Seq[String]]] = {
-    val now = System.currentTimeMillis()
-    Option(fs.globStatus(new Path(dirPath, PendingPrefix + "*")))
-      .getOrElse(Array.empty)
-      .filter(st => now - st.getModificationTime <= pendingStaleMs)
-      .map { st =>
-        if (st.getLen == 0) None
-        else scala.util.Try {
-          import org.json4s._
-          org.json4s.jackson.JsonMethods.parse(
-            ArrowFileStats.readFully(fs, st.getPath)) \ "hiveKeys" match {
-            case JArray(xs) => Some(xs.collect { case JString(s) => s }: Seq[String])
-            case _ => None
-          }
-        }.toOption.flatten
-      }.toSeq
-  }
+      : Seq[Option[Seq[String]]] =
+    pendingMarkers(fs, dirPath, live = true).map { case (_, st) =>
+      if (st.getLen == 0) None
+      else scala.util.Try {
+        import org.json4s._
+        org.json4s.jackson.JsonMethods.parse(
+          ArrowFileStats.readFully(fs, st.getPath)) \ "hiveKeys" match {
+          case JArray(xs) => Some(xs.collect { case JString(s) => s }: Seq[String])
+          case _ => None
+        }
+      }.toOption.flatten
+    }
 
   /** The append committed or aborted; its marker goes away. */
   def clearPending(fs: FileSystem, dirPath: Path, queryId: String): Unit =
@@ -248,25 +243,26 @@ private[graft] object ArrowOcc {
     * younger than the pending-liveness window)? Gates every latch
     * restore. */
   def appendsPending(fs: FileSystem, dirPath: Path,
-      exceptQueryId: Option[String] = None): Boolean = {
-    val now = System.currentTimeMillis()
-    Option(fs.globStatus(new Path(dirPath, PendingPrefix + "*")))
-      .getOrElse(Array.empty).exists { st =>
-        val qid = st.getPath.getName.stripPrefix(PendingPrefix)
-        !exceptQueryId.contains(qid) &&
-          (now - st.getModificationTime <= pendingStaleMs)
-      }
-  }
+      exceptQueryId: Option[String] = None): Boolean =
+    pendingMarkers(fs, dirPath, live = true)
+      .exists { case (qid, _) => !exceptQueryId.contains(qid) }
 
   /** Query ids of batch appends currently in flight (live markers). File
     * names embed their commit queryId, so membership here marks a file
     * as possibly-uncommitted. */
-  def livePendingQueryIds(fs: FileSystem, dirPath: Path): Set[String] = {
+  def livePendingQueryIds(fs: FileSystem, dirPath: Path): Set[String] =
+    pendingMarkers(fs, dirPath, live = true).map(_._1).toSet
+
+  /** The one pending-marker read: (query id, status) of every marker
+    * that is `live` (younger than the pending-liveness window) or, with
+    * `live = false`, stale. */
+  private def pendingMarkers(fs: FileSystem, dirPath: Path, live: Boolean)
+      : Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
     val now = System.currentTimeMillis()
     Option(fs.globStatus(new Path(dirPath, PendingPrefix + "*")))
-      .getOrElse(Array.empty)
-      .filter(st => now - st.getModificationTime <= pendingStaleMs)
-      .map(_.getPath.getName.stripPrefix(PendingPrefix)).toSet
+      .getOrElse(Array.empty).toSeq
+      .filter(st => (now - st.getModificationTime <= pendingStaleMs) == live)
+      .map(st => st.getPath.getName.stripPrefix(PendingPrefix) -> st)
   }
 
   /** Is THIS append's own marker still live? The batch commit's cheap
@@ -282,13 +278,9 @@ private[graft] object ArrowOcc {
     }.getOrElse(false)
 
   /** Sweep pending markers old enough to belong to dead runs. */
-  def sweepStalePending(fs: FileSystem, dirPath: Path): Unit = {
-    val now = System.currentTimeMillis()
-    Option(fs.globStatus(new Path(dirPath, PendingPrefix + "*")))
-      .getOrElse(Array.empty)
-      .filter(st => now - st.getModificationTime > pendingStaleMs)
-      .foreach(st => fs.delete(st.getPath, false))
-  }
+  def sweepStalePending(fs: FileSystem, dirPath: Path): Unit =
+    pendingMarkers(fs, dirPath, live = false)
+      .foreach { case (_, st) => fs.delete(st.getPath, false) }
 
   /** DRIVER-SIDE MARKER HEARTBEAT (round 11): a multi-hour batch append
     * must keep its in-flight protection for its whole write stage — a

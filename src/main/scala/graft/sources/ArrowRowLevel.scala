@@ -31,10 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (`.cow-<id>/`, own sentinel + stats + layout), clustered on the
   *     standing layout keys so a keyed or hive-partitioned dataset keeps
   *     its layout through the rewrite.
-  *  4. Commit = [[ArrowMaintenance.cowSwap]]: crash-safe intent/replay
-  *     swap under the `_SUCCESS` latch — replaced files out, staged
-  *     files in, manifests rebuilt; a crash anywhere leaves the latch
-  *     down and recover() replays to completion. No lineage is recorded
+  *  4. Commit = [[ArrowMaintenance.cowSwap]]: the one commit record
+  *     (kind "cow") and its replay under the `_SUCCESS` latch — replaced
+  *     files out, staged files in, manifests rebuilt; a crash anywhere
+  *     leaves the latch down and recover() replays to completion. No
+  *     lineage is recorded
   *     (rows CHANGED — a streaming consumer must see the rewritten files
   *     as new data, never skip them as "covered").
   *

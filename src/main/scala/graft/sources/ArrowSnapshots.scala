@@ -97,22 +97,13 @@ private[graft] object ArrowSnapshots {
       if (s.op.isEmpty) "" else ",\"op\":\"" + esc(s.op) + "\""}}"""
   }
 
-  /** Write one entry file crash-safely: full temp write, then rename to
-    * its (never-yet-existing) final name — a crash leaves a `.tmp` the
-    * listings ignore, never a torn entry. */
+  /** Write one entry file through the commit store's atomic replace — a
+    * crash leaves no entry or the whole one, never a torn one, and a
+    * replay of the same id rewrites it. */
   private def writeEntry(fs: FileSystem, dir: Path, name: String,
-      snap: Snapshot): Unit = {
-    val logPath = new Path(dir, LogDir)
-    fs.mkdirs(logPath)
-    val tmp = new Path(logPath, name + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entryBody(snap).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fin = new Path(logPath, name)
-    fs.delete(fin, false) // replay of the same id: rewrite wins
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"snapshots: rename $tmp -> $fin failed")
-  }
+      snap: Snapshot): Unit =
+    ArrowOcc.writeAtomic(fs, new Path(new Path(dir, LogDir), name),
+      entryBody(snap).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** The effective log, oldest-first: the newest BASE checkpoint (if
     * any) followed by the deltas after it. Throws on an unparseable

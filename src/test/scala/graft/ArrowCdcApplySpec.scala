@@ -112,10 +112,9 @@ class ArrowCdcApplySpec extends AnyFunSuite {
     val finalRel = ArrowDeleteVectors.dvRel(dataName, 1, 5L)
     graft.sources.ArrowOcc.writeAtomic(fs, new Path(dirPath, staged),
       ArrowDeleteVectors.encode(Array(0L, 1L, 2L, 3L, 4L)))
-    val intent = "{\"dv\":[{\"staged\":\"" + staged + "\",\"final\":\"" +
-      finalRel + "\"}],\"txnApp\":\"cdc_crash\",\"txnVer\":9}"
-    graft.sources.ArrowOcc.writeAtomic(fs,
-      new Path(dirPath, ArrowDeleteVectors.MorIntentFile), intent.getBytes)
+    ArrowMaintenance.writeIntent(fs, dirPath, ArrowMaintenance.Intent(
+      kind = "mor-delete", txn = Some(("cdc_crash", 9L)),
+      flips = Seq(ArrowMaintenance.DvFlip(staged, finalRel))))
     fs.delete(new Path(dirPath, "_SUCCESS"), false)
 
     assert(ArrowMaintenance.recover(spark, dir))

@@ -193,11 +193,8 @@ class ArrowDeleteSpec extends AnyFunSuite {
       ArrowFileStats.read(fs, dirPath)(n).cols("k").min.contains("C")
     }
     assert(doomed.nonEmpty)
-    val intentBody = doomed.toSeq.sorted
-      .map(n => "\"" + new org.apache.hadoop.fs.Path(dir, n).toString + "\"")
-      .mkString("[", ",", "]")
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_delete.json"), true)
-    out.write(intentBody.getBytes("UTF-8")); out.close()
+    ArrowMaintenance.writeIntent(fs, dirPath, ArrowMaintenance.Intent(
+      olds = doomed.toSeq.sorted, kind = "delete"))
     fs.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false)
     // mid-swap state refuses reads
     intercept[Exception] { spark.read.format("arrow-ipc").load(dir).count() }
@@ -206,7 +203,7 @@ class ArrowDeleteSpec extends AnyFunSuite {
     val back = spark.read.format("arrow-ipc").load(dir)
     assert(back.count() === 200)
     assert(back.filter(col("k") === "C").count() === 0)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_delete.json")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, ArrowMaintenance.IntentFile)))
   }
 
   test("NOT predicates delete through the canMatch/mustMatchAll duality") {

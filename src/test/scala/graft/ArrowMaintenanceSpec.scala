@@ -93,6 +93,33 @@ class ArrowMaintenanceSpec extends AnyFunSuite {
     assert(!ArrowMaintenance.recover(spark, dir))
   }
 
+  test("a commit never overwrites a pending commit record") {
+    val dir = tmp("graft_compact_pending")
+    spark.range(0, 100).select(col("id")).coalesce(1)
+      .write.format("arrow-ipc").mode("overwrite").save(dir)
+    val fs = fsOf(dir)
+    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val intentPath = new org.apache.hadoop.fs.Path(dirPath, ArrowMaintenance.IntentFile)
+    // a record whose replay refuses: its staged file is gone without
+    // reaching its final name, so it stays for a human
+    ArrowMaintenance.writeIntent(fs, dirPath, ArrowMaintenance.Intent(
+      staging = ".compact-lost",
+      moves = Map("part-lost.arrows" -> "part-lost-compact-lost.arrows")))
+    fs.delete(new org.apache.hadoop.fs.Path(dirPath, "_SUCCESS"), false)
+    val pending = ArrowFileStats.readFully(fs, intentPath)
+    intercept[IllegalStateException] { ArrowMaintenance.recover(spark, dir) }
+    // a merge-on-read delete commits without recovering first: it loses,
+    // and neither overwrites the record nor raises the latch
+    val file = fs.makeQualified(new org.apache.hadoop.fs.Path(dir,
+      partFiles(dir).head)).toString
+    intercept[graft.sources.ArrowOcc.CommitConflictException] {
+      graft.sources.ArrowDeleteVectors.commitDeletes(spark, dir,
+        Array(file -> Array(0L)))
+    }
+    assert(ArrowFileStats.readFully(fs, intentPath) === pending)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dirPath, "_SUCCESS")))
+  }
+
   test("lineage survives chained compactions; covered/touches resolve transitively") {
     val dir = tmp("graft_compact_lineage")
     (0 until 4).foreach { i =>

@@ -554,10 +554,9 @@ class ArrowMorSpec extends AnyFunSuite {
       (dvs.values.head.rel, (dataFiles(dir) -- dataFiles(dir).filter(n =>
         ArrowDeleteVectors.parseName(n + ".g1.c1.dv").isEmpty)).toSeq)
     }
-    val intent = "{\"dv\":[{\"staged\":\".dv/.mor-x-gone.dv\",\"final\":\"" +
-      dvRel + "\"}],\"staging\":\".mor-gone\",\"data\":[]}"
-    graft.sources.ArrowOcc.writeAtomic(fs,
-      new Path(dirPath, ArrowDeleteVectors.MorIntentFile), intent.getBytes)
+    ArrowMaintenance.writeIntent(fs, dirPath, ArrowMaintenance.Intent(
+      staging = ".mor-gone", kind = "mor-update",
+      flips = Seq(ArrowMaintenance.DvFlip(".dv/.mor-x-gone.dv", dvRel))))
     fs.delete(new Path(dirPath, "_SUCCESS"), false)
     assert(ArrowMaintenance.recover(spark, dir))
     assert(fs.exists(new Path(dirPath, "_SUCCESS")))
@@ -590,6 +589,41 @@ class ArrowMorSpec extends AnyFunSuite {
     val back = spark.read.format("arrow-ipc").load(dir)
     assert(back.count() === 147) // 150 'b' rows minus ids 150,200,250
     assert(back.where(col("id") % 50 === 0).count() === 0)
+  }
+
+  test("a metadata DELETE crashed between its trash moves and its log entry retires the vector on recover()") {
+    val dir = tmp("graft_mor_metadel_crash")
+    import spark.implicits._
+    val df = (0 until 300).map(i => (i.toLong, if (i < 150) "a" else "b"))
+      .toDF("id", "k")
+    graft.sources.Sinks.writeKeyGrouped(df, dir, Seq("k"), partitions = 2)
+    ArrowDeleteVectors.deleteMor(spark, dir, "id % 50 = 0") // both files
+    val fs = fsOf(dir)
+    val dirPath = new Path(dir)
+    // the record deleteWhere(k = 'a') commits: the 'a' file, its vector
+    val stats = graft.sources.ArrowFileStats.read(fs, dirPath)
+    val doomed = dataFiles(dir).toSeq.sorted
+      .filter(n => stats(n).cols("k").min.contains("a"))
+    assert(doomed.size === 1)
+    val dvs = doomed.map(n => liveDvs(dir)(n).rel)
+    val tip0 = ArrowSnapshots.currentTip(fs, dirPath)
+    // the crash: record written, latch down, the file and its vector
+    // already in the trash, no log entry yet
+    ArrowMaintenance.writeIntent(fs, dirPath, ArrowMaintenance.Intent(
+      olds = doomed, kind = "delete", dvs = dvs))
+    fs.delete(new Path(dirPath, "_SUCCESS"), false)
+    (doomed ++ dvs).foreach(r => ArrowSnapshots.moveToTrash(fs, dirPath, r))
+
+    assert(ArrowMaintenance.recover(spark, dir))
+    // the vector retired with its file, in exactly one log entry
+    assert(liveDvs(dir).size === 1)
+    assert(ArrowSnapshots.currentTip(fs, dirPath) === tip0 + 1)
+    val snaps = ArrowSnapshots.read(fs, dirPath)
+    assert(snaps.last.removes.toSet === (doomed ++ dvs).toSet)
+    assert(ArrowDeleteVectors.fromResolvedSet(
+      ArrowSnapshots.resolve(snaps, snaps.last.id).get).size === 1)
+    assert(spark.read.format("arrow-ipc").load(dir).count() === 147)
+    assert(!ArrowMaintenance.recover(spark, dir))
   }
 
   test("expiry keeps trash vectors referenced by retained snapshots, collects the rest") {
@@ -787,15 +821,14 @@ class ArrowMorSpec extends AnyFunSuite {
     val finalRel = ArrowDeleteVectors.dvRel(dataName, 1, 5L)
     graft.sources.ArrowOcc.writeAtomic(fs, new Path(dirPath, staged),
       ArrowDeleteVectors.encode(Array(0L, 1L, 2L, 3L, 4L)))
-    val intent = "[{\"staged\":\"" + staged + "\",\"final\":\"" + finalRel + "\"}]"
-    graft.sources.ArrowOcc.writeAtomic(fs,
-      new Path(dirPath, ArrowDeleteVectors.MorIntentFile), intent.getBytes)
+    ArrowMaintenance.writeIntent(fs, dirPath, ArrowMaintenance.Intent(
+      kind = "mor-delete", flips = Seq(ArrowMaintenance.DvFlip(staged, finalRel))))
     fs.delete(new Path(dirPath, "_SUCCESS"), false)
 
     // any maintenance caller converges the directory
     assert(ArrowMaintenance.recover(spark, dir))
     assert(fs.exists(new Path(dirPath, "_SUCCESS")))
-    assert(!fs.exists(new Path(dirPath, ArrowDeleteVectors.MorIntentFile)))
+    assert(!fs.exists(new Path(dirPath, ArrowMaintenance.IntentFile)))
     assert(liveDvs(dir).values.head.card === 5L)
     assert(spark.read.format("arrow-ipc").load(dir).count() === 95)
     // and the replay is itself replayable (fixed point)

@@ -91,17 +91,14 @@ class ArrowRestoreSpec extends AnyFunSuite {
     val snaps = ArrowSnapshots.read(fs, dirPath)
     val target = ArrowSnapshots.resolve(snaps, v1).get
     val cur = ArrowSnapshots.resolve(snaps, snaps.last.id).get
-    def arr(xs: Seq[String]) =
-      xs.map(s => "\"" + s + "\"").mkString("[", ",", "]")
-    val body = s"""{"to":$v1,"adds":${arr((target -- cur).toSeq.sorted)},""" +
-      s""""removes":${arr((cur -- target).toSeq.sorted)}}"""
-    graft.sources.ArrowOcc.writeAtomic(fs,
-      new Path(dirPath, ArrowMaintenance.RestoreIntentFile), body.getBytes)
+    ArrowMaintenance.writeIntent(fs, dirPath, ArrowMaintenance.Intent(
+      olds = (cur -- target).toSeq.sorted,
+      restores = (target -- cur).toSeq.sorted, kind = "restore"))
     fs.delete(new Path(dirPath, "_SUCCESS"), false)
 
     assert(ArrowMaintenance.recover(spark, dir))
     assert(fs.exists(new Path(dirPath, "_SUCCESS")))
-    assert(!fs.exists(new Path(dirPath, ArrowMaintenance.RestoreIntentFile)))
+    assert(!fs.exists(new Path(dirPath, ArrowMaintenance.IntentFile)))
     assert(ids(dir) === (0L until 40L).toSet)
     // the replay is itself replayable (fixed point)
     assert(!ArrowMaintenance.recover(spark, dir))
