@@ -628,8 +628,8 @@ object Similarity {
     * the cells tip. A moved tip does NOT restart the rewrite: appends
     * only ever ADD key-grouped cell files, so the catch-up folds exactly
     * the rows of the snapshots committed since the last tip into the
-    * staged generation (an O(delta) keyed append — the [[graft.sources
-    * .ArrowSnapshots.readRange]] window, never a re-listing) and re-takes
+    * staged generation (an O(delta) keyed append of the [[graft.sources
+    * .ArrowSnapshots.readRange]] window's files, never a re-listing) and re-takes
     * the lock; each round's delta is bounded by the append traffic of
     * the previous round's fold, so the loop converges unless ingest
     * outruns a sub-second append indefinitely.
@@ -734,17 +734,11 @@ object Similarity {
       val window = graft.sources.ArrowSnapshots.readRange(
         fs, cellsPath, tip0, verdict, "ivf_compact")
       if (window.exists(_.removes.nonEmpty)) return abandon()
-      val deltaPaths = window.flatMap(_.adds).map(rel => fs.makeQualified(
-        new org.apache.hadoop.fs.Path(cellsPath, rel)).toString)
-      // the shared planner bound: a catch-up this far behind should
-      // re-run, not plan a huge literal
-      if (deltaPaths.size > graft.sources.ArrowMaintenance.MaxIsinPaths)
-        return abandon()
-      if (deltaPaths.nonEmpty)
-        spark.read.format("arrow-ipc").load(cellsPath.toString)
-          .filter(col(graft.sources.ArrowRowLevel.FileColumn)
-            .isin(deltaPaths: _*))
-          .drop(graft.sources.ArrowRowLevel.FileColumn)
+      val (deltaRels, _) = graft.sources.ArrowDeleteVectors.splitResolved(
+        window.flatMap(_.adds).toSet)
+      if (deltaRels.nonEmpty)
+        graft.sources.ArrowMaintenance.filesAsOf(spark, cellsPath.toString,
+          verdict, deltaRels)
           .write.format("arrow-ipc").mode("append")
           .option("partitionKeys", "cid").save(newCellsDir)
       tip0 = verdict

@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *  - the NET file delta over `(from, to]` is folded from the log
   *    (a file added and removed inside the window cancels — net-change
   *    semantics);
-  *  - inserted rows = an `asOfSnapshot(to)` read pruned to the added
-  *    files, deleted rows = an `asOfSnapshot(from)` read pruned to the
-  *    removed files — the pruning is the scan's own STATIC `_file`
-  *    pushdown, so the feed opens exactly the changed files, never the
-  *    table;
+  *  - inserted rows = the added files read as of `to`, deleted rows =
+  *    the removed files read as of `from` — each side a scan over a CUT
+  *    view ([[ArrowLiveView.forRead]] with `keep`) that resolves only
+  *    its files, so the feed opens exactly the changed files, never the
+  *    table, and plans no `_file` literal list;
   *  - each row carries `_change_type` (`insert` | `delete`).
   *
   * Copy-on-write semantics: a rewritten file's rows appear as `delete`
@@ -83,25 +83,16 @@ object ArrowChanges {
     val netRemoves = removed -- added
     val dvActivity = ArrowDeleteVectors.windowActivity(dvAdded, dvRemoved)
 
-    def resolve(rel: String): String =
-      ArrowSnapshots.resolveLiveOrTrash(fs, dirPath, rel,
-        s"change-feed window ($from, $to]").getPath.toString
-
-    def side(asOf: Long, rels: Set[String], kind: String): DataFrame = {
-      val base = spark.read.format("arrow-ipc")
-        .option("asOfSnapshot", asOf).load(dir)
-      // resolve each relative path the way the as-of scan will (live
-      // first, trash second) so the pushed `_file IN` matches exactly.
-      // The as-of read applies the deletion vectors in force AT that
-      // snapshot, so inserts exclude positions already deleted by `to`
-      // and old-image deletes exclude positions already deleted at `from`.
-      val paths = rels.toSeq.sorted.map(resolve)
-      val pruned =
-        if (paths.isEmpty) base.filter(lit(false))
-        else base.filter(col(ArrowRowLevel.FileColumn).isin(paths: _*))
-      pruned.drop(ArrowRowLevel.FileColumn)
-        .withColumn("_change_type", lit(kind))
-    }
+    // every read is a cut view pinned at its snapshot, gated like any
+    // batch read; its scan masks the vectors in force AT that snapshot, so
+    // inserts exclude positions deleted by `to`, deletes those at `from`
+    val schema = ArrowInterchange.readSchema(spark, dir)
+    def cut(asOf: Long, rels: Set[String]): ArrowLiveView =
+      ArrowLiveView.forRead(spark, dir, schema, asOf = Some(asOf), keep = Some(rels))
+    def frame(asOf: Long, view: ArrowLiveView): DataFrame =
+      ArrowMaintenance.stagingFrame(spark, dir, schema, view, Some(asOf))
+    def side(asOf: Long, rels: Set[String], kind: String): DataFrame =
+      frame(asOf, cut(asOf, rels)).withColumn("_change_type", lit(kind))
 
     val inserts = side(to, netAdds, "insert")
     if (from == 0) return inserts
@@ -124,29 +115,26 @@ object ArrowChanges {
     val state = ArrowSnapshots.resolve(snaps, to).getOrElse(Set.empty)
     val relByName = (ArrowDeleteVectors.splitResolved(state)._1 ++
       added ++ removed).iterator.map(r => new Path(r).getName -> r).toMap
+    // the old images at `from`, cut to the files whose vector advanced
+    val morView = cut(from, mor.map { case (n, _, _) =>
+      relByName.getOrElse(n, throw new IllegalStateException(
+        s"arrow-ipc change feed: window ($from, $to] has a deletion " +
+          s"vector for $n but no snapshot records the file"))
+    }.toSet)
+    val pathOf = morView.files.iterator.map(f => f.name -> f.path).toMap
+    def positions(dv: ArrowDeleteVectors.DvRef): Array[Long] =
+      ArrowDeleteVectors.read(fs, ArrowSnapshots.resolveLiveOrTrash(fs,
+        dirPath, dv.rel, s"change-feed window ($from, $to]").getPath)
     val pairs: Seq[(String, Long)] = mor.flatMap { case (n, top, pre) =>
-      val topPos = ArrowDeleteVectors.read(fs, new Path(resolve(top.rel)))
-      val preSet = pre.fold(Set.empty[Long])(p =>
-        ArrowDeleteVectors.read(fs, new Path(resolve(p.rel))).toSet)
-      val path = resolve(relByName.getOrElse(n,
-        throw new IllegalStateException(s"arrow-ipc change feed: window " +
-          s"($from, $to] has a deletion vector for $n but no snapshot " +
-          "records the file")))
-      topPos.iterator.filterNot(preSet).map(p => (path, p)).toSeq
+      val preSet = pre.fold(Set.empty[Long])(positions(_).toSet)
+      pathOf.get(n).toSeq.flatMap(path =>
+        positions(top).iterator.filterNot(preSet).map(p => (path, p)))
     }
     import spark.implicits._
     val delta = broadcast(pairs.toDF("__f", "__p"))
-    val asFrom = spark.read.format("arrow-ipc")
-      .option("asOfSnapshot", from).load(dir)
-    val dataCols = asFrom.columns.toSeq
-    val morRows = asFrom
-      .filter(col(ArrowRowLevel.FileColumn)
-        .isin(pairs.map(_._1).distinct: _*))
-      .select(dataCols.map(col) :+
-        col(ArrowRowLevel.FileColumn).as("__f") :+
-        col(ArrowRowLevel.PosColumn).as("__p"): _*)
-      .join(delta, Seq("__f", "__p"), "left_semi")
-      .drop("__f", "__p")
+    val morRows = frame(from, morView)
+      .join(delta, col(ArrowRowLevel.FileColumn) === col("__f") &&
+        col(ArrowRowLevel.PosColumn) === col("__p"), "left_semi")
       .withColumn("_change_type", lit("delete"))
     inserts.unionAll(deletes).unionAll(morRows)
   }

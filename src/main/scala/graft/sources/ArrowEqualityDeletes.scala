@@ -654,7 +654,8 @@ object ArrowEqualityDeletes {
     * — the readers emit exactly the equality-masked, DV-alive rows as
     * (_file, _pos) — grouped per file and committed through the MOR
     * machinery ([[ArrowDeleteVectors.commitDeletes]]: cumulative
-    * vectors, intent/replay, commit lock). Tombstone removal is a
+    * vectors, intent/replay, commit lock), one commit per path range of
+    * at most `spark.graft.arrow.foldBatchRows` rows. Tombstone removal is a
     * SECOND, separately-crash-safe step: between the two, rows are
     * masked by both artifacts (masking is idempotent), and a re-run
     * finds zero new positions and proceeds straight to removal.
@@ -683,7 +684,9 @@ object ArrowEqualityDeletes {
       // ~80 MB of longs), one MOR commit per group, instead of one
       // unbounded collect over a table whose equality debt is exactly
       // what motivated the fold. The per-FILE counts (tiny: one row per
-      // masked file) drive the grouping; `hits` is persisted, so each
+      // masked file), sorted by path, cut the groups: each is a run of
+      // paths selected by its first and last (Spark's own binary string
+      // order), however many files. `hits` is persisted, so each
       // group's collect re-reads spilled rows, not the table.
       val groupCap = scala.util.Try(spark.conf
         .get("spark.graft.arrow.foldBatchRows", "10000000").toLong)
@@ -694,9 +697,10 @@ object ArrowEqualityDeletes {
       // driver materialization. `toLocalIterator` over the executor-side
       // sort streams one partition at a time into the group builder, so
       // driver residency is one partition of (path, count) pairs plus
-      // the groups themselves (bounded: 1000 paths per group).
-      val groups = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-      var cur = scala.collection.mutable.ArrayBuffer.empty[String]
+      // the groups' (first, last) path bounds.
+      val groups = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      var first: String = null
+      var last: String = null
       var curRows = 0L
       hits.groupBy(ArrowRowLevel.FileColumn)
         .agg(count(lit(1)).as("n"))
@@ -705,22 +709,16 @@ object ArrowEqualityDeletes {
         .forEachRemaining { r =>
           val (f, n) = (r.getString(0), r.getLong(1))
           total += n
-          // rows bound driver memory; the file-count bound (the shared
-          // ArrowMaintenance.MaxIsinPaths) keeps the group's `isin`
-          // restriction a sane expression (a group of 100k tiny masks
-          // would otherwise plan a 100k-literal filter)
-          if (cur.nonEmpty && (curRows + n > groupCap ||
-              cur.size >= ArrowMaintenance.MaxIsinPaths)) {
-            groups += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer.empty
-            curRows = 0L
+          if (first != null && curRows + n > groupCap) {
+            groups += first -> last; first = null; curRows = 0L
           }
-          cur += f; curRows += n
+          if (first == null) first = f
+          last = f; curRows += n
         }
-      if (cur.nonEmpty) groups += cur.toSeq
+      if (first != null) groups += first -> last
       var filesMasked = 0
-      groups.foreach { g =>
-        val perFile = hits
-          .filter(col(ArrowRowLevel.FileColumn).isin(g: _*))
+      groups.foreach { case (lo, hi) =>
+        val perFile = hits.filter(col(ArrowRowLevel.FileColumn).between(lo, hi))
           .groupBy(ArrowRowLevel.FileColumn)
           .agg(sort_array(collect_list(col(ArrowRowLevel.PosColumn))).as("pos"))
           .collect()

@@ -78,8 +78,9 @@ class ArrowIpcSource extends TableProvider with DataSourceRegister {
 /** `asOf`: a TIME-TRAVEL pin ([[ArrowCatalog.loadTable]] `VERSION AS OF`
   * / `TIMESTAMP AS OF`) — scans read the pinned snapshot's file set and
   * every mutation refuses. The read option `asOfSnapshot` pins a single
-  * DataFrame read the same way. `view`: a live view the caller already
-  * loaded (a maintenance rewrite's files) — scans read exactly its files
+  * DataFrame read the same way. `view`: a view the caller already loaded
+  * — any chosen set of the table's files, live or pinned at `asOf`
+  * ([[ArrowMaintenance.stagingFrame]]) — scans read exactly its files
   * and list nothing. */
 private[sources] class ArrowIpcTable(tableSchema: StructType, dir: String,
     asOf: Option[Long] = None, view: Option[ArrowLiveView] = None)
@@ -1034,10 +1035,10 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
   }
 
-  /** STATIC `_file` pruning: a pushed `.where(col("_file").isin(…))`
-    * (the change-feed's and any provenance point-read's shape) drops
-    * non-matching files at planning — exact by identity, since the
-    * values are this scan's own emitted paths. */
+  /** STATIC `_file` pruning: a pushed `_file IN (…)` or `_file = …` (a
+    * user's provenance point-read) drops non-matching files at planning
+    * — exact by identity, since the values are this scan's own emitted
+    * paths. */
   private lazy val staticFileKeep: Option[Set[String]] = fileKeepFrom(filters)
 
   override def filter(runtimeFilters: Array[org.apache.spark.sql.sources.Filter]): Unit = {

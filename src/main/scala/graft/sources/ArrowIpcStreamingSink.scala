@@ -121,19 +121,12 @@ private[graft] object ArrowStreamCommits {
     val stale = ArrowOcc.staleMs
     // walk nested value directories too (a hive-layout stream lands its
     // epoch files — and crashes its orphans — inside them)
-    def walk(at: Path, prefix: String): Seq[String] =
-      Option(fs.listStatus(at)).getOrElse(Array.empty).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (n.startsWith("_") || n.startsWith(".")) Nil
-          else walk(st.getPath, prefix + n + "/")
-        } else if (((isStreamName(n) &&
-            !ledger.exists(_.committed.contains(commitIdOf(n)))) ||
-          (n.startsWith(".part-") && n.endsWith(".tmp"))) &&
-          now - st.getModificationTime > stale) Seq(prefix + n)
-        else Nil
-      }
-    val orphans = walk(dir, "")
+    val orphans = ArrowSnapshots.walk(fs, dir, ArrowSnapshots.notHidden) { st =>
+      val n = st.getPath.getName
+      ((isStreamName(n) && !ledger.exists(_.committed.contains(commitIdOf(n)))) ||
+        (n.startsWith(".part-") && n.endsWith(".tmp"))) &&
+        now - st.getModificationTime > stale
+    }.map(_._1)
     orphans.foreach(rel => fs.delete(new Path(dir, rel), false))
     orphans
   }

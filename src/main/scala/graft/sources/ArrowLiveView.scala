@@ -51,7 +51,8 @@ private[sources] final case class LiveFile(rel: String, status: FileStatus,
   *    total value directories). Time travel (`asOf`) takes the snapshot
   *    log's file set instead — each path live first, trash second, a
   *    nested path assigned to the first generation whose keys it parses
-  *    under — and lists nothing. */
+  *    under — and lists nothing. A CUT view (`keep`) holds, and when
+  *    pinned resolves, only the files at the relative paths it names. */
 private[sources] final case class ArrowLiveView(
     open: Boolean,
     hidden: Set[String],
@@ -92,11 +93,12 @@ private[sources] object ArrowLiveView {
 
   /** Build the view of `dir`. `schema` resolves the hive keys (evaluated
     * only when the layout has any); `filters` prune hive value
-    * directories; `asOf` pins a snapshot; a closed gate is re-checked
-    * every 25 ms for up to `waitMs` before the view reports it closed. */
+    * directories; `asOf` pins a snapshot; `keep` cuts the view to the
+    * files at those relative paths; a closed gate is re-checked every
+    * 25 ms for up to `waitMs` before the view reports it closed. */
   def load(spark: SparkSession, dir: String, schema: => StructType,
       filters: Array[Filter] = Array.empty, asOf: Option[Long] = None,
-      waitMs: Long = 0L): ArrowLiveView = {
+      waitMs: Long = 0L, keep: Option[Set[String]] = None): ArrowLiveView = {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val deadline = System.nanoTime() + waitMs * 1000000L
@@ -110,8 +112,8 @@ private[sources] object ArrowLiveView {
     asOf match {
       case Some(id) =>
         ArrowLiveView(g.isDefined, hidden, active, olds, hasFlat,
-          travel(fs, dirPath, dir, id, if (active.isEmpty) Nil else active +: olds),
-          Nil, (0, 0))
+          travel(fs, dirPath, dir, id, if (active.isEmpty) Nil else active +: olds,
+            keep), Nil, (0, 0))
       case None =>
         // the flat generation is the walk with no key levels
         var kept = 0
@@ -124,7 +126,8 @@ private[sources] object ArrowLiveView {
           files
         }
         val visible = visibleFilter(fs, dirPath, hidden)
-        val (vis, invis) = listed.partition(f => visible(f.name))
+        val (vis, invis) = listed.filter(f => keep.forall(_(f.rel)))
+          .partition(f => visible(f.name))
         ArrowLiveView(g.isDefined, hidden, active, olds, hasFlat, vis, invis,
           (kept, total))
     }
@@ -137,11 +140,11 @@ private[sources] object ArrowLiveView {
     * wait (a crashed writer) fails loudly instead of serving partial
     * data. */
   def forRead(spark: SparkSession, dir: String, schema: => StructType,
-      filters: Array[Filter] = Array.empty,
-      asOf: Option[Long] = None): ArrowLiveView = {
+      filters: Array[Filter] = Array.empty, asOf: Option[Long] = None,
+      keep: Option[Set[String]] = None): ArrowLiveView = {
     val waitMs = scala.util.Try(spark.conf
       .get("spark.graft.arrow.readGateWaitMs", "3000").toLong).getOrElse(3000L)
-    val view = load(spark, dir, schema, filters, asOf, waitMs)
+    val view = load(spark, dir, schema, filters, asOf, waitMs, keep)
     if (!view.open) throw new IllegalArgumentException(
       s"Arrow interchange: $dir has a schema sentinel but no _SUCCESS " +
         s"marker after $waitMs ms — the writing job did not complete; " +
@@ -224,12 +227,12 @@ private[sources] object ArrowLiveView {
     (files, kept, total)
   }
 
-  /** The file set of snapshot `id`, each path resolved live first, trash
-    * second; an unknown or expired snapshot refuses loudly rather than
-    * serving a partial table. Deletion vectors ride the same log entries
-    * and are split off. */
+  /** The file set of snapshot `id` (cut to `keep`), each path resolved
+    * live first, trash second; an unknown or expired snapshot refuses
+    * loudly rather than serving a partial table. Deletion vectors ride
+    * the same log entries and are split off. */
   private def travel(fs: FileSystem, dirPath: Path, dir: String, id: Long,
-      gens: Seq[Seq[StructField]]): Seq[LiveFile] = {
+      gens: Seq[Seq[StructField]], keep: Option[Set[String]]): Seq[LiveFile] = {
     val snaps = scala.util.Try(ArrowSnapshots.read(fs, dirPath)).getOrElse(Nil)
     val resolved = ArrowSnapshots.resolve(snaps, id).getOrElse(
       throw new IllegalArgumentException(
@@ -237,7 +240,7 @@ private[sources] object ArrowLiveView {
           if (snaps.isEmpty) " (no snapshot log)"
           else s" — the log records ${snaps.head.id}..${snaps.last.id}")))
     val (set, _) = ArrowDeleteVectors.splitResolved(resolved)
-    set.toSeq.sorted.map { rel =>
+    set.filter(rel => keep.forall(_(rel))).toSeq.sorted.map { rel =>
       val st = ArrowSnapshots.resolveLiveOrTrash(fs, dirPath, rel,
         s"snapshot $id of $dir")
       // a bare name is a flat-generation file; a nested one belongs to

@@ -71,12 +71,6 @@ object ArrowMaintenance {
   /** Outcome of a [[compact]] run: how many files went in and came out. */
   case class CompactionResult(oldFiles: Int, newFiles: Int)
 
-  /** The largest per-file `isin` literal list a single staged read may
-    * plan — shared by the eq fold's driver-group builder and the IVF
-    * compact's catch-up bound ([[graft.ops.Similarity.ivfCompact]]), so
-    * a planner-limit tune moves both in lockstep. */
-  private[graft] val MaxIsinPaths = 1000
-
   /** Compact `dir`'s IPC files into ~`targetBytes` files (coalesce — no
     * shuffle; row order within each original file is preserved). Returns
     * the file counts, or None when there is nothing to merge. `codec`:
@@ -356,12 +350,12 @@ object ArrowMaintenance {
       targetBytes: Long, codec: Option[String])(
       shape: (DataFrame, Int) => DataFrame): CompactionResult = {
     val view = if (listed.open) listed else {
-      val fresh = ArrowLiveView.forRead(spark, dirPath.toString, tableSchema)
-      val wanted = listed.files.map(_.rel).toSet
-      val kept = fresh.files.filter(f => wanted(f.rel))
-      if (kept.size < wanted.size) throw new ArrowOcc.CommitConflictException(
-        s"arrow-ipc: $dirPath changed while its gate was closed; re-listing")
-      fresh.copy(files = kept)
+      val fresh = ArrowLiveView.forRead(spark, dirPath.toString, tableSchema,
+        keep = Some(listed.files.map(_.rel).toSet))
+      if (fresh.files.size < listed.files.size)
+        throw new ArrowOcc.CommitConflictException(
+          s"arrow-ipc: $dirPath changed while its gate was closed; re-listing")
+      fresh
     }
     val olds = view.files.map(_.rel)
     val id = java.util.UUID.randomUUID.toString.take(8)
@@ -411,15 +405,24 @@ object ArrowMaintenance {
     CompactionResult(olds.length, staged.length)
   }
 
-  /** A rewrite's staging frame: the table read through the DSv2 scan over
-    * `view` — exactly its files, listed by nobody again — under `schema`,
-    * the one `load(dir)` infers ([[ArrowInterchange.readSchema]]) and
-    * `view` was resolved under, so files written before a rename or drop
-    * resolve as in any read. */
+  /** The one read of a chosen set of a table's files: the DSv2 scan over
+    * `view`, live or pinned at `asOf` — exactly its files, listed by
+    * nobody again — under `schema`, the one `load(dir)` infers
+    * ([[ArrowInterchange.readSchema]]) and `view` was resolved under, so
+    * files written before a rename or drop resolve as in any read. */
   private[sources] def stagingFrame(spark: SparkSession, dir: String,
-      schema: StructType, view: ArrowLiveView): DataFrame =
-    GraftSqlShim.tableFrame(spark, new ArrowIpcTable(schema, dir,
-      view = Some(view)))
+      schema: StructType, view: ArrowLiveView,
+      asOf: Option[Long] = None): DataFrame =
+    GraftSqlShim.tableFrame(spark, new ArrowIpcTable(schema, dir, asOf,
+      Some(view)))
+
+  /** [[stagingFrame]] over snapshot `asOf`'s files at paths `rels`. */
+  private[graft] def filesAsOf(spark: SparkSession, dir: String, asOf: Long,
+      rels: Set[String]): DataFrame = {
+    val schema = ArrowInterchange.readSchema(spark, dir)
+    stagingFrame(spark, dir, schema, ArrowLiveView.forRead(spark, dir, schema,
+      asOf = Some(asOf), keep = Some(rels)), Some(asOf))
+  }
 
   /** CLUSTERED REWRITE — the OPTIMIZE-sort analog: rewrite the dataset
     * ordered on `sortCols` so every file covers a narrow, nearly disjoint
@@ -1143,13 +1146,8 @@ object ArrowMaintenance {
     // trashed by a commit landing after this listing is simply absent
     // from the candidate set and survives until the next expiry: sound,
     // never a wrong delete.
-    def listTrash(at: Path, prefix: String): Seq[String] =
-      Option(fs.listStatus(at)).getOrElse(Array.empty).toSeq.flatMap { st =>
-        val rel = prefix + st.getPath.getName
-        if (st.isDirectory) listTrash(st.getPath, rel + "/") else Seq(rel)
-      }
     val candidates =
-      if (fs.exists(trashRoot)) listTrash(trashRoot, "") else Nil
+      ArrowSnapshots.walk(fs, trashRoot, _ => true)(_ => true).map(_._1)
     // under the lock: METADATA ONLY — validate, fold the retained state,
     // land the base checkpoint, decide the doomed set. Milliseconds held,
     // like every other commit's critical section.

@@ -307,18 +307,32 @@ private[graft] object ArrowSnapshots {
 
   /** As [[listDataFiles]] but carrying each file's FileStatus. */
   def listDataFileStatuses(fs: FileSystem, root: Path)
+      : Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+    walk(fs, root, notHidden) { st =>
+      val name = st.getPath.getName
+      name.startsWith("part-") && name.endsWith(".arrows")
+    }
+
+  /** A metadata (`_*`) or hidden (`.*`) name is none of the table's data. */
+  def notHidden(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  /** The one RAW recursive walk: each file under `root` that `keep`
+    * accepts, as (path relative to `root`, status), descending into
+    * directories whose name `descend` accepts. */
+  def walk(fs: FileSystem, root: Path, descend: String => Boolean)(
+      keep: org.apache.hadoop.fs.FileStatus => Boolean)
       : Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
-    def walk(at: Path, prefix: String)
+    def go(at: Path, prefix: String)
         : Seq[(String, org.apache.hadoop.fs.FileStatus)] =
       Option(fs.listStatus(at)).getOrElse(Array.empty).toSeq.flatMap { st =>
         val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath, prefix + name + "/")
-        else if (name.startsWith("part-") && name.endsWith(".arrows"))
-          Seq((prefix + name, st))
+        if (st.isDirectory)
+          if (descend(name)) go(st.getPath, prefix + name + "/") else Nil
+        else if (keep(st)) Seq((prefix + name, st))
         else Nil
       }
-    if (!fs.exists(root)) Nil else walk(root, "")
+    if (!fs.exists(root)) Nil else go(root, "")
   }
 
   /** Exact own-commit observability (round 17): a writer that must later

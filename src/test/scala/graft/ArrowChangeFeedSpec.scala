@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{ArrowChanges, ArrowMaintenance}
 
 /** Change feed between snapshots: net file deltas folded from the
-  * snapshot log, served as `insert`/`delete` rows via `_file`-pruned
-  * as-of reads — incremental processing without rescanning the table. */
+  * snapshot log, served as `insert`/`delete` rows via as-of reads over
+  * cut views — incremental processing without rescanning the table. */
 class ArrowChangeFeedSpec extends AnyFunSuite {
   private lazy val spark = {
     val s = TestSpark.spark
@@ -54,7 +54,7 @@ class ArrowChangeFeedSpec extends AnyFunSuite {
     assert(f03.filter(col("_change_type") === "delete").count() === 0)
   }
 
-  test("the feed opens only the changed files (static _file pushdown)") {
+  test("the feed opens only the changed files (cut view, no _file list)") {
     val dir = tmp("graft_cf_prune")
     spark.range(0, 400).select(col("id"))
       .repartitionByRange(4, col("id"))
@@ -65,6 +65,13 @@ class ArrowChangeFeedSpec extends AnyFunSuite {
     // one file changed → one scan partition, not five
     assert(feed.rdd.getNumPartitions === 1)
     assert(feed.count() === 10)
+    // ... read through a cut view, never a `_file` literal list (an
+    // `isin` of one path reaches the optimized plan as `=`)
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, In, InSet}
+    val lists = feed.queryExecution.optimizedPlan.flatMap(_.expressions
+      .flatMap(_.collect { case e @ (_: In | _: InSet | _: EqualTo) => e })
+      .filter(_.references.exists(_.name == "_file")))
+    assert(lists.isEmpty, s"the feed plans a _file list: $lists")
   }
 
   test("a file added and removed inside the window nets to zero") {

@@ -376,12 +376,19 @@ class ArrowEqualityDeletesSpec extends AnyFunSuite {
     val before = table(dir).orderBy("key", "v").collect().toSeq
     assert(before.length === 201)
     // cap of 20 rows/group forces ~6 groups over the 120 masked rows
+    val fs = fsOf(dir)
+    val tip0 = graft.sources.ArrowSnapshots.currentTip(fs, new Path(dir))
     spark.conf.set("spark.graft.arrow.foldBatchRows", "20")
     try {
       val f = ArrowEqualityDeletes.fold(spark, dir)
       assert(f.rows === 120L && f.filesMasked === 8,
         s"grouped fold wrong: $f")
     } finally spark.conf.unset("spark.graft.arrow.foldBatchRows")
+    // the row cut, not just the outcome: every group logs its own
+    // deletion-vector commit, and one more entry retires the tombstone
+    val dvCommits =
+      graft.sources.ArrowSnapshots.currentTip(fs, new Path(dir)) - tip0 - 1
+    assert(dvCommits > 1, s"the fold logged $dvCommits vector commit(s)")
     assert(!ArrowEqualityDeletes.any(fsOf(dir), new Path(dir)))
     assert(table(dir).orderBy("key", "v").collect().toSeq === before,
       "grouped fold changed the table's content")
