@@ -611,6 +611,11 @@ object Similarity {
     * see a racing append's rows and the catch-up would fold them twice. */
   private[graft] var beforeIvfCompactStageHook: () => Unit = () => ()
 
+  /** Catch-up rounds [[ivfCompact]] has run in this JVM (a flip that
+    * lost its tip race and folded the window's appends before retrying)
+    * — read by the stress probe to show its race reached the catch-up. */
+  private[graft] val ivfCatchUpRounds = new java.util.concurrent.atomic.AtomicLong
+
   /** COMPACT the stored index's cell files. An incrementally grown index
     * adds one key-grouped file set per [[ivfAppend]] — thousands of
     * appends mean thousands of small cell files per posting list, and
@@ -741,6 +746,7 @@ object Similarity {
           verdict, deltaRels)
           .write.format("arrow-ipc").mode("append")
           .option("partitionKeys", "cid").save(newCellsDir)
+      ivfCatchUpRounds.incrementAndGet()
       tip0 = verdict
     }
     abandon()

@@ -30,9 +30,9 @@ import graft.functions.RefHash
   *    positions (every probe derives from the pair), so builder dedup on
   *    the (h1,h2) pair is lossless BY CONSTRUCTION — not "negligibly
   *    unlikely to lose", structurally unable to;
-  *  - false POSITIVES only cost a kept file (Spark's post-scan filter
-  *    keeps exact semantics — the advisory contract every pruning path
-  *    here shares).
+  *  - false POSITIVES only cost a kept file (the readers' exact filter
+  *    or Spark's post-scan filter keeps exact semantics — the advisory
+  *    contract every pruning path here shares).
   */
 private[graft] case class BloomStats(k: Int, bits: Array[Long]) {
   /** Bit count; always a power of two (masking, not modulo). */

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *    the removed files read as of `from` — each side a scan over a CUT
   *    view ([[ArrowLiveView.forRead]] with `keep`) that resolves only
   *    its files, so the feed opens exactly the changed files, never the
-  *    table, and plans no `_file` literal list;
+  *    table, and plans no `_file` literal list. The feed reads the log
+  *    once and hands each view its edge's folded state, which also
+  *    carries the view's deletion vectors to its scan;
   *  - each row carries `_change_type` (`insert` | `delete`).
   *
   * Copy-on-write semantics: a rewritten file's rows appear as `delete`
@@ -57,6 +59,11 @@ object ArrowChanges {
         "(expired history? 0 = since the beginning)")
 
     val window = snaps.filter(e => e.id > from && e.id <= to)
+    // each window edge folded once: the tombstone check, the
+    // merge-on-read state and the cut views below all take it
+    val stateAt: Map[Long, Set[String]] = Seq(from, to).filter(_ > 0)
+      .map(id => id -> ArrowSnapshots.resolve(snaps, id).getOrElse(Set.empty))
+      .toMap
     // EQUALITY DELETES: the feed is sound iff NEITHER ENDPOINT has
     // tombstones in force — a window that fully spans upsert→fold is
     // served correctly (the batches' inserts are ordinary data adds,
@@ -66,8 +73,7 @@ object ArrowChanges {
     // have no positional record yet — fold (CALL graft.system.purge_eq)
     // and the feed resumes across it
     def eqInForce(id: Long): Boolean = id > 0 &&
-      ArrowSnapshots.resolve(snaps, id).getOrElse(Set.empty)
-        .exists(_.startsWith(ArrowEqualityDeletes.EqDir + "/"))
+      ArrowEqualityDeletes.inForce(stateAt(id))
     require(!eqInForce(from) && !eqInForce(to),
       s"arrow-ipc change feed: window ($from, $to] of $dir starts or " +
         "ends with equality-delete tombstones in force — their " +
@@ -88,7 +94,8 @@ object ArrowChanges {
     // inserts exclude positions deleted by `to`, deletes those at `from`
     val schema = ArrowInterchange.readSchema(spark, dir)
     def cut(asOf: Long, rels: Set[String]): ArrowLiveView =
-      ArrowLiveView.forRead(spark, dir, schema, asOf = Some(asOf), keep = Some(rels))
+      ArrowLiveView.forRead(spark, dir, schema, asOf = Some(asOf),
+        keep = Some(rels), state = stateAt.get(asOf))
     def frame(asOf: Long, view: ArrowLiveView): DataFrame =
       ArrowMaintenance.stagingFrame(spark, dir, schema, view, Some(asOf))
     def side(asOf: Long, rels: Set[String], kind: String): DataFrame =
@@ -112,8 +119,7 @@ object ArrowChanges {
     }.toSeq.sortBy(_._1)
     if (mor.isEmpty) return inserts.unionAll(deletes)
 
-    val state = ArrowSnapshots.resolve(snaps, to).getOrElse(Set.empty)
-    val relByName = (ArrowDeleteVectors.splitResolved(state)._1 ++
+    val relByName = (ArrowDeleteVectors.splitResolved(stateAt(to))._1 ++
       added ++ removed).iterator.map(r => new Path(r).getName -> r).toMap
     // the old images at `from`, cut to the files whose vector advanced
     val morView = cut(from, mor.map { case (n, _, _) =>

@@ -83,6 +83,11 @@ object ArrowEqualityDeletes {
   def any(fs: FileSystem, dirPath: Path): Boolean =
     liveTombs(fs, dirPath).nonEmpty
 
+  /** True iff a resolved snapshot set holds tombstones (time travel and
+    * the change feed refuse such a snapshot). */
+  def inForce(resolved: Set[String]): Boolean =
+    resolved.exists(_.startsWith(EqDir + "/"))
+
   /** Live tombstones as (rel path, sequence), ascending by sequence. */
   def liveTombs(fs: FileSystem, dirPath: Path): Seq[(String, Long)] =
     tombNames(fs, dirPath).map { case (rel, (seq, _)) => (rel, seq) }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnVector
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-file column statistics for Arrow IPC directories — the Arrow analog
@@ -19,9 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `_stats.json` next to `_SUCCESS` (appends merge with the existing
   * file). Read side: [[ArrowFileStats.canMatch]] evaluates pushed v1
   * `Filter`s against a file's interval — a file is SKIPPED only when the
-  * stats PROVE no row can match, so pruning is advisory and Spark's own
-  * post-scan Filter keeps exact semantics (the same contract as parquet
-  * row-group skipping).
+  * stats PROVE no row can match, so pruning is advisory (the same
+  * contract as parquet row-group skipping). Exact semantics come from
+  * the rows: the readers evaluate [[ArrowFileStats.exact]]'s filters
+  * themselves, and Spark's post-scan Filter evaluates the rest.
   *
   * Soundness notes, encoded as "invalid ⇒ never prune":
   *  - doubles: a NaN anywhere invalidates that column's interval (NaN
@@ -105,27 +107,7 @@ private[graft] object ArrowFileStats {
     * None = can't interpret → never prune on it. */
   private[sources] def norm(kind: String, v: Any): Option[Any] = (kind, v) match {
     case (_, null) => None
-    case ("long", x: Byte) => Some(x.toLong)
-    case ("long", x: Short) => Some(x.toLong)
-    case ("long", x: Int) => Some(x.toLong)
-    case ("long", x: Long) => Some(x)
-    case ("long", x: Boolean) => Some(if (x) 1L else 0L)
-    case ("long", x: java.sql.Date) => Some(x.toLocalDate.toEpochDay)
-    case ("long", x: java.time.LocalDate) => Some(x.toEpochDay)
-    case ("long", x: java.sql.Timestamp) =>
-      Some(Math.addExact(Math.multiplyExact(x.getTime / 1000L, 1000000L),
-        (x.getNanos / 1000).toLong))
-    case ("long", x: java.time.Instant) =>
-      Some(Math.addExact(Math.multiplyExact(x.getEpochSecond, 1000000L),
-        (x.getNano / 1000).toLong))
-    case ("long", x: java.time.LocalDateTime) => // TIMESTAMP_NTZ external form:
-      // naive µs at UTC offset, the internal TIMESTAMP_NTZ value
-      Some(Math.addExact(
-        Math.multiplyExact(x.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L),
-        (x.getNano / 1000).toLong))
-    case ("long", x: java.time.Duration) =>
-      Some(Math.addExact(Math.multiplyExact(x.getSeconds, 1000000L),
-        (x.getNano / 1000).toLong))
+    case ("long", x) => internalLong(x)
     case ("double", x: java.lang.Number) =>
       val d = x.doubleValue()
       if (d.isNaN) None else Some(d)
@@ -134,6 +116,45 @@ private[graft] object ArrowFileStats {
     case ("decimal", x: scala.math.BigDecimal) => Some(x.bigDecimal)
     case ("binary", x: Array[Byte]) => Some(toHex(x)) // canonical hex form
     case _ => None
+  }
+
+  /** The first day (and µs) from which a `java.sql.Date`/`Timestamp`
+    * literal converts back to the plan's value: Spark makes those
+    * (java8API off) by rebasing to the hybrid Julian calendar, which maps
+    * the proleptic days 1582-10-05..14 onto 10-15..24, so no inverse
+    * recovers a literal before the switch. 1582-10-25 leaves a margin for
+    * time-zone offsets. */
+  private val HybridExactDays = java.time.LocalDate.of(1582, 10, 25).toEpochDay
+  private val HybridExactMicros = HybridExactDays * 86400L * 1000000L
+
+  /** The Catalyst-internal long of a long-backed external value
+    * (integral, boolean, date, timestamp, day-time interval), through
+    * Spark's own inverses of the conversions that made it — the one
+    * conversion stats pruning and exact evaluation share. None = not
+    * such a value, or a `java.sql` date or timestamp before
+    * [[HybridExactDays]]: that filter neither prunes nor is evaluated by
+    * the readers, and Spark's own Filter applies it. */
+  private[sources] def internalLong(v: Any): Option[Long] = {
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    v match {
+      case x: Byte => Some(x.toLong)
+      case x: Short => Some(x.toLong)
+      case x: Int => Some(x.toLong)
+      case x: Long => Some(x)
+      case x: Boolean => Some(if (x) 1L else 0L)
+      case d: java.sql.Date =>
+        Some(DateTimeUtils.fromJavaDate(d).toLong).filter(_ >= HybridExactDays)
+      case d: java.time.LocalDate => Some(DateTimeUtils.localDateToDays(d).toLong)
+      case t: java.sql.Timestamp =>
+        Some(DateTimeUtils.fromJavaTimestamp(t)).filter(_ >= HybridExactMicros)
+      case t: java.time.Instant => Some(DateTimeUtils.instantToMicros(t))
+      case t: java.time.LocalDateTime => // TIMESTAMP_NTZ: naive µs at UTC
+        Some(DateTimeUtils.localDateTimeToMicros(t))
+      case d: java.time.Duration =>
+        Some(Math.addExact(Math.multiplyExact(d.getSeconds, 1000000L),
+          (d.getNano / 1000).toLong))
+      case _ => None
+    }
   }
 
   private def cmp(kind: String, a: String, b: Any): Int = kind match {
@@ -289,6 +310,110 @@ private[graft] object ArrowFileStats {
          _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
          _: LessThanOrEqual | _: In | _: StringStartsWith => true
     case _ => false
+  }
+
+  // ── exact evaluation ───────────────────────────────────────────────────
+
+  /** A compiled exact filter: row `i` of one batch's filter columns (a
+    * `ColumnVector` per field of the schema it was compiled against) →
+    * 1 TRUE, 0 FALSE, -1 NULL — SQL's three-valued logic, where only
+    * TRUE keeps the row. Literals are held in Catalyst-internal form,
+    * converted once on the driver. */
+  type RowTest = (Array[ColumnVector], Int) => Int
+
+  /** The filters the arrow-ipc readers evaluate EXACTLY, compiled against
+    * `schema`: `EqualTo`, `EqualNullSafe`, `<`, `<=`, `>`, `>=`, `In`,
+    * `IsNull`, `IsNotNull` and `And`/`Or`/`Not` of these, on top-level
+    * boolean, integral, date, timestamp/timestamp_ntz and string columns
+    * (UTF-8 binary order), with literals of either
+    * `spark.sql.datetime.java8API.enabled` class. None = not in the set
+    * (float, double, decimal, binary or nested columns, a column `schema`
+    * lacks, a literal of another class, a `java.sql` date or timestamp
+    * before the 1582 calendar switch): the filter stays residual and
+    * Spark keeps its post-scan Filter for it. Literals convert through
+    * [[internalLong]], the conversion stats pruning uses. */
+  def exact(f: Filter, schema: StructType): Option[RowTest] = {
+    def field(a: String): Option[(Int, DataType)] =
+      Some(schema.fieldNames.indexOf(a)).filter(_ >= 0)
+        .map(i => (i, schema.fields(i).dataType))
+    /** A value of `dt`, as a long (integral, boolean, date, timestamp)
+      * or as UTF-8 bytes (string); None = not a value of that type. */
+    def lit(dt: DataType, v: Any): Option[Any] = (dt, v) match {
+      case (BooleanType, _: Boolean) |
+           (ByteType | ShortType | IntegerType | LongType,
+             _: Byte | _: Short | _: Int | _: Long) |
+           (DateType, _: java.sql.Date | _: java.time.LocalDate) |
+           (TimestampType, _: java.sql.Timestamp | _: java.time.Instant) |
+           (TimestampNTZType, _: java.time.LocalDateTime) => internalLong(v)
+      case (StringType, s: String) => Some(UTF8String.fromString(s))
+      case _ => None
+    }
+    /** Row `i`'s non-null value of column `c` in `lit`'s form. */
+    def value(dt: DataType): Option[(ColumnVector, Int) => Any] = dt match {
+      case BooleanType => Some((v, i) => if (v.getBoolean(i)) 1L else 0L)
+      case ByteType => Some((v, i) => v.getByte(i).toLong)
+      case ShortType => Some((v, i) => v.getShort(i).toLong)
+      case IntegerType | DateType => Some((v, i) => v.getInt(i).toLong)
+      case LongType | TimestampType | TimestampNTZType => Some((v, i) => v.getLong(i))
+      case StringType => Some((v, i) => v.getUTF8String(i))
+      case _ => None
+    }
+    // a function value, not a method: the compiled tests travel to the
+    // executors and must capture nothing but serializable values
+    val order: (Any, Any) => Int = {
+      case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+      case (s: UTF8String, t: UTF8String) => s.binaryCompare(t)
+    }
+    /** Three-valued `column op literal`; NULL on a null row. */
+    def compare(a: String, x: Any)(op: Int => Boolean): Option[RowTest] =
+      for {
+        (c, dt) <- field(a)
+        get <- value(dt)
+        l <- lit(dt, x)
+      } yield (v: Array[ColumnVector], i: Int) =>
+        if (v(c).isNullAt(i)) -1 else if (op(order(get(v(c), i), l))) 1 else 0
+    f match {
+      case And(l, r) => for (p <- exact(l, schema); q <- exact(r, schema))
+        yield (v: Array[ColumnVector], i: Int) => {
+          val x = p(v, i)
+          if (x == 0) 0 else { val y = q(v, i); if (y == 0) 0 else math.min(x, y) }
+        }
+      case Or(l, r) => for (p <- exact(l, schema); q <- exact(r, schema))
+        yield (v: Array[ColumnVector], i: Int) => {
+          val x = p(v, i)
+          if (x == 1) 1 else { val y = q(v, i); if (y == 1) 1 else math.min(x, y) }
+        }
+      case Not(g) => exact(g, schema).map(p =>
+        (v: Array[ColumnVector], i: Int) => { val x = p(v, i); if (x < 0) x else 1 - x })
+      case IsNull(a) => field(a).filter(t => value(t._2).isDefined).map { case (c, _) =>
+        (v: Array[ColumnVector], i: Int) => if (v(c).isNullAt(i)) 1 else 0 }
+      case IsNotNull(a) => exact(IsNull(a), schema).map(p =>
+        (v: Array[ColumnVector], i: Int) => 1 - p(v, i))
+      case EqualNullSafe(a, null) => exact(IsNull(a), schema)
+      case EqualNullSafe(a, x) => compare(a, x)(_ == 0).map(p =>
+        (v: Array[ColumnVector], i: Int) => math.max(p(v, i), 0))
+      case EqualTo(a, x) => compare(a, x)(_ == 0)
+      case GreaterThan(a, x) => compare(a, x)(_ > 0)
+      case GreaterThanOrEqual(a, x) => compare(a, x)(_ >= 0)
+      case LessThan(a, x) => compare(a, x)(_ < 0)
+      case LessThanOrEqual(a, x) => compare(a, x)(_ <= 0)
+      case In(a, xs) if xs.nonEmpty =>
+        // a NULL in the list makes a miss NULL instead of FALSE
+        val hasNull = xs.contains(null)
+        for {
+          (c, dt) <- field(a)
+          get <- value(dt)
+          ls = xs.filter(_ != null).map(lit(dt, _))
+          if ls.forall(_.isDefined)
+        } yield {
+          val set = ls.flatten.toSet
+          (v: Array[ColumnVector], i: Int) =>
+            if (v(c).isNullAt(i)) -1
+            else if (set.contains(get(v(c), i))) 1
+            else if (hasNull) -1 else 0
+        }
+      case _ => None
+    }
   }
 
   // ── persistence (`_stats.json`) ────────────────────────────────────────

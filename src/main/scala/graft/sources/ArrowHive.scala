@@ -269,12 +269,14 @@ private[sources] case class ArrowHiveFilePartition(
   * never decoded. Columnar path uses [[org.apache.spark.sql.execution
   * .vectorized.ConstantColumnVector]], the same mechanism Spark's file
   * sources use for partition values. `table` as in
-  * [[ArrowIpcReaderFactory]], less each generation's keys. */
+  * [[ArrowIpcReaderFactory]], less each generation's keys; `rows` too —
+  * its columns are never partition keys, so the inner readers test them
+  * on the data. */
 private[sources] class ArrowIpcHiveReaderFactory(
     required: StructType, hiveFields: Seq[StructField],
     conf: SerializableHadoopConf, limit: Int = -1,
     posSlot: Int = -1, extraGens: Seq[Seq[StructField]] = Nil,
-    table: StructType = null)
+    table: StructType = null, rows: Option[ArrowRowFilter] = None)
     extends PartitionReaderFactory {
 
   /** One partition GENERATION's splice plan: required-position →
@@ -329,7 +331,8 @@ private[sources] class ArrowIpcHiveReaderFactory(
       plan: GenPlan = defaultPlan): PartitionReader[InternalRow] = {
     import plan.{slots, dataRequired}
     val inner = new ArrowIpcPartitionReader(file, dataRequired, conf, limit,
-      skip = maskOf(dv), keepOnly = maskOf(keep), table = plan.dataTable)
+      skip = maskOf(dv), keepOnly = maskOf(keep), table = plan.dataTable,
+      rows = rows.orNull)
     val consts = plan.internals(values)
     val types = required.fields.map(_.dataType)
     val out = slots.length + (if (posSlot >= 0) 1 else 0)
@@ -363,7 +366,8 @@ private[sources] class ArrowIpcHiveReaderFactory(
     import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
     import plan.{slots, dataRequired}
     val inner = new ArrowIpcColumnarReader(file, dataRequired, conf, limit,
-      skip = maskOf(dv), keepOnly = maskOf(keep), table = plan.dataTable)
+      skip = maskOf(dv), keepOnly = maskOf(keep), table = plan.dataTable,
+      rows = rows.orNull)
     val consts = plan.internals(values)
     new PartitionReader[ColumnarBatch] {
       override def next(): Boolean = inner.next()
@@ -397,7 +401,7 @@ private[sources] class ArrowIpcHiveReaderFactory(
     * carries every column (including the new partition keys) in its
     * data — the plain readers serve it inside this hive scan. */
   private lazy val plainFactory =
-    new ArrowIpcReaderFactory(required, conf, limit, posSlot, table)
+    new ArrowIpcReaderFactory(required, conf, limit, posSlot, table, rows)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {

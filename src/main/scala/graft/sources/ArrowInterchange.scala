@@ -388,7 +388,7 @@ object ArrowInterchange {
     // Job-level completeness marker: without it a mid-job failure leaves a
     // partial directory with a valid schema sentinel that a later read
     // would silently treat as the complete dataset.
-    fs.create(new Path(dirPath, "_SUCCESS"), true).close()
+    ArrowOcc.createMarker(fs, new Path(dirPath, "_SUCCESS"))
   }
 
   private[sources] def codecType(codec: Option[String]): Option[CompressionUtil.CodecType] =

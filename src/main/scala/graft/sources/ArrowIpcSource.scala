@@ -270,7 +270,8 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
     ignoreDeletes: Boolean = false,
     ignoreRestores: Boolean = false,
     eqEmitDeleted: Boolean = false,
-    handed: Option[ArrowLiveView] = None)
+    handed: Option[ArrowLiveView] = None,
+    exactRows: Boolean = true)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
@@ -280,6 +281,9 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
   private var fileSlot: Int = -1
   private var posSlot: Int = -1
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
+  /** The pushed filters the readers evaluate exactly (none returned as
+    * residual). */
+  private var evaluated: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var agg: Option[(StructType, Array[Array[Any]])] = None
   /** The live view [[pushAggregation]] listed or was handed, if any. */
   private var listed: Option[ArrowLiveView] = handed
@@ -300,8 +304,10 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
     * `keyed.groupBy(k).agg(count, min, max)` over a 100 TB directory is a
     * manifest read, not a scan.
     *
-    * Refused (→ full scan) unless provably exact: any pushed filter or
-    * limit (stats are whole-file), DISTINCT, a grouping column without a
+    * Refused (→ full scan) unless provably exact: any pushed filter
+    * (stats are whole-file; Spark asks even when the readers evaluate
+    * every filter exactly, as no post-scan Filter remains) or limit,
+    * DISTINCT, a grouping column without a
     * per-file single-value proof, a file missing from the manifest
     * (function-style writers predate stats), or a min/max column whose
     * interval is invalid in any file that has non-null rows (NaN,
@@ -632,6 +638,9 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
     // the readers splice the partition's path back in as a constant.
     // `_pos` (row provenance; the merge-on-read delete substrate) is
     // likewise spliced — per-row from the reader's position counter.
+    // A column only an exactly-evaluated filter reads may be pruned here:
+    // the readers resolve the filter's columns in each file on their own
+    // ([[ArrowRowFilter]]), so it stays readable without being emitted.
     def isMeta(f: StructField, name: String): Boolean =
       f.name == name && !full.fieldNames.contains(name)
     fileSlot = requiredSchema.fields.indexWhere(isMeta(_, ArrowRowLevel.FileColumn))
@@ -653,12 +662,26 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
   }
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
-    // ADVISORY push: stats-based file skipping can prove "no row in this
-    // file matches", never evaluate the predicate exactly — so every
-    // filter is returned as residual and Spark keeps its post-scan
-    // Filter, the same contract as parquet row-group pruning.
+    // Every prunable filter skips files by stats; the ones in
+    // [[ArrowFileStats.exact]]'s set are also evaluated row by row inside
+    // the readers and are not returned, so Spark plans no post-scan Filter
+    // for them (and inlines no literal into generated code). Hive keys of
+    // any generation stay residual: their values live in directory names,
+    // not in the data the readers test. A group-based rewrite
+    // (`exactRows = false`) must read whole files, so its filters only
+    // prune.
     pushed = filters.filter(ArrowFileStats.prunable)
-    filters
+    evaluated =
+      if (!exactRows || pushed.isEmpty) Array.empty
+      else {
+        val dirPath = new Path(dir)
+        val hiveKeys = ArrowHiveLayout.readGenerations(
+          dirPath.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+          dirPath).flatten.toSet
+        pushed.filter(f => !f.references.exists(hiveKeys) &&
+          ArrowFileStats.exact(f, full).isDefined)
+      }
+    filters.filterNot(evaluated.contains)
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
   override def build(): Scan = {
@@ -669,7 +692,7 @@ private[sources] class ArrowIpcScanBuilder(full: StructType, dir: String,
       maxFilesPerTrigger, partitionKeys, full, fileSlot, asOf,
       changeFeed, startingSnapshot, startingTimestamp, maxSnapshotsPerTrigger,
       posSlot, ignoreDeletes, ignoreRestores, eqEmitDeleted,
-      handed.orElse(listed.filter(_ => pushed.isEmpty)))
+      handed.orElse(listed.filter(_ => pushed.isEmpty)), evaluated)
     if (onBuild != null) onBuild(scan)
     scan
   }
@@ -691,7 +714,8 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     ignoreDeletes: Boolean = false,
     ignoreRestores: Boolean = false,
     eqEmitDeleted: Boolean = false,
-    listed: Option[ArrowLiveView] = None)
+    listed: Option[ArrowLiveView] = None,
+    evaluated: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
@@ -753,8 +777,9 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     * `_stats.json` interval PROVES no row matches the pushed (or runtime)
     * filters are dropped before any task launches — the Arrow analog of
     * the reference's row-group pruning (ParquetBlockInputStream.cpp:33-38),
-    * with parquet-style advisory semantics (a kept file is still filtered
-    * exactly by Spark post-scan). Missing stats (foreign or
+    * with parquet-style advisory semantics (a kept file's rows are still
+    * filtered exactly: by the readers for `evaluated`, by Spark post-scan
+    * for the rest). Missing stats (foreign or
     * function-style-written directories) keep every file. Stats-based
     * pruning stays SOUND for time travel: data files are immutable, so
     * the entries the manifest still holds describe them exactly. */
@@ -805,28 +830,18 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
 
   /** Live deletion vectors keyed by data-file name, resolved ONCE per
     * scan: one listing of the (small) `.dv/` dir for live reads; for a
-    * pinned snapshot, exactly the vectors its log entries record —
-    * resolved live-first, trash-second like the data files. Values are
-    * absolute paths the readers open directly. Empty for the un-deleted
-    * common case — zero per-file cost. */
-  private lazy val dvPaths: Map[String, String] = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-    asOf match {
-      case None =>
-        val l = ArrowDeleteVectors.live(fs, dirPath)
-        l.map { case (name, ref) =>
-          name -> fs.makeQualified(new Path(dirPath, ref.rel)).toString
-        }
-      case Some(v) =>
-        val snaps = scala.util.Try(ArrowSnapshots.read(fs, dirPath)).getOrElse(Nil)
-        val resolved = ArrowSnapshots.resolve(snaps, v).getOrElse(Set.empty)
-        ArrowDeleteVectors.fromResolvedSet(resolved).map { case (name, ref) =>
-          name -> ArrowSnapshots.resolveLiveOrTrash(fs, dirPath, ref.rel,
-            s"snapshot $v deletion vector").getPath.toString
-        }
+    * pinned snapshot, the vectors its view resolved with its files.
+    * Values are absolute paths the readers open directly. Empty for the
+    * un-deleted common case — zero per-file cost. */
+  private lazy val dvPaths: Map[String, String] =
+    if (asOf.isDefined) view.dvs
+    else {
+      val dirPath = new Path(dir)
+      val fs = dirPath.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+      ArrowDeleteVectors.live(fs, dirPath).map { case (name, ref) =>
+        name -> fs.makeQualified(new Path(dirPath, ref.rel)).toString
+      }
     }
-  }
 
   private def dvFor(fileName: String): Option[String] =
     if (dvPaths.isEmpty) None else dvPaths.get(fileName)
@@ -837,27 +852,22 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     * trashed file's sequence left the manifest with it, so the masking
     * rule cannot be reconstructed as-of — fold first (the same
     * restriction Iceberg documents for equality deletes). */
-  private lazy val eqTombs: Array[(String, Long)] = {
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    asOf match {
-      case None =>
-        ArrowEqualityDeletes.liveTombs(fs, dirPath).map { case (rel, s) =>
-          (fs.makeQualified(new Path(dirPath, rel)).toString, s)
-        }.toArray
-      case Some(v) =>
-        val snaps = scala.util.Try(ArrowSnapshots.read(fs, dirPath)).getOrElse(Nil)
-        val resolved = ArrowSnapshots.resolve(snaps, v).getOrElse(Set.empty)
-        require(!resolved.exists(_.startsWith(
-            ArrowEqualityDeletes.EqDir + "/")),
-          s"arrow-ipc: snapshot $v of $dir has equality-delete tombstones " +
-            "in force — time travel across equality commits is not " +
-            "supported (a retired file's sequence is gone); fold them " +
-            "first (CALL graft.system.purge_eq), then travel to later " +
-            "snapshots")
-        Array.empty
-    }
+  private lazy val eqTombs: Array[(String, Long)] = asOf match {
+    case None =>
+      val dirPath = new Path(dir)
+      val fs = dirPath.getFileSystem(
+        SparkSession.active.sparkContext.hadoopConfiguration)
+      ArrowEqualityDeletes.liveTombs(fs, dirPath).map { case (rel, s) =>
+        (fs.makeQualified(new Path(dirPath, rel)).toString, s)
+      }.toArray
+    case Some(v) =>
+      require(!view.eqInForce,
+        s"arrow-ipc: snapshot $v of $dir has equality-delete tombstones " +
+          "in force — time travel across equality commits is not " +
+          "supported (a retired file's sequence is gone); fold them " +
+          "first (CALL graft.system.purge_eq), then travel to later " +
+          "snapshots")
+      Array.empty
   }
 
   private lazy val eqKeyCols: Seq[String] =
@@ -1298,6 +1308,10 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
     require(posSlot < 0,
       s"arrow-ipc: the _pos metadata column is batch-only — a streaming " +
         "read cannot project it")
+    // Spark pushes no filter into a stream; its readers evaluate none, so
+    // a filter kept from Spark's post-scan Filter would be lost
+    require(evaluated.isEmpty,
+      "arrow-ipc: a streaming read cannot evaluate pushed filters")
     // this view supplies the layout; the stream polls views of its own,
     // holding its offset (never waiting or refusing) on a closed gate
     val layout = ArrowLiveView.load(SparkSession.active, dir,
@@ -1313,6 +1327,22 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
       new ArrowIpcMicroBatchStream(required, dir, filters, maxFilesPerTrigger,
         layout.hiveFields, ignoreDeletes, ignoreRestores)
   }
+
+  /** The readers' exact predicate over `evaluated`, its columns typed by
+    * `table` (the schema with evolution metadata). A hive key of the
+    * view's generations must never reach it (the builder returned those
+    * as residual): a layout that evolved between filter push and
+    * planning refuses. */
+  private def rowFilter(v: ArrowLiveView, table: StructType)
+      : Option[ArrowRowFilter] =
+    if (evaluated.isEmpty) None
+    else {
+      val keys = (v.hiveFields +: v.oldHiveGens).flatten.map(_.name).toSet
+      require(!evaluated.exists(_.references.exists(keys)),
+        s"arrow-ipc: $dir changed its hive partition keys while this " +
+          "query was planned — re-run it")
+      Some(ArrowRowFilter(evaluated, table))
+    }
 
   override def createReaderFactory(): PartitionReaderFactory =
     agg.fold {
@@ -1335,13 +1365,15 @@ private[sources] class ArrowIpcScan(required: StructType, dir: String,
         if (posSlot < 0) posSlot
         else if (fileSlot >= 0 && fileSlot < posSlot) posSlot - 1
         else posSlot
+      val rows = rowFilter(view, table)
       val base =
         if (view.hiveFields.isEmpty)
-          new ArrowIpcReaderFactory(req, conf, limit, innerPos, table)
+          new ArrowIpcReaderFactory(req, conf, limit, innerPos, table, rows)
             : PartitionReaderFactory
         else
           new ArrowIpcHiveReaderFactory(req, view.hiveFields, conf, limit,
-            innerPos, extraGens = view.oldHiveGens, table = table)
+            innerPos, extraGens = view.oldHiveGens, table = table,
+            rows = rows)
             : PartitionReaderFactory
       if (fileSlot < 0) base
       else {
@@ -1390,11 +1422,55 @@ private[sources] class ArrowAggReaderFactory(schema: StructType, rows: Array[Arr
     }
 }
 
+/** The scan's exact filters ([[ArrowFileStats.exact]]) as the readers run
+  * them: `cols` are the table columns they read — resolved in each file
+  * like a projection (field id, name, rename history; widened and added
+  * columns too), whether or not the projection keeps them — and `tests`
+  * their conjuncts over those columns, compiled on the driver. A row
+  * survives when every test is TRUE. */
+private[sources] final case class ArrowRowFilter(cols: StructType,
+    tests: Array[ArrowFileStats.RowTest]) {
+  /** The filter columns' vector ordinals in one file (-1 = absent). */
+  def resolve(root: org.apache.arrow.vector.VectorSchemaRoot,
+      file: String): Array[Int] =
+    ArrowInterchange.resolveColumns(root.getSchema, cols, file)
+
+  /** The filter columns of the batch loaded in `root`. */
+  def vectors(root: org.apache.arrow.vector.VectorSchemaRoot, at: Array[Int])
+      : Array[org.apache.spark.sql.vectorized.ColumnVector] =
+    ArrowIpcColumnarReader.vectors(root, at, cols)
+
+  def keeps(v: Array[org.apache.spark.sql.vectorized.ColumnVector],
+      row: Int): Boolean = {
+    var t = 0
+    while (t < tests.length) {
+      if (tests(t)(v, row) != 1) return false
+      t += 1
+    }
+    true
+  }
+}
+
+private[sources] object ArrowRowFilter {
+  /** Compile `filters` (every one in the exact set) over the columns of
+    * `table` they reference. */
+  def apply(filters: Array[org.apache.spark.sql.sources.Filter],
+      table: StructType): ArrowRowFilter = {
+    val refs = filters.flatMap(_.references).toSet
+    val cols = StructType(table.fields.filter(f => refs(f.name)))
+    ArrowRowFilter(cols, filters.map(f => ArrowFileStats.exact(f, cols)
+      .getOrElse(throw new IllegalStateException(
+        s"arrow-ipc: filter $f is not exactly evaluable"))))
+  }
+}
+
 /** `table`: the dataset's file columns, which a file must resolve when
-  * `required` is empty (null = no such check). */
+  * `required` is empty (null = no such check). `rows`: the exact
+  * filters every reader applies. */
 private[sources] class ArrowIpcReaderFactory(
     required: StructType, conf: SerializableHadoopConf, limit: Int = -1,
-    posSlot: Int = -1, table: StructType = null)
+    posSlot: Int = -1, table: StructType = null,
+    rows: Option[ArrowRowFilter] = None)
     extends PartitionReaderFactory {
 
   /** The deletion-vector mask of a partition's file, loaded task-side
@@ -1411,7 +1487,7 @@ private[sources] class ArrowIpcReaderFactory(
       eq: Option[ArrowEqualityDeletes.EqPart] = None): ArrowIpcPartitionReader =
     new ArrowIpcPartitionReader(file, required, conf, limit,
       skip = maskOf(dv), keepOnly = maskOf(keep), eq = eq.orNull,
-      table = table)
+      table = table, rows = rows.orNull)
 
   /** Splice the row's physical position at `posSlot` (the `_pos`
     * metadata column) — per-row, so it rides the core reader's own
@@ -1484,13 +1560,13 @@ private[sources] class ArrowIpcReaderFactory(
       case p: ArrowFilePartition =>
         new ArrowIpcColumnarReader(p.file, required, conf, limit,
           skip = maskOf(p.dv), keepOnly = maskOf(p.keep), eq = p.eq.orNull,
-          table = table)
+          table = table, rows = rows.orNull)
       case k: ArrowKeyedPartition =>
         new ChainedPartitionReader[(String, Option[String]),
             org.apache.spark.sql.vectorized.ColumnarBatch](
           k.files.zip(k.dvOrNone),
           fd => new ArrowIpcColumnarReader(fd._1, required, conf, limit,
-            skip = maskOf(fd._2), table = table))
+            skip = maskOf(fd._2), table = table, rows = rows.orNull))
     }
 }
 
@@ -1506,9 +1582,10 @@ private[sources] class ArrowIpcColumnarReader(
     skip: java.util.BitSet = null,
     keepOnly: java.util.BitSet = null,
     eq: ArrowEqualityDeletes.EqPart = null,
-    table: StructType = null)
+    table: StructType = null,
+    rows: ArrowRowFilter = null)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, ColumnVector}
+  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
   private val alloc = new RootAllocator()
   private val reader = {
@@ -1522,6 +1599,9 @@ private[sources] class ArrowIpcColumnarReader(
   private val root = reader.getVectorSchemaRoot
   private val cols: Array[Int] =
     try ArrowInterchange.resolveHeader(root.getSchema, required, table, file)
+    catch { case e: Throwable => close(); throw e }
+  private val rowCols: Array[Int] =
+    try if (rows == null) null else rows.resolve(root, file)
     catch { case e: Throwable => close(); throw e }
 
   private var current: ColumnarBatch = _
@@ -1556,50 +1636,36 @@ private[sources] class ArrowIpcColumnarReader(
         if (eqLookup == null) null
         else ArrowEqualityDeletes.batchMask(eq, eqLookup, root)
       val emitDel = eq != null && eq.emitDeleted
-      // survivor map for this batch: null = untouched (the common case —
-      // also when THIS batch holds no masked position)
+      val rowVecs = if (rows == null) null else rows.vectors(root, rowCols)
+      // survivor map for this batch — deletion vectors, equality
+      // tombstones and the exact filters in one pass: null = untouched
+      // (the common case — also when THIS batch drops no row)
       val map: Array[Int] =
-        if (skip == null && keepOnly == null && eqDrop == null && !emitDel) null
+        if (skip == null && keepOnly == null && eqDrop == null && !emitDel &&
+            rowVecs == null) null
         else {
           val b = Array.newBuilder[Int]
           var i = 0
           while (i < n) {
             val eqHit = eqDrop != null && eqDrop(i)
             val keep =
-              !masked(base + i) && (if (emitDel) eqHit else !eqHit)
+              !masked(base + i) && (if (emitDel) eqHit else !eqHit) &&
+                (rowVecs == null || rows.keeps(rowVecs, i))
             if (keep) b += i
             i += 1
           }
           val m = b.result()
           if (m.length == n) null else m
         }
-      if (map != null && map.isEmpty) () // fully-masked batch: load next
+      if (map != null && map.isEmpty) () // nothing survives: load next
       else {
-        val vecs: Array[ColumnVector] =
-          cols.zipWithIndex.map {
-            case (-1, c) => // evolved column absent from this file: all-NULL
-              val v = new org.apache.spark.sql.execution.vectorized
-                .ConstantColumnVector(n, required.fields(c).dataType)
-              v.setNull()
-              v: ColumnVector
-            case (i, c) => root.getVector(i) match {
-              case f: org.apache.arrow.vector.FixedSizeBinaryVector =>
-                new FixedSizeBinaryColumnVector(f): ColumnVector
-              case v =>
-                // a pre-evolution file's narrow vector answers the table's
-                // widened getters through the shim; same-generation files
-                // wrap zero-cost as before
-                WideningColumnVector.maybe(new ArrowColumnVector(v),
-                  ArrowInterchange.sparkTypeOf(v.getField),
-                  required.fields(c).dataType): ColumnVector
-            }
-          }
-        val (out, rows) =
+        val vecs = ArrowIpcColumnarReader.vectors(root, cols, required)
+        val (out, survivors) =
           if (map == null) (vecs, n)
           else (vecs.map(new MaskedColumnVector(_, map): ColumnVector),
             map.length)
-        current = new ColumnarBatch(out, rows)
-        produced += rows
+        current = new ColumnarBatch(out, survivors)
+        produced += survivors
         return true
       }
     }
@@ -1610,6 +1676,35 @@ private[sources] class ArrowIpcColumnarReader(
 
   override def close(): Unit =
     try { reader.close(); alloc.close() } catch { case _: Throwable => () }
+}
+
+private[sources] object ArrowIpcColumnarReader {
+  import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector}
+
+  /** Spark vectors over the batch loaded in `root`: for each field of
+    * `schema`, its vector at ordinal `at(c)`, wrapped zero-copy, or an
+    * all-NULL constant where the file lacks the column (-1, an evolved
+    * column). */
+  def vectors(root: org.apache.arrow.vector.VectorSchemaRoot,
+      at: Array[Int], schema: StructType): Array[ColumnVector] =
+    at.zipWithIndex.map {
+      case (-1, c) =>
+        val v = new org.apache.spark.sql.execution.vectorized
+          .ConstantColumnVector(root.getRowCount, schema.fields(c).dataType)
+        v.setNull()
+        v: ColumnVector
+      case (i, c) => root.getVector(i) match {
+        case f: org.apache.arrow.vector.FixedSizeBinaryVector =>
+          new FixedSizeBinaryColumnVector(f): ColumnVector
+        case v =>
+          // a pre-evolution file's narrow vector answers the table's
+          // widened getters through the shim; same-generation files
+          // wrap zero-cost
+          WideningColumnVector.maybe(new ArrowColumnVector(v),
+            ArrowInterchange.sparkTypeOf(v.getField),
+            schema.fields(c).dataType)
+      }
+    }
 }
 
 // ── write path ───────────────────────────────────────────────────────────
@@ -2164,7 +2259,8 @@ private[sources] class ArrowIpcPartitionReader(
     skip: java.util.BitSet = null,
     keepOnly: java.util.BitSet = null,
     eq: ArrowEqualityDeletes.EqPart = null,
-    table: StructType = null)
+    table: StructType = null,
+    rows: ArrowRowFilter = null)
     extends PartitionReader[InternalRow] {
 
   private val alloc = new RootAllocator()
@@ -2179,6 +2275,9 @@ private[sources] class ArrowIpcPartitionReader(
   private val root = reader.getVectorSchemaRoot
   private val cols: Array[Int] =
     try ArrowInterchange.resolveHeader(root.getSchema, required, table, file)
+    catch { case e: Throwable => closeQuietly(); throw e }
+  private val rowCols: Array[Int] =
+    try if (rows == null) null else rows.resolve(root, file)
     catch { case e: Throwable => closeQuietly(); throw e }
   private val types = required.fields.map(_.dataType)
 
@@ -2208,10 +2307,14 @@ private[sources] class ArrowIpcPartitionReader(
   private val eqLookup =
     if (eq == null) null else ArrowEqualityDeletes.lookupFor(eq, conf.value)
   private var eqDrop: Array[Boolean] = _
+  // the exact filters' columns of the loaded batch (null = no filter)
+  private var rowVecs: Array[org.apache.spark.sql.vectorized.ColumnVector] = _
 
-  /** Combined drop decision for batch row `i` at file position `pos`. */
+  /** Combined drop decision for batch row `i` at file position `pos`. A
+    * dropped row still advances the position, so `_pos` stays physical. */
   private def dropped(pos: Long, row: Int): Boolean = {
     if (masked(pos)) return true
+    if (rowVecs != null && !rows.keeps(rowVecs, row)) return true
     val eqHit = eqDrop != null && eqDrop(row)
     if (eq != null && eq.emitDeleted) !eqHit else eqHit
   }
@@ -2225,6 +2328,7 @@ private[sources] class ArrowIpcPartitionReader(
           eqDrop =
             if (eqLookup == null) null
             else ArrowEqualityDeletes.batchMask(eq, eqLookup, root)
+          if (rows != null) rowVecs = rows.vectors(root, rowCols)
         }
         else done = true
       }

@@ -52,7 +52,13 @@ private[sources] final case class LiveFile(rel: String, status: FileStatus,
   *    log's file set instead — each path live first, trash second, a
   *    nested path assigned to the first generation whose keys it parses
   *    under — and lists nothing. A CUT view (`keep`) holds, and when
-  *    pinned resolves, only the files at the relative paths it names. */
+  *    pinned resolves, only the files at the relative paths it names.
+  *
+  * A pinned view resolves its snapshot once and carries what the scan
+  * masks with: `dvs`, the deletion vectors in force for its files (data
+  * file name → absolute vector path), and `eqInForce`, whether the
+  * snapshot holds equality tombstones. Both stay empty for a live view,
+  * whose scan lists `.dv/` and `.eq/` itself. */
 private[sources] final case class ArrowLiveView(
     open: Boolean,
     hidden: Set[String],
@@ -61,7 +67,9 @@ private[sources] final case class ArrowLiveView(
     hasFlat: Boolean,
     files: Seq[LiveFile],
     invisible: Seq[LiveFile],
-    dirCounts: (Int, Int)) {
+    dirCounts: (Int, Int),
+    dvs: Map[String, String] = Map.empty,
+    eqInForce: Boolean = false) {
 
   /** More than one generation may hold files (partition evolution). */
   def mixed: Boolean = hiveFields.nonEmpty && (hasFlat || oldHiveGens.nonEmpty)
@@ -95,10 +103,13 @@ private[sources] object ArrowLiveView {
     * only when the layout has any); `filters` prune hive value
     * directories; `asOf` pins a snapshot; `keep` cuts the view to the
     * files at those relative paths; a closed gate is re-checked every
-    * 25 ms for up to `waitMs` before the view reports it closed. */
+    * 25 ms for up to `waitMs` before the view reports it closed. `state`:
+    * snapshot `asOf`'s resolved set when the caller has already folded
+    * the log (the change feed), so the view reads no log of its own. */
   def load(spark: SparkSession, dir: String, schema: => StructType,
       filters: Array[Filter] = Array.empty, asOf: Option[Long] = None,
-      waitMs: Long = 0L, keep: Option[Set[String]] = None): ArrowLiveView = {
+      waitMs: Long = 0L, keep: Option[Set[String]] = None,
+      state: Option[Set[String]] = None): ArrowLiveView = {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val deadline = System.nanoTime() + waitMs * 1000000L
@@ -111,9 +122,17 @@ private[sources] object ArrowLiveView {
     val (active, olds, hasFlat) = layout(fs, dirPath, dir, schema)
     asOf match {
       case Some(id) =>
-        ArrowLiveView(g.isDefined, hidden, active, olds, hasFlat,
-          travel(fs, dirPath, dir, id, if (active.isEmpty) Nil else active +: olds,
-            keep), Nil, (0, 0))
+        val resolved = state.getOrElse(resolve(fs, dirPath, dir, id))
+        val files = travel(fs, dirPath, dir, id,
+          if (active.isEmpty) Nil else active +: olds, resolved, keep)
+        val names = files.iterator.map(_.name).toSet
+        val dvs = ArrowDeleteVectors.fromResolvedSet(resolved).collect {
+          case (name, ref) if names(name) =>
+            name -> ArrowSnapshots.resolveLiveOrTrash(fs, dirPath, ref.rel,
+              s"snapshot $id deletion vector").getPath.toString
+        }
+        ArrowLiveView(g.isDefined, hidden, active, olds, hasFlat, files,
+          Nil, (0, 0), dvs, ArrowEqualityDeletes.inForce(resolved))
       case None =>
         // the flat generation is the walk with no key levels
         var kept = 0
@@ -141,10 +160,11 @@ private[sources] object ArrowLiveView {
     * data. */
   def forRead(spark: SparkSession, dir: String, schema: => StructType,
       filters: Array[Filter] = Array.empty, asOf: Option[Long] = None,
-      keep: Option[Set[String]] = None): ArrowLiveView = {
+      keep: Option[Set[String]] = None,
+      state: Option[Set[String]] = None): ArrowLiveView = {
     val waitMs = scala.util.Try(spark.conf
       .get("spark.graft.arrow.readGateWaitMs", "3000").toLong).getOrElse(3000L)
-    val view = load(spark, dir, schema, filters, asOf, waitMs, keep)
+    val view = load(spark, dir, schema, filters, asOf, waitMs, keep, state)
     if (!view.open) throw new IllegalArgumentException(
       s"Arrow interchange: $dir has a schema sentinel but no _SUCCESS " +
         s"marker after $waitMs ms — the writing job did not complete; " +
@@ -227,18 +247,25 @@ private[sources] object ArrowLiveView {
     (files, kept, total)
   }
 
-  /** The file set of snapshot `id` (cut to `keep`), each path resolved
-    * live first, trash second; an unknown or expired snapshot refuses
-    * loudly rather than serving a partial table. Deletion vectors ride
-    * the same log entries and are split off. */
-  private def travel(fs: FileSystem, dirPath: Path, dir: String, id: Long,
-      gens: Seq[Seq[StructField]], keep: Option[Set[String]]): Seq[LiveFile] = {
+  /** Snapshot `id`'s resolved set, folded from the log; an unknown or
+    * expired snapshot refuses loudly rather than serving a partial
+    * table. */
+  private def resolve(fs: FileSystem, dirPath: Path, dir: String,
+      id: Long): Set[String] = {
     val snaps = scala.util.Try(ArrowSnapshots.read(fs, dirPath)).getOrElse(Nil)
-    val resolved = ArrowSnapshots.resolve(snaps, id).getOrElse(
+    ArrowSnapshots.resolve(snaps, id).getOrElse(
       throw new IllegalArgumentException(
         s"arrow-ipc: $dir has no snapshot $id" + (
           if (snaps.isEmpty) " (no snapshot log)"
           else s" — the log records ${snaps.head.id}..${snaps.last.id}")))
+  }
+
+  /** The data files of `resolved` (snapshot `id`, cut to `keep`), each
+    * path resolved live first, trash second. Deletion vectors and
+    * tombstones ride the same log entries and are split off. */
+  private def travel(fs: FileSystem, dirPath: Path, dir: String, id: Long,
+      gens: Seq[Seq[StructField]], resolved: Set[String],
+      keep: Option[Set[String]]): Seq[LiveFile] = {
     val (set, _) = ArrowDeleteVectors.splitResolved(resolved)
     set.filter(rel => keep.forall(_(rel))).toSeq.sorted.map { rel =>
       val st = ArrowSnapshots.resolveLiveOrTrash(fs, dirPath, rel,

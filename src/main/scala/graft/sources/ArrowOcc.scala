@@ -207,13 +207,24 @@ private[graft] object ArrowOcc {
     * the heartbeat refreshes mtime only (setTimes), never the bytes. */
   def markPending(fs: FileSystem, dirPath: Path, queryId: String,
       targetKeys: Option[Seq[String]] = None): Unit = {
-    fs.mkdirs(dirPath)
-    val out = fs.create(markerPath(dirPath, queryId), true)
-    try targetKeys.foreach { ks =>
-      val body = ks.map(k => "\"" + ArrowFileStats.esc(k) + "\"")
+    val body = targetKeys.fold("") { ks =>
+      ks.map(k => "\"" + ArrowFileStats.esc(k) + "\"")
         .mkString("""{"hiveKeys":[""", ",", "]}")
-      out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
+    }
+    writeAtomic(fs, markerPath(dirPath, queryId),
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** Create the empty marker file `path` unless it exists, through the
+    * commit store's create-exclusive — not Hadoop's `create`, which on
+    * `file:` without native Hadoop forks `chmod` for the file and its
+    * `.crc` (about 7 ms per marker against 0.2 ms). A claim that fails
+    * with the marker still absent is an I/O failure and throws. */
+  private[sources] def createMarker(fs: FileSystem, path: Path): Unit = {
+    val q = fs.makeQualified(path)
+    if (storeFor(q).tryClaim(fs, q, Array.emptyByteArray).isEmpty &&
+        !fs.exists(q))
+      throw new java.io.IOException(s"arrow-ipc occ: cannot create $q")
   }
 
   /** The declared target layouts of the LIVE pending markers: Some(keys)
@@ -359,8 +370,7 @@ private[graft] object ArrowOcc {
   def restoreLatch(fs: FileSystem, dirPath: Path,
       exceptQueryId: Option[String] = None): Unit =
     if (!appendsPending(fs, dirPath, exceptQueryId)) {
-      val success = new Path(dirPath, "_SUCCESS")
-      if (!fs.exists(success)) fs.create(success, true).close()
+      createMarker(fs, new Path(dirPath, "_SUCCESS"))
     }
 
   /** Newest modification time of `dir` or any of its immediate children
@@ -444,8 +454,7 @@ private[graft] object ArrowOcc {
   def markDml(fs: FileSystem, dirPath: Path): (String, PendingHeartbeat) = {
     val id = java.util.UUID.randomUUID().toString
     val marker = new Path(dirPath, DmlPrefix + id)
-    fs.mkdirs(dirPath)
-    fs.create(marker, true).close()
+    createMarker(fs, marker)
     threadDml.set(threadDml.get() + id)
     (id, new PendingHeartbeat(fs, marker))
   }

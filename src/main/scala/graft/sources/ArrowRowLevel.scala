@@ -165,7 +165,10 @@ private[sources] class ArrowCowOperation(
 
   override def newScanBuilder(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder =
-    new ArrowIpcScanBuilder(schema, dir, onBuild = s => scan = s)
+    // group-based: the rewrite reads every row of an affected file, so
+    // the command's condition only prunes files here
+    new ArrowIpcScanBuilder(schema, dir, onBuild = s => scan = s,
+      exactRows = false)
 
   override def newWriteBuilder(writeInfo: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {

@@ -336,7 +336,8 @@ object AnnStressProbe {
     println(s"[ann-stress] appends=${completed.size} blocks " +
       s"(${completed.size * blockSz} rows, gray=${gray.size}) " +
       s"rebuilds=${rebuilds.size} compacts=${compacts.get} " +
-      s"(contended=${compactContended.get}) searches=${searches.get} " +
+      s"(contended=${compactContended.get}, catch-up rounds=" +
+      s"${Similarity.ivfCatchUpRounds.get}) searches=${searches.get} " +
       s"visible=${visible.size} must=${must.size} may=${may.size} " +
       s"quantized=$quantized dual=$dual")
     if (gray.nonEmpty)
