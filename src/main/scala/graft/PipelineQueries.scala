@@ -41,6 +41,16 @@ object PipelineQueries {
   private val annRefineK = 5
   private val annRefineFactor = 4
 
+  /** The `ann_*` queries' frame pair over `embeddings`: the corpus
+    * (vec_id, embedding) and its first ten vectors as the query set
+    * (qid, qe) — the same pair every ANN oracle reads. */
+  private def annFrames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = T(s, d, "embeddings")
+    (e.select(col("vec_id"), col("embedding")),
+      e.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe")))
+  }
+
   // embed_neardup LSH family: 8 tables × 4 planes. At the loose 0.45
   // threshold (p≈0.65/plane) this holds ~80% recall; tight thresholds
   // (the production near-dup case) prune far harder with the same operator.
@@ -369,11 +379,10 @@ object PipelineQueries {
       Some(embedNeardupOracle)),
 
     ("ann_brute_topk", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       Similarity.bruteForceTopK(
-        corpus = e.select(col("vec_id"), col("embedding")),
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        corpus = corpus,
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5).orderBy("qid", "rk")
     },
@@ -397,11 +406,10 @@ object PipelineQueries {
     // match, not a recall claim). The dot rides the same codegen
     // VectorDot as the float path, extended to tinyint arrays.
     ("ann_quantized_topk", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       Similarity.quantizedTopK(
-        corpus = e.select(col("vec_id"), col("embedding")),
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        corpus = corpus,
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5).orderBy("qid", "rk")
     },
@@ -433,11 +441,10 @@ object PipelineQueries {
     // it bit-for-bit: full hash check (recall vs brute force is also
     // unit-tested).
     ("ann_ivf_topk", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       Similarity.ivfTopK(
-        corpus = e.select(col("vec_id"), col("embedding")),
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        corpus = corpus,
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5, nlist = 16, nprobe = 4).orderBy("qid", "rk")
     }, Some(ivfOracle)),
@@ -450,11 +457,10 @@ object PipelineQueries {
     // and scans 4× less data. Full hash match (int8 sums exact in
     // double), not a recall claim.
     ("ann_ivf_quantized", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       Similarity.ivfTopKQuantized(
-        corpus = e.select(col("vec_id"), col("embedding")),
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        corpus = corpus,
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5, nlist = 16, nprobe = 4).orderBy("qid", "rk")
     }, Some(ivfQuantizedOracle)),
@@ -468,14 +474,13 @@ object PipelineQueries {
     // the index amortizes across sessions instead of rebuilding per
     // query.
     ("ann_ivf_stored", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       // Scratch contract: see json_roundtrip.
       val path = graft.sources.Scratch.dir(s, "graft_rt_ivf_index")
-      Similarity.ivfBuild(e.select(col("vec_id"), col("embedding")),
+      Similarity.ivfBuild(corpus,
         idCol = "vec_id", vecCol = "embedding", nlist = 16, dir = path)
       Similarity.ivfTopKStored(s, path,
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5, nprobe = 4).orderBy("qid", "rk")
     }, Some(ivfOracle)),
@@ -487,15 +492,14 @@ object PipelineQueries {
     // and double round-trip the interchange exactly) — the SAME oracle
     // hash-checks both.
     ("ann_ivf_stored_q8", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       // Scratch contract: see json_roundtrip.
       val path = graft.sources.Scratch.dir(s, "graft_rt_ivf_q8")
-      Similarity.ivfBuild(e.select(col("vec_id"), col("embedding")),
+      Similarity.ivfBuild(corpus,
         idCol = "vec_id", vecCol = "embedding", nlist = 16, dir = path,
         quantized = true)
       Similarity.ivfTopKStored(s, path,
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5, nprobe = 4).orderBy("qid", "rk")
     }, Some(ivfQuantizedOracle)),
@@ -513,26 +517,21 @@ object PipelineQueries {
     // both the append assignment (frozen centroids, the exact build
     // formula) and the compact's contents-preserving claim.
     ("ann_ivf_compacted", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       // Scratch contract: see json_roundtrip.
       val path = graft.sources.Scratch.dir(s, "graft_rt_ivf_compacted")
-      Similarity.ivfBuild(
-        e.filter(col("vec_id") % 5 < 4)
-          .select(col("vec_id"), col("embedding")),
+      Similarity.ivfBuild(corpus.filter(col("vec_id") % 5 < 4),
         idCol = "vec_id", vecCol = "embedding", nlist = 16, dir = path)
       Similarity.ivfAppend(s, path,
-        e.filter(col("vec_id") % 10 === 4)
-          .select(col("vec_id"), col("embedding")), "vec_id", "embedding")
+        corpus.filter(col("vec_id") % 10 === 4), "vec_id", "embedding")
       Similarity.ivfAppend(s, path,
-        e.filter(col("vec_id") % 10 === 9)
-          .select(col("vec_id"), col("embedding")), "vec_id", "embedding")
+        corpus.filter(col("vec_id") % 10 === 9), "vec_id", "embedding")
       val res = Similarity.ivfCompact(s, path)
       require(res.exists(r => r._2 < r._1),
         s"ann_ivf_compacted: compact must shrink the grown cell layout " +
           s"(got $res)")
       Similarity.ivfTopKStored(s, path,
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5, nprobe = 4).orderBy("qid", "rk")
     }, Some(ivfCompactedOracle)),
@@ -547,11 +546,10 @@ object PipelineQueries {
     // vs float brute (pinned in SimilaritySpec) from a 4×-smaller index.
     // The oracle replays BOTH stages, so this is a full hash match.
     ("ann_ivf_q8_refined", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       Similarity.ivfTopKQuantizedRefined(
-        corpus = e.select(col("vec_id"), col("embedding")),
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        corpus = corpus,
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = annRefineK, nlist = 16, nprobe = 4,
         refineFactor = annRefineFactor).orderBy("qid", "rk")
@@ -561,11 +559,10 @@ object PipelineQueries {
     // the oracle recomputes the same buckets from the same values (doubles
     // serialized via exact decimal expansion).
     ("ann_lsh_topk", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       Similarity.lshTopK(
-        corpus = e.select(col("vec_id"), col("embedding")),
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        corpus = corpus,
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5, nPlanes = 4, dim = 64).orderBy("qid", "rk")
     }, Some(lshOracle(multiProbe = false))),
@@ -573,11 +570,10 @@ object PipelineQueries {
     // Multi-probe variant: query bucket + all Hamming-1 neighbor buckets —
     // the recall upgrade at (nPlanes+1)× candidate volume, still sub-linear.
     ("ann_lsh_multiprobe", (s, d) => {
-      val e = T(s, d, "embeddings")
+      val (corpus, queries) = annFrames(s, d)
       Similarity.lshTopK(
-        corpus = e.select(col("vec_id"), col("embedding")),
-        queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+        corpus = corpus,
+        queries = queries,
         idCol = "vec_id", vecCol = "embedding", qidCol = "qid", qvecCol = "qe",
         k = 5, nPlanes = 4, dim = 64, multiProbe = true).orderBy("qid", "rk")
     }, Some(lshOracle(multiProbe = true))),

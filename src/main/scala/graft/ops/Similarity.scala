@@ -31,6 +31,38 @@ object Similarity {
   /** Cosine similarity; null-safe only insofar as null arrays yield null. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** A side of a scoring join with the features its score reads: float
+    * `(keys…, v, <p>n)` with the vector's norm, or quantized
+    * `(keys…, <p>s, <p>q)`, the [[quantScale]] and the [[quantVec]]
+    * int8 vector. `p` is "c" for the corpus side and "q" for the query
+    * side — the column names [[rank]] scores. The one frame quantizer:
+    * every stored and inline int8 frame comes from here. */
+  private[graft] def features(df: DataFrame, keys: Seq[String], v: String,
+      p: String, quantized: Boolean): DataFrame = {
+    val ks = keys.map(col)
+    if (!quantized) df.select(ks :+ col(v) :+ norm(col(v)).as(s"${p}n"): _*)
+    else df.select(ks :+ quantScale(col(v)).as(s"${p}s") :+ col(v): _*)
+      .select(ks :+ col(s"${p}s") :+ quantVec(col(v), col(s"${p}s")).as(s"${p}q"): _*)
+  }
+
+  /** The one scoring and top-k tail over candidate pairs carrying both
+    * sides' [[features]]: float `round(cos, 9)` as `cos`, or quantized
+    * `round(vec_dot(int8, int8) · qs · cs, 9)` as `qdot`, then each
+    * query's k best by (score desc, id asc) as `(qid, id, score, rk)`.
+    * The int8 product sum is ≤ 127²·dim, exact in double, so both scores
+    * are bit-deterministic and the SQL oracle replays them; round(·, 9)
+    * absorbs cross-engine f.p. noise and makes ties deterministic. */
+  private def rank(pairs: DataFrame, idCol: String, vecCol: String,
+      qidCol: String, qvecCol: String, k: Int, quantized: Boolean): DataFrame = {
+    val (score, name) =
+      if (!quantized) (dot(col(qvecCol), col(vecCol)) / (col("qn") * col("cn")), "cos")
+      else (dot(col("qq"), col("cq")) * col("qs") * col("cs"), "qdot")
+    val scored = pairs.select(col(qidCol), col(idCol), round(score, 9).as(name))
+    val w = Window.partitionBy(col(qidCol)).orderBy(col(name).desc, col(idCol).asc)
+    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .select(col(qidCol), col(idCol), col(name), col("rk"))
+  }
+
   /** Brute-force exact top-k cosine neighbors of each query vector against
     * the corpus. The query set is broadcast (it is the small side by
     * construction), so the corpus streams partition-local with no shuffle
@@ -45,18 +77,8 @@ object Similarity {
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int): DataFrame = {
-    // Norms once per vector (not per pair); cosine formula unchanged.
-    val c = corpus.select(col(idCol), col(vecCol), norm(col(vecCol)).as("cn"))
-    val q = queries.select(col(qidCol), col(qvecCol), norm(col(qvecCol)).as("qn"))
-    val scored = c.crossJoin(broadcast(q))
-      .select(
-        col(qidCol), col(idCol),
-        round(dot(col(qvecCol), col(vecCol)) / (col("qn") * col("cn")), 9).as("cos"))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cos").desc, col(idCol).asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col(qidCol), col(idCol), col("cos"), col("rk"))
-  }
+      k: Int): DataFrame =
+    brute(corpus, queries, idCol, vecCol, qidCol, qvecCol, k, quantized = false)
 
   // ── int8 quantization (round 14) ─────────────────────────────────────
 
@@ -80,29 +102,24 @@ object Similarity {
 
   /** Brute-force top-k by QUANTIZED inner product — the 100 TB memory
     * lever (4× smaller than float32, int-friendly kernels; the Faiss
-    * SQ8 stance). Scores are `vec_dot(int8, int8) · qs · cs`: the int8
-    * product sum is ≤ 127²·dim, exact in double, so the quantized
-    * ranking is bit-deterministic and the SQL oracle replays it. The
-    * dot rides the same codegen [[graft.functions.VectorDot]] as the
-    * float path (extended to tinyint arrays). Ties and f.p. noise
+    * SQ8 stance). Scores are `vec_dot(int8, int8) · qs · cs` (see
+    * [[rank]]); the dot rides the same codegen [[graft.functions.VectorDot]]
+    * as the float path (extended to tinyint arrays). Ties and f.p. noise
     * handled like [[bruteForceTopK]]: round(score, 9) desc, id asc. */
   def quantizedTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int): DataFrame = {
-    def quant(df: DataFrame, id: String, v: String, s: String, q: String) = {
-      val withS = df.select(col(id), col(v), quantScale(col(v)).as(s))
-      withS.select(col(id), col(s), quantVec(col(v), col(s)).as(q))
-    }
-    val c = quant(corpus, idCol, vecCol, "cs", "cq")
-    val q = quant(queries, qidCol, qvecCol, "qs", "qq")
-    val scored = c.crossJoin(broadcast(q))
-      .select(col(qidCol), col(idCol),
-        round(dot(col("qq"), col("cq")) * col("qs") * col("cs"), 9)
-          .as("qdot"))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("qdot").desc, col(idCol).asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col(qidCol), col(idCol), col("qdot"), col("rk"))
+      k: Int): DataFrame =
+    brute(corpus, queries, idCol, vecCol, qidCol, qvecCol, k, quantized = true)
+
+  private def brute(
+      corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, qidCol: String, qvecCol: String,
+      k: Int, quantized: Boolean): DataFrame = {
+    // norms (or int8 vectors) once per vector, not per pair
+    val c = features(corpus, Seq(idCol), vecCol, "c", quantized)
+    val q = features(queries, Seq(qidCol), qvecCol, "q", quantized)
+    rank(c.crossJoin(broadcast(q)), idCol, vecCol, qidCol, qvecCol, k, quantized)
   }
 
   /** Deterministic pseudo-random hyperplanes: plane j is seeded Random
@@ -145,23 +162,18 @@ object Similarity {
     * map-side partial aggregation: the centroid shuffle carries cells×dim
     * partials, not corpus×dim rows, and a hot cell costs one accumulator).
     * The whole index — and thus the result — is bit-reproducible by the
-    * SQL oracle. `deterministicMeans=false` swaps in plain `avg`
-    * (marginally cheaper, order-nondeterministic in the last float bit);
-    * the default is the scale-safe deterministic path.
+    * SQL oracle.
     *
     * Cell assignment maximizes cosine (normalized dot). Returned `cos` is
     * the same rounded cosine as [[bruteForceTopK]], so results are directly
-    * comparable for recall measurement. */
+    * comparable for recall measurement. The query set must be small: see
+    * the broadcast contract on [[ivfProbes]]. */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int, nlist: Int, nprobe: Int, deterministicMeans: Boolean = true): DataFrame = {
-    require(nprobe >= 1 && nprobe <= nlist)
-    val (centroids, cells) =
-      ivfIndex(corpus, idCol, vecCol, nlist, deterministicMeans)
-    ivfProbeScore(centroids, cells, queries, idCol, vecCol, qidCol, qvecCol,
-      k, nprobe)
-  }
+      k: Int, nlist: Int, nprobe: Int): DataFrame =
+    ivfInline(corpus, queries, idCol, vecCol, qidCol, qvecCol, k, nlist,
+      nprobe, quantized = false)
 
   /** IVF top-k with QUANTIZED candidate scoring (round 14): cell
     * construction and probing stay float (the centroid set is tiny —
@@ -169,44 +181,25 @@ object Similarity {
     * O(corpus/nlist · nprobe) term that dominates at scale — runs over
     * int8 vectors: 4× less candidate data moved and scanned, same
     * bit-reproducible ranking contract as [[quantizedTopK]] (int8
-    * product sums are exact in double). The Faiss IVF-SQ8 shape. */
+    * product sums are exact in double). The Faiss IVF-SQ8 shape: the
+    * index, the int8 cell projection [[ivfBuild]] stores, and the query
+    * tail a stored index runs. The query set must be small: see
+    * [[ivfProbes]]. */
   def ivfTopKQuantized(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int, nlist: Int, nprobe: Int): DataFrame = {
+      k: Int, nlist: Int, nprobe: Int): DataFrame =
+    ivfInline(corpus, queries, idCol, vecCol, qidCol, qvecCol, k, nlist,
+      nprobe, quantized = true)
+
+  private def ivfInline(
+      corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, qidCol: String, qvecCol: String,
+      k: Int, nlist: Int, nprobe: Int, quantized: Boolean): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist)
-    val (centroids, cells) = ivfIndex(corpus, idCol, vecCol, nlist,
-      deterministicMeans = true)
-    // float probes — identical head to ivfProbeScore
-    val queriesN = queries.withColumn("qn", norm(col(qvecCol)))
-    val probes = queriesN.crossJoin(broadcast(centroids))
-      .withColumn("__sim", dot(col(qvecCol), col("cvec")) / (col("qn") * norm(col("cvec"))))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(col(qidCol)).orderBy(col("__sim").desc, col("cid"))))
-      .filter(col("__pr") <= nprobe)
-      .select(col(qidCol), col("cid"))
-    // int8 candidates: quantize cell vectors and query vectors once
-    val qcells = {
-      val w = cells.select(col("cid"), col(idCol),
-        quantScale(col(vecCol)).as("cs"), col(vecCol))
-      w.select(col("cid"), col(idCol), col("cs"),
-        quantVec(col(vecCol), col("cs")).as("cq"))
-    }
-    val qqueries = {
-      val w = queries.select(col(qidCol),
-        quantScale(col(qvecCol)).as("qs"), col(qvecCol))
-      w.select(col(qidCol), col("qs"),
-        quantVec(col(qvecCol), col("qs")).as("qq"))
-    }
-    // probe side broadcast against the corpus-sized quantized cells —
-    // same §3.1 rationale as ivfProbeScore (round-18 pass)
-    val scored = qcells.join(broadcast(qqueries.join(probes, qidCol)), "cid")
-      .select(col(qidCol), col(idCol),
-        round(dot(col("cq"), col("qq")) * col("qs") * col("cs"), 9)
-          .as("qdot"))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("qdot").desc, col(idCol).asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col(qidCol), col(idCol), col("qdot"), col("rk"))
+    val (centroids, cells) = ivfIndex(corpus, idCol, vecCol, nlist, quantized)
+    ivfQuery(centroids, cells, queries, idCol, vecCol, qidCol, qvecCol,
+      k, nprobe, quantized)
   }
 
   /** FLOAT-REFINE re-rank (round 15) — the standard SQ8 recall-recovery
@@ -230,23 +223,19 @@ object Similarity {
       candidates: DataFrame, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
       k: Int): DataFrame = {
-    val c = corpus.select(col(idCol), col(vecCol), norm(col(vecCol)).as("cn"))
-    val q = queries.select(col(qidCol), col(qvecCol), norm(col(qvecCol)).as("qn"))
-    val scored = c
+    val c = features(corpus, Seq(idCol), vecCol, "c", quantized = false)
+    val q = features(queries, Seq(qidCol), qvecCol, "q", quantized = false)
+    val pairs = c
       .join(broadcast(candidates.select(col(qidCol), col(idCol))), idCol)
       .join(broadcast(q), qidCol)
-      .select(col(qidCol), col(idCol),
-        round(dot(col(qvecCol), col(vecCol)) / (col("qn") * col("cn")), 9)
-          .as("cos"))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cos").desc, col(idCol).asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col(qidCol), col(idCol), col("cos"), col("rk"))
+    rank(pairs, idCol, vecCol, qidCol, qvecCol, k, quantized = false)
   }
 
   /** [[ivfTopKQuantized]] + [[refineTopK]]: IVF-SQ8 candidate generation,
     * float-exact final ranking. `refineFactor` ≥ 1 widens the quantized
     * short-list (k·factor) the float stage re-ranks — the recall lever
-    * (factor 4 pins ≥ 0.95 recall@5 vs float brute in SimilaritySpec). */
+    * (factor 4 pins ≥ 0.95 recall@5 vs float brute in SimilaritySpec).
+    * The query set must be small: see [[ivfProbes]]. */
   def ivfTopKQuantizedRefined(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
@@ -441,30 +430,20 @@ object Similarity {
   }
 
   def ivfBuild(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, dir: String, deterministicMeans: Boolean = true,
-      quantized: Boolean = false): Unit = {
+      nlist: Int, dir: String, quantized: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    val (centroids, cells) =
-      ivfIndex(corpus, idCol, vecCol, nlist, deterministicMeans)
-    val gen = "g-" + java.util.UUID.randomUUID.toString.take(8)
-    centroids.coalesce(1).write.format("arrow-ipc").mode("overwrite")
-      .save(s"$dir/$gen/centroids")
-    afterIvfCentroidsHook()
     // quantized = true stores int8 cells (IVF-SQ8): centroids stay
     // float (tiny — probing precision is free), but the cell files —
     // the index's mass — hold (scale, array<tinyint>) instead of
     // (array<float>, norm), measured 2.99× smaller on disk
     // (tools/quant_scale_probe.log). Queries dispatch on the manifest.
-    val cellCols =
-      if (!quantized) cells.select(col("cid"), col(idCol), col(vecCol), col("cn"))
-      else cells
-        .select(col("cid"), col(idCol),
-          quantScale(col(vecCol)).as("cs"), col(vecCol))
-        .select(col("cid"), col(idCol), col("cs"),
-          quantVec(col(vecCol), col("cs")).as("cq"))
+    val (centroids, cells) = ivfIndex(corpus, idCol, vecCol, nlist, quantized)
+    val gen = "g-" + java.util.UUID.randomUUID.toString.take(8)
+    centroids.coalesce(1).write.format("arrow-ipc").mode("overwrite")
+      .save(s"$dir/$gen/centroids")
+    afterIvfCentroidsHook()
     graft.sources.Sinks.writeKeyGrouped(
-      cellCols,
-      s"$dir/$gen/cells", Seq("cid"), partitions = math.min(nlist, 32))
+      cells, s"$dir/$gen/cells", Seq("cid"), partitions = math.min(nlist, 32))
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tip = graft.sources.ArrowSnapshots.currentTip(
@@ -541,26 +520,11 @@ object Similarity {
       val m = readManifest(spark, dir) // refuses a torn/manifest-less index
       val centroids = spark.read.format("arrow-ipc")
         .load(s"$dir/${m.generation}/centroids")
-      val freshN = fresh.withColumn("cn", norm(col(vecCol)))
-      // argmax + payload in ONE aggregate (vec/cn ride through via first()
-      // — every row of an id group replicates the same fresh row), so the
-      // assignment costs one exchange, not an agg exchange plus an id
-      // re-join (round-17 optimization pass; same trick as ivfIndex).
-      val assigned = freshN
-        .crossJoin(broadcast(centroids))
-        .withColumn("__sim",
-          dot(col(vecCol), col("cvec")) / (col("cn") * norm(col("cvec"))))
-        .groupBy(col(idCol))
-        .agg(max(struct(col("__sim"), col("cid"))).getField("cid").as("cid"),
-          first(col(vecCol)).as(vecCol), first(col("cn")).as("cn"))
-      val freshCells =
-        if (!m.quantized)
-          assigned.select(col("cid"), col(idCol), col(vecCol), col("cn"))
-        else assigned
-          .select(col("cid"), col(idCol),
-            quantScale(col(vecCol)).as("cs"), col(vecCol))
-          .select(col("cid"), col(idCol), col("cs"),
-            quantVec(col(vecCol), col("cs")).as("cq"))
+      // the build's own assignment and cell projection, against the
+      // frozen centroids
+      val freshCells = ivfCells(ivfAssign(
+        features(fresh, Seq(idCol), vecCol, "c", quantized = false),
+        idCol, vecCol, centroids), idCol, vecCol, m.quantized)
       val tok = java.util.UUID.randomUUID.toString
       freshCells
         .write.format("arrow-ipc").mode("append")
@@ -796,52 +760,23 @@ object Similarity {
   }
 
   /** Query a [[ivfBuild]]-persisted index — bit-identical to running
-    * [[ivfTopK]] with the same parameters (the probe/score tail is the
-    * same code over the same stored values; floats, doubles and norms
-    * round-trip the arrow interchange exactly). Resolves through the
-    * index manifest, so a torn (mid-build-crashed) index either serves
-    * its previous consistent generation or refuses loudly — never
-    * mismatched centroid/cell halves. */
+    * [[ivfTopK]] (or [[ivfTopKQuantized]] for a `quantized` index) with
+    * the same parameters: the probe head and the scoring tail are the
+    * same code over the same stored values (floats, doubles, int8 and
+    * norms round-trip the arrow interchange exactly). Resolves through
+    * the index manifest, so a torn (mid-build-crashed) index either
+    * serves its previous consistent generation or refuses loudly —
+    * never mismatched centroid/cell halves. The query set must be small:
+    * see the broadcast contract on [[ivfProbes]], which is also what
+    * lets the cells scan read only the probed cells' files. */
   def ivfTopKStored(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, idCol: String, vecCol: String,
       qidCol: String, qvecCol: String, k: Int, nprobe: Int): DataFrame = {
-    require(nprobe >= 1, "ivfTopKStored: nprobe must be >= 1")
     val m = readManifest(spark, dir)
-    val centroids = spark.read.format("arrow-ipc")
-      .load(s"$dir/${m.generation}/centroids")
-    val cells = spark.read.format("arrow-ipc")
-      .load(s"$dir/${m.generation}/cells")
-    if (!m.quantized)
-      ivfProbeScore(centroids, cells, queries, idCol, vecCol, qidCol, qvecCol,
-        k, nprobe)
-    else {
-      // the quantized tail over stored int8 cells — bit-identical to
-      // [[ivfTopKQuantized]] (int8 and double round-trip exactly)
-      val queriesN = queries.withColumn("qn", norm(col(qvecCol)))
-      val probes = queriesN.crossJoin(broadcast(centroids))
-        .withColumn("__sim",
-          dot(col(qvecCol), col("cvec")) / (col("qn") * norm(col("cvec"))))
-        .withColumn("__pr", row_number().over(
-          Window.partitionBy(col(qidCol)).orderBy(col("__sim").desc, col("cid"))))
-        .filter(col("__pr") <= nprobe)
-        .select(col(qidCol), col("cid"))
-      val qqueries = {
-        val w = queries.select(col(qidCol),
-          quantScale(col(qvecCol)).as("qs"), col(qvecCol))
-        w.select(col(qidCol), col("qs"),
-          quantVec(col(qvecCol), col("qs")).as("qq"))
-      }
-      // probe side broadcast; on this stored path it also activates the
-      // arrow source's runtime cell-file pruning (see ivfProbeScore)
-      val scored = cells.join(broadcast(qqueries.join(probes, qidCol)), "cid")
-        .select(col(qidCol), col(idCol),
-          round(dot(col("cq"), col("qq")) * col("qs") * col("cs"), 9)
-            .as("qdot"))
-      val w = Window.partitionBy(col(qidCol))
-        .orderBy(col("qdot").desc, col(idCol).asc)
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-        .select(col(qidCol), col(idCol), col("qdot"), col("rk"))
-    }
+    def part(name: String) =
+      spark.read.format("arrow-ipc").load(s"$dir/${m.generation}/$name")
+    ivfQuery(part("centroids"), part("cells"), queries, idCol, vecCol,
+      qidCol, qvecCol, k, nprobe, m.quantized)
   }
 
   /** [[ivfTopKStored]] + [[refineTopK]] for a QUANTIZED stored index: the
@@ -849,7 +784,8 @@ object Similarity {
     * the float vectors — which live in the source CORPUS table, not the
     * index — re-rank the short-list exactly. The corpus frame must be
     * the one the index was built from (same ids); candidate ids the
-    * corpus no longer holds simply drop out of the refined ranking. */
+    * corpus no longer holds simply drop out of the refined ranking. The
+    * query set must be small: see [[ivfProbes]]. */
   def ivfTopKStoredRefined(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
@@ -860,110 +796,146 @@ object Similarity {
     refineTopK(cand, corpus, queries, idCol, vecCol, qidCol, qvecCol, k)
   }
 
-  /** The IVF index as data: (centroids (cid, cvec), cell-assigned corpus
-    * (…, cn, cid)) — [[ivfTopK]] consumes it inline; [[ivfBuild]]
+  /** The IVF index as data: (centroids (cid, cvec), the cell frame of
+    * [[ivfCells]]) — the inline queries consume it; [[ivfBuild]]
     * persists it. */
-  private def ivfIndex(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, deterministicMeans: Boolean): (DataFrame, DataFrame) = {
+  private def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, quantized: Boolean): (DataFrame, DataFrame) = {
     // Corpus norms computed ONCE and reused by assignment and scoring.
-    val corpusN = corpus.withColumn("cn", norm(col(vecCol)))
+    val corpusN = features(corpus, Seq(idCol), vecCol, "c", quantized = false)
+    // one Lloyd step from the md5 seeds; the refined centroid frame is
+    // tiny (nlist×dim) but closes over the full seed assignment pass —
+    // eagerly checkpointed (see centroidMeans) so the two consumers
+    // (corpus re-assignment + query probes) don't each recompute it
+    val centroids = centroidMeans(
+      ivfAssign(corpusN, idCol, vecCol, seeds(corpusN, idCol, vecCol, nlist)),
+      vecCol)
+    (centroids,
+      ivfCells(ivfAssign(corpusN, idCol, vecCol, centroids), idCol, vecCol,
+        quantized))
+  }
 
-    // Seeds: the nlist corpus vectors with smallest (md5-hash, id) — the id
-    // tie-break keeps the selection deterministic even when two ids share a
-    // 32-bit hash (expected ~nlist·N/2³² ties at corpus scale), and the
-    // cell id is the seed's CORPUS id: unique by construction (hash values
-    // as cids could collide and silently merge two cells). No
-    // single-partition Window.orderBy — TakeOrdered only.
-    val seeds = corpusN
-      .withColumn("__h", Dedup.shingleBase(col(idCol).cast("string")))
-      .orderBy(col("__h"), col(idCol)).limit(nlist)
+  /** Seeds: the n vectors with smallest (md5-hash, id) as (cid, cvec) —
+    * the id tie-break keeps the selection deterministic even when two ids
+    * share a 32-bit hash (expected ~n·N/2³² ties at corpus scale), and the
+    * cell id is the seed's CORPUS id: unique by construction (hash values
+    * as cids could collide and silently merge two cells). No
+    * single-partition Window.orderBy — TakeOrdered only. */
+  private def seeds(df: DataFrame, idCol: String, vecCol: String,
+      n: Int): DataFrame =
+    df.withColumn("__h", Dedup.shingleBase(col(idCol).cast("string")))
+      .orderBy(col("__h"), col(idCol)).limit(n)
       .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
 
-    // Cell assignment maximizes cosine; ties break to the larger cid via the
-    // struct max (deterministic, overflow-safe). `cn` is reused — the only
-    // per-pair work is the dot against the tiny broadcast centroid set.
-    // The row payload (vec, cn) rides THROUGH the argmax aggregate
-    // (first() over the per-id group, whose rows all replicate the same
-    // corpus row — ids are unique per the corpus contract, see the seeds
-    // note above), so consumers get (id, vec, cn, cid) from ONE exchange:
-    // the former select-then-rejoin shape paid a second corpus exchange
-    // plus two sorts for the id join (round-17 optimization pass).
-    def assign(df: DataFrame, id: String, vec: String, cents: DataFrame): DataFrame =
-      df.crossJoin(broadcast(cents))
-        .withColumn("__sim", dot(col(vec), col("cvec")) / (col("cn") * norm(col("cvec"))))
-        .groupBy(col(id))
-        .agg(max(struct(col("__sim"), col("cid"))).getField("cid").as("cid"),
-          first(col(vec)).as(vec), first(col("cn")).as("cn"))
-
-    // One Lloyd refinement step: per-cell elementwise mean. Deterministic
-    // WITHOUT an order-dependent fold: each component is quantized to
-    // fixed-point (round(v·2⁴⁰) — the ·2⁴⁰ product is exact, it only
-    // shifts the exponent), summed exactly as DECIMAL (integer sum ⇒
-    // order-independent, mergeable ⇒ map-side partial aggregation works,
-    // decimal(20,0) input sum widens to decimal(30,0) ⇒ no overflow until
-    // ~1e18 members/cell), then divided back in double. Any engine
-    // reproduces it bit-for-bit, and — unlike the previous
-    // collect_list-per-(cell,dim) fold — a hot Voronoi cell costs one
-    // accumulator, not one buffered array of every member value. The
-    // refined centroid frame is tiny (nlist×dim) but closes over the full
-    // seed assignment pass — eagerly checkpointed so the two consumers
-    // below (corpus re-assignment + query probes) don't each recompute it.
-    val assigned0 = assign(corpusN, idCol, vecCol, seeds)
+  /** One Lloyd update: the per-cell elementwise mean of (cid, vec) rows.
+    * Deterministic WITHOUT an order-dependent fold: each component is
+    * quantized to fixed-point (round(v·2⁴⁰) — the ·2⁴⁰ product is exact,
+    * it only shifts the exponent), summed exactly as DECIMAL (integer sum
+    * ⇒ order-independent, mergeable ⇒ map-side partial aggregation works,
+    * decimal(20,0) input sum widens to decimal(30,0) ⇒ no overflow until
+    * ~1e18 members/cell), then divided back in double. Any engine
+    * reproduces it bit-for-bit, and a hot cell costs one accumulator, not
+    * one buffered array of every member value. The result (cid, cvec) is
+    * tiny and eagerly checkpointed, so its lineage stays flat. */
+  private def centroidMeans(assigned: DataFrame, vecCol: String): DataFrame = {
     val fix = 1099511627776.0 // 2^40
-    val meanAgg =
-      if (deterministicMeans)
-        (sum(round(col("col").cast("double") * fix).cast("decimal(20,0)"))
-          .cast("double") / count(lit(1)).cast("double") / fix).as("m")
-      else avg(col("col").cast("double")).as("m")
-    val centroids = assigned0
-      .select(col("cid"), col(idCol), posexplode(col(vecCol)))
+    assigned
+      .select(col("cid"), posexplode(col(vecCol)))
       .groupBy(col("cid"), col("pos"))
-      .agg(meanAgg)
+      .agg((sum(round(col("col").cast("double") * fix).cast("decimal(20,0)"))
+        .cast("double") / count(lit(1)).cast("double") / fix).as("m"))
       .groupBy(col("cid"))
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("cid"), expr("transform(pm, x -> x.m)").as("cvec"))
       .localCheckpoint(true)
+  }
 
-    val cells = assign(corpusN, idCol, vecCol, centroids)
-    (centroids, cells)
+  /** Cosine of `v` (norm column `n`) against a centroid's `cvec`. */
+  private def centroidCos(v: String, n: String): Column =
+    dot(col(v), col("cvec")) / (col(n) * norm(col("cvec")))
+
+  /** Cell assignment of (id, vec, cn) rows: (id, cid, vec, cn), the
+    * centroid of maximum cosine; ties break to the larger cid via the
+    * struct max (deterministic, overflow-safe). `cn` is reused — the only
+    * per-pair work is the dot against the tiny broadcast centroid set.
+    * The row payload (vec, cn) rides THROUGH the argmax aggregate
+    * (first() over the per-id group, whose rows all replicate the same
+    * row — ids are unique per the corpus contract), so the assignment
+    * costs ONE exchange, not an agg exchange plus an id re-join
+    * (round-17 optimization pass). [[ivfIndex]] and [[ivfAppend]] both
+    * assign here. */
+  private def ivfAssign(rows: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame): DataFrame =
+    rows.crossJoin(broadcast(centroids))
+      .withColumn("__sim", centroidCos(vecCol, "cn"))
+      .groupBy(col(idCol))
+      .agg(max(struct(col("__sim"), col("cid"))).getField("cid").as("cid"),
+        first(col(vecCol)).as(vecCol), first(col("cn")).as("cn"))
+
+  /** The cell frame of assigned rows, as stored and as scored: float
+    * (cid, id, vec, cn) or the int8 projection (cid, id, cs, cq). */
+  private def ivfCells(assigned: DataFrame, idCol: String, vecCol: String,
+      quantized: Boolean): DataFrame =
+    if (!quantized) assigned.select(col("cid"), col(idCol), col(vecCol), col("cn"))
+    else features(assigned, Seq("cid", idCol), vecCol, "c", quantized = true)
+
+  /** THE IVF PROBE HEAD: each query's `nprobe` nearest centroids by
+    * (cosine desc, cid asc), as (qid, cid) — a window partitioned by
+    * query id over queries × broadcast(centroids), never a global sort.
+    *
+    * SMALL-QUERY BROADCAST CONTRACT (every `ivf*` query): the probe side
+    * — the query set joined to its nprobe cids, |queries|·nprobe rows
+    * carrying the query vectors — is BROADCAST against the corpus-sized
+    * cells, unconditionally, with no row-count check. So the query set
+    * must fit a broadcast (thousands of vectors, not millions); batch a
+    * larger one. In return the cells are neither shuffled nor sorted.
+    * On a STORED index the broadcast also carries the arrow source's
+    * runtime FILE pruning: Spark plans a dynamic-pruning filter that
+    * reuses the broadcast and hands the probed-cid set to the cells
+    * scan (SupportsRuntimeFiltering), so a stored query reads ~nprobe
+    * cell files per query instead of every one. Not when, under AQE,
+    * the query set reads a cached (persisted) frame: AQE plans that scan
+    * as a TableCacheQueryStage in the main plan, the broadcast-reuse
+    * check fails, and the scan reads every cell file (same answer).
+    *
+    * The rank is a running `count` over the window, not `row_number`,
+    * and the two are equal row for row (same order, ROWS frame, cid
+    * unique per query). Spark's `InferWindowGroupLimit` rewrites a
+    * `row_number() <= n` filter into a WindowGroupLimit in the main plan
+    * only, after `PartitionPruning` has captured the broadcast side for
+    * the dynamic-pruning subquery; the two plans then differ, the
+    * broadcast cannot be reused, and Spark drops the runtime filter
+    * (the cells scan then shows `dynamicpruningexpression(true)` and
+    * reads every file). A running count is not a rank-like function, so
+    * the rule leaves it alone and the filter fires (SimilaritySpec pins
+    * the files read). */
+  private[graft] def ivfProbes(centroids: DataFrame, queries: DataFrame,
+      qidCol: String, qvecCol: String, nprobe: Int): DataFrame = {
+    val nearest = Window.partitionBy(col(qidCol))
+      .orderBy(col("__sim").desc, col("cid"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    features(queries, Seq(qidCol), qvecCol, "q", quantized = false)
+      .crossJoin(broadcast(centroids))
+      .withColumn("__sim", centroidCos(qvecCol, "qn"))
+      .withColumn("__pr", count(lit(1)).over(nearest))
+      .filter(col("__pr") <= nprobe)
+      .select(col(qidCol), col("cid"))
   }
 
   /** The IVF query tail over an index frame pair — shared verbatim by the
-    * inline and the STORED paths, so a persisted index answers
-    * bit-identically to a same-session build. */
-  private def ivfProbeScore(
+    * inline and the STORED paths, float and int8, so a persisted index
+    * answers bit-identically to a same-session build: [[ivfProbes]], the
+    * broadcast probe side joined to the cells on cid, then [[rank]]. */
+  private def ivfQuery(
       centroids: DataFrame, cells: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Query side: nprobe nearest centroids per query (window partitioned by
-    // query id — never a global sort).
-    val queriesN = queries.withColumn("qn", norm(col(qvecCol)))
-    val probes = queriesN.crossJoin(broadcast(centroids))
-      .withColumn("__sim", dot(col(qvecCol), col("cvec")) / (col("qn") * norm(col("cvec"))))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(col(qidCol)).orderBy(col("__sim").desc, col("cid"))))
-      .filter(col("__pr") <= nprobe)
-      .select(col(qidCol), col("cid"))
-
-    // The probe side (queries ⋈ their nprobe cids) is tiny by the query
-    // contract — BROADCAST it against the corpus-sized cells (guide §3.1;
-    // round-18 pass). The former shape sort-merge-joined on cid: two
-    // exchanges + two sorts of which one side was the whole cell corpus.
-    // On a STORED index the broadcast additionally activates the arrow
-    // source's runtime FILE pruning (SupportsRuntimeFiltering hands the
-    // probed-cid set to the scan), so a stored query reads ~nprobe cell
-    // files instead of every one — the shape the round-10 design
-    // documented but the SMJ plan never delivered.
-    val candidates = cells
-      .join(broadcast(queriesN.join(probes, qidCol)), "cid")
-    val scored = candidates.select(
-      col(qidCol), col(idCol),
-      round(dot(col(qvecCol), col(vecCol)) / (col("qn") * col("cn")), 9).as("cos"))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cos").desc, col(idCol).asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col(qidCol), col(idCol), col("cos"), col("rk"))
+      k: Int, nprobe: Int, quantized: Boolean): DataFrame = {
+    require(nprobe >= 1, "ivf: nprobe must be >= 1")
+    val probes = ivfProbes(centroids, queries, qidCol, qvecCol, nprobe)
+    val probeSide = features(queries, Seq(qidCol), qvecCol, "q", quantized)
+      .join(probes, qidCol)
+    rank(cells.join(broadcast(probeSide), "cid"), idCol, vecCol, qidCol,
+      qvecCol, k, quantized)
   }
 
   /** Distributed Lloyd k-means over an embedding column — the clustering
@@ -987,13 +959,11 @@ object Similarity {
     *
     * Each iteration's centroid frame is k×dim — localCheckpoint'd so the
     * lineage stays flat across iterations. The (id, vec, |x|²) corpus
-    * projection is PERSISTED (MEMORY_AND_DISK) by default: each Lloyd
-    * iteration reads it twice (assignment + the mean-update join) and the
-    * final assignment once — caching caps source-scan work at 1× regardless
-    * of `iters`. LIFECYCLE as elsewhere: CacheManager dedupes identical
-    * plans; release with unpersist()/clearCache() in long-lived sessions,
-    * or pass `persistCorpus = false` (symmetric with jaccardDocs) to trade
-    * repeated source scans for zero cache residency.
+    * projection is PERSISTED (MEMORY_AND_DISK): each Lloyd iteration reads
+    * it for its assignment and the final assignment once more — caching
+    * caps source-scan work at 1× regardless of `iters`. LIFECYCLE as
+    * elsewhere: CacheManager dedupes identical plans; release with
+    * unpersist()/clearCache() in long-lived sessions.
     *
     * EMPTY-CLUSTER contract: the update step recomputes centroids from
     * ASSIGNED rows only, so a centroid that captures zero points drops out
@@ -1006,38 +976,20 @@ object Similarity {
     *         distance (round(·, 9) for cross-engine comparability). */
   def kmeans(
       df: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, persistCorpus: Boolean = true): DataFrame = {
+      k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters >= 0)
-    val fix = 1099511627776.0 // 2^40
     // |x|² once per row; reused by every assignment pass.
-    val corpusN0 = df.select(col(idCol), col(vecCol),
-      dot(col(vecCol), col(vecCol)).as("__n2"))
-    val corpusN =
-      if (persistCorpus)
-        corpusN0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else corpusN0
-    val seeds = corpusN
-      .withColumn("__h", Dedup.shingleBase(col(idCol).cast("string")))
-      .orderBy(col("__h"), col(idCol)).limit(k)
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
-      .localCheckpoint(true)
+    val corpusN = df.select(col(idCol), col(vecCol),
+        dot(col(vecCol), col(vecCol)).as("__n2"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Assignment against a broadcast centroid frame: d² fold is
     // left-to-right double arithmetic — bit-reproducible by the oracle.
+    // The vector rides THROUGH the argmin aggregate via first() (all rows
+    // of an id group replicate the same corpus row; ids unique per the
+    // seeds contract) for the update step, so an iteration costs one
+    // exchange, not two plus an id re-join's sorts (round-17 optimization
+    // pass); the final assignment's projection prunes it.
     def assign(cents: DataFrame): DataFrame =
-      corpusN.crossJoin(broadcast(cents))
-        .withColumn("__d2",
-          col("__n2") - lit(2.0) * dot(col(vecCol), col("cvec"))
-            + dot(col("cvec"), col("cvec")))
-        .groupBy(col(idCol))
-        .agg(min(struct(col("__d2"), col("cid"))).as("__best"))
-        .select(col(idCol), col("__best.cid").as("cluster"),
-          col("__best.__d2").as("dist2"))
-    // The update step needs (cluster, vec) — the vector rides THROUGH the
-    // assignment aggregate via first() (all rows of an id group replicate
-    // the same corpus row; ids unique per the seeds contract), replacing
-    // the former corpus-side id re-join: one exchange per iteration
-    // instead of two plus sorts (round-17 optimization pass).
-    def assignWithVec(cents: DataFrame): DataFrame =
       corpusN.crossJoin(broadcast(cents))
         .withColumn("__d2",
           col("__n2") - lit(2.0) * dot(col(vecCol), col("cvec"))
@@ -1045,23 +997,16 @@ object Similarity {
         .groupBy(col(idCol))
         .agg(min(struct(col("__d2"), col("cid"))).as("__best"),
           first(col(vecCol)).as(vecCol))
-        .select(col(idCol), col("__best.cid").as("cluster"), col(vecCol))
-    var centroids = seeds
+        .select(col(idCol), col("__best.cid").as("cid"),
+          col("__best.__d2").as("dist2"), col(vecCol))
+    var centroids = seeds(corpusN, idCol, vecCol, k).localCheckpoint(true)
     var it = 0
     while (it < iters) {
-      centroids = assignWithVec(centroids)
-        .select(col("cluster").as("cid"), posexplode(col(vecCol)))
-        .groupBy(col("cid"), col("pos"))
-        .agg((sum(round(col("col").cast("double") * fix).cast("decimal(20,0)"))
-          .cast("double") / count(lit(1)).cast("double") / fix).as("m"))
-        .groupBy(col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cid"), expr("transform(pm, x -> x.m)").as("cvec"))
-        .localCheckpoint(true)
+      centroids = centroidMeans(assign(centroids), vecCol)
       it += 1
     }
     assign(centroids)
-      .select(col(idCol), col("cluster"), round(col("dist2"), 9).as("dist2"))
+      .select(col(idCol), col("cid").as("cluster"), round(col("dist2"), 9).as("dist2"))
   }
 
   /** LSH-bucketed approximate top-k: queries and corpus are bucketed by
@@ -1088,12 +1033,7 @@ object Similarity {
       else qb0.withColumn("pbucket", explode(array(
         col("qbucket") +:
           (0 until nPlanes).map(j => col("qbucket").bitwiseXOR(lit(1 << j))): _*)))
-    val scored = cb.join(qb, col("bucket") === col("pbucket"))
-      .select(
-        col(qidCol), col(idCol),
-        round(dot(col(qvecCol), col(vecCol)) / (col("qn") * col("cn")), 9).as("cos"))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cos").desc, col(idCol).asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col(qidCol), col(idCol), col("cos"), col("rk"))
+    rank(cb.join(qb, col("bucket") === col("pbucket")), idCol, vecCol,
+      qidCol, qvecCol, k, quantized = false)
   }
 }

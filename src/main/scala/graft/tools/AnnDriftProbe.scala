@@ -107,20 +107,13 @@ object AnnDriftProbe {
     }
 
     // mean candidate rows a query's nprobe probed cells drag in — the
-    // COST face of drift (same probe selection as ivfTopKStored)
+    // COST face of drift (ivfTopKStored's own probe head)
     def candCost(dir: String, queries: DataFrame): Double = {
       val gen = Similarity.ivfGenerationDir(spark, dir)
       val centroids = spark.read.format("arrow-ipc").load(s"$gen/centroids")
       val cellSizes = spark.read.format("arrow-ipc").load(s"$gen/cells")
         .groupBy("cid").count()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("__sim").desc, col("cid"))
-      queries.crossJoin(broadcast(centroids))
-        .withColumn("__sim", Similarity.dot(col("qe"), col("cvec")) /
-          (Similarity.norm(col("qe")) * Similarity.norm(col("cvec"))))
-        .withColumn("__pr", row_number().over(w))
-        .filter(col("__pr") <= nprobe)
-        .select("qid", "cid")
+      Similarity.ivfProbes(centroids, queries, "qid", "qe", nprobe)
         .join(cellSizes, "cid")
         .groupBy("qid").agg(sum("count").as("cand"))
         .agg(avg("cand")).as[Double].head()

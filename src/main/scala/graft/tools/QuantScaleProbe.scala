@@ -14,11 +14,15 @@ import graft.ops.Similarity
   * (scale + array<tinyint>) representations as arrow-ipc datasets,
   * reports their on-disk bytes, then times float IVF vs quantized IVF
   * (same nlist/nprobe/k over the same cells) and brute float vs brute
-  * quantized.
+  * quantized. Last, it builds a float and a quantized STORED index at
+  * nlist = 256 and prints, per query shape, the cells scan's
+  * `files=k/n` from the executed plan: the runtime cell-file pruning a
+  * stored query relies on (≈ nprobe × queries of 256 files).
   *
   * Run: sbt "runMain graft.tools.QuantScaleProbe [rows]"
   * (log: tools/quant_scale_probe.log) */
-object QuantScaleProbe {
+object QuantScaleProbe
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val spark = graft.Engine.session("QuantScaleProbe", "local[32]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -51,10 +55,8 @@ object QuantScaleProbe {
         .mode("overwrite").save(s"$base/f32")
     }
     timed("write int8 store (scale + array<tinyint>)") {
-      corpus.select(col("vec_id"),
-          Similarity.quantScale(col("embedding")).as("s"), col("embedding"))
-        .select(col("vec_id"), col("s"),
-          Similarity.quantVec(col("embedding"), col("s")).as("qv"))
+      Similarity.features(corpus, Seq("vec_id"), "embedding", "c",
+          quantized = true)
         .repartition(16).write.format("arrow-ipc")
         .mode("overwrite").save(s"$base/i8")
     }
@@ -91,6 +93,38 @@ object QuantScaleProbe {
     timed("brute quantized (k=10)") {
       drain(Similarity.quantizedTopK(corpus, queries,
         "vec_id", "embedding", "qid", "qe", k = 10))
+    }
+
+    // ── stored index: runtime cell-file pruning at nlist = 256 ──
+    for (quantized <- Seq(false, true)) {
+      val kind = if (quantized) "int8" else "float"
+      val dir = s"$base/ivf256_$kind"
+      timed(s"stored IVF build ($kind, nlist=256)") {
+        Similarity.ivfBuild(corpus, "vec_id", "embedding", nlist = 256,
+          dir = dir, quantized = quantized)
+      }
+      // a client's query batch arrives as local rows; the same rows read
+      // through the cached corpus show the cached-query caveat on
+      // Similarity.ivfProbes (AQE then keeps every file)
+      for ((nq, nprobe) <- Seq((1, 2), (4, 2), (4, 8)); cached <- Seq(false, true)) {
+        val fromCache = queries.filter(col("qid") < nq)
+        val q = if (cached) fromCache
+          else spark.createDataFrame(fromCache.collectAsList(), fromCache.schema)
+        val df = Similarity.ivfTopKStored(spark, dir, q,
+          "vec_id", "embedding", "qid", "qe", k = 10, nprobe = nprobe)
+        val t0 = System.nanoTime()
+        df.collect()
+        val secs = (System.nanoTime() - t0) / 1e9
+        val files = collect(df.queryExecution.executedPlan) {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+              if b.scan.description().contains("/cells") =>
+            "files=\\d+/\\d+".r.findFirstIn(b.scan.description())
+              .getOrElse("files=?")
+        }.mkString(",")
+        val from = if (cached) "cached" else "local"
+        println(f"[quant-probe] stored $kind%-5s $from%-6s queries=$nq nprobe=$nprobe%-2d " +
+          f"cells scan $files%-12s (<= ${nq * nprobe}) $secs%8.3f s")
+      }
     }
     spark.stop()
   }

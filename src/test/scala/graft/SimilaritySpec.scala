@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Similarity
 
 /** Similarity search: codegen kernel vs HOF bit-equality, top-k semantics. */
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -226,6 +228,60 @@ class SimilaritySpec extends AnyFunSuite {
       val c = s.cols("cid")
       c.nulls == 0 && c.min.isDefined && c.min == c.max
     })
+
+    // ...and the runtime filter must FIRE, not just be planned: a dropped
+    // filter still prints as dynamicpruningexpression(true). Eight exact
+    // cells (six identical copies of one direction each, ids chosen so
+    // each direction holds exactly one md5 seed, so every centroid is its
+    // direction bit-for-bit). The query e0 is nearest d0, then TIES
+    // between d1 = (1, 1, 0…) and d2 = (1, -1, 0…) (both dots are 1.0,
+    // both norms √2): at nprobe = 2 the head must take the smaller cid.
+    val dirs = Seq(
+      Array(4f, 1f), Array(1f, 1f), Array(1f, -1f), Array(0f, 0f, 1f),
+      Array(0f, 0f, 0f, 1f), Array(-1f, 0f, 0f, 0f, 0f, 1f),
+      Array(0f, 0f, 0f, 0f, 0f, 0f, 1f), Array(-1f))
+      .map(a => a.padTo(16, 0f))
+    def md5Base(id: Long): Long = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(id.toString.getBytes("UTF-8"))
+      (0 until 4).foldLeft(0L)((h, i) => (h << 8) | (d(i) & 0xff))
+    }
+    val byHash = (0L until 48L).sortBy(id => (md5Base(id), id))
+    val dirOf = byHash.zipWithIndex.map { case (id, i) => id -> i % 8 }.toMap
+    val exact = (0L until 48L).map(id => (id, dirs(dirOf(id))))
+      .toDF("vec_id", "embedding")
+    val tieCid = Seq(byHash(1), byHash(2)).min
+    val want = (0L until 48L)
+      .filter(id => dirOf(id) == 0 || dirOf(id) == dirOf(tieCid))
+      .toSet
+    val q1 = Seq((0L, Array(1f).padTo(16, 0f))).toDF("qid", "qe")
+    // (ids answered, files the cells scan read, files it had)
+    def run(df: org.apache.spark.sql.DataFrame): (Set[Long], Int, Int) = {
+      val ids = df.collect().map(_.getAs[Long]("vec_id")).toSet
+      val descs = collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec if b.scan.description().contains("/cells") =>
+          b.scan.description()
+      }
+      assert(descs.size == 1, s"one cells scan expected: $descs")
+      val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(descs.head)
+        .getOrElse(fail(s"no files=k/n on the cells scan: ${descs.head}"))
+      (ids, m.group(1).toInt, m.group(2).toInt)
+    }
+    for (quantized <- Seq(false, true)) {
+      val ix = java.nio.file.Files.createTempDirectory("graft_ivf_prune")
+        .toString + "/ix"
+      Similarity.ivfBuild(exact, "vec_id", "embedding", nlist = 8, dir = ix,
+        quantized = quantized)
+      val df = Similarity.ivfTopKStored(spark, ix, q1,
+        "vec_id", "embedding", "qid", "qe", k = 20, nprobe = 2)
+      val (ids, read, total) = run(df)
+      assert(read <= 2 && 2 < total,
+        s"quantized=$quantized: the cells scan read $read/$total files, " +
+          s"expected at most nprobe x queries = 2:\n" +
+          df.queryExecution.executedPlan)
+      assert(ids === want,
+        s"quantized=$quantized: the tied probe must take the smaller cid")
+    }
   }
 
   test("incremental IVF append: new vectors join the stored cells, recall holds, layout survives") {
